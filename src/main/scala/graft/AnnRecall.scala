@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.core.Pins
 import graft.operators.{TextOps, VectorOps}
 
 /** ANN-fidelity + shared-index measurement main (methodology recorded
@@ -64,20 +65,21 @@ object AnnRecall {
     // (each IVF/IVF-PQ build localCheckpoints an assignment + residual
     // table — ~corpus-sized; a dozen builds per recall table would
     // otherwise accumulate in the BlockManager until a GC sweep,
-    // pressuring the very runs being measured). Snapshot-scoped, so
-    // the corpus fixtures checkpointed before the call stay pinned.
-    val sc = spark.sparkContext
-    def topSet(df: => org.apache.spark.sql.DataFrame): Map[Long, Set[Long]] = {
-      val before = sc.getPersistentRDDs.keySet.toSet
-      try df.select("qid", "vec_id").collect()
-        .groupBy(_.getLong(0)).map { case (q, rs) =>
-          q -> rs.map(_.getLong(1)).toSet
-        }
-      finally BenchUtil.releaseNewRdds(sc, before)
-    }
+    // pressuring the very runs being measured). Scoped to the search's
+    // own pins, so the corpus fixtures checkpointed before the call
+    // stay pinned.
+    def topSet(df: => org.apache.spark.sql.DataFrame): Map[Long, Set[Long]] =
+      Pins.scoped {
+        df.select("qid", "vec_id").collect()
+          .groupBy(_.getLong(0)).map { case (q, rs) =>
+            q -> rs.map(_.getLong(1)).toSet
+          }
+      }
 
+    // the shared assignment + model checkpoints a table pins are
+    // released when it returns
     def recallTable(tag: String, emb: org.apache.spark.sql.DataFrame,
-                    total: Long): Unit = {
+                    total: Long): Unit = Pins.scoped {
       val nlist = math.min(4096L, math.max(16L,
         math.round(math.sqrt(total.toDouble)))).toInt
       val truth = topSet(VectorOps.cosineTopK(emb, queryIds, k))
@@ -93,13 +95,11 @@ object AnnRecall {
       // the trained state does not depend on nprobe: ONE coarse
       // assignment + ONE default-shape IVF-PQ model serve every probe
       // row via the nprobe override (the gate queries' shared-model
-      // posture applied to the measurement harness itself); their
-      // checkpoints are released after the table
-      val beforeShared = sc.getPersistentRDDs.keySet.toSet
+      // posture applied to the measurement harness itself)
       val shared = VectorOps.trainIvfAssignment(emb, nlist = nlist)
       val model0 = VectorOps.buildIvfPqModel(emb, nlist = nlist,
         reuse = Some(shared))
-      val model = model0.copy(codes = model0.codes.localCheckpoint())
+      val model = model0.copy(codes = Pins.checkpoint(model0.codes))
       val queriesV = VectorOps.collectQueries(emb, queryIds).toSeq
       var autoShapeRecall = 0.0 // auto-nprobe, default (m=8, kCent=256)
       for (nprobe <- Seq(1, autoNprobe, nlist).distinct) {
@@ -166,8 +166,6 @@ object AnnRecall {
         (dotTruth(q) & sq8Got.getOrElse(q, Set.empty)).size.toDouble / k)
         .sum / queryIds.size
       println(f"[annrecall] $tag sq8 (8 bits/dim, vs exact-dot truth) recall@10=$rSq8%.3f")
-      // release the shared assignment + model checkpoints this table pinned
-      BenchUtil.releaseNewRdds(sc, beforeShared)
     }
 
     val emb = graft.sources.Tables.readTable(spark, sfDir, "embeddings")
@@ -178,8 +176,8 @@ object AnnRecall {
     // operator), so a huge SF dir must not overflow the Int row count
     // or materialise an absurd Seq — 200k rows measures the same dial
     val nClustered = math.min(total, 200000L).toInt
-    val clustered = clusteredCorpus(spark, n = nClustered, dim = 64,
-      kClusters = 32, sigma = 0.08, seed = 7L).localCheckpoint()
+    val clustered = Pins.checkpoint(clusteredCorpus(spark, n = nClustered,
+      dim = 64, kClusters = 32, sigma = 0.08, seed = 7L))
     recallTable("clustered", clustered, nClustered.toLong)
 
     // shared-index timing: 3 passes each, min (same protocol as Bench)

@@ -353,10 +353,10 @@ object Bench {
       .mkString("[", ",", "]")
     val line =
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir","passes":$passTotals,"per_pass":$perPass,"failed":$failedJson,"peak_heap_mb":$peakHeapMb,"heap_mb":$heapJson,"dispersion":$dispersion%.3f,$floorJson,"gate_floor_ratio":$gateRatioJson,"floor_stragglers":$stragglerJson,"gate_redraws":$redrawJson}"""
-    // Short headline FIRST and LAST around the full per-query line: the
-    // driver's stdout-tail capture has truncated the 86-query line
-    // mid-object (r01/r03 "parsed: null") — a short line on both sides
-    // survives truncation from either end and parses on its own.
+    // Short headline FIRST, then the full per-query line LAST: a reader
+    // of the final stdout line gets the per-query map, and one that
+    // truncates the long line mid-object still finds the headline
+    // parsing on its own just above it.
     val headline =
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","passes":$passTotals,"sf":"$sfDir",$floorJson}"""
     // the lines must be machine-readable: print to stdout (forked run
@@ -365,7 +365,6 @@ object Bench {
     // process noise
     println(headline)
     println(line)
-    println(headline)
     val out = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json"))
     java.nio.file.Files.write(out, line.getBytes("UTF-8"))

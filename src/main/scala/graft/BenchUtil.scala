@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.SparkContext
 import org.apache.spark.sql.DataFrame
 
 /** Shared measurement helpers for the benchmark/probe mains
@@ -26,17 +25,6 @@ private[graft] object BenchUtil {
     */
   def minOf(passes: Int)(f: => Unit): Double =
     (1 to passes).map(_ => time(f)).min
-
-  /** Unpersist every RDD pinned since `beforeIds` was snapshotted
-    * (`sc.getPersistentRDDs.keySet`). This is the release path for
-    * `localCheckpoint` artifacts: `Dataset.unpersist` does NOT cover
-    * them (it only clears CacheManager entries; checkpoints persist at
-    * the RDD level and otherwise wait for a nondeterministic GC +
-    * ContextCleaner sweep).
-    */
-  def releaseNewRdds(sc: SparkContext, beforeIds: Set[Int]): Unit =
-    sc.getPersistentRDDs.filterNot { case (id, _) => beforeIds(id) }
-      .values.foreach(_.unpersist(blocking = false))
 
   /** Parse a committed BENCH_FLOOR.json (VERDICT r9 #1) into its
     * per-gate clean-draw seconds — empty when the file is missing,

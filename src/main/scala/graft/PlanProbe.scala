@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
+import graft.core.Pins
+
 /** Plan + timing probe for the operators [[PlanDump]] cannot see into:
   * the eager/iterative ones (triangle summary, label propagation,
   * k-core, pagerank) execute during query CONSTRUCTION (checkpointed
@@ -73,13 +75,13 @@ object PlanProbe {
       // pins (canon edges cp → degrees cp → oriented cp → counts) with
       // the measured-count broadcasts it applies at sf0.1
       import graft.operators.GraphOps
-      val e = GraphOps.canonEdges(coPairs).localCheckpoint()
-      val deg = GraphOps.degreesOf(e).localCheckpoint()
-      val oriented = GraphOps.orientFrom(e, deg, bcastDeg = true)
-        .localCheckpoint()
+      val e = Pins.checkpoint(GraphOps.canonEdges(coPairs))
+      val deg = Pins.checkpoint(GraphOps.degreesOf(e))
+      val oriented = Pins.checkpoint(
+        GraphOps.orientFrom(e, deg, bcastDeg = true))
       // gate-faithful (r14): the adjacency table is pinned once, as
       // triangleSummary does, so the probe times what the gate runs
-      val adj = GraphOps.adjacencyOf(oriented).localCheckpoint()
+      val adj = Pins.checkpoint(GraphOps.adjacencyOf(oriented))
       val tc = GraphOps.triangleCountsFrom(
         GraphOps.closedWedgesFromAdj(oriented, adj, bcastClose = true),
         deg, bcastPerNode = true)
@@ -92,7 +94,7 @@ object PlanProbe {
     }
     if (which("kcore_after")) {
       import graft.operators.GraphOps
-      val edges = GraphOps.kCoreCanon(coPairs).localCheckpoint()
+      val edges = Pins.checkpoint(GraphOps.kCoreCanon(coPairs))
       val round = GraphOps.peelOnce(edges, k = 80, bcastKeep = true)
       val (_, t) = time(BenchUtil.sink(round))
       write("graph_kcore_after",
@@ -105,9 +107,8 @@ object PlanProbe {
       // and untimed in the bench protocol)
       val docs = graft.sources.Tables.readTable(spark, sfDir, "documents")
       val m0 = graft.operators.MultimodalOps.noisePngMedia(spark, docs)
-      val m = m0.unionByName(
-        graft.operators.MultimodalOps.perturbClones(spark, m0))
-        .localCheckpoint()
+      val m = Pins.checkpoint(m0.unionByName(
+        graft.operators.MultimodalOps.perturbClones(spark, m0)))
       println(s"[planprobe] media rows=${m.count()}")
       val (_, tDecodeWarm) = time(BenchUtil.sink(
         graft.operators.MultimodalOps.imageDHash(spark, m)))
@@ -137,7 +138,7 @@ object PlanProbe {
       println(f"[planprobe] classify warm1=${classifyOnce()}%.3f warm2=${classifyOnce()}%.3f s")
       // decompose: banded cp + prefix collect vs pruned scan vs join
       val (bb2: DataFrame, tBb) = time {
-        graft.operators.MultimodalOps.imageDHash(spark, m)
+        Pins.checkpoint(graft.operators.MultimodalOps.imageDHash(spark, m)
           .withColumnRenamed("dhash", "fp")
           .select(col("media_id"), col("fp"),
             explode(expr(
@@ -150,8 +151,7 @@ object PlanProbe {
           .select(col("media_id"), col("fp"),
             col("e.band").as("band"), col("e.v").as("v"))
           .withColumn("bvp", concat(lit("p"), col("band").cast("string"),
-            lit("_"), pmod(col("v"), lit(256)).cast("string")))
-          .localCheckpoint()
+            lit("_"), pmod(col("v"), lit(256)).cast("string"))))
       }
       val (pf: Seq[String], tPf) = time(
         bb2.select("bvp").distinct().collect().map(_.getString(0)).toSeq)
@@ -179,9 +179,9 @@ object PlanProbe {
       // outputOrdering into the LogicalRDD? (decides whether the
       // posting-list self-joins can skip their exchanges)
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val df = spark.range(100000).selectExpr("id % 997 as k", "id as v")
-        .repartition(col("k")).sortWithinPartitions("k")
-        .localCheckpoint()
+      val df = Pins.checkpoint(
+        spark.range(100000).selectExpr("id % 997 as k", "id as v")
+          .repartition(col("k")).sortWithinPartitions("k"))
       val j = df.as("a").join(df.as("b"),
         col("a.k") === col("b.k") && col("a.v") < col("b.v"))
       val p = j.queryExecution.executedPlan.toString

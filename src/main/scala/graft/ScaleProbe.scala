@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 
+import graft.core.Pins
 import graft.operators.TextOps
 
 /** Checkpoint-artifact scale probe (methodology + results recorded in
@@ -42,15 +43,13 @@ object ScaleProbe {
       val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
     }
 
-    def probe(sf: String, name: String, df: DataFrame): Unit = {
-      val before = sc.getPersistentRDDs.keySet.toSet
-      val cp = df.localCheckpoint()
+    def probe(sf: String, name: String, df: DataFrame): Unit = Pins.scoped {
+      val before = sc.getRDDStorageInfo.map(_.id).toSet
+      val cp = Pins.checkpoint(df)
       val rows = cp.count()
       val info = sc.getRDDStorageInfo.filterNot(i => before(i.id))
       val mb = info.map(i => i.memSize + i.diskSize).sum / 1e6
       println(f"[scaleprobe] $sf $name rows=$rows bytesMB=$mb%.1f")
-      // RDD-level release — Dataset.unpersist would be a no-op here
-      BenchUtil.releaseNewRdds(sc, before)
     }
 
     for (dir <- dirs) {
@@ -62,10 +61,9 @@ object ScaleProbe {
       // profile timing: 3 passes each, min (the Bench protocol); the
       // six window-table checkpoints the passes create are released
       // before moving on so later dirs measure on a clean BlockManager
-      val before = sc.getPersistentRDDs.keySet.toSet
-      val md5T = BenchUtil.minOf(3)(BenchUtil.sink(TextOps.substringDedup(docs)))
-      val rollT = BenchUtil.minOf(3)(BenchUtil.sink(TextOps.substringDedupRolling(docs)))
-      BenchUtil.releaseNewRdds(sc, before)
+      val (md5T, rollT) = Pins.scoped((
+        BenchUtil.minOf(3)(BenchUtil.sink(TextOps.substringDedup(docs))),
+        BenchUtil.minOf(3)(BenchUtil.sink(TextOps.substringDedupRolling(docs)))))
       println(f"[scaleprobe] $sf substring md5=$md5T%.2fs rolling=$rollT%.2fs ratio=${rollT / md5T}%.2f")
       // bloom-prefilter selectivity over the gate's corpus/bench
       // split. The prefilter in decontaminate runs on RAW shingles
@@ -73,13 +71,13 @@ object ScaleProbe {
       // non-candidates out of every exchange), so raw distinct grams
       // IS the denominator the sketch actually filters.
       import org.apache.spark.sql.functions.col
-      val beforeBloom = sc.getPersistentRDDs.keySet.toSet
-      val corpusGrams = TextOps.shingles(docs.filter(col("doc_id") % 100 =!= 0))
-        .select("s").distinct().localCheckpoint()
-      val benchGrams = TextOps.shingles(docs.filter(col("doc_id") % 100 === 0))
-        .select("s").distinct().localCheckpoint()
-      val (total, truth, cand) = BenchUtil.bloomStats(corpusGrams, benchGrams, 16)
-      BenchUtil.releaseNewRdds(sc, beforeBloom)
+      val (total, truth, cand) = Pins.scoped {
+        val corpusGrams = Pins.checkpoint(TextOps.shingles(
+          docs.filter(col("doc_id") % 100 =!= 0)).select("s").distinct())
+        val benchGrams = Pins.checkpoint(TextOps.shingles(
+          docs.filter(col("doc_id") % 100 === 0)).select("s").distinct())
+        BenchUtil.bloomStats(corpusGrams, benchGrams, 16)
+      }
       println(f"[scaleprobe] $sf bloom grams=$total shared=$truth candidates=$cand " +
         f"joinInputFrac=${cand.toDouble / total}%.5f fp=${cand - truth}")
       // BPE merge-budget headroom. One UNTIMED warmup of each trainer
@@ -109,11 +107,11 @@ object ScaleProbe {
       import spark.implicits._
       val rnd = new scala.util.Random(11)
       val alphabet = "abcdefghijklmnopqrstuvwxyz"
-      val synth = (0 until 30000).map { i =>
+      val synth = Pins.checkpoint((0 until 30000).map { i =>
         val w = Array.fill(4 + rnd.nextInt(12))(
           alphabet(rnd.nextInt(26))).mkString
         (i.toLong, w)
-      }.toDF("doc_id", "text").localCheckpoint()
+      }.toDF("doc_id", "text"))
       TextOps.bpeTrain(synth, numMerges = 50)
       TextOps.bpeTrainRecount(synth, numMerges = 50)
       var l2k = 0
@@ -140,32 +138,30 @@ object ScaleProbe {
     {
       import org.apache.spark.sql.functions.{col, lit}
       import graft.operators.GraphOps
-      val before = sc.getPersistentRDDs.keySet.toSet
-      val d = 10000
-      val hubEdges = spark.range(1, d + 1)
-        .select(lit(0L).as("a"), col("id").as("b"))
-        .unionByName(spark.range(1, d)
-          .select(col("id").as("a"), (col("id") + 1).as("b")))
-        .localCheckpoint()
-      val e = hubEdges.count()
-      val (ow, nw) = GraphOps.wedgeCounts(hubEdges)
-      var triHub = -1L
-      val tHub = BenchUtil.minOf(3) {
-        triHub = GraphOps.triangleTotal(hubEdges).head.getLong(0)
+      Pins.scoped {
+        val d = 10000
+        val hubEdges = Pins.checkpoint(spark.range(1, d + 1)
+          .select(lit(0L).as("a"), col("id").as("b"))
+          .unionByName(spark.range(1, d)
+            .select(col("id").as("a"), (col("id") + 1).as("b"))))
+        val e = hubEdges.count()
+        val (ow, nw) = GraphOps.wedgeCounts(hubEdges)
+        var triHub = -1L
+        val tHub = BenchUtil.minOf(3) {
+          triHub = GraphOps.triangleTotal(hubEdges).head.getLong(0)
+        }
+        // control: same E spread uniformly (no hub)
+        val uniform = Pins.checkpoint(spark.range(0, e)
+          .select((col("id") % 14000).as("a"),
+            ((col("id") * 7919 + 13) % 14000).as("b")))
+        val (owU, nwU) = GraphOps.wedgeCounts(uniform)
+        val tUni = BenchUtil.minOf(3)(
+          BenchUtil.sink(GraphOps.triangleTotal(uniform)))
+        println(f"[scaleprobe] hub-graph d=$d E=$e oriented_wedges=$ow " +
+          f"naive_wedges=$nw triangles=$triHub t=$tHub%.2fs | " +
+          f"uniform-control E=$e oriented_wedges=$owU naive_wedges=$nwU " +
+          f"t=$tUni%.2fs hub/uniform=${tHub / tUni}%.2f")
       }
-      // control: same E spread uniformly (no hub)
-      val uniform = spark.range(0, e)
-        .select((col("id") % 14000).as("a"),
-          ((col("id") * 7919 + 13) % 14000).as("b"))
-        .localCheckpoint()
-      val (owU, nwU) = GraphOps.wedgeCounts(uniform)
-      val tUni = BenchUtil.minOf(3)(
-        BenchUtil.sink(GraphOps.triangleTotal(uniform)))
-      BenchUtil.releaseNewRdds(sc, before)
-      println(f"[scaleprobe] hub-graph d=$d E=$e oriented_wedges=$ow " +
-        f"naive_wedges=$nw triangles=$triHub t=$tHub%.2fs | " +
-        f"uniform-control E=$e oriented_wedges=$owU naive_wedges=$nwU " +
-        f"t=$tUni%.2fs hub/uniform=${tHub / tUni}%.2f")
     }
 
     // 5. queue-ack compaction threshold (SF-independent — fabricated
@@ -227,61 +223,62 @@ object ScaleProbe {
       def syntheticDoc(i: Long) = (i, Array.fill(30)(
         "abcdefghijklmnopqrstuvwxyz"(rnd.nextInt(26)).toString * (1 + rnd.nextInt(3)))
         .mkString(" "))
-      val corpus = (0L until 2000L).map(syntheticDoc).toDF("doc_id", "text")
-        .localCheckpoint()
-      val probeBatch = (100000L until 100010L).map(syntheticDoc)
-        .toDF("doc_id", "text").localCheckpoint()
+      val corpus = Pins.checkpoint(
+        (0L until 2000L).map(syntheticDoc).toDF("doc_id", "text"))
+      val probeBatch = Pins.checkpoint(
+        (100000L until 100010L).map(syntheticDoc).toDF("doc_id", "text"))
 
       // appends + classifies pin per-call localCheckpoints (batch band
-      // tables, encode outputs) — snapshot and release like the other
+      // tables, encode outputs) — release them per leg like the other
       // legs so the later timings measure on a clean BlockManager
-      val beforeIdx = sc.getPersistentRDDs.keySet.toSet
-      val bandPath = java.nio.file.Files
-        .createTempDirectory("probe-bandidx").toString
-      BandIndex.write(corpus, bandPath)
-      var appended = 0
-      for (target <- Seq(0, 50, 500)) {
-        (appended until target).foreach { i =>
-          BandIndex.append(
-            Seq(syntheticDoc(10000L + i)).toDF("doc_id", "text"), bandPath)
+      Pins.scoped {
+        val bandPath = java.nio.file.Files
+          .createTempDirectory("probe-bandidx").toString
+        BandIndex.write(corpus, bandPath)
+        var appended = 0
+        for (target <- Seq(0, 50, 500)) {
+          (appended until target).foreach { i =>
+            BandIndex.append(
+              Seq(syntheticDoc(10000L + i)).toDF("doc_id", "text"), bandPath)
+          }
+          appended = target
+          val files = dataFiles(s"$bandPath/bands")
+          val t = BenchUtil.minOf(3)(
+            BandIndex.classify(spark, bandPath, probeBatch).count())
+          println(f"[scaleprobe] bandidx appends=$target%4d files=$files%6d classify=$t%.3fs")
         }
-        appended = target
-        val files = dataFiles(s"$bandPath/bands")
-        val t = BenchUtil.minOf(3)(
+        val tBandCompact = secs(BandIndex.compact(spark, bandPath))
+        val tBandAfter = BenchUtil.minOf(3)(
           BandIndex.classify(spark, bandPath, probeBatch).count())
-        println(f"[scaleprobe] bandidx appends=$target%4d files=$files%6d classify=$t%.3fs")
+        println(f"[scaleprobe] bandidx compact=$tBandCompact%.3fs files=${dataFiles(s"$bandPath/bands")}%6d classifyAfter=$tBandAfter%.3fs")
       }
-      val tBandCompact = secs(BandIndex.compact(spark, bandPath))
-      val tBandAfter = BenchUtil.minOf(3)(
-        BandIndex.classify(spark, bandPath, probeBatch).count())
-      println(f"[scaleprobe] bandidx compact=$tBandCompact%.3fs files=${dataFiles(s"$bandPath/bands")}%6d classifyAfter=$tBandAfter%.3fs")
-      BenchUtil.releaseNewRdds(sc, beforeIdx)
 
-      val emb = graft.sources.Tables.embeddings(spark, dirs.head)
-        .localCheckpoint()
-      val nEmb = emb.count()
-      val vecPath = java.nio.file.Files
-        .createTempDirectory("probe-vecidx").toString
-      VectorIndex.writeIvfPq(emb.filter(col("vec_id") < nEmb - 250), vecPath)
-      val queries = graft.operators.VectorOps
-        .collectQueries(emb, (0L until 5L).toSeq).toSeq
-      var vAppended = 0
-      for (target <- Seq(0, 50, 250)) {
-        (vAppended until target).foreach { i =>
-          VectorIndex.addToIvfPq(spark, vecPath,
-            emb.filter(col("vec_id") === nEmb - 250 + i))
+      Pins.scoped {
+        val emb = Pins.checkpoint(
+          graft.sources.Tables.embeddings(spark, dirs.head))
+        val nEmb = emb.count()
+        val vecPath = java.nio.file.Files
+          .createTempDirectory("probe-vecidx").toString
+        VectorIndex.writeIvfPq(emb.filter(col("vec_id") < nEmb - 250), vecPath)
+        val queries = graft.operators.VectorOps
+          .collectQueries(emb, (0L until 5L).toSeq).toSeq
+        var vAppended = 0
+        for (target <- Seq(0, 50, 250)) {
+          (vAppended until target).foreach { i =>
+            VectorIndex.addToIvfPq(spark, vecPath,
+              emb.filter(col("vec_id") === nEmb - 250 + i))
+          }
+          vAppended = target
+          val files = dataFiles(s"$vecPath/codes")
+          val t = BenchUtil.minOf(3)(
+            VectorIndex.searchIvfPq(spark, vecPath, queries).count())
+          println(f"[scaleprobe] vecidx appends=$target%4d files=$files%6d search=$t%.3fs")
         }
-        vAppended = target
-        val files = dataFiles(s"$vecPath/codes")
-        val t = BenchUtil.minOf(3)(
+        val tVecCompact = secs(VectorIndex.compactIvfPq(spark, vecPath))
+        val tVecAfter = BenchUtil.minOf(3)(
           VectorIndex.searchIvfPq(spark, vecPath, queries).count())
-        println(f"[scaleprobe] vecidx appends=$target%4d files=$files%6d search=$t%.3fs")
+        println(f"[scaleprobe] vecidx compact=$tVecCompact%.3fs files=${dataFiles(s"$vecPath/codes")}%6d searchAfter=$tVecAfter%.3fs")
       }
-      val tVecCompact = secs(VectorIndex.compactIvfPq(spark, vecPath))
-      val tVecAfter = BenchUtil.minOf(3)(
-        VectorIndex.searchIvfPq(spark, vecPath, queries).count())
-      println(f"[scaleprobe] vecidx compact=$tVecCompact%.3fs files=${dataFiles(s"$vecPath/codes")}%6d searchAfter=$tVecAfter%.3fs")
-      BenchUtil.releaseNewRdds(sc, beforeIdx)
     }
 
     // 7. z-order layout: what does the cell pruning actually buy, and
@@ -295,52 +292,51 @@ object ScaleProbe {
       import org.apache.spark.sql.functions.{col, expr}
       import graft.operators.LayoutStore
       def dataFiles(dir: String): Int = BenchUtil.parquetDataFiles(dir)
-      val beforeLay = sc.getPersistentRDDs.keySet.toSet
-      val ev = graft.sources.Tables.events(spark, dirs.last)
-        .withColumn("tsm", expr("unix_micros(cast(ts as timestamp))"))
-        .localCheckpoint()
-      val layPath = java.nio.file.Files
-        .createTempDirectory("probe-layout").toString + "/events"
-      LayoutStore.write(ev, layPath, Seq("user_id", "tsm"),
-        idCol = "event_id")
-      // flat baseline: same rows, no clustering, same file count scale
-      val flatPath = java.nio.file.Files
-        .createTempDirectory("probe-flat").toString
-      ev.repartition(64).write.mode("overwrite").parquet(flatPath)
-      val box = Seq((30L, 59L), (1704672000000000L, 1705276799999999L))
-      val tBoxIdx = BenchUtil.minOf(3)(
-        LayoutStore.readBox(spark, layPath, box).count())
-      val tBoxFlat = BenchUtil.minOf(3)(
-        spark.read.parquet(flatPath)
-          .filter(col("user_id").between(30, 59) &&
-            col("tsm").between(1704672000000000L, 1705276799999999L))
-          .count())
-      val cells = graft.operators.LayoutOps.cellsForBox(
-        LayoutStore.loadMeta(spark, layPath).mins,
-        LayoutStore.loadMeta(spark, layPath).maxs, box, clamp = true)
-      println(f"[scaleprobe] layout box cells=${cells.size}%3d/256 " +
-        f"pruned=$tBoxIdx%.3fs fullscan=$tBoxFlat%.3fs " +
-        f"ratio=${tBoxIdx / tBoxFlat}%.2f")
-      // ingest fragmentation: N single-row appends, then compact
-      val nEv = ev.count()
-      var lAppended = 0
-      for (target <- Seq(0, 50, 250)) {
-        (lAppended until target).foreach { i =>
-          LayoutStore.append(spark, layPath,
-            ev.filter(col("event_id") === i)
-              .withColumn("event_id", col("event_id") + nEv))
-        }
-        lAppended = target
-        val files = dataFiles(s"$layPath/data")
-        val t = BenchUtil.minOf(3)(
+      Pins.scoped {
+        val ev = Pins.checkpoint(graft.sources.Tables.events(spark, dirs.last)
+          .withColumn("tsm", expr("unix_micros(cast(ts as timestamp))")))
+        val layPath = java.nio.file.Files
+          .createTempDirectory("probe-layout").toString + "/events"
+        LayoutStore.write(ev, layPath, Seq("user_id", "tsm"),
+          idCol = "event_id")
+        // flat baseline: same rows, no clustering, same file count scale
+        val flatPath = java.nio.file.Files
+          .createTempDirectory("probe-flat").toString
+        ev.repartition(64).write.mode("overwrite").parquet(flatPath)
+        val box = Seq((30L, 59L), (1704672000000000L, 1705276799999999L))
+        val tBoxIdx = BenchUtil.minOf(3)(
           LayoutStore.readBox(spark, layPath, box).count())
-        println(f"[scaleprobe] layout appends=$target%4d files=$files%6d readBox=$t%.3fs")
+        val tBoxFlat = BenchUtil.minOf(3)(
+          spark.read.parquet(flatPath)
+            .filter(col("user_id").between(30, 59) &&
+              col("tsm").between(1704672000000000L, 1705276799999999L))
+            .count())
+        val cells = graft.operators.LayoutOps.cellsForBox(
+          LayoutStore.loadMeta(spark, layPath).mins,
+          LayoutStore.loadMeta(spark, layPath).maxs, box, clamp = true)
+        println(f"[scaleprobe] layout box cells=${cells.size}%3d/256 " +
+          f"pruned=$tBoxIdx%.3fs fullscan=$tBoxFlat%.3fs " +
+          f"ratio=${tBoxIdx / tBoxFlat}%.2f")
+        // ingest fragmentation: N single-row appends, then compact
+        val nEv = ev.count()
+        var lAppended = 0
+        for (target <- Seq(0, 50, 250)) {
+          (lAppended until target).foreach { i =>
+            LayoutStore.append(spark, layPath,
+              ev.filter(col("event_id") === i)
+                .withColumn("event_id", col("event_id") + nEv))
+          }
+          lAppended = target
+          val files = dataFiles(s"$layPath/data")
+          val t = BenchUtil.minOf(3)(
+            LayoutStore.readBox(spark, layPath, box).count())
+          println(f"[scaleprobe] layout appends=$target%4d files=$files%6d readBox=$t%.3fs")
+        }
+        val tLayCompact = secs(LayoutStore.compact(spark, layPath))
+        val tLayAfter = BenchUtil.minOf(3)(
+          LayoutStore.readBox(spark, layPath, box).count())
+        println(f"[scaleprobe] layout compact=$tLayCompact%.3fs files=${dataFiles(s"$layPath/data")}%6d readBoxAfter=$tLayAfter%.3fs")
       }
-      val tLayCompact = secs(LayoutStore.compact(spark, layPath))
-      val tLayAfter = BenchUtil.minOf(3)(
-        LayoutStore.readBox(spark, layPath, box).count())
-      println(f"[scaleprobe] layout compact=$tLayCompact%.3fs files=${dataFiles(s"$layPath/data")}%6d readBoxAfter=$tLayAfter%.3fs")
-      BenchUtil.releaseNewRdds(sc, beforeLay)
     }
 
     // 7. rollup-store extend is O(batch), not O(grain) — the LSM
@@ -353,28 +349,28 @@ object ScaleProbe {
       import graft.operators.RollupStore
       for (dir <- dirs) {
         val sf = dir.split('/').last
-        val before = sc.getPersistentRDDs.keySet.toSet
-        val li = graft.sources.Tables.lineitem(spark, dir)
-        val path = java.nio.file.Files
-          .createTempDirectory("probe-ru").toString + "/store"
-        val keys = Seq("l_orderkey", "l_linestatus")
-        val tBuild = secs(
-          RollupStore.write(li, path, keys, "l_extendedprice"))
-        val grain = RollupStore.stats(spark, path)
-          .head.getAs[Long]("stored_keys")
-        val batch = li.limit(5000).localCheckpoint()
-        val tExt = (1 to 3).map(i => secs(RollupStore.extend(
-          batch, path, 100L + i, keys, "l_extendedprice"))).min
-        val tServeFrag = BenchUtil.minOf(3)(
-          BenchUtil.sink(RollupStore.serve(spark, path)))
-        val tCompact = secs(RollupStore.compact(spark, path))
-        val tServe = BenchUtil.minOf(3)(
-          BenchUtil.sink(RollupStore.serve(spark, path)))
-        println(f"[scaleprobe] $sf rollupstore grain=$grain%7d " +
-          f"build=$tBuild%.2fs extend5k=$tExt%.3fs " +
-          f"serveFrag=$tServeFrag%.3fs compact=$tCompact%.2fs " +
-          f"serve=$tServe%.3fs")
-        BenchUtil.releaseNewRdds(sc, before)
+        Pins.scoped {
+          val li = graft.sources.Tables.lineitem(spark, dir)
+          val path = java.nio.file.Files
+            .createTempDirectory("probe-ru").toString + "/store"
+          val keys = Seq("l_orderkey", "l_linestatus")
+          val tBuild = secs(
+            RollupStore.write(li, path, keys, "l_extendedprice"))
+          val grain = RollupStore.stats(spark, path)
+            .head.getAs[Long]("stored_keys")
+          val batch = Pins.checkpoint(li.limit(5000))
+          val tExt = (1 to 3).map(i => secs(RollupStore.extend(
+            batch, path, 100L + i, keys, "l_extendedprice"))).min
+          val tServeFrag = BenchUtil.minOf(3)(
+            BenchUtil.sink(RollupStore.serve(spark, path)))
+          val tCompact = secs(RollupStore.compact(spark, path))
+          val tServe = BenchUtil.minOf(3)(
+            BenchUtil.sink(RollupStore.serve(spark, path)))
+          println(f"[scaleprobe] $sf rollupstore grain=$grain%7d " +
+            f"build=$tBuild%.2fs extend5k=$tExt%.3fs " +
+            f"serveFrag=$tServeFrag%.3fs compact=$tCompact%.2fs " +
+            f"serve=$tServe%.3fs")
+        }
       }
     }
     // 8. reservoir-store extend is O(batch + capacity), not O(n_seen)
@@ -385,24 +381,23 @@ object ScaleProbe {
       import graft.operators.ReservoirStore
       for (dir <- dirs) {
         val sf = dir.split('/').last
-        val before = sc.getPersistentRDDs.keySet.toSet
-        val docs = graft.sources.Tables.documents(spark, dir)
-          .select("doc_id", "lang", "n_chars")
-        val path = java.nio.file.Files
-          .createTempDirectory("probe-res").toString + "/store"
-        val tBuild = secs(
-          ReservoirStore.write(docs, path, "doc_id", 1000, "probe"))
-        val batch = docs.limit(5000)
-          .withColumn("doc_id", org.apache.spark.sql.functions
-            .col("doc_id") + 1000000000L)
-          .localCheckpoint()
-        val tExt = (1 to 3).map(i => secs(ReservoirStore.extend(
-          batch, path, 100L + i, 1000, "probe"))).min
-        val seen = ReservoirStore.stats(spark, path)
-          .head.getAs[Long]("n_seen")
-        println(f"[scaleprobe] $sf reservoir n_seen=$seen%8d " +
-          f"build=$tBuild%.2fs extend5k=$tExt%.3fs")
-        BenchUtil.releaseNewRdds(sc, before)
+        Pins.scoped {
+          val docs = graft.sources.Tables.documents(spark, dir)
+            .select("doc_id", "lang", "n_chars")
+          val path = java.nio.file.Files
+            .createTempDirectory("probe-res").toString + "/store"
+          val tBuild = secs(
+            ReservoirStore.write(docs, path, "doc_id", 1000, "probe"))
+          val batch = Pins.checkpoint(docs.limit(5000)
+            .withColumn("doc_id", org.apache.spark.sql.functions
+              .col("doc_id") + 1000000000L))
+          val tExt = (1 to 3).map(i => secs(ReservoirStore.extend(
+            batch, path, 100L + i, 1000, "probe"))).min
+          val seen = ReservoirStore.stats(spark, path)
+            .head.getAs[Long]("n_seen")
+          println(f"[scaleprobe] $sf reservoir n_seen=$seen%8d " +
+            f"build=$tBuild%.2fs extend5k=$tExt%.3fs")
+        }
       }
     }
 
@@ -411,28 +406,28 @@ object ScaleProbe {
     //    dial's empirical basis.
     locally {
       import graft.operators.CorpusOps
-      val before = sc.getPersistentRDDs.keySet.toSet
-      val docs = graft.sources.Tables.documents(spark, dirs.last)
-        .select("doc_id").localCheckpoint()
-      val n = docs.count()
-      for (s <- Seq(8, 64, 512)) {
-        val shards = (0 until s).map(i => f"s$i%04d")
-        val t = BenchUtil.minOf(3)(BenchUtil.sink(
-          CorpusOps.rendezvousRoute(docs, shards, "probe")))
-        println(f"[scaleprobe] rendezvous rows=$n%8d shards=$s%4d " +
-          f"route=$t%.3fs")
+      Pins.scoped {
+        val docs = Pins.checkpoint(
+          graft.sources.Tables.documents(spark, dirs.last).select("doc_id"))
+        val n = docs.count()
+        for (s <- Seq(8, 64, 512)) {
+          val shards = (0 until s).map(i => f"s$i%04d")
+          val t = BenchUtil.minOf(3)(BenchUtil.sink(
+            CorpusOps.rendezvousRoute(docs, shards, "probe")))
+          println(f"[scaleprobe] rendezvous rows=$n%8d shards=$s%4d " +
+            f"route=$t%.3fs")
+        }
+        // the hierarchical form at the same 512 shards (32 groups × 16):
+        // the lazy CASE evaluates ~48 hashes per row instead of 512 —
+        // the 2·√S claim measured against the flat number above
+        val hierGroups = (0 until 32).map(g =>
+          f"g$g%02d" -> (0 until 16).map(i => f"h${g * 16 + i}%04d"))
+        val tH = BenchUtil.minOf(3)(BenchUtil.sink(
+          CorpusOps.rendezvousRouteHierarchical(docs, hierGroups,
+            "probe")))
+        println(f"[scaleprobe] rendezvous rows=$n%8d shards= 512 " +
+          f"hierarchical(32x16)=$tH%.3fs")
       }
-      // the hierarchical form at the same 512 shards (32 groups × 16):
-      // the lazy CASE evaluates ~48 hashes per row instead of 512 —
-      // the 2·√S claim measured against the flat number above
-      val hierGroups = (0 until 32).map(g =>
-        f"g$g%02d" -> (0 until 16).map(i => f"h${g * 16 + i}%04d"))
-      val tH = BenchUtil.minOf(3)(BenchUtil.sink(
-        CorpusOps.rendezvousRouteHierarchical(docs, hierGroups,
-          "probe")))
-      println(f"[scaleprobe] rendezvous rows=$n%8d shards= 512 " +
-        f"hierarchical(32x16)=$tH%.3fs")
-      BenchUtil.releaseNewRdds(sc, before)
     }
 
     // 10. hilbert box enumeration is O(result · depth), never the

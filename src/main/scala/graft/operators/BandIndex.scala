@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Pins
+
 /** Persisted MinHash band index — the text-side twin of
   * [[VectorIndex]]: [[TextOps.incrementalNearDup]]'s docstring already
   * names it ("at 100 TB the corpus band table is the persisted LSH
@@ -117,18 +119,15 @@ object BandIndex {
     // measure each store's row count on the PINNED frame (one build
     // pass feeds both the count and the write), then freeze the
     // chosen prefix granularity in meta (see [[chooseLen]])
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet.toSet
-    try {
-      val bands0 = TextOps.minhashBands(docs).localCheckpoint()
+    Pins.scoped {
+      val bands0 = Pins.checkpoint(TextOps.minhashBands(docs))
       val bkpLen = chooseLen(spark, bands0.count())
       bands0.withColumn("bkp", bkp(col("bk"), bkpLen))
         .repartition(col("bkp"))
         .write.mode("overwrite").partitionBy("bkp")
         .parquet(s"$staging/bands")
       val dpLen = if (storeShingles) {
-        val sh0 = TextOps.shingles(docs).select("doc_id", "s")
-          .localCheckpoint()
+        val sh0 = Pins.checkpoint(TextOps.shingles(docs).select("doc_id", "s"))
         val l = chooseLen(spark, sh0.count())
         sh0.withColumn("dp", dp(col("doc_id"), l))
           .repartition(col("dp"))
@@ -138,7 +137,7 @@ object BandIndex {
       } else 2
       Seq((bkpLen, dpLen)).toDF("bkp_len", "dp_len").coalesce(1)
         .write.mode("overwrite").parquet(s"$staging/meta")
-    } finally graft.BenchUtil.releaseNewRdds(sc, before)
+    }
     IndexStores.swapInto(spark, path, staging)
   }
 
@@ -186,24 +185,22 @@ object BandIndex {
     // done — nothing escapes this call (Unit return), and batch-loop
     // callers would otherwise accumulate pinned blocks per append
     // (Dataset.unpersist does not cover checkpoint RDDs)
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet.toSet
-    try {
+    Pins.scoped {
       // pinned: the source plan (often a semi-join against stream
       // verdicts) otherwise re-executes for the tombstone probe, each
       // presence probe and both writes
-      val newDocs = newDocs0.localCheckpoint()
+      val newDocs = Pins.checkpoint(newDocs0)
       IndexStores.rejectTombstoned(spark, path,
         newDocs.select("doc_id"), "doc_id", "BandIndex.append")
       val (bkpLen, dpLen) = contract(spark, path)
       val ids = newDocs.select("doc_id")
-      val bnd = bandsOf(newDocs, bkpLen).localCheckpoint()
+      val bnd = Pins.checkpoint(bandsOf(newDocs, bkpLen))
       if (hasShingles(spark, path)) {
-        val sh = shinglesOf(newDocs, dpLen).localCheckpoint()
+        val sh = Pins.checkpoint(shinglesOf(newDocs, dpLen))
         val dps = sh.select("dp").distinct()
           .collect().map(_.getString(0)).toSeq
-        val stored = IndexStores.presentRows(spark, s"$path/shingles",
-          "dp", dps, "doc_id", ids).select("doc_id", "s").localCheckpoint()
+        val stored = Pins.checkpoint(IndexStores.presentRows(spark,
+          s"$path/shingles", "dp", dps, "doc_id", ids).select("doc_id", "s"))
         val changed = sh.select("doc_id", "s")
           .join(stored.select("doc_id").distinct(), Seq("doc_id"), "left_semi")
           .join(stored, Seq("doc_id", "s"), "left_anti")
@@ -228,7 +225,7 @@ object BandIndex {
         .repartition(col("bkp"))
         .write.mode("append").partitionBy("bkp")
         .parquet(s"$path/bands")
-    } finally graft.BenchUtil.releaseNewRdds(sc, before)
+    }
   }
 
   /** Classify a batch against the persisted index —
@@ -253,7 +250,7 @@ object BandIndex {
     require(minJaccard <= 0 || hasShingles(spark, path),
       s"$path has no shingles/ store — build with storeShingles = true " +
         "to verify (minJaccard > 0)")
-    val bb = TextOps.minhashBands(newDocs).localCheckpoint()
+    val bb = Pins.checkpoint(TextOps.minhashBands(newDocs))
     val (bkpLen, _) = contract(spark, path)
     val prefixes = bb.select(bkp(col("bk"), bkpLen).as("p")).distinct()
       .collect().map(_.getString(0)).toSeq

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Pins
+
 /** Persisted BUCKETED table store — the co-located-join layout.
   *
   * The other persisted artifacts organise content (z-cells, LSH bands,
@@ -204,9 +206,8 @@ object BucketStore {
         if (prev == null || prev != m) open(session, path)
         m
       })
-      session.table(registeredName(path))
-        .filter(col(m.key).isin(values: _*))
-        .localCheckpoint()
+      Pins.checkpoint(session.table(registeredName(path))
+        .filter(col(m.key).isin(values: _*)))
     }
   }
 }

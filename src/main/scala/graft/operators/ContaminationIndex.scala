@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Pins
+
 /** Persisted decontamination index — the eval-hygiene artifact a
   * training-data pipeline keeps BETWEEN runs: the benchmark suite's
   * distinct informative shingles plus their serialized Bloom sketch,
@@ -67,17 +69,15 @@ object ContaminationIndex {
   def write(benchmark: DataFrame, path: String,
             bitsPerItem: Int = 16): Unit = {
     val spark = benchmark.sparkSession
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet.toSet
-    try {
+    Pins.scoped {
       val staging = IndexStores.stagingFor(spark, path)
-      val grams = benchGrams(benchmark).localCheckpoint()
+      val grams = Pins.checkpoint(benchGrams(benchmark))
       grams.coalesce(1).write.mode("overwrite").parquet(s"$staging/grams")
       metaDf(spark,
         graft.functions.Bloom.sketchOf(grams, "s", bitsPerItem), bitsPerItem)
         .write.mode("overwrite").parquet(s"$staging/meta")
       IndexStores.swapInto(spark, path, staging)
-    } finally graft.BenchUtil.releaseNewRdds(sc, before)
+    }
   }
 
   /** Grow the index as the benchmark suite grows (a new eval set
@@ -89,17 +89,15 @@ object ContaminationIndex {
     */
   def append(benchmark: DataFrame, path: String): Unit = {
     val spark = benchmark.sparkSession
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet.toSet
-    try {
+    Pins.scoped {
       IndexStores.healRoot(spark, path)
       // pinned: the store feeds the anti-join AND (unioned) the
       // sketch's count + aggregate jobs — unpinned it would be read
       // three times per append
-      val stored = IndexStores.readStore(spark, s"$path/grams")
-        .select("s").localCheckpoint()
-      val fresh = benchGrams(benchmark)
-        .join(stored, Seq("s"), "left_anti").localCheckpoint()
+      val stored = Pins.checkpoint(
+        IndexStores.readStore(spark, s"$path/grams").select("s"))
+      val fresh = Pins.checkpoint(benchGrams(benchmark)
+        .join(stored, Seq("s"), "left_anti"))
       if (fresh.head(1).isEmpty) return
       // fingerprint-memoized (optimization r13): the meta row also
       // carries the sketch blob, so this read doubles as its cache —
@@ -111,7 +109,7 @@ object ContaminationIndex {
       graft.core.ParquetTable.overwriteAtomic(spark, s"$path/meta",
         metaDf(spark, sketch, bitsPerItem))
       fresh.coalesce(1).write.mode("append").parquet(s"$path/grams")
-    } finally graft.BenchUtil.releaseNewRdds(sc, before)
+    }
   }
 
   /** Fold the gram store's append fragments to one file (the grams

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Pins
+
 /** Corpus-assembly operators: deterministic sampling and token-budget
   * sequence packing — the steps between "filtered corpus" and "training
   * shards" in an LLM data pipeline ([EXT] surface, SURVEY §7).
@@ -222,9 +224,8 @@ object CorpusOps {
     * SAMPLE, so an unpinned plan could place rows differently between
     * the totals pass and the output pass — the offsets would be
     * wrong, silently (same TOCTOU posture as [[LayoutStore.append]]).
-    * The pinned blocks live until the session ends or the caller
-    * wraps the call in the `releaseNewRdds` snapshot-diff harness
-    * (the gates do; see [[ProfileOps]]).
+    * The pin belongs to the caller's open `Pins.scoped` block (the
+    * gates open one), else ContextCleaner frees it.
     *
     * Contract: `order` must be a TOTAL order (include a unique id —
     * ties straddling a range boundary would make the tied rows'
@@ -234,11 +235,10 @@ object CorpusOps {
   def exclusivePrefixSum(df: DataFrame, order: Seq[String], value: String,
                          as: String = "excl_sum"): DataFrame = {
     val spark = df.sparkSession
-    val ranged = df
+    val ranged = Pins.checkpoint(df
       .repartitionByRange(order.map(col): _*)
       .sortWithinPartitions(order.map(col): _*)
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint()
+      .withColumn("__pid", spark_partition_id()))
     // the totals pass also carries each partition's min/max order key
     // (struct ordering): since range partitioning puts every key of
     // partition i at or before every key of partition i+1, a key
@@ -344,10 +344,9 @@ object CorpusOps {
     // derive from it, and without the checkpoint each scalar cross-join
     // re-runs the corpus count pass unless exchange reuse happens to
     // kick in — with it, corpus-size work IS the single count pass
-    val per = docs.groupBy("source").agg(
+    val per = Pins.checkpoint(docs.groupBy("source").agg(
       count(lit(1)).as("n_docs"),
-      sum(estTokens).as("est_tokens"))
-      .localCheckpoint()
+      sum(estTokens).as("est_tokens")))
     val tot = per.agg(sum("est_tokens").cast("double").as("total"))
     val withPa = per.crossJoin(broadcast(tot))
       .withColumn("pa", pow(col("est_tokens") / col("total"), alpha))

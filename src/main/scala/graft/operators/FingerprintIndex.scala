@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Pins
+
 /** Persisted perceptual-fingerprint index — the media-dedup artifact a
   * pipeline keeps BETWEEN runs: banded hamming buckets over any long
   * fingerprint ([[MultimodalOps.imageDHash]], [[MultimodalOps
@@ -106,10 +108,8 @@ object FingerprintIndex {
     // finding): it feeds the dup-check, the size measurement AND the
     // banded write — unpinned, an expensive lineage (image decode +
     // dHash) would run three times
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet.toSet
-    try {
-      val fps = fps0.localCheckpoint()
+    Pins.scoped {
+      val fps = Pins.checkpoint(fps0)
       val dupIn = fps.groupBy("media_id").agg(countDistinct("fp").as("n"))
         .filter(col("n") > 1).limit(5)
         .collect().map(_.getLong(0))
@@ -127,7 +127,7 @@ object FingerprintIndex {
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$staging/meta")
       IndexStores.swapInto(spark, path, staging)
-    } finally graft.BenchUtil.releaseNewRdds(sc, before)
+    }
   }
 
   /** Classify a batch of fingerprints against the index: candidate
@@ -142,7 +142,7 @@ object FingerprintIndex {
                fps: DataFrame): DataFrame = {
     IndexStores.healRoot(spark, path)
     val (nBits, maxHamming, mod) = contract(spark, path)
-    val bb = banded(fps, nBits, maxHamming + 1, mod).localCheckpoint()
+    val bb = Pins.checkpoint(banded(fps, nBits, maxHamming + 1, mod))
     val prefixes = bb.select("bvp").distinct()
       .collect().map(_.getString(0)).toSeq
     // isin() of ZERO values does not prune — an empty probe must stay
@@ -176,12 +176,10 @@ object FingerprintIndex {
     */
   def append(fps: DataFrame, path: String): Unit = {
     val spark = fps.sparkSession
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet.toSet
-    try {
+    Pins.scoped {
       IndexStores.healRoot(spark, path)
       val (nBits, maxHamming, mod) = contract(spark, path)
-      val bb = banded(fps, nBits, maxHamming + 1, mod).localCheckpoint()
+      val bb = Pins.checkpoint(banded(fps, nBits, maxHamming + 1, mod))
       if (bb.head(1).isEmpty) return
       val dupIn = bb.groupBy("media_id").agg(countDistinct("fp").as("n"))
         .filter(col("n") > 1).limit(5)
@@ -199,11 +197,11 @@ object FingerprintIndex {
       // stored band rows of the batch's ids, from the batch's own bucket
       // partitions only (pinned: feeds the conflict probe AND the
       // idempotence anti-join)
-      val stored = readFps(spark, path, nBits, maxHamming + 1, mod)
-        .filter(col("bvp").isin(prefixes: _*))
-        .join(bb.select("media_id").distinct(), Seq("media_id"), "left_semi")
-        .select(col("media_id"), col("band"), col("fp").as("stored_fp"))
-        .localCheckpoint()
+      val stored = Pins.checkpoint(
+        readFps(spark, path, nBits, maxHamming + 1, mod)
+          .filter(col("bvp").isin(prefixes: _*))
+          .join(bb.select("media_id").distinct(), Seq("media_id"), "left_semi")
+          .select(col("media_id"), col("band"), col("fp").as("stored_fp")))
       val conflicts = stored.join(bb, Seq("media_id", "band"))
         .filter(col("stored_fp") =!= col("fp"))
         .select("media_id").distinct().limit(5)
@@ -216,7 +214,7 @@ object FingerprintIndex {
       if (!fresh.head(1).isEmpty)
         fresh.repartition(col("bvp"))
           .write.mode("append").partitionBy("bvp").parquet(s"$path/fps")
-    } finally graft.BenchUtil.releaseNewRdds(sc, before)
+    }
   }
 
   /** Logical delete by id — tombstones suppress at every [[classify]]

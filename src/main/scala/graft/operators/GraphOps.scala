@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Pins
+
 /** Distributed graph primitives for dedup post-processing. Candidate
   * near-dup PAIRS (MinHash/SimHash banding) are only half the dedup
   * story: a training pipeline needs the transitive closure — duplicate
@@ -11,30 +13,6 @@ import org.apache.spark.sql.functions._
   * of the [EXT] large-corpus layer, SURVEY §7.)
   */
 object GraphOps {
-
-  /** Eager localCheckpoint + the RDD ids it persisted — the handle
-    * [[releaseCp]] needs, because `Dataset.unpersist` is a NO-OP on a
-    * localCheckpointed frame (it only clears cacheManager plan
-    * entries; the checkpoint lives as an RDD-level persist that must
-    * be unpersisted at the RDD level or it lingers until GC).
-    */
-  private def eagerCp(df: DataFrame): (DataFrame, Set[Int]) = {
-    val sc = df.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet.toSet
-    val c = df.localCheckpoint(true)
-    (c, sc.getPersistentRDDs.keySet.toSet -- before)
-  }
-
-  /** Free a checkpoint's RDD blocks (safe once no retained frame
-    * reads them — each loop round's eager checkpoint is self-contained,
-    * so its PREDECESSOR's blocks are releasable the moment it
-    * materialises).
-    */
-  private def releaseCp(df: DataFrame, ids: Set[Int]): Unit = {
-    val sc = df.sparkSession.sparkContext
-    ids.foreach(id =>
-      sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
-  }
 
   /** Measured-row-count gate for broadcast-hinting a node- or
     * edge-sized frame into a join (optimization r13). The iterative /
@@ -85,10 +63,10 @@ object GraphOps {
   def connectedComponents(pairs: DataFrame, maxIter: Int = 50): DataFrame = {
     val edges = pairs.select(col("a").cast("bigint").as("src"),
       col("b").cast("bigint").as("dst"))
-    val (sym, symIds) = eagerCp(edges
+    val sym = Pins.checkpoint(edges
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
       .distinct())
-    var (labels, labelIds) = eagerCp(sym.select(col("src").as("id"))
+    var labels = Pins.checkpoint(sym.select(col("src").as("id"))
       .distinct()
       .select(col("id"), col("id").as("label")))
     def checksum(df: DataFrame): Long =
@@ -100,23 +78,22 @@ object GraphOps {
     while (!converged && iter < maxIter) {
       val prop = sym.join(labels.withColumnRenamed("id", "src"), "src")
         .select(col("dst").as("id"), col("label"))
-      val (next, nextIds) = eagerCp(labels.union(prop).groupBy("id")
+      val next = Pins.checkpoint(labels.union(prop).groupBy("id")
         .agg(min("label").as("label")))
       val cur = checksum(next)
-      releaseCp(labels, labelIds)
+      Pins.release(labels)
       labels = next
-      labelIds = nextIds
       converged = cur == prev
       prev = cur
       iter += 1
     }
-    releaseCp(sym, symIds)
+    Pins.release(sym)
     // fail loudly rather than hand back mid-propagation labels: a
     // non-converged result silently splits components, and a dedup
     // built on it KEEPS duplicates with no signal (same erroring-over-
     // wrong-answers stance as ArrayDot's length check)
     if (!converged) {
-      releaseCp(labels, labelIds)
+      Pins.release(labels)
       throw new IllegalStateException(
         s"connected components did not converge in $maxIter rounds " +
           "(graph diameter exceeds maxIter); raise maxIter or pre-contract " +
@@ -159,7 +136,7 @@ object GraphOps {
         .filter(col("lo") < col("hi"))
         .distinct()
 
-    var (edges, edgeIds) = eagerCp(
+    var edges = Pins.checkpoint(
       canon(pairs.select(col("a").cast("bigint").as("src"),
         col("b").cast("bigint").as("dst"))))
 
@@ -186,31 +163,30 @@ object GraphOps {
         .union(edges.select(col("hi").as("u"), col("lo").as("v")))
       val mL = sym.groupBy("u").agg(min("v").as("mn"))
         .select(col("u"), least(col("mn"), col("u")).as("m"))
-      val (ls, lsIds) = eagerCp(
+      val ls = Pins.checkpoint(
         canon(sym.join(mL, "u").filter(col("v") > col("u"))
           .select(col("v").as("src"), col("m").as("dst"))))
       // small-star: per node u over its SMALLER neighbours (v < u),
       // m = min of them; u and each v hook to m
       val dir = ls.select(col("hi").as("u"), col("lo").as("v"))
       val mS = dir.groupBy("u").agg(min("v").as("m"))
-      val (ss, ssIds) = eagerCp(canon(dir.join(mS, "u")
+      val ss = Pins.checkpoint(canon(dir.join(mS, "u")
           .select(col("v").as("src"), col("m").as("dst"))
           .union(mS.select(col("u").as("src"), col("m").as("dst")))))
-      releaseCp(ls, lsIds)
+      Pins.release(ls)
       val cur = checksum(ss)
       // exact confirmation: counts already match (they're in the
       // checksum) and both sides are distinct sets, so an empty
       // one-direction difference proves set equality — runs only on
       // rounds whose checksums agree (normally just the last)
       converged = cur == prev && ss.exceptAll(edges).isEmpty
-      releaseCp(edges, edgeIds)
+      Pins.release(edges)
       edges = ss
-      edgeIds = ssIds
       prev = cur
       iter += 1
     }
     if (!converged) {
-      releaseCp(edges, edgeIds)
+      Pins.release(edges)
       throw new IllegalStateException(
         s"star contraction did not converge in $maxIter rounds — " +
           "log-round convergence makes this a bug, not a big graph")
@@ -255,22 +231,22 @@ object GraphOps {
     */
   def pageRank(edgesIn: DataFrame, iters: Int = 5,
       scale: Long = 1000000000000L): DataFrame = {
-    val (e, eIds) = eagerCp(edgesIn
+    val e = Pins.checkpoint(edgesIn
       .select(col("src").cast("string").as("src"),
         col("dst").cast("string").as("dst"))
       .distinct())
     // deg is read every round — materialised once like e/nodes, or the
     // grouping aggregation would replay per iteration
-    val (deg, degIds) = eagerCp(
+    val deg = Pins.checkpoint(
       e.groupBy("src").agg(count(lit(1)).as("d")))
-    val (nodes, nodeIds) = eagerCp(e.select(col("src").as("id"))
+    val nodes = Pins.checkpoint(e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id")))
       .distinct())
     val n = nodes.count()
     require(n > 0, "pageRank needs a non-empty edge list")
     val r0 = scale / n
     val base = (r0 * 15L) / 100L
-    var (ranks, rankIds) = eagerCp(
+    var ranks = Pins.checkpoint(
       nodes.select(col("id"), lit(r0).as("rank")))
     // optimization r13: ranks/deg/contrib are node-sized and
     // checkpoint-backed (no stats) — broadcast them under the measured
@@ -283,16 +259,15 @@ object GraphOps {
         .join(b(deg), "src")
         .select(col("dst").as("id"), expr("rank div d").as("c"))
         .groupBy("id").agg(sum("c").as("m"))
-      val (next, nextIds) = eagerCp(nodes.join(b(contrib), Seq("id"), "left")
+      val next = Pins.checkpoint(nodes.join(b(contrib), Seq("id"), "left")
         .select(col("id"),
           (lit(base) + expr("(85 * coalesce(m, 0L)) div 100")).as("rank")))
-      releaseCp(ranks, rankIds)
+      Pins.release(ranks)
       ranks = next
-      rankIds = nextIds
     }
-    releaseCp(e, eIds)
-    releaseCp(deg, degIds)
-    releaseCp(nodes, nodeIds)
+    Pins.release(e)
+    Pins.release(deg)
+    Pins.release(nodes)
     ranks
   }
 
@@ -362,7 +337,7 @@ object GraphOps {
   def kCorePeel(pairs: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1, s"k-core needs k >= 1, got $k")
     require(rounds >= 0, s"k-core needs rounds >= 0, got $rounds")
-    var (edges, eIds) = eagerCp(kCoreCanon(pairs))
+    var edges = Pins.checkpoint(kCoreCanon(pairs))
     // edge count only shrinks as rounds peel, so one up-front measure
     // gates every round's broadcast. The broadcast SIDE is the
     // survivor NODE set — up to 2·edges rows — so the gate charges 2×
@@ -371,10 +346,9 @@ object GraphOps {
     // double the configured limit)
     val bcast = fitsBroadcast(edges, 2L * edges.count())
     for (_ <- 1 to rounds) {
-      val (next, nIds) = eagerCp(peelOnce(edges, k, bcast))
-      releaseCp(edges, eIds)
+      val next = Pins.checkpoint(peelOnce(edges, k, bcast))
+      Pins.release(edges)
       edges = next
-      eIds = nIds
     }
     coreDegrees(edges)
   }
@@ -387,7 +361,7 @@ object GraphOps {
     */
   def kCore(pairs: DataFrame, k: Int, maxIter: Int = 50): DataFrame = {
     require(k >= 1, s"k-core needs k >= 1, got $k")
-    var (edges, eIds) = eagerCp(kCoreCanon(pairs))
+    var edges = Pins.checkpoint(kCoreCanon(pairs))
     var prev = edges.count()
     // ×2: the broadcast side is the survivor NODE set, ≤ 2·edges rows
     // (see kCorePeel)
@@ -395,17 +369,16 @@ object GraphOps {
     var converged = prev == 0L
     var iter = 0
     while (!converged && iter < maxIter) {
-      val (next, nIds) = eagerCp(peelOnce(edges, k, bcast))
+      val next = Pins.checkpoint(peelOnce(edges, k, bcast))
       val cur = next.count()
-      releaseCp(edges, eIds)
+      Pins.release(edges)
       edges = next
-      eIds = nIds
       converged = cur == prev
       prev = cur
       iter += 1
     }
     if (!converged) {
-      releaseCp(edges, eIds)
+      Pins.release(edges)
       throw new IllegalStateException(
         s"k-core did not converge in $maxIter rounds (peel depth " +
           "exceeds maxIter); raise maxIter")
@@ -466,12 +439,13 @@ object GraphOps {
               "failed cast would corrupt the integer vote groups"))))
         .otherwise(src.cast("bigint"))
     // failure-path release: the exact-cast raise_error can fire INSIDE
-    // any of the eager checkpoints below (even partially-persisted
-    // blocks of the throwing one), so on ANY failure every RDD this
-    // call pinned is released wholesale — on success the inner finally
-    // does the precise accounting and the result keeps its pin
-    val scx = edgesIn.sparkSession.sparkContext
-    val beforeAll = scx.getPersistentRDDs.keySet.toSet
+    // any of the eager checkpoints below, so on ANY failure every pin
+    // this call took is released — on success the inner finally does
+    // the precise accounting and the result keeps its pin
+    val pinned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def pin(df: DataFrame): DataFrame = {
+      val c = Pins.checkpoint(df); pinned += c; c
+    }
     try {
     val Array(ca, cb) = edgesIn.columns.take(2)
     val e = edgesIn.select(
@@ -479,19 +453,19 @@ object GraphOps {
         .as("src"),
       exact(col(cb), edgesIn.schema(cb).dataType, s"edge endpoint $cb")
         .as("dst"))
-    val (sym, symIds) = eagerCp(
+    val sym = pin(
       e.union(e.select(col("dst").as("src"), col("src").as("dst")))
         .filter(col("src") =!= col("dst")).distinct())
-    val (seed, seedIds) = eagerCp(seeds.select(
+    val seed = pin(seeds.select(
       exact(col("id"), seeds.schema("id").dataType, "seed id").as("id"),
       exact(col("label"), seeds.schema("label").dataType, "seed label")
         .as("seed_label")).distinct())
     // graph nodes ∪ seed ids: an edgeless seed keeps its (clamped)
     // label instead of silently vanishing from the result
-    val (nodes, nodeIds) = eagerCp(
+    val nodes = pin(
       sym.select(col("src").as("id"))
         .union(seed.select(col("id"))).distinct())
-    var (labels, labelIds) = eagerCp(
+    var labels = pin(
       seed.select(col("id"), col("seed_label").as("label")))
     try {
       // conflicting seeds reject LOUDLY (the null-purge-key / mixed-
@@ -503,13 +477,11 @@ object GraphOps {
       // inside the release scope so a rejection leaks no checkpoints.
       val dup = seed.groupBy("id").agg(count(lit(1)).as("c"))
         .filter(col("c") > 1).limit(1).collect()
-      if (dup.nonEmpty) {
-        releaseCp(labels, labelIds)
+      if (dup.nonEmpty)
         throw new IllegalArgumentException(
           s"labelPropagate: seed id ${dup.head.get(0)} carries " +
             "conflicting labels — resolve the disagreement " +
             "(last-wins, quality-pick) before propagating")
-      }
       // optimization r13: every frame in the round except the edge
       // table is node-sized, and every frame is a checkpoint the
       // planner has no stats for — so unhinted, each of the four
@@ -533,7 +505,7 @@ object GraphOps {
           .agg(max(struct(col("votes"), (-col("label")).as("nl")))
             .as("w"))
           .select(col("id"), (-col("w.nl")).as("vote_label"))
-        val (next, nextIds) = eagerCp(nodes
+        val next = pin(nodes
           .join(b(seed), Seq("id"), "left")
           .join(b(winner), Seq("id"), "left")
           .join(b(labels.withColumnRenamed("label", "prev_label")),
@@ -541,18 +513,17 @@ object GraphOps {
           .select(col("id"), coalesce(col("seed_label"),
             col("vote_label"), col("prev_label")).as("label"))
           .filter(col("label").isNotNull))
-        releaseCp(labels, labelIds)
+        Pins.release(labels)
         labels = next
-        labelIds = nextIds
       }
       labels
     } finally {
-      releaseCp(sym, symIds)
-      releaseCp(nodes, nodeIds)
-      releaseCp(seed, seedIds)
+      Pins.release(sym)
+      Pins.release(nodes)
+      Pins.release(seed)
     }
     } catch { case t: Throwable =>
-      graft.BenchUtil.releaseNewRdds(scx, beforeAll)
+      pinned.foreach(Pins.release)
       throw t
     }
   }
@@ -777,40 +748,30 @@ object GraphOps {
     // stream (the E^1.5 term) is then never exchanged at all.
     // Evidence: plans/r13/graph_triangles_{before,after}.txt; bench
     // graph_triangles 9.13 s → see OPTIMIZATION_r13.md.
-    val scx = spark.sparkContext
-    val beforeAll = scx.getPersistentRDDs.keySet.toSet
-    try {
-      val (e, eIds) = eagerCp(canonEdges(pairs))
-      val (deg, degIds) = eagerCp(degreesOf(e))
+    Pins.scoped {
+      val e = Pins.checkpoint(canonEdges(pairs))
+      val deg = Pins.checkpoint(degreesOf(e))
       val bDeg = fitsBroadcast(deg, deg.count())
       val bClose = fitsBroadcast(e, e.count())
-      val (oriented, oIds) = eagerCp(orientFrom(e, deg, bDeg))
-      releaseCp(e, eIds)
+      val oriented = Pins.checkpoint(orientFrom(e, deg, bDeg))
+      Pins.release(e)
       // pin the adjacency table (review r14): inline, its groupBy +
       // exchange + broadcast build would execute once PER attach side
-      val (adj, adjIds) = eagerCp(adjacencyOf(oriented))
-      val (tc, tcIds) = eagerCp(triangleCountsFrom(
+      val adj = Pins.checkpoint(adjacencyOf(oriented))
+      val tc = Pins.checkpoint(triangleCountsFrom(
         closedWedgesFromAdj(oriented, adj, bClose), deg,
         bcastPerNode = bDeg))
-      releaseCp(adj, adjIds)
-      releaseCp(oriented, oIds)
-      releaseCp(deg, degIds)
-      try {
-        val total = tc.agg(expr("sum(triangles) div 3")
-          .as("total_triangles"))
-        val result = tc.crossJoin(broadcast(total))
-          .orderBy(col("triangles").desc, col("node").asc)
-          .limit(topN)
-        val rows = result.collect()
-        spark.createDataFrame(
-          java.util.Arrays.asList(rows: _*), result.schema)
-      } finally releaseCp(tc, tcIds)
-    } catch { case t: Throwable =>
-      // wholesale release on any failure (the labelPropagate posture):
-      // a throw between the staged pins above would otherwise leak
-      // checkpoint blocks for the session's lifetime
-      graft.BenchUtil.releaseNewRdds(scx, beforeAll)
-      throw t
+      Pins.release(adj)
+      Pins.release(oriented)
+      Pins.release(deg)
+      val total = tc.agg(expr("sum(triangles) div 3")
+        .as("total_triangles"))
+      val result = tc.crossJoin(broadcast(total))
+        .orderBy(col("triangles").desc, col("node").asc)
+        .limit(topN)
+      val rows = result.collect()
+      spark.createDataFrame(
+        java.util.Arrays.asList(rows: _*), result.schema)
     }
   }
 }

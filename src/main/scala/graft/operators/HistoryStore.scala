@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Pins
+
 /** Persisted SCD2 dimension — a MUTABLE versioned dimension served
   * from APPEND-ONLY storage. Ninth persisted family, and the one that
   * completes the CDC story: the extractors replay a change log
@@ -119,11 +121,9 @@ object HistoryStore {
   private def writeBase(changes: DataFrame, path: String, m: Meta,
       pairs: Seq[(String, Long)]): Unit = {
     val spark = changes.sparkSession
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet.toSet
-    try {
-      val dim = HistoryOps.scd2(changes, m.key, m.orderCol,
-        m.stateCols, m.tieCols).localCheckpoint(true)
+    Pins.scoped {
+      val dim = Pins.checkpoint(HistoryOps.scd2(changes, m.key, m.orderCol,
+        m.stateCols, m.tieCols))
       // resolve the Auto geometry on the PINNED frame (one cheap count
       // on a checkpointed dim, once per build) — see [[AutoBuckets]].
       // Auto-ness is recorded in meta: [[compact]] may re-choose an
@@ -156,7 +156,7 @@ object HistoryStore {
         writeInto(staging, commit = false)
         IndexStores.swapInto(spark, path, staging)
       } else writeInto(path, commit = true)
-    } finally graft.BenchUtil.releaseNewRdds(sc, before)
+    }
   }
 
   /** Fold one change batch in, exactly once per (producer, batchId).
@@ -194,16 +194,13 @@ object HistoryStore {
     val applied = ledger(spark, path)
     if (applied.exists(r => r._1 == producer && r._2 == batchId))
       return // replay — already folded
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet.toSet
-    try {
+    Pins.scoped {
       // pin the batch once: it feeds the touched-key probe, the
       // replay and the delta writes — without the pin a streaming
       // micro-batch source would be re-read per consumer
-      val ch = changes.localCheckpoint(true)
+      val ch = Pins.checkpoint(changes)
       // bounded: the touched BUCKET list (≤ nBuckets), never the keys
-      val touched = ch.select(m.key).distinct()
-        .localCheckpoint(true)
+      val touched = Pins.checkpoint(ch.select(m.key).distinct())
       val bkps = touched
         .select(bkpCol(col(m.key), m.nBuckets).as("bkp"))
         .distinct().collect().map(_.getString(0)).toSeq
@@ -222,13 +219,11 @@ object HistoryStore {
             "are frozen until the compaction cycle physically erases " +
             "them")
       }
-      val storedTouched = serveBuckets(spark, path, m, Some(bkps),
-        purgeList)
-        .join(touched, Seq(m.key), "left_semi")
-        .localCheckpoint(true)
-      val replayed = HistoryOps.scd2Extend(storedTouched, ch,
-        m.key, m.orderCol, m.stateCols, m.tieCols)
-        .localCheckpoint(true)
+      val storedTouched = Pins.checkpoint(serveBuckets(spark, path, m,
+        Some(bkps), purgeList)
+        .join(touched, Seq(m.key), "left_semi"))
+      val replayed = Pins.checkpoint(HistoryOps.scd2Extend(storedTouched,
+        ch, m.key, m.orderCol, m.stateCols, m.tieCols))
       // deltas: rows with a version beyond the key's stored max are
       // NEW; a stored OPEN version that now carries a valid_to CLOSED
       // this batch; the frontier is replayed.last_changed
@@ -253,7 +248,7 @@ object HistoryStore {
         s"history store at $path advanced during extend — a second " +
           "concurrent writer is folding batches; serialise producers")
       commitLedger(spark, path, applied :+ ((producer, batchId, tag)))
-    } finally graft.BenchUtil.releaseNewRdds(sc, before)
+    }
   }
 
   /** The full SCD2 dimension, reconstructed exactly: version rows with
@@ -294,14 +289,11 @@ object HistoryStore {
     */
   def purge(spark: SparkSession, path: String, keys: DataFrame): Unit = {
     IndexStores.healRoot(spark, path)
-    // snapshot-diff release scope (the extend/compact posture): the
-    // above-cap purgedLocal pins the list executor-side, and purge
-    // consumes it entirely (writePurged lands the merge on disk) — a
-    // per-trigger purge loop must not accumulate dead pins
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet.toSet
-    try purgeInner(spark, path, keys)
-    finally graft.BenchUtil.releaseNewRdds(sc, before)
+    // release scope (the extend/compact posture): the above-cap
+    // purgedLocal pins the list executor-side, and purge consumes it
+    // entirely (writePurged lands the merge on disk) — a per-trigger
+    // purge loop must not accumulate dead pins
+    Pins.scoped(purgeInner(spark, path, keys))
   }
 
   private def purgeInner(spark: SparkSession, path: String,
@@ -356,9 +348,7 @@ object HistoryStore {
       Seq("data", "closures", "frontier"), applied.map(_._3).toSet)
     val gen = IndexStores.compactGen(applied)
     val tag = s"c_g$gen"
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet.toSet
-    try {
+    Pins.scoped {
       // snapshot the purge list BEFORE the rewrite reads it: only
       // entries this rewrite provably excluded may advance below (a
       // purge landing mid-compact stays pending — erased next cycle);
@@ -367,8 +357,7 @@ object HistoryStore {
       // checkpoint), so the snapshot cannot re-resolve $path/purged
       // files after writePurged below swaps them
       val p1 = purgedLocal(spark, path)
-      val dim = serveBuckets(spark, path, m, None, p1)
-        .localCheckpoint(true)
+      val dim = Pins.checkpoint(serveBuckets(spark, path, m, None, p1))
       // geometry re-choice at the compaction boundary (review finding,
       // optimization r13): an Auto store bootstrapped from a tiny
       // first batch froze a degenerate bucket count for the store's
@@ -439,11 +428,11 @@ object HistoryStore {
           .select(col(m.key), lit(gen).cast("long").as("erased_gen"))
         // in the snapshot and already stamped: dropped (absent from
         // the union), lifting the freeze
-        val next = addedMid.unionByName(stamped).localCheckpoint(true)
+        val next = Pins.checkpoint(addedMid.unionByName(stamped))
         if (next.isEmpty) clearPurged(spark, path)
         else writePurged(spark, path, next)
       }
-    } finally graft.BenchUtil.releaseNewRdds(sc, before)
+    }
   }
 
   /** One-row monitoring surface: applied batches, tag count (read
@@ -458,9 +447,7 @@ object HistoryStore {
     // monitoring loop calling stats per trigger must not pin a fresh
     // copy of a million-key list each call. The returned frame is
     // built from local values; releasing costs it nothing.
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet.toSet
-    try {
+    Pins.scoped {
       val m = metaOf(spark, path)
       val applied = ledger(spark, path)
       val purgeList = purgedLocal(spark, path)
@@ -473,7 +460,7 @@ object HistoryStore {
         d.getLong(0), d.getLong(1), d.getLong(2), nPurged))
         .toDF("applied_batches", "tags", "version_rows", "open_versions",
           "keys", "purged_keys")
-    } finally graft.BenchUtil.releaseNewRdds(sc, before)
+    }
   }
 
   // ---- internals ----------------------------------------------------
@@ -531,7 +518,7 @@ object HistoryStore {
     * `localCheckpoint(true)`: the list is pinned executor-side at
     * read time (no file refs survive), and every consumer joins it
     * distributed (no broadcast). extend/compact/purge/stats release
-    * the pin with their scope's releaseNewRdds (they consume the list
+    * the pin with their `Pins.scoped` block (they consume the list
     * before returning); only a frame returned by [[serve]] keeps its
     * pin — until the caller drops it and the ContextCleaner reclaims
     * — bounded by the list, not the dimension.
@@ -596,7 +583,7 @@ object HistoryStore {
               "shuffled anti-joins, no broadcast). Raise " +
               "spark.graft.history.purgeLocalCap only with driver " +
               "heap to match.")
-        Some(PurgeList(p.localCheckpoint(true), local = false, n))
+        Some(PurgeList(Pins.checkpoint(p), local = false, n))
       }
     }
   }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.hadoop.fs.Path
 
-import graft.core.ParquetTable
+import graft.core.{ParquetTable, Pins}
 
 /** Store plumbing shared by the two persisted indexes
   * ([[BandIndex]], [[VectorIndex]]) — ONE implementation of the
@@ -328,9 +328,9 @@ private[graft] object IndexStores {
     *     deterministically (store unchanged ⇒ identical verdicts ⇒
     *     byte-identical overwrite).
     *
-    * Checkpoint bookkeeping (the releaseNewRdds discipline) wraps the
-    * whole step. `compute`'s result is pinned before the write so the
-    * extend re-reads the landed decision, not a recomputation.
+    * One `Pins.scoped` block releases the step's checkpoints.
+    * `compute`'s result is pinned before the write so the extend
+    * re-reads the landed decision, not a recomputation.
     */
   def fencedCurationStep(batch: DataFrame, storePath: String,
       outDir: String, batchId: Long, producer: String,
@@ -347,16 +347,14 @@ private[graft] object IndexStores {
     if (bootstrapped && rangesApplied(sketchRanges(spark, storePath),
         producer, batchId))
       return // fully applied: output landed before the extend committed
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet.toSet
-    try {
-      val b = batch.localCheckpoint(true)
-      val kept = compute(b, bootstrapped).localCheckpoint(true)
+    Pins.scoped {
+      val b = Pins.checkpoint(batch)
+      val kept = Pins.checkpoint(compute(b, bootstrapped))
       val dir = s"$outDir/${tagFor(producer, batchId)}"
       kept.write.mode("overwrite").parquet(dir)
       forceSchemaBearing(kept, dir)
       extendKept(kept)
-    } finally graft.BenchUtil.releaseNewRdds(sc, before)
+    }
   }
 
   /** The per-batch tag a delta-tag store writes its delta under:

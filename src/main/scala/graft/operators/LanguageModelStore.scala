@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Pins
+
 /** Persisted n-gram language model — the CCNet-style quality gate: a
   * bigram LM counted over a FIXED reference corpus (curated text), and
   * every later corpus version or ingest batch scored against that
@@ -50,13 +52,11 @@ object LanguageModelStore {
   def write(refDocs: DataFrame, path: String): Unit = {
     val spark = refDocs.sparkSession
     import spark.implicits._
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet.toSet
-    try {
+    Pins.scoped {
       val staging = IndexStores.stagingFor(spark, path)
       val tok = refDocs.select(explode(TextOps.tokens).as("w1"))
-      val uni = tok.groupBy("w1").agg(count(lit(1)).as("cw"))
-        .localCheckpoint() // feeds the store write AND the meta aggregate
+      // feeds the store write AND the meta aggregate
+      val uni = Pins.checkpoint(tok.groupBy("w1").agg(count(lit(1)).as("cw")))
       uni.write.mode("overwrite").parquet(s"$staging/unigrams")
       TextOps.docBigrams(refDocs)
         .groupBy("w1", "w2").agg(count(lit(1)).as("cb"))
@@ -68,7 +68,7 @@ object LanguageModelStore {
       Seq((v, n)).toDF("vocab_size", "total_tokens").coalesce(1)
         .write.mode("overwrite").parquet(s"$staging/meta")
       IndexStores.swapInto(spark, path, staging)
-    } finally graft.BenchUtil.releaseNewRdds(sc, before)
+    }
   }
 
   /** Grow the reference corpus without a recount of the old one:
@@ -82,16 +82,14 @@ object LanguageModelStore {
   def extend(newRefDocs: DataFrame, path: String): Unit = {
     val spark = newRefDocs.sparkSession
     import spark.implicits._
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet.toSet
-    try {
+    Pins.scoped {
       IndexStores.healRoot(spark, path)
       val staging = IndexStores.stagingFor(spark, path)
-      val uni = IndexStores.readStore(spark, s"$path/unigrams")
+      // pin BEFORE the swap unlinks the old generation
+      val uni = Pins.checkpoint(IndexStores.readStore(spark, s"$path/unigrams")
         .unionByName(newRefDocs.select(explode(TextOps.tokens).as("w1"))
           .groupBy("w1").agg(count(lit(1)).as("cw")))
-        .groupBy("w1").agg(sum("cw").as("cw"))
-        .localCheckpoint() // pin BEFORE the swap unlinks the old generation
+        .groupBy("w1").agg(sum("cw").as("cw")))
       uni.write.mode("overwrite").parquet(s"$staging/unigrams")
       IndexStores.readStore(spark, s"$path/bigrams")
         .unionByName(TextOps.docBigrams(newRefDocs)
@@ -103,7 +101,7 @@ object LanguageModelStore {
       Seq((v, n)).toDF("vocab_size", "total_tokens").coalesce(1)
         .write.mode("overwrite").parquet(s"$staging/meta")
       IndexStores.swapInto(spark, path, staging)
-    } finally graft.BenchUtil.releaseNewRdds(sc, before)
+    }
   }
 
   /** Model-fit dial — how much of a batch the frozen reference has

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Pins
+
 /** Persisted space-filling-curve layout (z-order by default, hilbert
   * via `curve`) with the full ingest lifecycle — the fourth member of
   * the persisted-artifact family ([[VectorIndex]], [[BandIndex]],
@@ -78,20 +80,20 @@ object LayoutStore {
         s"contract) and bits*dims <= 62; got ${cols.size} dims, " +
         s"cellBits=$cellBits, bits=$bits")
     val spark = df0.sparkSession
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet.toSet
-    try {
+    Pins.scoped {
       // pin the input before the bounds aggregate (append's TOCTOU
       // posture): a nondeterministic source re-executed inside
       // encodeWithBounds could otherwise produce values outside the
       // captured bounds and silently clamp into edge cells at
       // initial-build time
-      val df = df0.localCheckpoint()
+      val df = Pins.checkpoint(df0)
       val boundAggs = cols.flatMap(c =>
         Seq(min(col(c).cast("long")), max(col(c).cast("long"))))
-      val agg = df.agg(boundAggs.head, boundAggs.tail: _*).head
-      val mins = cols.indices.map(i => agg.getLong(2 * i))
-      val maxs = cols.indices.map(i => agg.getLong(2 * i + 1))
+      // the row count rides the bounds job: it sizes the ids/ sidecar
+      val agg = df.agg(count(lit(1)), boundAggs: _*).head
+      val rows = agg.getLong(0)
+      val mins = cols.indices.map(i => agg.getLong(2 * i + 1))
+      val maxs = cols.indices.map(i => agg.getLong(2 * i + 2))
       val staging = IndexStores.stagingFor(spark, path)
       LayoutOps.encodeWithBounds(df, cols, mins, maxs, bits, cellBits,
         curve)
@@ -103,7 +105,7 @@ object LayoutStore {
       // the probe sidecar reads back the just-written data (not the
       // input plan — same reuse posture as writeIvfPq's vectors join);
       // its directory granularity follows the measured input size
-      val idpMod = idpModFor(spark, df.count())
+      val idpMod = idpModFor(spark, rows)
       idRows(spark.read.parquet(s"$staging/data"), cols, idCol, idpMod)
         .repartition(col("idp"))
         .write.mode("overwrite").partitionBy("idp")
@@ -115,7 +117,7 @@ object LayoutStore {
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$staging/meta")
       IndexStores.swapInto(spark, path, staging)
-    } finally graft.BenchUtil.releaseNewRdds(sc, before)
+    }
   }
 
   /** The narrow probe row: id, dimension values, cell, id-prefix.
@@ -183,15 +185,12 @@ object LayoutStore {
     // check, the presence probes and both writes must all see the SAME
     // rows — probing the live batch plan and re-executing it for the
     // write is a TOCTOU for nondeterministic sources (the BandIndex
-    // pin posture). Snapshot-diff release so a batch-loop ingest can't
-    // accumulate checkpoint blocks (the round-7b leak fix posture).
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet.toSet
-    try {
-      val enc = LayoutOps.encodeWithBounds(batch, meta.cols, meta.mins,
-        meta.maxs, meta.bits, meta.cellBits, meta.curve)
-        .drop(meta.cols.map(c => s"zb_$c"): _*)
-        .localCheckpoint()
+    // pin posture). The scope releases the pins so a batch-loop ingest
+    // can't accumulate checkpoint blocks (the round-7b leak fix posture).
+    Pins.scoped {
+      val enc = Pins.checkpoint(LayoutOps.encodeWithBounds(batch, meta.cols,
+        meta.mins, meta.maxs, meta.bits, meta.cellBits, meta.curve)
+        .drop(meta.cols.map(c => s"zb_$c"): _*))
       IndexStores.rejectTombstoned(spark, path,
         enc.select(meta.idCol), meta.idCol, "LayoutStore.append")
       // a batch carrying the same id twice would sail past the
@@ -203,13 +202,12 @@ object LayoutStore {
         throw new IllegalArgumentException(
           s"LayoutStore.append: ${meta.idCol}=" +
             s"${dup(0).getAs[Any](0)} appears more than once in the batch")
-      val encIds = idRows(enc, meta.cols, meta.idCol, meta.idpMod)
-        .localCheckpoint()
+      val encIds = Pins.checkpoint(
+        idRows(enc, meta.cols, meta.idCol, meta.idpMod))
       val prefixes = encIds.select("idp").distinct()
         .collect().map(_.getInt(0)).toSeq
-      val stored = IndexStores.presentRows(spark, s"$path/ids",
-        "idp", prefixes, meta.idCol, enc.select(meta.idCol))
-        .localCheckpoint()
+      val stored = Pins.checkpoint(IndexStores.presentRows(spark,
+        s"$path/ids", "idp", prefixes, meta.idCol, enc.select(meta.idCol)))
       // loud reject on changed content: same id, different dims
       // (null-safe compare — dims can't be null post-encode, but the
       // check must not silently pass if that invariant ever slips)
@@ -235,7 +233,7 @@ object LayoutStore {
         .repartition(col("zcell"))
         .write.mode("append").partitionBy("zcell")
         .parquet(s"$path/data")
-    } finally graft.BenchUtil.releaseNewRdds(sc, before)
+    }
   }
 
   /** Logical delete by id: O(batch) tombstone append; every read

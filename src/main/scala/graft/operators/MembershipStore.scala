@@ -6,6 +6,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
 
+import graft.core.Pins
+
 /** Persisted Bloom MEMBERSHIP store — "has the corpus seen this item
   * at all?" under fixed memory, the sketch that CMS cannot be: a
   * Count-Min estimate of an UNSEEN item sits near ε·N (the collision
@@ -202,15 +204,12 @@ object MembershipStore {
     */
   private def buildFilter(df: DataFrame, key: Column,
       expectedItems: Long, fpp: Double): (Array[Byte], Long) = {
-    val sc = df.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet.toSet
-    try {
+    Pins.scoped {
       // pin: the projection feeds both the filter build and the count
       // (release is RDD-level — Dataset.unpersist is a no-op on
       // localCheckpointed frames)
-      val keyed = df.select(key.cast("string").as("__k"))
-        .filter(col("__k").isNotNull)
-        .localCheckpoint(true)
+      val keyed = Pins.checkpoint(df.select(key.cast("string").as("__k"))
+        .filter(col("__k").isNotNull))
       val n = keyed.count()
       // stat.bloomFilter over ZERO rows hands back an uninitialised
       // filter whose serialization NPEs — an empty batch (a curation
@@ -219,7 +218,7 @@ object MembershipStore {
         if (n == 0L) BloomFilter.create(expectedItems, fpp)
         else keyed.stat.bloomFilter("__k", expectedItems, fpp)
       (serialize(filter), n)
-    } finally graft.BenchUtil.releaseNewRdds(sc, before)
+    }
   }
 
   private def serialize(f: BloomFilter): Array[Byte] = {

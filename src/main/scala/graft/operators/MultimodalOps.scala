@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.core.Pins
+
 /** Multimodal-column plumbing ([EXT], SURVEY §7): image/audio/video
   * payloads ride the pipeline as opaque `binary` columns plus a typed
   * metadata struct; decode / feature-extraction / resize / frame-sample
@@ -460,8 +462,8 @@ object MultimodalOps {
                    maxHamming: Int = 4,
                    gridW: Int = 7, gridH: Int = 8): DataFrame =
     bandedHammingPairs(
-      imageDHash(spark, media, gridW, gridH)
-        .localCheckpoint(), // one decode pass feeds both join sides
+      // one decode pass feeds both join sides
+      Pins.checkpoint(imageDHash(spark, media, gridW, gridH)),
       hashCol = "dhash", nBits = gridW * gridH, maxHamming = maxHamming)
 
   /** Shared banded-hamming-join kernel for perceptual fingerprints
@@ -725,7 +727,7 @@ object MultimodalOps {
   def audioNearDup(spark: SparkSession, media: DataFrame,
                    maxHamming: Int = 4): DataFrame =
     bandedHammingPairs(
-      audioFingerprint(spark, media).localCheckpoint(),
+      Pins.checkpoint(audioFingerprint(spark, media)),
       hashCol = "afp", nBits = AudioSamples / AudioSubWin - 1,
       maxHamming = maxHamming)
 

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Pins
+
 /** Key-distribution profiling: the dial you read BEFORE choosing a
   * join strategy. At 100 TB the difference between a clean shuffle
   * join and a straggler that never finishes is one hot key — this
@@ -115,11 +117,9 @@ object ProfileOps {
   private def withReleasedCounts(df: DataFrame, key: String)(
       body: (SparkSession, DataFrame) => DataFrame): DataFrame = {
     val spark = df.sparkSession
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet.toSet
-    try {
-      val counts = df.groupBy(col(key)).agg(count(lit(1)).as("cnt"))
-        .localCheckpoint(eager = false)
+    Pins.scoped {
+      val counts = Pins.checkpoint(
+        df.groupBy(col(key)).agg(count(lit(1)).as("cnt")), eager = false)
       val result = body(spark, counts)
       val rows = result.collect()
       // the returned frame is a local relation, so the executed plan is
@@ -128,7 +128,7 @@ object ProfileOps {
       lastPlanForAudit = result.queryExecution.executedPlan.toString
       spark.createDataFrame(
         java.util.Arrays.asList(rows: _*), result.schema)
-    } finally graft.BenchUtil.releaseNewRdds(sc, before)
+    }
   }
 
   /** Executed plan of the most recent profile derivation (test hook for

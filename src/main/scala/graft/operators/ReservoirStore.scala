@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import graft.core.Pins
+
 /** Persisted bounded-size corpus SAMPLE — the "hold out a fixed eval
   * slice of an ever-growing corpus" artifact a training-data pipeline
   * keeps between runs. The sample is the bottom-`capacity` rows by a
@@ -87,19 +89,17 @@ object ReservoirStore {
       capacity: Int, seed: String, groupCol: String = ""): Unit = {
     val spark = df.sparkSession
     requireGeometry(spark, df.schema, idCol, capacity, groupCol)
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet.toSet
-    try {
+    Pins.scoped {
       // pin: the batch feeds both the count and the bottom-k (release
       // is RDD-level, after the publish has consumed the plan)
-      val pinned = df.localCheckpoint(true)
+      val pinned = Pins.checkpoint(df)
       val n = pinned.count()
       publish(spark, path,
         checkedWindow(bottomK(pinned, idCol, capacity, seed, groupCol),
           idCol),
         ResMeta(idCol, capacity, seed, n, generation = 1L, groupCol),
         Seq.empty)
-    } finally graft.BenchUtil.releaseNewRdds(sc, before)
+    }
   }
 
   /** Fold a batch in, exactly once per (producer, batchId): bottom-k
@@ -119,17 +119,15 @@ object ReservoirStore {
       // bootstrap: sample, meta AND ledger land in ONE staged swap —
       // a ledger written separately would open a crash window where
       // the replayed bootstrap batch double-counts n_seen
-      val sc = spark.sparkContext
-      val before = sc.getPersistentRDDs.keySet.toSet
-      try {
-        val pinned = df.localCheckpoint(true)
+      Pins.scoped {
+        val pinned = Pins.checkpoint(df)
         val n = pinned.count()
         publish(spark, path,
           checkedWindow(bottomK(pinned, idCol, capacity, seed, groupCol),
             idCol),
           ResMeta(idCol, capacity, seed, n, generation = 1L, groupCol),
           Seq((producer, batchId, batchId)))
-      } finally graft.BenchUtil.releaseNewRdds(sc, before)
+      }
       return
     }
     val m = metaOf(spark, path)
@@ -151,10 +149,8 @@ object ReservoirStore {
     val applied = appliedRanges(spark, path)
     if (IndexStores.rangesApplied(applied, producer, batchId))
       return // replay
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet.toSet
-    try {
-      val pinned = df.localCheckpoint(true)
+    Pins.scoped {
+      val pinned = Pins.checkpoint(df)
       val n = pinned.count()
       // the batch's own window is checked FIRST (within-batch exact
       // duplicates raise there), so the cross-batch dedup below only
@@ -180,7 +176,7 @@ object ReservoirStore {
         ResMeta(idCol, capacity, seed, m.nSeen + n, m.generation + 1L,
           groupCol),
         IndexStores.rangesAdd(applied, producer, batchId))
-    } finally graft.BenchUtil.releaseNewRdds(sc, before)
+    }
   }
 
   /** Shrink the sample capacity WITHOUT rescanning the corpus:
@@ -399,8 +395,8 @@ object ReservoirStore {
     */
   private def checkedWindow(window: DataFrame,
       idCol: String): DataFrame = {
-    val w = window.localCheckpoint(true)
-    val d = w.distinct().localCheckpoint(true)
+    val w = Pins.checkpoint(window)
+    val d = Pins.checkpoint(w.distinct())
     if (d.count() != w.count())
       throw new IllegalArgumentException(
         "reservoir store: the batch carries exact duplicate rows " +

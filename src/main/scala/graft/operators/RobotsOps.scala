@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Pins
+
 /** robots.txt compliance (RFC 9309) — the missing gatekeeper of the
   * web-curation family: a crawl-derived training corpus is expected
   * to honor the rules the origin published, and at 100 TB the check
@@ -412,7 +414,7 @@ object RobotsOps {
     // checkpoint every frontier assembly would run the line-explode
     // and group windows twice (review finding). Dimension-sized, so
     // the materialization is cheap
-    val keyed = keyedLines(robots, "host", "body").localCheckpoint()
+    val keyed = Pins.checkpoint(keyedLines(robots, "host", "body"))
     val kept = robotsFilterBy(dec, parseRobotsFrom(keyed, agent),
       idCol = "url")
     crawlSchedule(kept, parseCrawlDelayFrom(keyed, agent), seed,

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.ParquetTable
+import graft.core.{ParquetTable, Pins}
 
 /** Persisted incremental shard-packing manifest — the continuous-ingest
   * form of [[CorpusOps.packShards]]. A training corpus is assembled in
@@ -52,16 +52,13 @@ object ShardManifest {
                   budget: Long, batchId: Long): Boolean = {
     val st = state(spark, path).getOrElse(State(0L, Long.MinValue, -1L))
     if (batchId <= st.lastBatch) return false
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet.toSet
-    try {
+    Pins.scoped {
       // one bounded probe for the monotone contract + batch totals;
       // the packed frame is pinned by exclusivePrefixSum already.
       // Offsets continue from the stored total via packShards' base
       // hook — the shard formula exists only there.
-      val packed = CorpusOps.packShards(batch, budget,
-          base = st.totalTokens)
-        .localCheckpoint()
+      val packed = Pins.checkpoint(CorpusOps.packShards(batch, budget,
+          base = st.totalTokens))
       val agg = packed.agg(min("doc_id"), max("doc_id"),
         sum("est_tokens"), count(lit(1)),
         count_distinct(col("doc_id"))).head
@@ -88,7 +85,7 @@ object ShardManifest {
         Seq((st.totalTokens + agg.getLong(2), agg.getLong(1), batchId))
           .toDF("total_tokens", "max_doc_id", "last_batch").coalesce(1))
       true
-    } finally graft.BenchUtil.releaseNewRdds(sc, before)
+    }
   }
 
   /** All assignments packed so far (the union of batch directories). */

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Pins
+
 /** Text-analysis and document-deduplication operators for training-data
   * pipelines — the [EXT] surface of SURVEY §7 (the reference's own
   * "compute" never goes past templated SQL; these are the large-scale
@@ -179,7 +181,7 @@ object TextOps {
     // re-scan pattern mixtureWeights/setSimilarityPairs checkpoint
     // away). This tf table is the "features + training set" artifact a
     // production pipeline persists anyway.
-    val dtf = langIdTf(docs).localCheckpoint()
+    val dtf = Pins.checkpoint(langIdTf(docs))
     val prof = dtf.groupBy("lang", "g").agg(sum("tf").as("c"))
     val langTot = prof.groupBy("lang").agg(sum("c").as("nl"))
     val vocab = dtf.agg(countDistinct("g").as("v"))
@@ -455,7 +457,7 @@ object TextOps {
                          broadcastBatch: Boolean = true): DataFrame =
     // pinned: read by the corpus join, the self-join (twice) and the
     // verdict base — without it the signature kernel re-runs per branch
-    incrementalNearDupFrom(minhashBands(newDocs).localCheckpoint(),
+    incrementalNearDupFrom(Pins.checkpoint(minhashBands(newDocs)),
       newDocs, minhashBands(corpus), _ => shingles(corpus),
       minJaccard, broadcastBatch)
 
@@ -540,14 +542,13 @@ object TextOps {
         // semantics preserved exactly because every join below carries
         // `leg` in its key. ~10 sequential driver-blocking jobs per
         // serve → ~6 (measured in OPTIMIZATION_r14.md).
-        val pairs = corpusPairs.withColumn("leg", lit("c"))
-          .unionByName(batchPairs.withColumn("leg", lit("b")))
-          .localCheckpoint()
+        val pairs = Pins.checkpoint(corpusPairs.withColumn("leg", lit("c"))
+          .unionByName(batchPairs.withColumn("leg", lit("b"))))
         // the batch shingle table serves the na side, the in-batch
         // collider side AND the verification join — pinned once
-        val bsh = shingles(newDocs).localCheckpoint()
+        val bsh = Pins.checkpoint(shingles(newDocs))
         val cPairs = pairs.filter(col("leg") === "c")
-        val osh = corpusShinglesFor(cPairs)
+        val osh = Pins.checkpoint(corpusShinglesFor(cPairs)
           .select(col("doc_id").as("other"), col("s"))
           .join(cPairs.select("other").distinct(), Seq("other"), "left_semi")
           .withColumn("leg", lit("c"))
@@ -555,8 +556,7 @@ object TextOps {
             .select(col("doc_id").as("other"), col("s"))
             .join(pairs.filter(col("leg") === "b").select("other").distinct(),
               Seq("other"), "left_semi")
-            .withColumn("leg", lit("b")))
-          .localCheckpoint()
+            .withColumn("leg", lit("b"))))
         val na = bsh.groupBy("doc_id").agg(count(lit(1)).as("na"))
         val nb = osh.groupBy("leg", "other").agg(count(lit(1)).as("nb"))
         val ok = pairs.join(bsh, "doc_id")
@@ -617,7 +617,7 @@ object TextOps {
     // the checkpoint the per-document signature kernel would run 4×.
     // A production pipeline persists signatures anyway (they ARE the
     // index); ~32 bytes × MinhashSeeds per document.
-    val sig = minhashSignatures(docs).localCheckpoint()
+    val sig = Pins.checkpoint(minhashSignatures(docs))
     def side(s: String): DataFrame =
       sig.toDF(sig.columns.map(c => if (c == "doc_id") s else s"${c}_$s"): _*)
     val agree = (0 until MinhashSeeds)
@@ -779,7 +779,7 @@ object TextOps {
                          containmentThreshold: Double = 0.8,
                          maxDfFrac: Double = 0.1,
                          maxDfAbs: Long = DfCapAbsDefault): (DataFrame, DataFrame) = {
-    val stats = shinglePairStats(docs, maxDfFrac, maxDfAbs).localCheckpoint()
+    val stats = Pins.checkpoint(shinglePairStats(docs, maxDfFrac, maxDfAbs))
     (jaccardOf(stats, jaccardThreshold),
       containmentOf(stats, containmentThreshold))
   }
@@ -822,7 +822,7 @@ object TextOps {
     // without the checkpoint each replay re-runs the shingle explode,
     // DF cap, and idf aggregation (same pattern and size budget as
     // minhashJaccardEstimate's signature table: posting-list rows)
-    val sw = cosineWeightedIndex(docs, maxDfFrac, maxDfAbs).localCheckpoint()
+    val sw = Pins.checkpoint(cosineWeightedIndex(docs, maxDfFrac, maxDfAbs))
     val norms = sw.groupBy("doc_id").agg(sum("w2").as("n2"))
     val common = sw.as("x").join(sw.as("y"),
         col("x.s") === col("y.s") && col("x.doc_id") < col("y.doc_id"))
@@ -909,7 +909,7 @@ object TextOps {
     // materialise the bench shingle set ONCE: it feeds the sketch's
     // count + aggregate jobs and the confirmation join (Spark performs
     // no common-subexpression reuse across actions)
-    val bench = shingles(benchmark).select("s").distinct().localCheckpoint()
+    val bench = Pins.checkpoint(shingles(benchmark).select("s").distinct())
     val sketch = graft.functions.Bloom.sketchOf(bench, "s", bitsPerItem)
     decontaminateAgainst(docs, bench, sketch, minShared, maxDfFrac,
       maxDfAbs)
@@ -979,8 +979,8 @@ object TextOps {
     // pinned (optimization r13): the token table feeds the frequency
     // aggregation, the corpus total AND the probe side — unpinned,
     // the tokenizer explode replays once per branch
-    val tok = docs.select(col("doc_id"), explode(tokens).as("w"))
-      .localCheckpoint()
+    val tok = Pins.checkpoint(
+      docs.select(col("doc_id"), explode(tokens).as("w")))
     val freq = tok.groupBy("w").agg(count(lit(1)).as("c"))
     val total = tok.agg(count(lit(1)).cast("double").as("n"))
     tok.join(freq, "w")
@@ -1048,7 +1048,7 @@ object TextOps {
   def bigramSurprisal(docs: DataFrame): DataFrame = {
     // pinned (optimization r13): three consumers (bigram counts,
     // prefix counts, probe) — the surprisal replay reasoning
-    val bg = docBigrams(docs).localCheckpoint()
+    val bg = Pins.checkpoint(docBigrams(docs))
     val cbg = bg.groupBy("w1", "w2").agg(count(lit(1)).as("cb"))
     val cw1 = bg.groupBy("w1").agg(count(lit(1)).as("cw"))
     bg.join(cbg, Seq("w1", "w2")).join(cw1, Seq("w1"))
@@ -1230,7 +1230,7 @@ object TextOps {
     // aggregation + join probe side) and the exchanges differ, so
     // without the checkpoint every window would be hashed twice (the
     // cosinePairs replay pattern).
-    val win = windowTableOn(docs, winHashes).localCheckpoint()
+    val win = Pins.checkpoint(windowTableOn(docs, winHashes))
     val dupH = win.groupBy("h").agg(countDistinct("doc_id").as("nd"))
       .filter(col("nd") >= 2).select("h")
     // covered-token count WITHOUT the ×k explode (optimization r13):
@@ -1276,9 +1276,8 @@ object TextOps {
     // pinned (optimization r13): tf feeds the document-frequency
     // aggregation AND the probe side — unpinned, the explode+count
     // subtree replays per branch
-    val tf = docs.select(col("doc_id"), explode(tokens).as("w"))
-      .groupBy("doc_id", "w").agg(count(lit(1)).as("tf"))
-      .localCheckpoint()
+    val tf = Pins.checkpoint(docs.select(col("doc_id"), explode(tokens).as("w"))
+      .groupBy("doc_id", "w").agg(count(lit(1)).as("tf")))
     val dfW = tf.groupBy("w").agg(count(lit(1)).as("df"))
     val nDocs = docs.agg(count(lit(1)).cast("double").as("n_docs"))
     tf.join(dfW, "w")

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Pins
+
 /** Persisted IVF-PQ index: the build-once / search-many separation a
   * production ANN deployment runs ([[VectorOps.ivfPqTopK]]'s Scaladoc
   * already names it — "a production deployment persists it"; this is
@@ -316,7 +318,7 @@ object VectorIndex {
     IndexStores.rejectTombstoned(spark, path,
       newVectors.select("vec_id"), "vec_id", "addToIvfPq")
     val model = loadIvfPq(spark, path)
-    val enc = VectorOps.encodeIntoModel(model, newVectors).localCheckpoint()
+    val enc = Pins.checkpoint(VectorOps.encodeIntoModel(model, newVectors))
     // idempotency under crash-retry: each store skips ids it already
     // holds (a cell-pruned presence probe — the batch's cells bound the
     // read; the broadcast batch-id semi-join bounds the match), so

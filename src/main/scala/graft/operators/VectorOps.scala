@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Pins
+
 /** Embedding-similarity operators — approximate-nearest-neighbour search
   * and embedding near-dup detection over an `Array[Float]` column
   * ([EXT] surface, SURVEY §7).
@@ -269,9 +271,8 @@ object VectorOps {
     // deployment persists it); localCheckpoint truncates the lineage so
     // the probe query reads assignments, never re-runs the assignment
     // pass, and the feature cache can be released immediately
-    val corpus = model.transform(fe)
-      .select(col("vec_id"), col("embedding"), col("prediction").as("cell"))
-      .localCheckpoint()
+    val corpus = Pins.checkpoint(model.transform(fe)
+      .select(col("vec_id"), col("embedding"), col("prediction").as("cell")))
     fe.unpersist()
     (corpus, model.clusterCenters.map(_.toArray), nprobeEff)
   }
@@ -843,12 +844,12 @@ object VectorOps {
     // from a collapsed one — the codes would encode −centroid).
     val safeN = when(norm(col("embedding")) === 0d, 1d)
       .otherwise(norm(col("embedding")))
-    val residuals = corpus.join(broadcast(centroidsDf), Seq("cell"))
-      .withColumn("_n", safeN)
-      .select(col("vec_id"), col("cell"),
-        zip_with(vec(col("embedding")), col("centroid"),
-          (x, c) => x / col("_n") - c).as("embedding"))
-      .localCheckpoint()
+    val residuals = Pins.checkpoint(
+      corpus.join(broadcast(centroidsDf), Seq("cell"))
+        .withColumn("_n", safeN)
+        .select(col("vec_id"), col("cell"),
+          zip_with(vec(col("embedding")), col("centroid"),
+            (x, c) => x / col("_n") - c).as("embedding")))
     // codebooks train on residuals of the bounded sample — the tighter
     // distribution is the whole point of the residual layout
     val (dim, dsub, codebooks) = pqCodebooks(residuals, m, kCent, pqTrainRows)

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Pins
+
 /** URL / domain curation — the layer a web-crawl corpus keys on before
   * any text operator runs (CCNet / C4 / RefinedWeb lineage: every real
   * curation pipeline canonicalizes URLs, groups by registrable domain,
@@ -825,8 +827,7 @@ object WebOps {
     // it into one branch per rule KIND plus one per host-rule depth,
     // and each branch otherwise replays the docs scan + canonicalizer
     // kernel; blocks release via ContextCleaner once unreachable
-    val d = decorated.select("canon_url", "host", "domain")
-      .localCheckpoint()
+    val d = Pins.checkpoint(decorated.select("canon_url", "host", "domain"))
     val prepped = blocklistPrep(rules)
     val dm = d.join(broadcast(prepped.filter(col("kind") === "domain")
         .select(col("rule_id"), col("pat"))),

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Pins
 import graft.operators.{CorpusOps, GraphOps, TextOps, VectorOps}
 import graft.sources.Tables
 
@@ -36,7 +37,7 @@ object ExtQueries {
   private val langGuessCache = new SessionCache[DataFrame]
   private def langGuesses(spark: SparkSession, dir: String): DataFrame =
     langGuessCache.get(spark, dir)(
-      TextOps.langId(docs(spark, dir)).localCheckpoint())
+      Pins.checkpoint(TextOps.langId(docs(spark, dir))))
 
   /** MinHash candidate-pair artifact, shared by its six consumers
     * (`dedup_minhash_pairs`, `dedup_clusters`, `dedup_clusters_star`,
@@ -52,7 +53,7 @@ object ExtQueries {
   private val minhashPairsCache = new SessionCache[DataFrame]
   private def minhashPairs(spark: SparkSession, dir: String): DataFrame =
     minhashPairsCache.get(spark, dir)(
-      TextOps.minhashCandidatePairs(docs(spark, dir)).localCheckpoint())
+      Pins.checkpoint(TextOps.minhashCandidatePairs(docs(spark, dir))))
 
   /** Per-document quality-score artifact, shared by `text_quality`,
     * `dedup_canonical` and `corpus_pipeline`: the score table is the
@@ -66,7 +67,7 @@ object ExtQueries {
   private val qualityCache = new SessionCache[DataFrame]
   private def qualityScored(spark: SparkSession, dir: String): DataFrame =
     qualityCache.get(spark, dir)(
-      TextOps.qualityScore(docs(spark, dir)).localCheckpoint())
+      Pins.checkpoint(TextOps.qualityScore(docs(spark, dir))))
 
   /** Shared overlap-stats artifact ([[TextOps.setSimilarityPairs]]):
     * ONE inverted-index self-join per (session, dir) serves the
@@ -95,8 +96,8 @@ object ExtQueries {
   private val starClustersCache = new SessionCache[DataFrame]
   private def starClusters(spark: SparkSession, dir: String): DataFrame =
     starClustersCache.get(spark, dir)(
-      GraphOps.connectedComponentsStar(minhashPairs(spark, dir))
-        .localCheckpoint())
+      Pins.checkpoint(
+        GraphOps.connectedComponentsStar(minhashPairs(spark, dir))))
 
   /** Shared coarse-quantizer artifact
     * ([[VectorOps.trainIvfAssignment]]): ONE spherical k-means training
@@ -146,7 +147,7 @@ object ExtQueries {
     ivfPqModelCache.get(spark, dir) {
       val m = VectorOps.buildIvfPqModel(embs(spark, dir),
         reuse = Some(ivfAssignment(spark, dir)))
-      m.copy(codes = m.codes.localCheckpoint())
+      m.copy(codes = Pins.checkpoint(m.codes))
     }
 
   /** Oracle-artifact exports ([[OracleArtifacts]]): the trained,
@@ -196,8 +197,8 @@ object ExtQueries {
   private val embPairsCache = new SessionCache[DataFrame]
   private def embNearDupPairs(spark: SparkSession, dir: String): DataFrame =
     embPairsCache.get(spark, dir)(
-      VectorOps.nearDupPairs(embs(spark, dir), threshold = 0.4)
-        .localCheckpoint())
+      Pins.checkpoint(
+        VectorOps.nearDupPairs(embs(spark, dir), threshold = 0.4)))
 
   def textLangId(spark: SparkSession, dir: String): DataFrame =
     langGuesses(spark, dir).orderBy("doc_id")
@@ -472,7 +473,7 @@ object ExtQueries {
     // plans/r13/sketch_kmv_overlap_before.txt); Spark reuses nothing
     // across the branches. Blocks are released by ContextCleaner once
     // the frame is unreachable (the cosinePairs posture).
-    val toks = srcShingles(spark, dir).localCheckpoint()
+    val toks = Pins.checkpoint(srcShingles(spark, dir))
     val sk = graft.operators.SketchOps.kmvSketch(
       toks, Seq("source"), col("w"), k)
     overlapWithExact(graft.operators.SketchOps.kmvOverlap(sk, "source"),
@@ -490,7 +491,7 @@ object ExtQueries {
     // the distinct shingle table feeds THREE branches (per-source
     // counts + both sides of the intersection self-join); pin it so
     // the distinct shuffle runs once (optimization r13)
-    val dtoks = toks.distinct().localCheckpoint()
+    val dtoks = Pins.checkpoint(toks.distinct())
     val ex = dtoks.groupBy("source").agg(count(lit(1)).as("ex"))
     val exInter = dtoks.as("x")
       .join(dtoks.as("y"),
@@ -1983,10 +1984,8 @@ object ExtQueries {
     * materialised to scratch parquet and the prefix-sum pin released
     * before returning.
     */
-  def packSequences(spark: SparkSession, dir: String): DataFrame = {
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet.toSet
-    try {
+  def packSequences(spark: SparkSession, dir: String): DataFrame =
+    Pins.scoped {
       val root = packScratchCache.get(spark, dir) {
         java.nio.file.Files.createTempDirectory("graft-pack-scratch").toString
       }
@@ -1995,8 +1994,7 @@ object ExtQueries {
         .orderBy("lang", "bin_id")
         .write.mode("overwrite").parquet(out)
       spark.read.parquet(out).orderBy("lang", "bin_id")
-    } finally graft.BenchUtil.releaseNewRdds(sc, before)
-  }
+    }
 
   /** Global shard packing via the distributed two-phase prefix sum
     * ([[CorpusOps.packShards]]) — per document, its global token
@@ -2009,10 +2007,8 @@ object ExtQueries {
   private val packScratchCache =
     new SessionCache[String](SessionCache.deleteTree)
 
-  def corpusPackShards(spark: SparkSession, dir: String): DataFrame = {
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet.toSet
-    try {
+  def corpusPackShards(spark: SparkSession, dir: String): DataFrame =
+    Pins.scoped {
       // materialise to scratch parquet, NOT a driver collect: the
       // output is one row per document — O(corpus), exactly the
       // driver-heap cliff class the scale probe watches for. The
@@ -2027,8 +2023,7 @@ object ExtQueries {
         .orderBy("doc_id")
         .write.mode("overwrite").parquet(out)
       spark.read.parquet(out).orderBy("doc_id")
-    } finally graft.BenchUtil.releaseNewRdds(sc, before)
-  }
+    }
 
   def embedTopK(spark: SparkSession, dir: String): DataFrame =
     VectorOps.cosineTopK(embs(spark, dir), queryIds = Seq(0L, 1L, 2L, 3L, 4L), k = 10)
@@ -2568,51 +2563,6 @@ object ExtQueries {
       dhashMedia(spark, dir))
       .orderBy("media_id")
 
-  /** Per-gate checkpoint latch (optimization r14, VERDICT r13 #5).
-    * The near-dup gates used to collect their bounded verdict frame
-    * and re-create it driver-side, so every internal checkpoint could
-    * be released before returning — but that is a driver-heap step
-    * proportional to the verdict set (unbounded at a 100 TB dup rate)
-    * and it blinds plan audits (the declared plan was one
-    * LocalTableScan). Now the gate returns the LAZY frame — rows never
-    * land on the driver, the executed plan shows the real banded-join
-    * lineage — and the checkpoints that frame reads stay pinned until
-    * the NEXT invocation of the same gate releases them here. Retained
-    * blocks are bounded by one invocation per gate key; a failed build
-    * still releases its own pins immediately. A frame returned by a
-    * PREVIOUS invocation is not guaranteed re-executable after this
-    * release: a never-materialised one fails loudly on first access
-    * (the localCheckpoint contract, spec-pinned in
-    * NearDupGateLatchSpec), an already-materialised one may keep
-    * serving from its cached exchange outputs — either way it can
-    * never silently serve wrong or stale rows. Consumers materialise
-    * once.
-    */
-  private val gatePins = new java.util.concurrent.ConcurrentHashMap[
-    String, (org.apache.spark.SparkContext, Set[Int])]()
-  private def retainedAcrossCalls(spark: SparkSession, key: String)(
-      build: => DataFrame): DataFrame = {
-    val sc = spark.sparkContext
-    Option(gatePins.remove(key)).foreach { case (psc, ids) =>
-      if (psc eq sc)
-        // blocking: the previous frame's death must be deterministic
-        // (spec-pinned loud failure), not a race against async block
-        // removal; the released sets are invocation-bounded and small
-        ids.foreach(id =>
-          sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = true)))
-    }
-    val before = sc.getPersistentRDDs.keySet.toSet
-    try {
-      val df = build
-      gatePins.put(key,
-        (sc, sc.getPersistentRDDs.keySet.toSet -- before))
-      df
-    } catch { case t: Throwable =>
-      graft.BenchUtil.releaseNewRdds(sc, before)
-      throw t
-    }
-  }
-
   /** Image near-dup pairs by banded hamming join
     * ([[graft.operators.MultimodalOps.imageNearDup]]): every
     * (original, clone) twin must surface, plus any coincidental
@@ -2620,7 +2570,7 @@ object ExtQueries {
     * directly (equivalent by pigeonhole: bands = maxHamming + 1 makes
     * the banded join exhaustive, not approximate). Bounded output;
     * the one-decode-pass checkpoint is released by the next call
-    * ([[retainedAcrossCalls]]) — as for the other three near-dup
+    * ([[Pins.latched]]) — as for the other three near-dup
     * gates, the returned frame is fully valid until the SAME gate is
     * called again; after that a not-yet-materialised frame fails
     * loudly on first access (spec-pinned), while an
@@ -2628,7 +2578,7 @@ object ExtQueries {
     * exchange outputs (same rows either way — never stale data).
     */
   def multimodalNearDup(spark: SparkSession, dir: String): DataFrame =
-    retainedAcrossCalls(spark, "multimodal_neardup") {
+    Pins.latched(spark, "multimodal_neardup") {
       graft.operators.MultimodalOps.imageNearDup(spark,
         dhashMedia(spark, dir))
         .orderBy("a", "b")
@@ -2658,7 +2608,7 @@ object ExtQueries {
     * planted re-levelled copies a byte hash cannot.
     */
   def multimodalAudioNearDup(spark: SparkSession, dir: String): DataFrame =
-    retainedAcrossCalls(spark, "multimodal_audio_neardup") {
+    Pins.latched(spark, "multimodal_audio_neardup") {
       graft.operators.MultimodalOps.audioNearDup(spark,
         afpMedia(spark, dir))
         .orderBy("a", "b")
@@ -2684,7 +2634,7 @@ object ExtQueries {
     * so it shares its oracle verbatim.
     */
   def multimodalNearDupIndexed(spark: SparkSession, dir: String): DataFrame =
-    retainedAcrossCalls(spark, "multimodal_neardup_indexed") {
+    Pins.latched(spark, "multimodal_neardup_indexed") {
       val fps = graft.operators.MultimodalOps.imageDHash(spark,
         dhashMedia(spark, dir)).withColumnRenamed("dhash", "fp")
       // the thunk runs synchronously inside this call (cache miss
@@ -2704,7 +2654,7 @@ object ExtQueries {
     */
   def multimodalAudioNearDupIndexed(spark: SparkSession,
                                     dir: String): DataFrame =
-    retainedAcrossCalls(spark, "multimodal_audio_neardup_indexed") {
+    Pins.latched(spark, "multimodal_audio_neardup_indexed") {
       val fps = graft.operators.MultimodalOps.audioFingerprint(spark,
         afpMedia(spark, dir)).withColumnRenamed("afp", "fp")
       val path = fpIndexPath(spark, dir, "afp", () => fps, nBits = 31)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Pins
 import graft.sources.Tables
 
 /** The relational + pipeline-semantics query surface.
@@ -359,7 +360,7 @@ object RelationalQueries {
     // pin the changelog as data, as the real extractor pins its consumed
     // snapshot — without this the lazy entries subplan re-scans lineitem
     // in every changeBatch leg
-    val entries = gen1.unionByName(gen2).drop("l_linenumber").localCheckpoint()
+    val entries = Pins.checkpoint(gen1.unionByName(gen2).drop("l_linenumber"))
     graft.operators.QueueExtractor.changeBatch(spark, spec, entries)
       .select(col("l_orderkey"), col("l_linenumber"),
         col(Method.Col).as("method"),

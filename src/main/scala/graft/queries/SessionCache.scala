@@ -15,6 +15,9 @@ import org.apache.spark.sql.SparkSession
   * index directory) — exactly the leak the sweep exists to prevent.
   * Builds take seconds; lock contention is irrelevant.
   *
+  * The build runs with the calling thread's pin scopes suspended, so
+  * an artifact first built inside a `Pins.scoped` block outlives it.
+  *
   * Entries whose session has stopped are swept on every access;
   * `onEvict` releases any residue living OUTSIDE the session (e.g. a
   * persisted index's temp directory — executor-side checkpoint blocks
@@ -31,7 +34,7 @@ private[queries] final class SessionCache[V](onEvict: V => Unit = (_: V) => ()) 
     entries.synchronized {
       entries.keys.filter(_._1.sparkContext.isStopped).toList
         .foreach(k => entries.remove(k).foreach(onEvict))
-      entries.getOrElseUpdate((spark, dir), build)
+      entries.getOrElseUpdate((spark, dir), graft.core.Pins.unscoped(build))
     }
 }
 

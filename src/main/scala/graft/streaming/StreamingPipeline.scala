@@ -281,14 +281,11 @@ object StreamingPipeline {
         // the batch operator pins per-batch localCheckpoints (band +
         // shingle tables); release them once the verdicts are written,
         // or a long-running trigger accumulates pinned blocks between
-        // GC cycles (snapshot-scoped, so the caller's corpus artifact
-        // stays cached)
-        val sc = batch.sparkSession.sparkContext
-        val before = sc.getPersistentRDDs.keySet.toSet
-        try
+        // GC cycles (scoped to this batch's own pins, so the caller's
+        // corpus artifact stays cached)
+        Pins.scoped(
           graft.operators.TextOps.incrementalNearDup(batch, corpus, minJaccard)
-            .write.mode("append").parquet(verdictPath)
-        finally graft.BenchUtil.releaseNewRdds(sc, before)
+            .write.mode("append").parquet(verdictPath))
         ()
       }
       .start()
@@ -350,15 +347,12 @@ object StreamingPipeline {
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        val sc = spark.sparkContext
-        val before = sc.getPersistentRDDs.keySet.toSet
-        try {
+        Pins.scoped {
           // pinned: read by the verdict write AND the accepted-docs
           // semi-join; unpinned, the classify (index scan included)
           // would run twice per trigger
-          val verdicts = graft.operators.BandIndex
-            .classify(spark, indexPath, batch, minJaccard)
-            .localCheckpoint()
+          val verdicts = Pins.checkpoint(graft.operators.BandIndex
+            .classify(spark, indexPath, batch, minJaccard))
           verdicts.write.mode("append").parquet(verdictPath)
           val uniq = verdicts.filter(col("verdict") === "unique")
             .select("doc_id")
@@ -378,7 +372,7 @@ object StreamingPipeline {
           // spec-pinned)
           if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
             graft.operators.BandIndex.compact(spark, indexPath)
-        } finally graft.BenchUtil.releaseNewRdds(sc, before)
+        }
         ()
       }
       .start()
@@ -420,16 +414,14 @@ object StreamingPipeline {
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sc = batch.sparkSession.sparkContext
-        val before = sc.getPersistentRDDs.keySet.toSet
-        try {
+        Pins.scoped {
           // pin: landTrigger's empty-dir probe may re-execute the frame
-          val pinned = batch.localCheckpoint()
+          val pinned = Pins.checkpoint(batch)
           landTrigger(graft.operators.ContaminationIndex
             .decontaminate(pinned, indexPath, minShared, maxDfFrac,
               maxDfAbs),
             keptPath, producerFor(producer, checkpoint), batchId)
-        } finally graft.BenchUtil.releaseNewRdds(sc, before)
+        }
         ()
       }
       .start()
@@ -458,12 +450,10 @@ object StreamingPipeline {
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sc = batch.sparkSession.sparkContext
-        val before = sc.getPersistentRDDs.keySet.toSet
-        try {
+        Pins.scoped {
           // pin: the batch feeds the count delta AND the strip — and a
           // streaming source must not be re-read on the second use
-          val pinned = batch.localCheckpoint()
+          val pinned = Pins.checkpoint(batch)
           graft.operators.BoilerplateIndex.update(pinned, indexPath,
             producerFor(producer, checkpoint), batchId)
           landTrigger(
@@ -477,7 +467,7 @@ object StreamingPipeline {
           if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
             graft.operators.BoilerplateIndex.compact(
               batch.sparkSession, indexPath)
-        } finally graft.BenchUtil.releaseNewRdds(sc, before)
+        }
         ()
       }
       .start()
@@ -502,14 +492,12 @@ object StreamingPipeline {
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sc = batch.sparkSession.sparkContext
-        val before = sc.getPersistentRDDs.keySet.toSet
-        try {
+        Pins.scoped {
           // pin: landTrigger's empty-dir probe may re-execute the frame
-          val pinned = batch.localCheckpoint()
+          val pinned = Pins.checkpoint(batch)
           landTrigger(graft.operators.TokenizerStore.project(pinned, toks),
             outPath, producerFor(producer, checkpoint), batchId)
-        } finally graft.BenchUtil.releaseNewRdds(sc, before)
+        }
         ()
       }
       .start()
@@ -538,15 +526,13 @@ object StreamingPipeline {
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sc = batch.sparkSession.sparkContext
-        val before = sc.getPersistentRDDs.keySet.toSet
-        try {
+        Pins.scoped {
           // pin: the batch feeds the score join AND the semi-join back
-          val pinned = batch.localCheckpoint()
+          val pinned = Pins.checkpoint(batch)
           landTrigger(graft.operators.LanguageModelStore
             .filterWith(pinned, model, maxSurprisal),
             keptPath, producerFor(producer, checkpoint), batchId)
-        } finally graft.BenchUtil.releaseNewRdds(sc, before)
+        }
         ()
       }
       .start()
@@ -574,10 +560,8 @@ object StreamingPipeline {
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sc = batch.sparkSession.sparkContext
-        val before = sc.getPersistentRDDs.keySet.toSet
-        try {
-          val pinned = batch.localCheckpoint()
+        Pins.scoped {
+          val pinned = Pins.checkpoint(batch)
           graft.operators.FingerprintIndex.append(pinned, indexPath)
           landTrigger(graft.operators.FingerprintIndex
             .classify(batch.sparkSession, indexPath, pinned)
@@ -589,7 +573,7 @@ object StreamingPipeline {
           if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
             graft.operators.FingerprintIndex.compact(
               batch.sparkSession, indexPath)
-        } finally graft.BenchUtil.releaseNewRdds(sc, before)
+        }
         ()
       }
       .start()
@@ -616,21 +600,18 @@ object StreamingPipeline {
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sc = batch.sparkSession.sparkContext
-        val before = sc.getPersistentRDDs.keySet.toSet
-        try {
+        Pins.scoped {
           // pin the micro-batch: it feeds both sides of the
           // accept-set join (the raw rows AND the scorer's featurize),
           // which would otherwise re-read the source files 3× per
-          // trigger; the pin is what the snapshot-diff release harness
-          // then cleans up
-          val pinned = batch.localCheckpoint()
+          // trigger; the scope releases the pin
+          val pinned = Pins.checkpoint(batch)
           landTrigger(pinned.join(
             graft.operators.QualityClassifier.score(pinned, model)
               .filter(col("prob") >= minProb).select("doc_id"),
             "doc_id"),
             keptPath, producerFor(producer, checkpoint), batchId)
-        } finally graft.BenchUtil.releaseNewRdds(sc, before)
+        }
         ()
       }
       .start()
@@ -655,15 +636,13 @@ object StreamingPipeline {
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sc = batch.sparkSession.sparkContext
-        val before = sc.getPersistentRDDs.keySet.toSet
-        try {
-          val pinned = batch.localCheckpoint()
+        Pins.scoped {
+          val pinned = Pins.checkpoint(batch)
           landTrigger(
             graft.operators.ConstraintOps.check(pinned, constraints)
               .withColumn("batch_id", lit(batchId)),
             reportPath, producerFor(producer, checkpoint), batchId)
-        } finally graft.BenchUtil.releaseNewRdds(sc, before)
+        }
         ()
       }
       .start()
@@ -708,13 +687,11 @@ object StreamingPipeline {
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        val sc = spark.sparkContext
-        val before = sc.getPersistentRDDs.keySet.toSet
-        try {
+        Pins.scoped {
           graft.operators.VectorIndex.addToIvfPq(spark, indexPath, batch)
           if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
             graft.operators.VectorIndex.compactIvfPq(spark, indexPath)
-        } finally graft.BenchUtil.releaseNewRdds(sc, before)
+        }
         ()
       }
       .start()
@@ -896,10 +873,8 @@ object StreamingPipeline {
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sc = batch.sparkSession.sparkContext
-        val before = sc.getPersistentRDDs.keySet.toSet
-        try {
-          val pinned = batch.localCheckpoint()
+        Pins.scoped {
+          val pinned = Pins.checkpoint(batch)
           val report =
             if (pinned.isEmpty) {
               // null-drift row: an empty trigger HAS no shape; the
@@ -911,7 +886,7 @@ object StreamingPipeline {
               .driftAgainst(pinned, refPath)
           landTrigger(report.withColumn("batch_id", lit(batchId)),
             reportPath, producerFor(producer, checkpoint), batchId)
-        } finally graft.BenchUtil.releaseNewRdds(sc, before)
+        }
         ()
       }
       .start()
@@ -937,10 +912,8 @@ object StreamingPipeline {
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sc = batch.sparkSession.sparkContext
-        val before = sc.getPersistentRDDs.keySet.toSet
-        try {
-          val pinned = batch.localCheckpoint()
+        Pins.scoped {
+          val pinned = Pins.checkpoint(batch)
           val report =
             if (pinned.isEmpty) {
               import pinned.sparkSession.implicits._
@@ -950,7 +923,7 @@ object StreamingPipeline {
               pinned.sparkSession.read.parquet(refSharesPath))
           landTrigger(report.withColumn("batch_id", lit(batchId)),
             reportPath, producerFor(producer, checkpoint), batchId)
-        } finally graft.BenchUtil.releaseNewRdds(sc, before)
+        }
         ()
       }
       .start()

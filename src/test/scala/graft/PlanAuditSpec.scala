@@ -86,9 +86,7 @@ class PlanAuditSpec extends SparkSpec {
     // audit the OPERATOR plan: the gate serves from the scratch
     // parquet it materialises (releasing the prefix-sum pin), so its
     // own plan is just a bounded file scan
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet.toSet
-    try {
+    core.Pins.scoped {
       val p = operators.CorpusOps
         .packSequences(sources.Tables.documents(spark, sf))
         .queryExecution.executedPlan.toString
@@ -101,7 +99,7 @@ class PlanAuditSpec extends SparkSpec {
       // per-stratum base offsets join as a broadcast (lang-count rows)
       assert(p.contains("BroadcastHashJoin"),
         s"stratum base offsets must broadcast:\n$p")
-    } finally graft.BenchUtil.releaseNewRdds(sc, before)
+    }
     val g = plan("pack_sequences")
     assert(g.contains("FileScan parquet"),
       s"the gate must serve the materialised bounded output:\n$g")
