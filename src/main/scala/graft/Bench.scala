@@ -270,6 +270,11 @@ object Bench {
         "from it")
     }
     val allPasses: Seq[Seq[(String, Double, Boolean, Long)]] = passBuf.toSeq
+    val contendedPass = BenchUtil.contendedPass(totals.toSeq)
+    if (contendedPass)
+      System.err.println(f"[bench] WARNING: contended_pass — pass 2 " +
+        f"total ${totals(1)}%.1f s is more than 15%% slower than " +
+        f"pass 1's ${totals.head}%.1f s")
     // failure and heap attribution fold over the redraw passes too:
     // the reported min does (measuredMins), and an artifact saying
     // "failed":["g"] beside "g":0.6 from a succeeding redraw would be
@@ -352,13 +357,13 @@ object Bench {
       }.mkString("{", ",", "}"))
       .mkString("[", ",", "]")
     val line =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir","passes":$passTotals,"per_pass":$perPass,"failed":$failedJson,"peak_heap_mb":$peakHeapMb,"heap_mb":$heapJson,"dispersion":$dispersion%.3f,$floorJson,"gate_floor_ratio":$gateRatioJson,"floor_stragglers":$stragglerJson,"gate_redraws":$redrawJson}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir","passes":$passTotals,"per_pass":$perPass,"failed":$failedJson,"peak_heap_mb":$peakHeapMb,"heap_mb":$heapJson,"dispersion":$dispersion%.3f,$floorJson,"gate_floor_ratio":$gateRatioJson,"floor_stragglers":$stragglerJson,"gate_redraws":$redrawJson,"contended_pass":$contendedPass}"""
     // Short headline FIRST, then the full per-query line LAST: a reader
     // of the final stdout line gets the per-query map, and one that
     // truncates the long line mid-object still finds the headline
     // parsing on its own just above it.
     val headline =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","passes":$passTotals,"sf":"$sfDir",$floorJson}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","passes":$passTotals,"sf":"$sfDir",$floorJson,"contended_pass":$contendedPass}"""
     // the lines must be machine-readable: print to stdout (forked run
     // output bypasses sbt's logger, see build.sbt outputStrategy) AND
     // drop the full line in a file so log-scraping never has to parse

@@ -81,6 +81,16 @@ private[graft] object BenchUtil {
     else Some((mSub / fSub, fSub, mSub, shared.size))
   }
 
+  /** Contention signal: pass 2's total more than `band` (15%) slower
+    * than pass 1's. Both passes run the same warm suite, so a slower
+    * second pass measured the box, not the code — the r14 32-core draw
+    * went 218 → 270 s and still passed the 1.5× pair tripwire. Only a
+    * warning in the artifact; it gates nothing.
+    */
+  def contendedPass(passTotals: Seq[Double], band: Double = 0.15): Boolean =
+    passTotals.size >= 2 && passTotals.head > 0.0 &&
+      passTotals(1) > passTotals.head * (1.0 + band)
+
   /** PER-GATE floor adjudication (VERDICT r10 #3): the shared gates
     * whose measured time exceeds `band`× their own committed floor —
     * the spikes a passing TOTAL can hide (a 4× gate inside a 1.2×

@@ -11,10 +11,24 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
+  /** Marks a session [[configure]] has already set up. */
+  private val configuredFlag = "graft.session.configured"
+
   /** Apply engine-required SQL confs to an externally-created session
-    * (e.g. the driver's Verify/Bench session). Safe to call repeatedly.
+    * (e.g. the driver's Verify/Bench session). Runs once per session
+    * (guarded by a session conf flag): later calls — every
+    * `Tables.readTable` makes one — are no-ops, so a caller's later
+    * override of any of these confs stands.
     */
-  def configure(spark: SparkSession): SparkSession = {
+  def configure(spark: SparkSession): SparkSession = spark.synchronized {
+    if (!spark.conf.getOption(configuredFlag).contains("true")) {
+      applyDefaults(spark)
+      spark.conf.set(configuredFlag, "true")
+    }
+    spark
+  }
+
+  private def applyDefaults(spark: SparkSession): Unit = {
     // The driver's synthetic `events` table carries TIMESTAMP(NANOS)
     // parquet columns, which Spark rejects natively; read them as raw
     // nanosecond longs and convert in Tables.readTable.
@@ -56,7 +70,6 @@ object GraftSession {
     spark.udf.register("geomean",
       org.apache.spark.sql.functions.udaf(graft.functions.GeoMean))
     graft.core.Metrics.attach(spark)
-    spark
   }
 
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {

@@ -29,7 +29,9 @@ final case class TrackingStatus(
   * real deployment this component would be a Delta table and commit via
   * its log).
   *
-  * The table is O(#pipelines) rows — never a scale concern.
+  * The table is O(#pipelines) rows — never a scale concern — so the
+  * snapshot is one parquet file written on the driver with parquet-mr,
+  * starting no Spark job; it reads back through Spark like any table.
   */
 final class TrackingStore(spark: SparkSession, root: String) {
 
@@ -47,8 +49,8 @@ final class TrackingStore(spark: SparkSession, root: String) {
 
   /** In-memory image of the (tiny, O(#pipelines)) table, loaded once and
     * kept in sync by `put` — point reads and commits then cost zero
-    * Spark jobs beyond the snapshot write. The store is owned by one
-    * runner; an external writer would require dropping this cache.
+    * Spark jobs. The store is owned by one runner; an external writer
+    * would require dropping this cache.
     */
   private var cached: Option[Vector[TrackingStatus]] = None
 
@@ -133,9 +135,7 @@ final class TrackingStore(spark: SparkSession, root: String) {
     // snapshot (recovery then picks the true latest by numeric order even
     // with the pointer gone — see versionNum)
     val next = s"v${math.max(prev.map(versionNum).getOrElse(0L), 0L) + 1L}"
-    spark
-      .createDataFrame(spark.sparkContext.parallelize(rows.map(toRow), 1), schema)
-      .write.mode("overwrite").parquet(s"$root/$next")
+    writeSnapshot(new Path(root, next), rows)
     cached = Some(rows.toVector)
     val tmp = new Path(root, s"_CURRENT.tmp${ParquetTable.stamp()}")
     val out = fs.create(tmp, true)
@@ -148,6 +148,53 @@ final class TrackingStore(spark: SparkSession, root: String) {
     // GC the superseded snapshot — a long drain commits every batch and
     // would otherwise accumulate one tiny dir per micro-batch forever
     prev.filter(_ != next).foreach(v => fs.delete(new Path(root, v), true))
+  }
+
+  /** The Parquet image of [[schema]], as Spark's own writer derives it
+    * (timestamps as INT64 `TIMESTAMP(MICROS, UTC)`).
+    */
+  private val parquetSchema = {
+    import org.apache.spark.sql.internal.SQLConf.ParquetOutputTimestampType
+    new org.apache.spark.sql.execution.datasources.parquet
+      .SparkToParquetSchemaConverter(
+        outputTimestampType = ParquetOutputTimestampType.TIMESTAMP_MICROS)
+      .convert(schema)
+  }
+
+  /** Write `rows` as the single data file of snapshot dir `dir`,
+    * replacing whatever a crashed earlier `put` left there (that dir was
+    * never pointed at). Timestamps are Spark's own (proleptic Gregorian)
+    * microseconds, and the footer carries the Spark-version key, so Spark
+    * reads the file as it reads its own writes: no calendar rebase,
+    * pre-1900 values included.
+    */
+  private def writeSnapshot(dir: Path, rows: Seq[TrackingStatus]): Unit = {
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.spark.sql.catalyst.util.DateTimeUtils.fromJavaTimestamp
+    fs.delete(dir, true)
+    val w = ExampleParquetWriter
+      .builder(org.apache.parquet.hadoop.util.HadoopOutputFile
+        .fromPath(new Path(dir, "part-00000.parquet"), hconf))
+      .withType(parquetSchema)
+      .withConf(hconf)
+      .withExtraMetaData(java.util.Map.of(
+        "org.apache.spark.version", org.apache.spark.SPARK_VERSION_SHORT))
+      .build()
+    try {
+      val groups = new org.apache.parquet.example.data.simple
+        .SimpleGroupFactory(parquetSchema)
+      rows.foreach { t =>
+        val g = groups.newGroup()
+          .append("sourceDatabase", t.sourceDatabase)
+          .append("sourceTable", t.sourceTable)
+          .append("columnName", t.columnName)
+          .append("sequentialPosition", t.sequentialPosition)
+        t.timestampPosition.foreach(ts =>
+          g.append("timestampPosition", fromJavaTimestamp(ts)))
+        t.lastRun.foreach(ts => g.append("lastRun", fromJavaTimestamp(ts)))
+        w.write(g)
+      }
+    } finally w.close()
   }
 
   private def toRow(t: TrackingStatus): Row = Row(

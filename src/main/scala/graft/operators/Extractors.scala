@@ -2,6 +2,7 @@ package graft.operators
 
 import java.sql.Timestamp
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -184,13 +185,16 @@ class TimestampFallbackExtractor(clock: () => Timestamp = () => new Timestamp(Sy
   * entry per PK so set-based processing converges to the same end state
   * as the reference's strictly-ordered per-entry replay.
   *
-  * Acks are append-only: consumed entries are recorded in a sibling
-  * `<queue>__acks` table in the deferred `commit` callback (only after
-  * the sink succeeded), and the queue read anti-joins the acks. An ack
-  * is O(batch) and never rewrites the changelog, so entries appended by
-  * a live CDC producer mid-batch are never lost (the previous
-  * read/anti-join/swap design deleted them). [[compactQueue]] folds
-  * accumulated acks back into the changelog as explicit maintenance.
+  * Acks are append-only: the deferred `commit` callback (run only after
+  * the sink succeeded) moves the consumed batch's snapshot files into a
+  * sibling `<queue>__acks` table by rename — the rows are never
+  * re-written — and the queue read anti-joins the acks on
+  * [[queueCols]]; the batch's row count is read from those files'
+  * parquet footers. An ack is O(batch files) and never rewrites the
+  * changelog, so entries appended by a live CDC producer mid-batch are
+  * never lost (the previous read/anti-join/swap design deleted them).
+  * [[compactQueue]] folds accumulated acks back into the changelog as
+  * explicit maintenance.
   */
 object QueueExtractor extends Extractor {
   val name = "queue"
@@ -203,11 +207,24 @@ object QueueExtractor extends Extractor {
   private def queue(spark: SparkSession, spec: PipelineSpec): DataFrame = {
     val raw = ParquetTable.read(spark, queuePath(spec)).getOrElse(
       throw new IllegalArgumentException(s"queue table missing at ${queuePath(spec)}"))
-    ParquetTable.read(spark, ackPath(spec)) match {
-      case Some(acks) => raw.join(acks, queueCols, "left_anti")
-      case None       => raw
+    acks(spark, spec, raw.schema) match {
+      case Some(a) => raw.join(a, queueCols, "left_anti")
+      case None    => raw
     }
   }
+
+  /** The ack table projected to [[queueCols]], read with the changelog's
+    * own column types instead of a footer-inference job. Ack files carry
+    * either every changelog column (snapshot files moved in by the ack)
+    * or just `queueCols` (older builds appended a projection); both read
+    * the same under this schema, and an ack dir with no data file yet
+    * reads empty. The `exists` probe does the swap-crash recovery.
+    */
+  private def acks(spark: SparkSession, spec: PipelineSpec,
+      rawSchema: StructType): Option[DataFrame] =
+    if (!ParquetTable.exists(spark, ackPath(spec))) None
+    else Some(spark.read.schema(StructType(queueCols.map(rawSchema(_))))
+      .parquet(ackPath(spec)))
 
   /** Pending (un-acked) entries for this pipeline's source table — the
     * drained-queue assertion surface for tests and ops.
@@ -250,10 +267,8 @@ object QueueExtractor extends Extractor {
     */
   def compactQueue(spark: SparkSession, spec: PipelineSpec,
       onSnapshot: () => Unit = () => ()): Unit = {
-    import org.apache.hadoop.fs.Path
     val qp = queuePath(spec)
-    val acksOpt = ParquetTable.read(spark, ackPath(spec))
-    if (acksOpt.isEmpty) return
+    if (!ParquetTable.exists(spark, ackPath(spec))) return
     val p = new Path(qp)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) return
@@ -268,7 +283,7 @@ object QueueExtractor extends Extractor {
     val schema = snapRows.schema
     // 2. stage the survivors of exactly the snapped files
     val staging = new Path(qp + s".__staging_${ParquetTable.stamp()}")
-    snapRows.join(acksOpt.get, queueCols, "left_anti")
+    snapRows.join(acks(spark, spec, schema).get, queueCols, "left_anti")
       .write.mode("overwrite").parquet(staging.toString)
     // 3. move in, then delete the snapshot. When the survivors are
     // EMPTY the staged write yields no part files — plant a
@@ -404,14 +419,14 @@ object QueueExtractor extends Extractor {
 
   /** Delete THIS pipeline's inflight root wholesale. Safe under the
     * queue's per-table single-consumer contract: any dir found here
-    * is a CRASHED prior extract's — either its ack already appended
-    * (the snapshot is stale) or it never acked (its entries are
-    * still pending and the current extract re-reads them) — so
-    * deletion can never lose an entry. Sibling tables' roots are
+    * is a CRASHED prior extract's — either its ack already moved the
+    * data files out (only markers remain) or it never acked (its
+    * entries are still pending and the current extract re-reads
+    * them) — so deletion can never lose an entry. Sibling tables' roots are
     * never touched.
     */
   private def clearInflight(spark: SparkSession, spec: PipelineSpec): Unit = {
-    val p = new org.apache.hadoop.fs.Path(inflightRoot(spec))
+    val p = new Path(inflightRoot(spec))
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p)) fs.delete(p, true)
   }
@@ -429,8 +444,8 @@ object QueueExtractor extends Extractor {
     // plan over the refreshed file listing — the "snapshot" would
     // grow mid-batch and the ack below would ack entries that were
     // never applied. Written parquet is immutable: the lookup join,
-    // the ack append and any replay all read the IDENTICAL rows, and
-    // the batch never touches driver heap — the ordered limit drains
+    // the ack and any replay all see the IDENTICAL rows, and the
+    // batch never touches driver heap — the ordered limit drains
     // through one (spillable) executor task into the staging dir, so
     // batchSize is bounded by executor disk, not driver memory.
     // Lifetime: the files outlive the load (unlike evictable
@@ -440,24 +455,33 @@ object QueueExtractor extends Extractor {
     // batch was never acked and the retry re-snapshots from the queue.
     val dir = s"${inflightRoot(spec)}/b_${java.util.UUID.randomUUID()}"
     view.write.mode("overwrite").parquet(dir)
-    // an empty drain must still leave a READABLE snapshot (schema
-    // inference over a fileless dir throws) — the store-family
-    // empty-artifact posture
-    IndexStores.forceSchemaBearing(view, dir)
-    val entries = spark.read.parquet(dir)
-    val cnt = entries.count()
+    // the schema is the view's own (no inference job, and a fileless
+    // empty snapshot reads as empty); the row count is the footers'
+    // (a driver-side metadata read, no count job)
+    val entries = spark.read.schema(view.schema).parquet(dir)
+    val cnt = IndexStores.parquetFooterRows(spark, dir).getOrElse(0L)
 
     val batch = changeBatch(spark, spec, entries)
 
     val ack = () => {
-      // Append-only ack, recorded only after sink success
-      // (commit-after-load): O(batch), and safe under live producers —
-      // nothing in the changelog dir is rewritten, and `entries` reads
-      // the pinned snapshot files, so exactly the consumed rows are
-      // acked.
-      if (cnt > 0)
-        ParquetTable.append(spark, ackPath(spec),
-          entries.select(queueCols.map(col): _*))
+      // Ack by MOVING the consumed snapshot's data files into the ack
+      // table, only after sink success (commit-after-load): no row is
+      // re-written, nothing in the changelog dir is touched (safe under
+      // live producers), and the moved files are exactly the pinned
+      // rows the load consumed. Part-file names carry the write's UUID,
+      // so they never collide in the ack dir; the one-task ordered
+      // limit writes one file, so the ack is normally one rename.
+      if (cnt > 0) {
+        val ap = new Path(ackPath(spec))
+        val fs = ap.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        fs.mkdirs(ap)
+        fs.listStatus(new Path(dir)).map(_.getPath)
+          .filter(_.getName.endsWith(".parquet")).foreach { f =>
+            if (!fs.rename(f, new Path(ap, f.getName)))
+              throw new java.io.IOException(
+                s"queue ack: could not move $f into $ap")
+          }
+      }
       ()
     }
 

@@ -80,4 +80,12 @@ class BenchFloorSpec extends AnyFunSuite {
     assert(BenchUtil.gateStragglers(floor,
       Map("a" -> 1.9, "z" -> 99.0)).isEmpty)
   }
+
+  test("contendedPass flags a pass 2 more than 15% slower than pass 1 only") {
+    assert(BenchUtil.contendedPass(Seq(218.0, 270.0)))
+    assert(!BenchUtil.contendedPass(Seq(218.0, 250.0)))
+    // a faster pass 2, or later extra passes, do not flag
+    assert(!BenchUtil.contendedPass(Seq(270.0, 218.0, 400.0)))
+    assert(!BenchUtil.contendedPass(Seq(100.0)))
+  }
 }

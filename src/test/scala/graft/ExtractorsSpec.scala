@@ -318,6 +318,114 @@ class ExtractorsSpec extends SparkSpec {
     assert(QueueExtractor.pending(spark, spec).count() === 1)
   }
 
+  /** A queue of `n` UPDATE entries over keys 1..n of a base table, one
+    * second apart, in its own source dir. */
+  private def seedQueue(prefix: String, n: Int): (String, String, PipelineSpec) = {
+    val src = tmpDir(s"$prefix-src"); val dest = tmpDir(s"$prefix-dest")
+    (1L to n.toLong).map(i => (i, s"v$i")).toDF("id", "v")
+      .write.parquet(s"$src/t.parquet")
+    (1 to n).map(i => ("a", "t", "id", i.toString,
+        new Timestamp(mkTs("2024-06-01 00:00:00").getTime + i * 1000L), "UPDATE"))
+      .toDF(QueueExtractor.queueCols: _*)
+      .coalesce(1).write.parquet(s"$src/MigratorRecordQueue")
+    (src, dest, PipelineSpec("a", "t", "id", "b", "t", src, dest,
+      extractor = "queue", params = Params(batchSize = 2)))
+  }
+
+  private def parquetFilesUnder(root: String): Seq[String] = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk)
+      else Seq(f)
+    walk(new java.io.File(root)).map(_.getName).filter(_.endsWith(".parquet"))
+  }
+
+  private def pkValues(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.select("pkValue").as[String].collect().toSeq.sorted
+
+  test("queue ack moves the consumed snapshot files into the ack table") {
+    val (src, _, spec) = seedQueue("qmv", 3)
+    val res = QueueExtractor.extract(spark, spec, TrackingStatus("a", "t", "id"))
+    val consumed = QueueExtractor.pending(spark, spec)
+      .orderBy("timestampUpdated", "pkValue").limit(2)
+      .select(QueueExtractor.queueCols.map(col): _*).collect().toSet
+    try {
+      res.commit()
+      val acks = spark.read.parquet(s"$src/MigratorRecordQueue__acks")
+      assert(acks.select(QueueExtractor.queueCols.map(col): _*)
+        .collect().toSet === consumed)
+      assert(consumed.size === 2)
+      assert(parquetFilesUnder(s"$src/MigratorRecordQueue__inflight").isEmpty,
+        "the ack moves the snapshot's data files out of the inflight root")
+    } finally res.cleanup()
+    assert(pkValues(QueueExtractor.pending(spark, spec)) === Seq("3"))
+  }
+
+  test("acks written as a queueCols projection mix with moved full-column " +
+      "acks: pending and compactQueue see both") {
+    val (src, _, spec) = seedQueue("qmix", 4)
+    val qp = s"$src/MigratorRecordQueue"
+    // an ack table as older builds wrote it: the consumed rows, projected
+    // to queueCols and appended by Spark
+    ParquetTable.append(spark, s"${qp}__acks",
+      spark.read.parquet(qp).filter(col("pkValue") === "1")
+        .select(QueueExtractor.queueCols.map(col): _*))
+    val res = QueueExtractor.extract(spark, spec, TrackingStatus("a", "t", "id"))
+    assert(res.df.select("id").as[Long].collect().sorted.toSeq === Seq(2L, 3L))
+    res.commit(); res.cleanup()
+    assert(pkValues(QueueExtractor.pending(spark, spec)) === Seq("4"))
+    QueueExtractor.compactQueue(spark, spec)
+    assert(pkValues(spark.read.parquet(qp)) === Seq("4"))
+    assert(!new java.io.File(s"${qp}__acks").exists())
+    assert(pkValues(QueueExtractor.pending(spark, spec)) === Seq("4"))
+  }
+
+  test("a queue batch whose load throws acks nothing") {
+    val (src, dest, spec) = seedQueue("qfail", 3)
+    val tracking = new TrackingStore(spark, s"$dest/_tracking")
+    val p = new Pipeline(spark, spec, tracking)
+    val st = p.runBatch(p.init())._3
+    val ackDir = new java.io.File(s"$src/MigratorRecordQueue__acks")
+    val acksBefore = ackDir.list().toSet
+    val pendingBefore = pkValues(QueueExtractor.pending(spark, spec))
+    assert(pendingBefore === Seq("3"))
+    // a destination that is not a parquet table makes the load throw
+    val sink = new java.io.File(s"$dest/t.parquet")
+    Option(sink.listFiles()).toSeq.flatten.foreach(_.delete())
+    sink.delete()
+    java.nio.file.Files.writeString(sink.toPath, "not parquet")
+    val err = intercept[RuntimeException](p.runBatch(st))
+    assert(err.getMessage.startsWith(s"[${ErrorContext.Load}]"), err.getMessage)
+    assert(ackDir.list().toSet === acksBefore)
+    assert(pkValues(QueueExtractor.pending(spark, spec)) === pendingBefore)
+    assert(parquetFilesUnder(s"$src/MigratorRecordQueue__inflight").isEmpty)
+  }
+
+  test("queue extract reads the ack table and its snapshot with no job; " +
+      "commit starts none") {
+    val (src, _, spec) = seedQueue("qjobs", 6)
+    val qp = s"$src/MigratorRecordQueue"
+    val first = QueueExtractor.extract(spark, spec, TrackingStatus("a", "t", "id"))
+    first.commit(); first.cleanup()
+    // the ack table exists now: the anti-join adds no job to the raw read
+    val rawJobs = jobsDuring(ParquetTable.read(spark, qp))._2
+    assert(jobsDuring(QueueExtractor.pending(spark, spec))._2 === rawJobs)
+    // extract = raw read + snapshot write + the base read of the change
+    // batch; reading the snapshot back and counting it add nothing
+    val entries = QueueExtractor.pending(spark, spec)
+    val writeJobs = jobsDuring(entries
+      .orderBy(col("timestampUpdated"), col("pkValue")).limit(2)
+      .write.mode("overwrite").parquet(tmpDir("qjobs-w") + "/snap"))._2
+    val batchJobs = jobsDuring(QueueExtractor.changeBatch(spark, spec, entries))._2
+    val (res, extractJobs) = jobsDuring(
+      QueueExtractor.extract(spark, spec, TrackingStatus("a", "t", "id")))
+    try {
+      assert(extractJobs === rawJobs + writeJobs + batchJobs)
+      assert(res.moreData)
+      assert(jobsDuring(res.commit())._2 === 0)
+    } finally res.cleanup()
+    assert(pkValues(QueueExtractor.pending(spark, spec)) === Seq("5", "6"))
+  }
+
   test("queue lookup join prunes to touched buckets on a bucketed base") {
     val src = tmpDir("qb-src"); val dest = tmpDir("qb-dest")
     // base table written through the bucketed loader: layout + marker

@@ -53,4 +53,17 @@ class SourceFormatsSpec extends SparkSpec {
     seedRows.take(10).toDF("id", "name", "score").write.parquet(s"$src/t.parquet")
     assert(sources.Tables.readTable(spark, src, "t").count() === 10)
   }
+
+  test("reading a table keeps the caller's session settings") {
+    val src = tmpDir("fmt-conf-src")
+    seedRows.toDF("id", "name", "score").write.parquet(s"$src/t.parquet")
+    val key = "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold"
+    GraftSession.configure(spark)
+    val before = spark.conf.get(key)
+    spark.conf.set(key, "0")
+    try {
+      assert(sources.Tables.readTable(spark, src, "t").count() === 50)
+      assert(spark.conf.get(key) === "0")
+    } finally spark.conf.set(key, before)
+  }
 }
