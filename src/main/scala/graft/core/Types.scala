@@ -58,7 +58,7 @@ final case class Params(
       * flat table auto-migrates to a growth-sized bucket count once
       * bucketing can out-prune its overhead (balls-in-bins math in
       * [[graft.operators.MethodRoutedLoader]]; thresholds overridable
-      * via `extra("autoBucketTargetRows")` /
+      * via `extra("autoBucketTargetBytes")` /
       * `extra("autoBucketPruneFactor")`). Insert-only tables stay flat
       * (appends never rewrite, so bucketing would only cost small
       * files). */

@@ -6,11 +6,15 @@ import org.apache.hadoop.fs.Path
 
 import graft.core.{ParquetTable, Pins}
 
-/** Store plumbing shared by the two persisted indexes
-  * ([[BandIndex]], [[VectorIndex]]) — ONE implementation of the
-  * tombstone lifecycle, the committed-data presence check, and the
-  * staged root swap, so a fix to either index's machinery cannot
-  * silently miss its twin (the `BenchUtil.parquetDataFiles` stance).
+/** Store plumbing for every persisted store and output-landing
+  * stream — ONE implementation each of the tombstone lifecycle, the
+  * committed-data presence check and the staged root swap (the two
+  * indexes, [[BandIndex]] and [[VectorIndex]]), the applied-batch
+  * ledgers and their range codec, the staged generation publish of
+  * the single-artifact stores, and the per-trigger output landing
+  * ([[landTrigger]]) every `b_*`-tag stream publishes through — so a
+  * hardening of any of them cannot silently miss a twin (the
+  * `BenchUtil.parquetDataFiles` stance).
   */
 private[graft] object IndexStores {
 
@@ -322,11 +326,12 @@ private[graft] object IndexStores {
     *     against the CURRENT store state (`bootstrapped` tells the
     *     first trigger apart — an absent store has seen nothing);
     *  3. land the kept rows under the producer-scoped tag dir
-    *     (idempotent overwrite + schema-bearing guarantee), THEN
+    *     ([[landTrigger]]: staged publish, the replayed tag replaced
+    *     whole), THEN
     *  4. `extendKept` folds them into the store, ledger-fenced by the
     *     store's own extend — so a crash between 3 and 4 replays
     *     deterministically (store unchanged ⇒ identical verdicts ⇒
-    *     byte-identical overwrite).
+    *     byte-identical landing).
     *
     * One `Pins.scoped` block releases the step's checkpoints.
     * `compute`'s result is pinned before the write so the extend
@@ -350,11 +355,107 @@ private[graft] object IndexStores {
     Pins.scoped {
       val b = Pins.checkpoint(batch)
       val kept = Pins.checkpoint(compute(b, bootstrapped))
-      val dir = s"$outDir/${tagFor(producer, batchId)}"
-      kept.write.mode("overwrite").parquet(dir)
-      forceSchemaBearing(kept, dir)
+      landTrigger(kept, outDir, producer, batchId)
       extendKept(kept)
     }
+  }
+
+  /** Land one trigger's output rows idempotently — THE landing protocol
+    * of every output-landing stream: the trigger writes its OWN
+    * `outDir/<producer-scoped batch tag>` directory ([[tagFor]]), so a
+    * crash-replayed trigger replaces that directory instead of
+    * appending duplicate rows. The write forces a schema-bearing file
+    * ([[forceSchemaBearing]]) so an all-dropped trigger still leaves a
+    * readable dir. Read the landed output with
+    * `spark.read.parquet(s"$outDir/b_*")`.
+    *
+    * STAGED PUBLISH (ADVICE r9): the tag dir is never written in
+    * place — a direct `mode(overwrite)` deletes the live tag before
+    * its job runs, so a replay whose write fails loses that trigger's
+    * rows, and a crash mid-flight leaves a partial or schema-less
+    * `b_*` dir the documented glob reads (or fails on). The rows
+    * land in a DOT-PREFIXED sibling (`.__staging_<tag>_<stamp>` —
+    * invisible to the `b_*` glob at every crash point; the shared
+    * [[ParquetTable.swap]] names its windows `<tag>.__staging_*` /
+    * `<tag>.__old_*`, which the glob WOULD match, so this publish
+    * keeps its own dance), then one rename makes the tag visible. A
+    * replay first renames the old tag aside (also dot-prefixed) —
+    * between that and the publish rename the tag is briefly ABSENT,
+    * so a concurrent glob reader misses that one batch's rows rather
+    * than reading half of them; the replayed trigger restores it.
+    * Leaked dot-dirs from a crash are GC'd on the tag's next landing.
+    *
+    * MIGRATION tripwire: streams that predate the tagged layout wrote
+    * flat `part-*` files directly under `outDir`. Landing tags BESIDE
+    * those would silently split the output across two layouts — the
+    * `b_*` glob misses every pre-upgrade row, the flat read misses
+    * every post-upgrade row — so a mixed dir REJECTS loudly on first
+    * contact: migrate the old rows into a one-off tag (e.g.
+    * `spark.read.parquet(dir).write.parquet(s"$dir/b_migrated_0_g0")`,
+    * then delete the flat files) before resuming the stream.
+    */
+  def landTrigger(df: DataFrame, outDir: String, producer: String,
+      batchId: Long): Unit = {
+    val root = new Path(outDir)
+    val f = fs(df.sparkSession, outDir)
+    if (f.exists(root) && f.listStatus(root).exists(s =>
+        s.isFile && s.getPath.getName.startsWith("part-")))
+      throw new IllegalStateException(
+        s"landTrigger: $outDir holds FLAT pre-upgrade part files — " +
+          "landing tagged b_* dirs beside them would silently split " +
+          "the output across two layouts (each read misses the other " +
+          "half). Migrate the flat rows into a one-off tag dir and " +
+          "delete them first; see landTrigger's scaladoc.")
+    val tag = tagFor(producer, batchId)
+    val dir = s"$outDir/$tag"
+    val tagPath = new Path(dir)
+    // HEAL before GC: a crash between the stage-out rename and the
+    // publish rename leaves the batch's ONLY complete copy under
+    // `.__replaced_<tag>_*` with the tag absent — restore the newest
+    // such copy first, so the GC below never deletes the last copy
+    // and a failed re-write later still leaves the old generation
+    // servable (the "never leave the tag absent while we hold a
+    // complete copy" invariant, crash window included).
+    if (f.exists(root) && !f.exists(tagPath)) {
+      val prefix = s".__replaced_${tag}_"
+      // newest by PARSED numeric stamp (the ParquetTable.recoverFromOld
+      // lesson: lexicographic unpadded numbers order "9" after "10")
+      val replacedOf = f.listStatus(root).map(_.getPath)
+        .filter(_.getName.startsWith(prefix))
+        .sortBy(p =>
+          try p.getName.substring(prefix.length).toLong
+          catch { case _: NumberFormatException => Long.MinValue })
+      replacedOf.lastOption.foreach(f.rename(_, tagPath))
+    }
+    // GC this tag's remaining leaked dot-dirs from earlier crashes
+    // (single producer per tag — Structured Streaming replays a batch
+    // id serially), then stage, then publish with one rename
+    if (f.exists(root))
+      f.listStatus(root).map(_.getPath).foreach { c =>
+        if (c.getName.startsWith(s".__staging_${tag}_") ||
+            c.getName.startsWith(s".__replaced_${tag}_"))
+          f.delete(c, true)
+      }
+    val stamp = ParquetTable.stamp()
+    val staging = s"$outDir/.__staging_${tag}_$stamp"
+    df.write.mode("overwrite").parquet(staging)
+    forceSchemaBearing(df, staging)
+    val replaced = new Path(s"$outDir/.__replaced_${tag}_$stamp")
+    if (f.exists(tagPath) && !f.rename(tagPath, replaced))
+      throw new java.io.IOException(
+        s"landTrigger: could not stage out the replayed tag at $dir")
+    if (!f.rename(new Path(staging), tagPath)) {
+      // roll the old generation back — never leave the tag absent
+      // when we still hold a complete copy of it
+      if (f.exists(replaced)) f.rename(replaced, tagPath)
+      throw new java.io.IOException(
+        s"landTrigger: could not publish the staged tag into $dir")
+    }
+    if (f.exists(replaced) && !f.delete(replaced, true))
+      throw new java.io.IOException(
+        s"landTrigger: published $dir, but the replaced copy at " +
+          s"$replaced could not be deleted — remove it manually " +
+          "(it is glob-invisible but leaks storage)")
   }
 
   /** The per-batch tag a delta-tag store writes its delta under:
@@ -384,40 +485,51 @@ private[graft] object IndexStores {
   // list is still linear in applied batches (unchanged from before);
   // at millions of triggers the driver list is the next dial.
 
-  /** Fold per-id pairs into maximal contiguous ranges per group. */
-  private def foldRanges[G](pairs: Seq[(G, Long)]): Seq[(G, Long, Long)] =
-    pairs.groupBy(_._1).toSeq.flatMap { case (g, ps) =>
-      val out = scala.collection.mutable.ArrayBuffer.empty[(G, Long, Long)]
-      for (id <- ps.map(_._2).distinct.sorted) {
-        if (out.nonEmpty && out.last._3 == id - 1L) {
-          val last = out.remove(out.length - 1)
-          out += ((g, last._2, id))
-        } else out += ((g, id, id))
-      }
-      out.toSeq
+  /** Fold ranges into the maximal contiguous runs per group: ranges
+    * that overlap or touch merge (also healing any duplicate coverage
+    * defensively), gaps split. Per-id pairs fold as `(g, id, id)`.
+    * Unordered across groups; callers sort for their on-disk order.
+    */
+  private def foldRanges[G](
+      ranges: Seq[(G, Long, Long)]): Seq[(G, Long, Long)] =
+    ranges.groupBy(_._1).toSeq.flatMap { case (g, rs) =>
+      rs.sortBy(_._2).foldLeft(List.empty[(G, Long, Long)]) {
+        case ((_, lo0, hi0) :: done, (_, lo, hi)) if lo <= hi0 + 1L =>
+          (g, lo0, math.max(hi0, hi)) :: done
+        case (done, (_, lo, hi)) => (g, lo, hi) :: done
+      }.reverse
     }
 
-  /** The applied-batch ledger `(producer, batch_id, tag)` — the
-    * delta-tag stores' single commit point. Empty if never committed.
-    * Range rows (post-codec stores) expand back to per-id tuples;
-    * pre-codec stores (no `lo_id` column) read as-is.
+  /** The on-disk rows of a `batches` ledger as `(row, lo, hi)` — the
+    * one reader both ledger forms share. Range rows (post-codec
+    * stores) carry `lo_id`; pre-codec stores (no `lo_id` column) hold
+    * one id per row, read as `lo = hi = batch_id`. Empty if never
+    * committed. Fingerprint-memoized (optimization r13): the ledger is
+    * read on EVERY serve/extend/compact/trigger and is a handful of
+    * rows — see [[readTinyStore]].
     */
-  def tagLedger(spark: SparkSession,
-      path: String): Seq[(String, Long, String)] =
+  private def ledgerRows(spark: SparkSession,
+      path: String): Seq[(org.apache.spark.sql.Row, Long, Long)] =
     if (!hasStore(spark, s"$path/batches")) Seq.empty
     else {
-      // fingerprint-memoized (optimization r13): the ledger is read on
-      // EVERY serve/extend/compact and is a handful of rows — see
-      // [[readTinyStore]]
       val rows = readTinyStore(spark, s"$path/batches")
       val hasLo = rows.headOption.exists(
         _.schema.fieldNames.contains("lo_id"))
-      rows.flatMap { r =>
-        val (p, hi, t) = (r.getString(0), r.getLong(1), r.getString(2))
-        val lo = if (hasLo) r.getAs[Long]("lo_id") else hi
-        (lo to hi).map(i => (p, i, t))
-      }.sortBy(r => (r._1, r._2))
+      rows.map { r =>
+        val hi = r.getLong(1)
+        (r, if (hasLo) r.getAs[Long]("lo_id") else hi, hi)
+      }
     }
+
+  /** The applied-batch ledger `(producer, batch_id, tag)` — the
+    * delta-tag stores' single commit point, range rows expanded back
+    * to per-id tuples. Empty if never committed.
+    */
+  def tagLedger(spark: SparkSession,
+      path: String): Seq[(String, Long, String)] =
+    ledgerRows(spark, path).flatMap { case (r, lo, hi) =>
+      (lo to hi).map(i => (r.getString(0), i, r.getString(2)))
+    }.sortBy(r => (r._1, r._2))
 
   /** Commit the full applied list atomically (staged write + swap) —
     * THE commit point: deltas staged under their tags are invisible
@@ -427,7 +539,7 @@ private[graft] object IndexStores {
   def commitTagLedger(spark: SparkSession, path: String,
       applied: Seq[(String, Long, String)]): Unit = {
     import spark.implicits._
-    val folded = foldRanges(applied.map(r => ((r._1, r._3), r._2)))
+    val folded = foldRanges(applied.map(r => ((r._1, r._3), r._2, r._2)))
       .map { case ((p, t), lo, hi) => (p, hi, t, lo) }
       .sortBy(r => (r._1, r._4))
     val staging = stagingFor(spark, s"$path/batches")
@@ -509,18 +621,9 @@ private[graft] object IndexStores {
     */
   def sketchRanges(spark: SparkSession,
       path: String): Seq[(String, Long, Long)] =
-    if (!hasStore(spark, s"$path/batches")) Seq.empty
-    else {
-      // fingerprint-memoized (optimization r13) — [[readTinyStore]]
-      val rows = readTinyStore(spark, s"$path/batches")
-      val hasLo = rows.headOption.exists(
-        _.schema.fieldNames.contains("lo_id"))
-      rows.map { r =>
-        val (p, hi) = (r.getString(0), r.getLong(1))
-        val lo = if (hasLo) r.getAs[Long]("lo_id") else hi
-        (p, lo, hi)
-      }.sortBy(r => (r._1, r._2))
-    }
+    ledgerRows(spark, path).map { case (r, lo, hi) =>
+      (r.getString(0), lo, hi)
+    }.sortBy(r => (r._1, r._2))
 
   /** Whether (producer, id) lies inside the applied ranges. */
   def rangesApplied(ranges: Seq[(String, Long, Long)],
@@ -530,29 +633,11 @@ private[graft] object IndexStores {
   /** Add one applied id to the range set (merging contiguously). */
   def rangesAdd(ranges: Seq[(String, Long, Long)], producer: String,
       id: Long): Seq[(String, Long, Long)] =
-    foldRangeRows(ranges :+ ((producer, id, id)))
+    foldRanges(ranges :+ ((producer, id, id))).sortBy(r => (r._1, r._2))
 
   /** Total applied batches across the ranges (the stats count). */
   def rangesCount(ranges: Seq[(String, Long, Long)]): Long =
     ranges.map(r => r._3 - r._2 + 1L).sum
-
-  /** Merge overlapping/adjacent ranges per producer — the write-side
-    * normal form (also heals any duplicate coverage defensively).
-    */
-  private def foldRangeRows(
-      ranges: Seq[(String, Long, Long)]): Seq[(String, Long, Long)] =
-    ranges.groupBy(_._1).toSeq.flatMap { case (p, rs) =>
-      val sorted = rs.sortBy(_._2)
-      val out = scala.collection.mutable
-        .ArrayBuffer.empty[(String, Long, Long)]
-      for ((_, lo, hi) <- sorted) {
-        if (out.nonEmpty && lo <= out.last._3 + 1L) {
-          val last = out.remove(out.length - 1)
-          out += ((p, last._2, math.max(last._3, hi)))
-        } else out += ((p, lo, hi))
-      }
-      out.toSeq
-    }.sortBy(r => (r._1, r._2))
 
   /** Stage one complete single-artifact store generation (payload +
     * meta + ledger) under one root and swap it in atomically — ONE
@@ -575,7 +660,7 @@ private[graft] object IndexStores {
       // triggers the store absorbs; the stores pass ranges end-to-end
       // (sketchRanges/rangesAdd), so nothing linear-in-triggers is
       // ever materialized
-      val folded = foldRangeRows(batches)
+      val folded = foldRanges(batches)
         .map { case (p, lo, hi) => (p, hi, lo) }
         .sortBy(r => (r._1, r._3))
       folded.toDF("producer", "batch_id", "lo_id").coalesce(1)

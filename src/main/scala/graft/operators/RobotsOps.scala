@@ -425,17 +425,14 @@ object RobotsOps {
     * `foreachBatch` body behind
     * [[graft.streaming.StreamingPipeline.robotsStream]], same
     * landing contract as the blocklist leg): the batch's compliant
-    * subset lands as a per-trigger tagged directory. `rules` is the
-    * PARSED table ([[parseRobots]]) — parse once per stream, not per
-    * trigger.
+    * subset lands as a per-trigger tagged directory, published staged
+    * by [[IndexStores.landTrigger]]. `rules` is the PARSED table
+    * ([[parseRobots]]) — parse once per stream, not per trigger.
     */
   def robotsBatch(batch: DataFrame, rules: DataFrame, outDir: String,
       batchId: Long, producer: String = "default",
-      urlCol: String = "url", idCol: String = "doc_id"): Unit = {
-    val kept = robotsFilterBy(WebOps.urlParts(batch, urlCol), rules,
-      idCol)
-    val dir = s"$outDir/${IndexStores.tagFor(producer, batchId)}"
-    kept.write.mode("overwrite").parquet(dir)
-    IndexStores.forceSchemaBearing(kept, dir)
-  }
+      urlCol: String = "url", idCol: String = "doc_id"): Unit =
+    IndexStores.landTrigger(
+      robotsFilterBy(WebOps.urlParts(batch, urlCol), rules, idCol),
+      outDir, producer, batchId)
 }

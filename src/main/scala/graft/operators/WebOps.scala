@@ -851,18 +851,16 @@ object WebOps {
   /** One streaming-blocklist trigger — the stateless sibling of
     * [[quotaBatch]], same producer-scoped landing pattern: filter the
     * batch against the rules and land the survivors under the
-    * batch-tag dir. No store and no ledger — the filter is
-    * memoryless, so `mode(overwrite)` into the tag dir makes a
-    * crash-replay byte-identical by construction.
+    * batch-tag dir ([[IndexStores.landTrigger]]'s staged publish). No
+    * store and no ledger — the filter is memoryless, so a crash-replay
+    * replaces the tag with byte-identical rows by construction, and a
+    * replay whose write fails leaves the first landing in place.
     */
   def blocklistBatch(batch: DataFrame, rules: DataFrame,
       outDir: String, batchId: Long, producer: String = "default",
-      urlCol: String = "url"): Unit = {
-    val kept = blocklistFilter(batch, rules, urlCol)
-    val dir = s"$outDir/${IndexStores.tagFor(producer, batchId)}"
-    kept.write.mode("overwrite").parquet(dir)
-    IndexStores.forceSchemaBearing(kept, dir)
-  }
+      urlCol: String = "url"): Unit =
+    IndexStores.landTrigger(blocklistFilter(batch, rules, urlCol),
+      outDir, producer, batchId)
 
   /** Deterministic per-domain quota — keep at most `maxPerDomain`
     * documents per registrable domain, chosen by the engine's
@@ -1072,7 +1070,8 @@ object WebOps {
     * trigger the ranking is the deterministic md5 priority (bounded
     * TopK partials, no window), so a crash-replayed trigger — ledger
     * absent, store state identical — recomputes the IDENTICAL
-    * admitted set and the landing overwrite is idempotent; a replay
+    * admitted set and the staged landing replaces its tag idempotently
+    * ([[IndexStores.landTrigger]]); a replay
     * AFTER the extend committed returns before touching anything
     * (the output landed before the extend by construction).
     */
@@ -1260,8 +1259,8 @@ object WebOps {
     * landed output preceded the extend by construction, and
     * re-scoring against the extended store would drop the trigger's
     * own rows as seen; a crash BEFORE the extend replays
-    * deterministically against the unchanged store and overwrites
-    * the landing idempotently.
+    * deterministically against the unchanged store and replaces the
+    * landed tag idempotently.
     */
   def urlDedupBatch(batch: DataFrame, storePath: String,
       outDir: String, batchId: Long, expectedUrls: Long,

@@ -2,11 +2,11 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 import graft.core._
-import graft.operators.{MethodRoutedLoader, QueueExtractor}
+import graft.operators.{IndexStores, MethodRoutedLoader, QueueExtractor}
 
 /** Structured Streaming facade over the CDC changelog (SURVEY §7.2
   * step 7): `readStream` on the queue directory → per-micro-batch
@@ -26,105 +26,58 @@ import graft.operators.{MethodRoutedLoader, QueueExtractor}
   */
 object StreamingPipeline {
 
-  /** Land one trigger's output rows idempotently: the trigger writes
-    * its OWN `outDir/<producer-scoped batch tag>` directory — a
-    * crash-replayed trigger replaces that directory instead of
-    * appending duplicate rows, making the output side as replay-safe
-    * as the (ledger-fenced or idempotent) store side every ingest
-    * stream already has. The write forces a schema-bearing file so an
-    * all-dropped trigger still leaves a readable dir (the
-    * [[graft.operators.MembershipStore.curateBatch]] pattern). Read
-    * the landed output with `spark.read.parquet(s"$outDir/b_*")`.
-    *
-    * STAGED PUBLISH (ADVICE r9): the tag dir is never written in
-    * place — a direct write that crashes mid-flight would leave a
-    * partial or schema-less `b_*` dir the documented glob reads (or
-    * fails on) until the replayed trigger overwrites it. The rows
-    * land in a DOT-PREFIXED sibling (`.__staging_<tag>_<stamp>` —
-    * invisible to the `b_*` glob at every crash point; the shared
-    * [[graft.core.ParquetTable.swap]] names its windows
-    * `<tag>.__staging_*` / `<tag>.__old_*`, which the glob WOULD
-    * match, so this publish keeps its own dance), then one rename
-    * makes the tag visible. A replay first renames the old tag aside
-    * (also dot-prefixed) — between that and the publish rename the
-    * tag is briefly ABSENT, so a concurrent glob reader misses that
-    * one batch's rows rather than reading half of them; the replayed
-    * trigger restores it. Leaked dot-dirs from a crash are GC'd on
-    * the tag's next landing.
-    *
-    * MIGRATION tripwire: streams that predate the tagged layout wrote
-    * flat `part-*` files directly under `outDir`. Landing tags BESIDE
-    * those would silently split the output across two layouts — the
-    * `b_*` glob misses every pre-upgrade row, the flat read misses
-    * every post-upgrade row — so a mixed dir REJECTS loudly on first
-    * contact: migrate the old rows into a one-off tag (e.g.
-    * `spark.read.parquet(dir).write.parquet(s"$dir/b_migrated_0_g0")`,
-    * then delete the flat files) before resuming the stream.
+  /** THE stream wiring: every entry point below is a `foreachBatch`
+    * sink on `df` under `checkpoint` and `trigger`, running `body` on
+    * each micro-batch with its batch id — one skeleton, so a change to
+    * how a stream starts cannot miss one of them.
     */
-  private[graft] def landTrigger(df: DataFrame, outDir: String,
-      producer: String, batchId: Long): Unit = {
-    val root = new org.apache.hadoop.fs.Path(outDir)
-    val fs = root.getFileSystem(
-      df.sparkSession.sparkContext.hadoopConfiguration)
-    if (fs.exists(root) && fs.listStatus(root).exists(s =>
-        s.isFile && s.getPath.getName.startsWith("part-")))
-      throw new IllegalStateException(
-        s"landTrigger: $outDir holds FLAT pre-upgrade part files — " +
-          "landing tagged b_* dirs beside them would silently split " +
-          "the output across two layouts (each read misses the other " +
-          "half). Migrate the flat rows into a one-off tag dir and " +
-          "delete them first; see landTrigger's scaladoc.")
-    val tag = graft.operators.IndexStores.tagFor(producer, batchId)
-    val dir = s"$outDir/$tag"
-    val tagPath = new org.apache.hadoop.fs.Path(dir)
-    // HEAL before GC: a crash between the stage-out rename and the
-    // publish rename leaves the batch's ONLY complete copy under
-    // `.__replaced_<tag>_*` with the tag absent — restore the newest
-    // such copy first, so the GC below never deletes the last copy
-    // and a failed re-write later still leaves the old generation
-    // servable (the "never leave the tag absent while we hold a
-    // complete copy" invariant, crash window included).
-    if (fs.exists(root) && !fs.exists(tagPath)) {
-      val prefix = s".__replaced_${tag}_"
-      // newest by PARSED numeric stamp (the ParquetTable.recoverFromOld
-      // lesson: lexicographic unpadded numbers order "9" after "10")
-      val replacedOf = fs.listStatus(root).map(_.getPath)
-        .filter(_.getName.startsWith(prefix))
-        .sortBy(p =>
-          try p.getName.substring(prefix.length).toLong
-          catch { case _: NumberFormatException => Long.MinValue })
-      replacedOf.lastOption.foreach(fs.rename(_, tagPath))
-    }
-    // GC this tag's remaining leaked dot-dirs from earlier crashes
-    // (single producer per tag — Structured Streaming replays a batch
-    // id serially), then stage, then publish with one rename
-    if (fs.exists(root))
-      fs.listStatus(root).map(_.getPath).foreach { c =>
-        if (c.getName.startsWith(s".__staging_${tag}_") ||
-            c.getName.startsWith(s".__replaced_${tag}_"))
-          fs.delete(c, true)
+  private def wire(df: DataFrame, checkpoint: String, trigger: Trigger)
+      (body: (DataFrame, Long) => Unit): StreamingQuery =
+    df.writeStream
+      .option("checkpointLocation", checkpoint)
+      .trigger(trigger)
+      .foreachBatch(body)
+      .start()
+
+  /** The pin-then-land trigger body: pin the micro-batch (the output
+    * frame reads it more than once, and the landing's empty-dir probe
+    * may re-execute it), land `out(pinned, batchId)` under the
+    * trigger's producer-scoped tag
+    * ([[graft.operators.IndexStores.landTrigger]] — a crash-replayed
+    * trigger replaces its own directory, never duplicates), release
+    * the pin.
+    */
+  private def landPinned(df: DataFrame, outDir: String,
+      checkpoint: String, trigger: Trigger, producer: String)
+      (out: (DataFrame, Long) => DataFrame): StreamingQuery =
+    wire(df, checkpoint, trigger) { (batch, batchId) =>
+      Pins.scoped {
+        IndexStores.landTrigger(out(Pins.checkpoint(batch), batchId),
+          outDir, producerFor(producer, checkpoint), batchId)
       }
-    val stamp = graft.core.ParquetTable.stamp()
-    val staging = s"$outDir/.__staging_${tag}_$stamp"
-    df.write.mode("overwrite").parquet(staging)
-    graft.operators.IndexStores.forceSchemaBearing(df, staging)
-    val replaced =
-      new org.apache.hadoop.fs.Path(s"$outDir/.__replaced_${tag}_$stamp")
-    if (fs.exists(tagPath) && !fs.rename(tagPath, replaced))
-      throw new java.io.IOException(
-        s"landTrigger: could not stage out the replayed tag at $dir")
-    if (!fs.rename(new org.apache.hadoop.fs.Path(staging), tagPath)) {
-      // roll the old generation back — never leave the tag absent
-      // when we still hold a complete copy of it
-      if (fs.exists(replaced)) fs.rename(replaced, tagPath)
-      throw new java.io.IOException(
-        s"landTrigger: could not publish the staged tag into $dir")
     }
-    if (fs.exists(replaced) && !fs.delete(replaced, true))
-      throw new java.io.IOException(
-        s"landTrigger: published $dir, but the replaced copy at " +
-          s"$replaced could not be deleted — remove it manually " +
-          "(it is glob-invisible but leaks storage)")
+
+  /** The `compactEvery` cadence of the index-ingest streams: fold the
+    * append fragments every n triggers (0 = never). batchId, not a
+    * local counter, keeps the cadence stable across restarts.
+    */
+  private def compactDue(compactEvery: Int, batchId: Long): Boolean =
+    compactEvery > 0 && (batchId + 1) % compactEvery == 0
+
+  /** A drift monitor's per-trigger report: `drift(batch)`, or for an
+    * EMPTY trigger a null-drift row — drift over nothing has no
+    * shape, but the dashboard must still see the trigger happened
+    * ("no report" must never read as "no problem").
+    */
+  private def driftReport(batch: DataFrame, batchId: Long)
+      (drift: DataFrame => DataFrame): DataFrame = {
+    val report =
+      if (batch.isEmpty) {
+        import batch.sparkSession.implicits._
+        Seq((Option.empty[Long], 0L, Option.empty[Long]))
+          .toDF("n_ref", "n_batch", "tv_ppm")
+      } else drift(batch)
+    report.withColumn("batch_id", lit(batchId))
   }
 
   /** The producer identity an ingest stream lands its output (and
@@ -189,29 +142,24 @@ object StreamingPipeline {
     * in flight is neither lost nor double-applied).
     */
   def start(spark: SparkSession, spec: PipelineSpec, checkpoint: String,
-            trigger: Trigger): org.apache.spark.sql.streaming.StreamingQuery = {
+            trigger: Trigger): StreamingQuery = {
     val queuePath = spec.queuePath.getOrElse(s"${spec.sourcePath}/MigratorRecordQueue")
     val transformer = Registry.transformer(spec.transformer)
     val stream = changelogStream(spark, queuePath)
       .filter(col("sourceDatabase") === spec.sourceDatabase &&
         col("sourceTable") === spec.sourceTable)
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (entries: DataFrame, _: Long) =>
-        val batch = QueueExtractor.changeBatch(spark, spec, entries)
-        val outBatches = transformer(
-          TableBatch(spec.destinationDatabase, spec.destinationTable, batch),
-          spec.params,
-          graft.operators.TransformContext(spark, spec.destinationPath,
-            spec.pkColumns))
-        outBatches.foreach { b =>
-          MethodRoutedLoader.load(spark, b, spec.destinationPath,
-            spec.pkColumns, spec.params)
-        }
-        ()
+    wire(stream, checkpoint, trigger) { (entries, _) =>
+      val batch = QueueExtractor.changeBatch(spark, spec, entries)
+      val outBatches = transformer(
+        TableBatch(spec.destinationDatabase, spec.destinationTable, batch),
+        spec.params,
+        graft.operators.TransformContext(spark, spec.destinationPath,
+          spec.pkColumns))
+      outBatches.foreach { b =>
+        MethodRoutedLoader.load(spark, b, spec.destinationPath,
+          spec.pkColumns, spec.params)
       }
-      .start()
+    }
   }
 
   /** Streaming exact dedup over a document stream: first sighting of a
@@ -272,23 +220,17 @@ object StreamingPipeline {
   def incrementalNearDupStream(docs: DataFrame, corpus: DataFrame,
       verdictPath: String, checkpoint: String,
       trigger: Trigger = Trigger.AvailableNow(),
-      minJaccard: Double = 0.0)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // the batch operator pins per-batch localCheckpoints (band +
-        // shingle tables); release them once the verdicts are written,
-        // or a long-running trigger accumulates pinned blocks between
-        // GC cycles (scoped to this batch's own pins, so the caller's
-        // corpus artifact stays cached)
-        Pins.scoped(
-          graft.operators.TextOps.incrementalNearDup(batch, corpus, minJaccard)
-            .write.mode("append").parquet(verdictPath))
-        ()
-      }
-      .start()
+      minJaccard: Double = 0.0): StreamingQuery =
+    wire(docs, checkpoint, trigger) { (batch, _) =>
+      // the batch operator pins per-batch localCheckpoints (band +
+      // shingle tables); release them once the verdicts are written,
+      // or a long-running trigger accumulates pinned blocks between
+      // GC cycles (scoped to this batch's own pins, so the caller's
+      // corpus artifact stays cached)
+      Pins.scoped(
+        graft.operators.TextOps.incrementalNearDup(batch, corpus, minJaccard)
+          .write.mode("append").parquet(verdictPath))
+    }
 
   /** The SCALE form of [[incrementalNearDupStream]]: classify each
     * micro-batch against the persisted MinHash band index
@@ -340,42 +282,34 @@ object StreamingPipeline {
       verdictPath: String, checkpoint: String,
       trigger: Trigger = Trigger.AvailableNow(),
       minJaccard: Double = 0.0,
-      compactEvery: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        Pins.scoped {
-          // pinned: read by the verdict write AND the accepted-docs
-          // semi-join; unpinned, the classify (index scan included)
-          // would run twice per trigger
-          val verdicts = Pins.checkpoint(graft.operators.BandIndex
-            .classify(spark, indexPath, batch, minJaccard))
-          verdicts.write.mode("append").parquet(verdictPath)
-          val uniq = verdicts.filter(col("verdict") === "unique")
-            .select("doc_id")
-          // head(1) on the pinned verdicts is a driver-side peek at a
-          // per-batch-bounded table — skip the append job entirely for
-          // an all-duplicate batch
-          if (uniq.head(1).nonEmpty)
-            graft.operators.BandIndex.append(
-              batch.join(uniq, Seq("doc_id"), "left_semi"), indexPath)
-          // fold the ingest's file-count debt on a trigger cadence —
-          // the USAGE.md compaction dial wired into the stream itself.
-          // foreachBatch is the index's single producer, so the
-          // quiesced-producer contract holds by construction; batchId
-          // (not a local counter) keeps the cadence stable across
-          // restarts, and a replayed trigger's re-compaction is
-          // result-neutral (classify results are unchanged by compact,
-          // spec-pinned)
-          if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-            graft.operators.BandIndex.compact(spark, indexPath)
-        }
-        ()
+      compactEvery: Int = 0): StreamingQuery =
+    wire(docs, checkpoint, trigger) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      Pins.scoped {
+        // pinned: read by the verdict write AND the accepted-docs
+        // semi-join; unpinned, the classify (index scan included)
+        // would run twice per trigger
+        val verdicts = Pins.checkpoint(graft.operators.BandIndex
+          .classify(spark, indexPath, batch, minJaccard))
+        verdicts.write.mode("append").parquet(verdictPath)
+        val uniq = verdicts.filter(col("verdict") === "unique")
+          .select("doc_id")
+        // head(1) on the pinned verdicts is a driver-side peek at a
+        // per-batch-bounded table — skip the append job entirely for
+        // an all-duplicate batch
+        if (uniq.head(1).nonEmpty)
+          graft.operators.BandIndex.append(
+            batch.join(uniq, Seq("doc_id"), "left_semi"), indexPath)
+        // fold the ingest's file-count debt on a trigger cadence —
+        // the USAGE.md compaction dial wired into the stream itself.
+        // foreachBatch is the index's single producer, so the
+        // quiesced-producer contract holds by construction, and a
+        // replayed trigger's re-compaction is result-neutral (classify
+        // results are unchanged by compact, spec-pinned)
+        if (compactDue(compactEvery, batchId))
+          graft.operators.BandIndex.compact(spark, indexPath)
       }
-      .start()
+    }
 
   /** Streaming decontamination served from the persisted benchmark
     * artifact ([[graft.operators.ContaminationIndex]]) — the
@@ -399,7 +333,7 @@ object StreamingPipeline {
     * exactly that setting).
     *
     * Exactly-once: each trigger's kept rows land under their own batch
-    * tag ([[landTrigger]]) — a crash-replayed trigger overwrites its
+    * tag ([[landPinned]]) — a crash-replayed trigger overwrites its
     * own directory, never duplicates. Verdicts themselves cannot flip
     * on replay: the index is read-only to this stream.
     */
@@ -408,23 +342,11 @@ object StreamingPipeline {
       trigger: Trigger = Trigger.AvailableNow(),
       minShared: Int = 3, maxDfFrac: Double = 0.1,
       maxDfAbs: Long = graft.operators.TextOps.DfCapAbsDefault,
-      producer: String = "")
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        Pins.scoped {
-          // pin: landTrigger's empty-dir probe may re-execute the frame
-          val pinned = Pins.checkpoint(batch)
-          landTrigger(graft.operators.ContaminationIndex
-            .decontaminate(pinned, indexPath, minShared, maxDfFrac,
-              maxDfAbs),
-            keptPath, producerFor(producer, checkpoint), batchId)
-        }
-        ()
-      }
-      .start()
+      producer: String = ""): StreamingQuery =
+    landPinned(docs, keptPath, checkpoint, trigger, producer) { (b, _) =>
+      graft.operators.ContaminationIndex.decontaminate(b, indexPath,
+        minShared, maxDfFrac, maxDfAbs)
+    }
 
   /** Boilerplate-learning ingest: per micro-batch, fold the batch's
     * segment frequencies into the persisted
@@ -444,33 +366,27 @@ object StreamingPipeline {
       cleanPath: String, checkpoint: String,
       trigger: Trigger = Trigger.AvailableNow(),
       minDf: Int = 2, compactEvery: Int = 16,
-      producer: String = "")
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        Pins.scoped {
-          // pin: the batch feeds the count delta AND the strip — and a
-          // streaming source must not be re-read on the second use
-          val pinned = Pins.checkpoint(batch)
-          graft.operators.BoilerplateIndex.update(pinned, indexPath,
-            producerFor(producer, checkpoint), batchId)
-          landTrigger(
-            graft.operators.BoilerplateIndex.strip(pinned, indexPath,
-              minDf),
-            cleanPath, producerFor(producer, checkpoint), batchId)
-          // fold the delta rows back periodically: strip re-aggregates
-          // the whole counts store each trigger, so an uncompacted
-          // stream pays O(batches x distinct-segments) per trigger —
-          // the compact dial the index doc prescribes, applied in-loop
-          if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-            graft.operators.BoilerplateIndex.compact(
-              batch.sparkSession, indexPath)
-        }
-        ()
+      producer: String = ""): StreamingQuery =
+    wire(docs, checkpoint, trigger) { (batch, batchId) =>
+      Pins.scoped {
+        // pin: the batch feeds the count delta AND the strip — and a
+        // streaming source must not be re-read on the second use
+        val pinned = Pins.checkpoint(batch)
+        graft.operators.BoilerplateIndex.update(pinned, indexPath,
+          producerFor(producer, checkpoint), batchId)
+        IndexStores.landTrigger(
+          graft.operators.BoilerplateIndex.strip(pinned, indexPath,
+            minDf),
+          cleanPath, producerFor(producer, checkpoint), batchId)
+        // fold the delta rows back periodically: strip re-aggregates
+        // the whole counts store each trigger, so an uncompacted
+        // stream pays O(batches x distinct-segments) per trigger —
+        // the compact dial the index doc prescribes, applied in-loop
+        if (compactDue(compactEvery, batchId))
+          graft.operators.BoilerplateIndex.compact(
+            batch.sparkSession, indexPath)
       }
-      .start()
+    }
 
   /** Tokenize at ingest under a FROZEN persisted tokenizer
     * ([[graft.operators.TokenizerStore]]): merges are loaded ONCE,
@@ -484,23 +400,12 @@ object StreamingPipeline {
   def tokenizeStream(docs: DataFrame, storePath: String,
       outPath: String, checkpoint: String,
       trigger: Trigger = Trigger.AvailableNow(),
-      producer: String = "")
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      producer: String = ""): StreamingQuery = {
     val toks = graft.operators.TokenizerStore
       .tokensColumn(docs.sparkSession, storePath)
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        Pins.scoped {
-          // pin: landTrigger's empty-dir probe may re-execute the frame
-          val pinned = Pins.checkpoint(batch)
-          landTrigger(graft.operators.TokenizerStore.project(pinned, toks),
-            outPath, producerFor(producer, checkpoint), batchId)
-        }
-        ()
-      }
-      .start()
+    landPinned(docs, outPath, checkpoint, trigger, producer) { (b, _) =>
+      graft.operators.TokenizerStore.project(b, toks)
+    }
   }
 
   /** CCNet-style perplexity filtering at ingest: per micro-batch,
@@ -516,26 +421,15 @@ object StreamingPipeline {
       keptPath: String, checkpoint: String,
       trigger: Trigger = Trigger.AvailableNow(),
       maxSurprisal: Double = 10.0,
-      producer: String = "")
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      producer: String = ""): StreamingQuery = {
     // frozen by contract: heal + meta read happen ONCE at wiring, not
     // per trigger ([[tokenizeStream]]'s load-once posture)
     val model = graft.operators.LanguageModelStore
       .load(docs.sparkSession, modelPath)
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        Pins.scoped {
-          // pin: the batch feeds the score join AND the semi-join back
-          val pinned = Pins.checkpoint(batch)
-          landTrigger(graft.operators.LanguageModelStore
-            .filterWith(pinned, model, maxSurprisal),
-            keptPath, producerFor(producer, checkpoint), batchId)
-        }
-        ()
-      }
-      .start()
+    // pinned: the batch feeds the score join AND the semi-join back
+    landPinned(docs, keptPath, checkpoint, trigger, producer) { (b, _) =>
+      graft.operators.LanguageModelStore.filterWith(b, model, maxSurprisal)
+    }
   }
 
   /** Perceptual media dedup at ingest: per micro-batch of
@@ -554,29 +448,23 @@ object StreamingPipeline {
       pairsPath: String, checkpoint: String,
       trigger: Trigger = Trigger.AvailableNow(),
       compactEvery: Int = 0,
-      producer: String = "")
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    fps.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        Pins.scoped {
-          val pinned = Pins.checkpoint(batch)
-          graft.operators.FingerprintIndex.append(pinned, indexPath)
-          landTrigger(graft.operators.FingerprintIndex
-            .classify(batch.sparkSession, indexPath, pinned)
-            .select(least(col("media_id"), col("indexed_id")).as("a"),
-              greatest(col("media_id"), col("indexed_id")).as("b"),
-              col("hamming"))
-            .distinct(),
-            pairsPath, producerFor(producer, checkpoint), batchId)
-          if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-            graft.operators.FingerprintIndex.compact(
-              batch.sparkSession, indexPath)
-        }
-        ()
+      producer: String = ""): StreamingQuery =
+    wire(fps, checkpoint, trigger) { (batch, batchId) =>
+      Pins.scoped {
+        val pinned = Pins.checkpoint(batch)
+        graft.operators.FingerprintIndex.append(pinned, indexPath)
+        IndexStores.landTrigger(graft.operators.FingerprintIndex
+          .classify(batch.sparkSession, indexPath, pinned)
+          .select(least(col("media_id"), col("indexed_id")).as("a"),
+            greatest(col("media_id"), col("indexed_id")).as("b"),
+            col("hamming"))
+          .distinct(),
+          pairsPath, producerFor(producer, checkpoint), batchId)
+        if (compactDue(compactEvery, batchId))
+          graft.operators.FingerprintIndex.compact(
+            batch.sparkSession, indexPath)
       }
-      .start()
+    }
 
   /** Model-served quality filtering at ingest: per micro-batch, score
     * with a TRAINED classifier's frozen weights
@@ -594,27 +482,14 @@ object StreamingPipeline {
       keptPath: String, checkpoint: String,
       trigger: Trigger = Trigger.AvailableNow(),
       minProb: Double = 0.5,
-      producer: String = "")
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        Pins.scoped {
-          // pin the micro-batch: it feeds both sides of the
-          // accept-set join (the raw rows AND the scorer's featurize),
-          // which would otherwise re-read the source files 3× per
-          // trigger; the scope releases the pin
-          val pinned = Pins.checkpoint(batch)
-          landTrigger(pinned.join(
-            graft.operators.QualityClassifier.score(pinned, model)
-              .filter(col("prob") >= minProb).select("doc_id"),
-            "doc_id"),
-            keptPath, producerFor(producer, checkpoint), batchId)
-        }
-        ()
-      }
-      .start()
+      producer: String = ""): StreamingQuery =
+    // pinned: the micro-batch feeds both sides of the accept-set join
+    // (the raw rows AND the scorer's featurize), which would otherwise
+    // re-read the source files 3× per trigger
+    landPinned(docs, keptPath, checkpoint, trigger, producer) { (b, _) =>
+      b.join(graft.operators.QualityClassifier.score(b, model)
+        .filter(col("prob") >= minProb).select("doc_id"), "doc_id")
+    }
 
   /** Data-quality MONITORING at ingest: per micro-batch, evaluate a
     * declarative [[graft.operators.ConstraintOps]] suite and land the
@@ -624,28 +499,17 @@ object StreamingPipeline {
     * later. One aggregate job per trigger however long the suite; the
     * report is ≤ |constraints| rows; verdicts are per-batch by
     * construction (`MinRows` means min rows PER TRIGGER here).
-    * Replay-idempotent like every ingest stream ([[landTrigger]]).
+    * Replay-idempotent like every ingest stream ([[landPinned]]).
     */
   def constraintStream(docs: DataFrame,
       constraints: Seq[graft.operators.ConstraintOps.Constraint],
       reportPath: String, checkpoint: String,
       trigger: Trigger = Trigger.AvailableNow(),
-      producer: String = "")
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        Pins.scoped {
-          val pinned = Pins.checkpoint(batch)
-          landTrigger(
-            graft.operators.ConstraintOps.check(pinned, constraints)
-              .withColumn("batch_id", lit(batchId)),
-            reportPath, producerFor(producer, checkpoint), batchId)
-        }
-        ()
-      }
-      .start()
+      producer: String = ""): StreamingQuery =
+    landPinned(docs, reportPath, checkpoint, trigger, producer) {
+      (b, batchId) => graft.operators.ConstraintOps.check(b, constraints)
+        .withColumn("batch_id", lit(batchId))
+    }
 
   /** Streaming ingest into a persisted IVF-PQ index — the vector twin
     * of [[incrementalNearDupIndexStream]]'s append leg: per
@@ -680,21 +544,15 @@ object StreamingPipeline {
   def ivfPqIngestStream(vectors: DataFrame, indexPath: String,
       checkpoint: String,
       trigger: Trigger = Trigger.AvailableNow(),
-      compactEvery: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        Pins.scoped {
-          graft.operators.VectorIndex.addToIvfPq(spark, indexPath, batch)
-          if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-            graft.operators.VectorIndex.compactIvfPq(spark, indexPath)
-        }
-        ()
+      compactEvery: Int = 0): StreamingQuery =
+    wire(vectors, checkpoint, trigger) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      Pins.scoped {
+        graft.operators.VectorIndex.addToIvfPq(spark, indexPath, batch)
+        if (compactDue(compactEvery, batchId))
+          graft.operators.VectorIndex.compactIvfPq(spark, indexPath)
       }
-      .start()
+    }
 
   /** Continuous z-order layout ingest
     * ([[graft.operators.LayoutStore.append]] per micro-batch): rows
@@ -713,19 +571,13 @@ object StreamingPipeline {
   def zorderIngestStream(rows: DataFrame, layoutPath: String,
       checkpoint: String,
       trigger: Trigger = Trigger.AvailableNow(),
-      compactEvery: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        graft.operators.LayoutStore.append(spark, layoutPath, batch)
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-          graft.operators.LayoutStore.compact(spark, layoutPath)
-        ()
-      }
-      .start()
+      compactEvery: Int = 0): StreamingQuery =
+    wire(rows, checkpoint, trigger) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      graft.operators.LayoutStore.append(spark, layoutPath, batch)
+      if (compactDue(compactEvery, batchId))
+        graft.operators.LayoutStore.compact(spark, layoutPath)
+    }
 
   /** Continuous shard packing: each micro-batch of documents is packed
     * under the manifest's running token total
@@ -740,17 +592,11 @@ object StreamingPipeline {
     */
   def packShardsStream(docs: DataFrame, manifestPath: String,
       checkpoint: String, budget: Long = 2048,
-      trigger: Trigger = Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.ShardManifest.appendBatch(
-          batch.sparkSession, manifestPath, batch, budget, batchId)
-        ()
-      }
-      .start()
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    wire(docs, checkpoint, trigger) { (batch, batchId) =>
+      graft.operators.ShardManifest.appendBatch(
+        batch.sparkSession, manifestPath, batch, budget, batchId)
+    }
 
   /** Continuous KMV sketch ingest
     * ([[graft.operators.SketchStore.extend]] per micro-batch): each
@@ -765,16 +611,10 @@ object StreamingPipeline {
     */
   def sketchIngestStream(rows: DataFrame, group: String, key: Column,
       k: Int, storePath: String, checkpoint: String,
-      trigger: Trigger = Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.operators.SketchStore.extend(batch, group, key, k, storePath)
-        ()
-      }
-      .start()
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    wire(rows, checkpoint, trigger) { (batch, _) =>
+      graft.operators.SketchStore.extend(batch, group, key, k, storePath)
+    }
 
   /** Continuous Count-Min frequency ingest
     * ([[graft.operators.FrequencyStore.extend]] per micro-batch):
@@ -792,17 +632,11 @@ object StreamingPipeline {
   def frequencyIngestStream(rows: DataFrame, key: Column,
       storePath: String, checkpoint: String,
       eps: Double = 0.001, confidence: Double = 0.99, seed: Int = 42,
-      trigger: Trigger = Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.FrequencyStore.extend(batch, key, storePath,
-          batchId, eps, confidence, seed, producer = checkpoint)
-        ()
-      }
-      .start()
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    wire(rows, checkpoint, trigger) { (batch, batchId) =>
+      graft.operators.FrequencyStore.extend(batch, key, storePath,
+        batchId, eps, confidence, seed, producer = checkpoint)
+    }
 
   /** Streaming ingest into the persisted exact rollup
     * ([[graft.operators.RollupStore]]): each trigger writes ONE
@@ -815,17 +649,11 @@ object StreamingPipeline {
     */
   def rollupIngestStream(rows: DataFrame, storePath: String,
       checkpoint: String, keyCols: Seq[String], valueCol: String,
-      trigger: Trigger = Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.RollupStore.extend(batch, storePath, batchId,
-          keyCols, valueCol, producer = checkpoint)
-        ()
-      }
-      .start()
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    wire(rows, checkpoint, trigger) { (batch, batchId) =>
+      graft.operators.RollupStore.extend(batch, storePath, batchId,
+        keyCols, valueCol, producer = checkpoint)
+    }
 
   /** Streaming histogram maintenance
     * ([[graft.operators.HistogramStore.extend]] per trigger): each
@@ -839,17 +667,11 @@ object StreamingPipeline {
     */
   def histogramIngestStream(rows: DataFrame, storePath: String,
       checkpoint: String,
-      trigger: Trigger = Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.HistogramStore.extend(batch, storePath,
-          batchId, producer = checkpoint)
-        ()
-      }
-      .start()
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    wire(rows, checkpoint, trigger) { (batch, batchId) =>
+      graft.operators.HistogramStore.extend(batch, storePath,
+        batchId, producer = checkpoint)
+    }
 
   /** Streaming distribution-drift MONITOR
     * ([[graft.operators.HistogramStore.driftAgainst]] per trigger):
@@ -859,37 +681,18 @@ object StreamingPipeline {
     * `(n_ref, n_batch, tv_ppm, batch_id)` report under its own tag —
     * the "did this ingest move away from the reference corpus?"
     * dashboard, the distribution twin of [[constraintStream]]'s
-    * row-level checks. Replay-idempotent ([[landTrigger]]); an EMPTY
+    * row-level checks. Replay-idempotent ([[landPinned]]); an EMPTY
     * trigger lands a null-drift row rather than aborting the stream
-    * (drift over nothing has no shape — but a silent skip would read
-    * as "no report = no problem" on the dashboard).
+    * ([[driftReport]]).
     */
   def driftMonitorStream(rows: DataFrame, refPath: String,
       reportPath: String, checkpoint: String,
       trigger: Trigger = Trigger.AvailableNow(),
-      producer: String = "")
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        Pins.scoped {
-          val pinned = Pins.checkpoint(batch)
-          val report =
-            if (pinned.isEmpty) {
-              // null-drift row: an empty trigger HAS no shape; the
-              // dashboard still sees the trigger happened
-              import pinned.sparkSession.implicits._
-              Seq((Option.empty[Long], 0L, Option.empty[Long]))
-                .toDF("n_ref", "n_batch", "tv_ppm")
-            } else graft.operators.HistogramStore
-              .driftAgainst(pinned, refPath)
-          landTrigger(report.withColumn("batch_id", lit(batchId)),
-            reportPath, producerFor(producer, checkpoint), batchId)
-        }
-        ()
-      }
-      .start()
+      producer: String = ""): StreamingQuery =
+    landPinned(rows, reportPath, checkpoint, trigger, producer) {
+      (b, batchId) => driftReport(b, batchId)(
+        graft.operators.HistogramStore.driftAgainst(_, refPath))
+    }
 
   /** Per-trigger EMBEDDING-drift monitor — [[driftMonitorStream]]'s
     * categorical twin: each trigger's vectors are assigned under
@@ -898,35 +701,20 @@ object StreamingPipeline {
     * total-variation of the trigger's cluster shares against the
     * frozen reference shares (a k-row parquet the caller wrote from
     * [[graft.operators.VectorOps.clusterShares]]) lands as one tagged
-    * report row per trigger. Replay-idempotent ([[landTrigger]]); an
+    * report row per trigger. Replay-idempotent ([[landPinned]]); an
     * EMPTY trigger lands a null-drift row rather than aborting the
-    * stream (same contract as the histogram monitor: "no report"
-    * must never read as "no problem").
+    * stream (same contract as the histogram monitor,
+    * [[driftReport]]).
     */
   def clusterDriftStream(rows: DataFrame, centers: Array[Array[Double]],
       refSharesPath: String, reportPath: String, checkpoint: String,
       trigger: Trigger = Trigger.AvailableNow(),
-      producer: String = "")
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        Pins.scoped {
-          val pinned = Pins.checkpoint(batch)
-          val report =
-            if (pinned.isEmpty) {
-              import pinned.sparkSession.implicits._
-              Seq((Option.empty[Long], 0L, Option.empty[Long]))
-                .toDF("n_ref", "n_batch", "tv_ppm")
-            } else graft.operators.VectorOps.clusterDrift(pinned, centers,
-              pinned.sparkSession.read.parquet(refSharesPath))
-          landTrigger(report.withColumn("batch_id", lit(batchId)),
-            reportPath, producerFor(producer, checkpoint), batchId)
-        }
-        ()
-      }
-      .start()
+      producer: String = ""): StreamingQuery =
+    landPinned(rows, reportPath, checkpoint, trigger, producer) {
+      (b, batchId) => driftReport(b, batchId)(p =>
+        graft.operators.VectorOps.clusterDrift(p, centers,
+          p.sparkSession.read.parquet(refSharesPath)))
+    }
 
   /** Streaming maintenance of the persisted reservoir sample
     * ([[graft.operators.ReservoirStore]]): each trigger folds one
@@ -964,25 +752,19 @@ object StreamingPipeline {
       checkpoint: String, capacity: Int, seed: String,
       idCol: String = "doc_id", groupCol: String = "",
       trigger: Trigger = Trigger.AvailableNow(), producer: String = "",
-      dedupPerTrigger: Boolean = true)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // geometry first: distinct() on a non-orderable payload would
-        // throw Spark's generic set-operation error before the
-        // store's actionable diagnostic could fire
-        graft.operators.ReservoirStore.requireGeometry(
-          batch.sparkSession, batch.schema, idCol, capacity, groupCol)
-        graft.operators.ReservoirStore.extend(
-          if (dedupPerTrigger) batch.distinct() else batch,
-          storePath, batchId, capacity, seed, idCol = idCol,
-          producer = producerFor(producer, checkpoint),
-          groupCol = groupCol)
-        ()
-      }
-      .start()
+      dedupPerTrigger: Boolean = true): StreamingQuery =
+    wire(docs, checkpoint, trigger) { (batch, batchId) =>
+      // geometry first: distinct() on a non-orderable payload would
+      // throw Spark's generic set-operation error before the
+      // store's actionable diagnostic could fire
+      graft.operators.ReservoirStore.requireGeometry(
+        batch.sparkSession, batch.schema, idCol, capacity, groupCol)
+      graft.operators.ReservoirStore.extend(
+        if (dedupPerTrigger) batch.distinct() else batch,
+        storePath, batchId, capacity, seed, idCol = idCol,
+        producer = producerFor(producer, checkpoint),
+        groupCol = groupCol)
+    }
 
   /** Novelty-gated streaming CURATION
     * ([[graft.operators.MembershipStore.curateBatch]] per trigger):
@@ -990,8 +772,9 @@ object StreamingPipeline {
     * documents whose shingle-novelty against everything KEPT SO FAR is
     * at least `minNoveltyPpm`, lands them under a producer-scoped
     * batch-tag dir (`outDir/b_<md5(checkpoint)>_<id>_g0` — glob
-    * `outDir/b_*`; idempotent overwrite, and a re-pointed checkpoint
-    * never overwrites another producer's output), and folds the kept
+    * `outDir/b_*`; staged, idempotent replacement, and a re-pointed
+    * checkpoint never overwrites another producer's output), and folds
+    * the kept
     * shingles back into the
     * membership store (ledger-fenced per trigger, checkpoint-scoped).
     * A near-duplicate arriving ten triggers after its original scores
@@ -1005,18 +788,12 @@ object StreamingPipeline {
   def noveltyCurationStream(docs: DataFrame, storePath: String,
       outDir: String, checkpoint: String, expectedItems: Long,
       minNoveltyPpm: Long = 500000L, k: Int = 3, fpp: Double = 0.01,
-      trigger: Trigger = Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.MembershipStore.curateBatch(batch, storePath,
-          outDir, batchId, expectedItems, producer = checkpoint,
-          minNoveltyPpm = minNoveltyPpm, k = k, fpp = fpp)
-        ()
-      }
-      .start()
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    wire(docs, checkpoint, trigger) { (batch, batchId) =>
+      graft.operators.MembershipStore.curateBatch(batch, storePath,
+        outDir, batchId, expectedItems, producer = checkpoint,
+        minNoveltyPpm = minNoveltyPpm, k = k, fpp = fpp)
+    }
 
   /** Streaming per-domain quota CURATION
     * ([[graft.operators.WebOps.quotaBatch]] per trigger): each
@@ -1024,7 +801,7 @@ object StreamingPipeline {
     * deterministic md5 priority, admits only while the domain's
     * RUNNING admitted count (a [[graft.operators.FrequencyStore]]
     * CMS) is under `maxPerDomain`, lands admitted rows under
-    * `outDir/b_*` (producer-scoped tags, idempotent overwrite) and
+    * `outDir/b_*` (producer-scoped tags, staged idempotent landing) and
     * folds the admitted domains back into the store, ledger-fenced.
     * The O(batch) streaming face of
     * [[graft.operators.WebOps.domainQuota]]: a domain saturating ten
@@ -1037,8 +814,7 @@ object StreamingPipeline {
       seed: String = "dq", idCol: String = "doc_id",
       urlCol: String = "url",
       trigger: Trigger = Trigger.AvailableNow(),
-      pslRules: Option[DataFrame] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      pslRules: Option[DataFrame] = None): StreamingQuery = {
     // optional FULL-PSL grouping: decorate each trigger's batch with
     // the rule-table registrable domain instead of the lite split —
     // blogspot/github.io subdomains then hold independent streaming
@@ -1054,17 +830,11 @@ object StreamingPipeline {
         rules, hostCol = "__dq_psl_host", outCol = "domain")
         .drop("__dq_psl_host")
     }
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.WebOps.quotaBatch(batch, storePath, outDir,
-          batchId, maxPerDomain, seed, producer = checkpoint,
-          idCol = idCol, urlCol = urlCol,
-          domainDecorator = decorator)
-        ()
-      }
-      .start()
+    wire(docs, checkpoint, trigger) { (batch, batchId) =>
+      graft.operators.WebOps.quotaBatch(batch, storePath, outDir,
+        batchId, maxPerDomain, seed, producer = checkpoint,
+        idCol = idCol, urlCol = urlCol, domainDecorator = decorator)
+    }
   }
 
   /** Streaming canonical-URL dedup ([[graft.operators.WebOps
@@ -1081,40 +851,28 @@ object StreamingPipeline {
       outDir: String, checkpoint: String, expectedUrls: Long,
       seed: String = "ud", idCol: String = "doc_id",
       urlCol: String = "url", fpp: Double = 0.01, shards: Int = 1,
-      trigger: Trigger = Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.WebOps.urlDedupBatch(batch, storePath, outDir,
-          batchId, expectedUrls, seed, producer = checkpoint,
-          idCol = idCol, urlCol = urlCol, fpp = fpp, shards = shards)
-        ()
-      }
-      .start()
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    wire(docs, checkpoint, trigger) { (batch, batchId) =>
+      graft.operators.WebOps.urlDedupBatch(batch, storePath, outDir,
+        batchId, expectedUrls, seed, producer = checkpoint,
+        idCol = idCol, urlCol = urlCol, fpp = fpp, shards = shards)
+    }
 
   /** Streaming URL/domain blocklist — the stateless first gate of a
     * crawl ingest wired the same way as the quota leg: each trigger
     * filters against the (dimension-sized) rule table and lands the
     * survivors under the producer-scoped batch-tag dir
     * ([[graft.operators.WebOps.blocklistBatch]]). No store, no
-    * ledger — the per-trigger overwrite is idempotent by
+    * ledger — the per-trigger staged landing is idempotent by
     * construction, so crash-replay is byte-identical for free.
     */
   def blocklistStream(docs: DataFrame, rules: DataFrame,
       outDir: String, checkpoint: String, urlCol: String = "url",
-      trigger: Trigger = Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.WebOps.blocklistBatch(batch, rules, outDir,
-          batchId, producer = checkpoint, urlCol = urlCol)
-        ()
-      }
-      .start()
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    wire(docs, checkpoint, trigger) { (batch, batchId) =>
+      graft.operators.WebOps.blocklistBatch(batch, rules, outDir,
+        batchId, producer = checkpoint, urlCol = urlCol)
+    }
 
   /** Streaming robots.txt compliance over a crawl stream: each
     * trigger's compliant subset lands as a per-trigger tagged
@@ -1127,18 +885,11 @@ object StreamingPipeline {
   def robotsStream(docs: DataFrame, rules: DataFrame,
       outDir: String, checkpoint: String, urlCol: String = "url",
       idCol: String = "doc_id",
-      trigger: Trigger = Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.RobotsOps.robotsBatch(batch, rules, outDir,
-          batchId, producer = checkpoint, urlCol = urlCol,
-          idCol = idCol)
-        ()
-      }
-      .start()
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    wire(docs, checkpoint, trigger) { (batch, batchId) =>
+      graft.operators.RobotsOps.robotsBatch(batch, rules, outDir,
+        batchId, producer = checkpoint, urlCol = urlCol, idCol = idCol)
+    }
 
   /** Streaming SCD2 maintenance into the persisted dimension
     * ([[graft.operators.HistoryStore]]): each trigger folds one change
@@ -1152,18 +903,13 @@ object StreamingPipeline {
   def historyIngestStream(changes: DataFrame, storePath: String,
       checkpoint: String, key: String, orderCol: String,
       stateCols: Seq[String], tieCols: Seq[String] = Nil,
-      nBuckets: Int = 64, trigger: Trigger = Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    changes.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.HistoryStore.extend(batch, storePath, batchId,
-          key, orderCol, stateCols, tieCols, nBuckets,
-          producer = checkpoint)
-        ()
-      }
-      .start()
+      nBuckets: Int = 64,
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    wire(changes, checkpoint, trigger) { (batch, batchId) =>
+      graft.operators.HistoryStore.extend(batch, storePath, batchId,
+        key, orderCol, stateCols, tieCols, nBuckets,
+        producer = checkpoint)
+    }
 
   /** Watermarked tumbling-window aggregation — the streaming form of the
     * `events_tumbling` batch query; late rows beyond `lateness` are

@@ -141,7 +141,7 @@ class ConstraintOpsSpec extends SparkSpec {
 
   test("landTrigger publishes staged (ADVICE r9): replay replaces, " +
       "crash windows are glob-invisible, leaks are GC'd") {
-    import graft.streaming.StreamingPipeline
+    import graft.operators.IndexStores
     import spark.implicits._
     val out = tmpDir("lt-staged") + "/report"
     val tag = graft.operators.IndexStores.tagFor("p1", 0L)
@@ -156,7 +156,7 @@ class ConstraintOpsSpec extends SparkSpec {
     assert(ghostRead == 0L, "staging dirs must be invisible to the b_* glob")
 
     // first landing: rows visible via the glob, leak GC'd, no dot-dirs left
-    StreamingPipeline.landTrigger(
+    IndexStores.landTrigger(
       Seq((1L, "a"), (2L, "b")).toDF("k", "v"), out, "p1", 0L)
     assert(spark.read.parquet(s"$out/b_*").count() == 2L)
     def dotDirs() = new java.io.File(out).listFiles()
@@ -166,7 +166,7 @@ class ConstraintOpsSpec extends SparkSpec {
 
     // replay of the same (producer, batch) with different rows
     // REPLACES — never appends — and leaves no windows behind
-    StreamingPipeline.landTrigger(
+    IndexStores.landTrigger(
       Seq((7L, "z")).toDF("k", "v"), out, "p1", 0L)
     val rows = spark.read.parquet(s"$out/b_*").collect()
     assert(rows.length == 1 && rows.head.getLong(0) == 7L,
@@ -174,7 +174,7 @@ class ConstraintOpsSpec extends SparkSpec {
     assert(dotDirs().isEmpty)
 
     // an all-dropped replay still leaves a schema-bearing readable tag
-    StreamingPipeline.landTrigger(
+    IndexStores.landTrigger(
       Seq.empty[(Long, String)].toDF("k", "v"), out, "p1", 0L)
     assert(spark.read.parquet(s"$out/b_*").count() == 0L)
     assert(spark.read.parquet(s"$out/b_*").columns.toSeq == Seq("k", "v"))
@@ -186,7 +186,7 @@ class ConstraintOpsSpec extends SparkSpec {
       .map(_.getName).find(_.startsWith("b_")).get
     assert(new java.io.File(s"$out/$tagName").renameTo(
       new java.io.File(s"$out/.__replaced_${tagName}_42")))
-    StreamingPipeline.landTrigger(
+    IndexStores.landTrigger(
       Seq((5L, "healed")).toDF("k", "v"), out, "p1", 0L)
     val healedRows = spark.read.parquet(s"$out/b_*").collect()
     assert(healedRows.length == 1 && healedRows.head.getString(1) == "healed")
