@@ -218,8 +218,8 @@ object PlanProbe {
         "dedup_incremental_verified,dedup_incremental_verified_indexed," +
           "scd2_purge_history,scd2_store_history")
         .split(",").map(_.trim).filter(_.nonEmpty)
-      // optional conf overrides for in-process A/B (e.g. disabling the
-      // purge-list memo via spark.graft.history.purgeTinyBytes=0)
+      // optional conf overrides for in-process A/B (e.g. forcing the
+      // purge list off the driver via spark.graft.history.purgeLocalCap=0)
       sys.env.get("SPARK_GRAFT_PROBE_CONF").foreach(_.split(",")
         .map(_.trim).filter(_.contains("=")).foreach { kv =>
           val Array(k, v) = kv.split("=", 2)

@@ -44,6 +44,8 @@ import graft.core.Pins
   */
 object BandIndex {
 
+  private[graft] val MetaVersion = 1
+
   /** Prefixes are "p" + two hex chars: the leading letter keeps the
     * partition columns non-numeric BY CONSTRUCTION, so Spark's
     * partition-column type inference can never read a directory set
@@ -76,16 +78,13 @@ object BandIndex {
       .getOrElse(2)
   }
 
-  // frozen lens through the shared fingerprint-fenced memo
-  // (optimization r13, [[IndexStores.readTinyStore]]): the earlier
-  // invalidate-on-write cache missed rewrites from other JVMs; the
-  // fingerprint fence catches any committed rewrite. Stores written
-  // before the lens existed have no meta and read as (2, 2).
-  private def contract(spark: SparkSession, path: String): (Int, Int) =
-    if (IndexStores.hasStore(spark, s"$path/meta")) {
-      val r = IndexStores.readTinyStore(spark, s"$path/meta").head
-      (r.getAs[Int]("bkp_len"), r.getAs[Int]("dp_len"))
-    } else (2, 2)
+  // stores written before the lens existed have no meta and read as
+  // (2, 2)
+  private[graft] def contract(spark: SparkSession, path: String): (Int, Int) = {
+    val r = IndexStores.readMeta(spark, s"$path/meta", MetaVersion,
+      Map("bkp_len" -> 2, "dp_len" -> 2), required = false)
+    (r.getAs[Int]("bkp_len"), r.getAs[Int]("dp_len"))
+  }
 
   private def bandsOf(docs: DataFrame, len: Int): DataFrame =
     TextOps.minhashBands(docs).withColumn("bkp", bkp(col("bk"), len))
@@ -135,8 +134,8 @@ object BandIndex {
           .parquet(s"$staging/shingles")
         l
       } else 2
-      Seq((bkpLen, dpLen)).toDF("bkp_len", "dp_len").coalesce(1)
-        .write.mode("overwrite").parquet(s"$staging/meta")
+      IndexStores.writeMeta(Seq((bkpLen, dpLen)).toDF("bkp_len", "dp_len"),
+        s"$staging/meta", MetaVersion)
     }
     IndexStores.swapInto(spark, path, staging)
   }

@@ -38,20 +38,16 @@ import org.apache.spark.sql.functions._
   */
 object BoilerplateIndex {
 
-  private def metaDf(spark: SparkSession, segTokens: Int): DataFrame = {
-    import spark.implicits._
-    Seq(segTokens).toDF("seg_tokens").coalesce(1)
-  }
+  private[graft] val MetaVersion = 1
+
 
   private def batchCounts(docs: DataFrame, segTokens: Int): DataFrame =
     TextOps.segmentize(docs, segTokens)
       .groupBy("h").agg(countDistinct(col("doc_id")).cast("long").as("cnt"))
 
   private def segTokensOf(spark: SparkSession, path: String): Int =
-    // fingerprint-memoized one-row read (optimization r13) —
-    // [[IndexStores.readTinyStore]]
-    IndexStores.readTinyStore(spark, s"$path/meta")
-      .head.getAs[Int]("seg_tokens")
+    IndexStores.readMeta(spark, s"$path/meta", MetaVersion)
+      .getAs[Int]("seg_tokens")
 
   /** Build the index from an initial corpus. Staged + atomic swap
     * ([[IndexStores.swapInto]]): a rebuild that dies mid-write leaves
@@ -68,7 +64,9 @@ object BoilerplateIndex {
     val staging = IndexStores.stagingFor(spark, path)
     batchCounts(docs, segTokens)
       .write.mode("overwrite").parquet(s"$staging/counts")
-    metaDf(spark, segTokens).write.mode("overwrite").parquet(s"$staging/meta")
+    import spark.implicits._
+    IndexStores.writeMeta(Seq(segTokens).toDF("seg_tokens"), s"$staging/meta",
+      MetaVersion)
     IndexStores.swapInto(spark, path, staging)
   }
 

@@ -39,6 +39,8 @@ import graft.core.Pins
   */
 object BucketStore {
 
+  private[graft] val MetaVersion = 1
+
   private[operators] case class Meta(schemaDdl: String, key: String,
                                      nBuckets: Int)
 
@@ -79,17 +81,15 @@ object BucketStore {
     import spark.implicits._
     // tuple row, not the case class: an encoder over a nested private
     // case class trips whole-stage codegen's outer-pointer handling
-    Seq((df.schema.toDDL, key, nBuckets))
-      .toDF("schemaDdl", "key", "nBuckets")
-      .coalesce(1).write.mode("overwrite").parquet(s"$staging/meta")
+    IndexStores.writeMeta(Seq((df.schema.toDDL, key, nBuckets))
+      .toDF("schemaDdl", "key", "nBuckets"), s"$staging/meta", MetaVersion)
     IndexStores.swapInto(spark, path, staging)
     open(spark, path)
   }
 
   private def readMeta(spark: SparkSession, path: String): Meta = {
     IndexStores.healRoot(spark, path)
-    // fingerprint-memoized (optimization r13) — [[IndexStores.readTinyStore]]
-    val r = IndexStores.readTinyStore(spark, s"$path/meta").head
+    val r = IndexStores.readMeta(spark, s"$path/meta", MetaVersion)
     Meta(r.getAs[String]("schemaDdl"), r.getAs[String]("key"),
       r.getAs[Int]("nBuckets"))
   }

@@ -46,6 +46,8 @@ import graft.core.Pins
   */
 object ContaminationIndex {
 
+  private[graft] val MetaVersion = 1
+
   private def benchGrams(benchmark: DataFrame): DataFrame =
     TextOps.shingles(benchmark).select("s").distinct()
 
@@ -55,7 +57,7 @@ object ContaminationIndex {
   private def metaDf(spark: SparkSession, sketch: Array[Byte],
                      bitsPerItem: Int): DataFrame = {
     import spark.implicits._
-    Seq((sketch, bitsPerItem)).toDF("sketch", "bits_per_item").coalesce(1)
+    Seq((sketch, bitsPerItem)).toDF("sketch", "bits_per_item")
   }
 
   /** Build the index from a benchmark suite. Staged + atomic swap: a
@@ -73,9 +75,9 @@ object ContaminationIndex {
       val staging = IndexStores.stagingFor(spark, path)
       val grams = Pins.checkpoint(benchGrams(benchmark))
       grams.coalesce(1).write.mode("overwrite").parquet(s"$staging/grams")
-      metaDf(spark,
-        graft.functions.Bloom.sketchOf(grams, "s", bitsPerItem), bitsPerItem)
-        .write.mode("overwrite").parquet(s"$staging/meta")
+      IndexStores.writeMeta(metaDf(spark,
+        graft.functions.Bloom.sketchOf(grams, "s", bitsPerItem), bitsPerItem),
+        s"$staging/meta", MetaVersion)
       IndexStores.swapInto(spark, path, staging)
     }
   }
@@ -99,15 +101,12 @@ object ContaminationIndex {
       val fresh = Pins.checkpoint(benchGrams(benchmark)
         .join(stored, Seq("s"), "left_anti"))
       if (fresh.head(1).isEmpty) return
-      // fingerprint-memoized (optimization r13): the meta row also
-      // carries the sketch blob, so this read doubles as its cache —
-      // [[IndexStores.readTinyStore]]
-      val bitsPerItem = IndexStores.readTinyStore(spark, s"$path/meta")
-        .head.getAs[Int]("bits_per_item")
+      val bitsPerItem = IndexStores.readMeta(spark, s"$path/meta",
+        MetaVersion).getAs[Int]("bits_per_item")
       val sketch = graft.functions.Bloom.sketchOf(
         stored.unionByName(fresh), "s", bitsPerItem)
-      graft.core.ParquetTable.overwriteAtomic(spark, s"$path/meta",
-        metaDf(spark, sketch, bitsPerItem))
+      IndexStores.writeMeta(metaDf(spark, sketch, bitsPerItem),
+        s"$path/meta", MetaVersion)
       fresh.coalesce(1).write.mode("append").parquet(s"$path/grams")
     }
   }
@@ -146,11 +145,9 @@ object ContaminationIndex {
                     maxDfAbs: Long = TextOps.DfCapAbsDefault): DataFrame = {
     val spark = docs.sparkSession
     IndexStores.healRoot(spark, path)
-    // fingerprint-memoized (optimization r13): every decontaminate
-    // call re-read the bounded Bloom blob as a Spark job —
-    // [[IndexStores.readTinyStore]]
-    val sketch = IndexStores.readTinyStore(spark, s"$path/meta")
-      .head.getAs[Array[Byte]]("sketch")
+    // the meta row carries the bounded Bloom blob
+    val sketch = IndexStores.readMeta(spark, s"$path/meta", MetaVersion)
+      .getAs[Array[Byte]]("sketch")
     val bench = IndexStores.readStore(spark, s"$path/grams").select("s")
     TextOps.decontaminateAgainst(docs, bench, sketch, minShared,
       maxDfFrac, maxDfAbs)

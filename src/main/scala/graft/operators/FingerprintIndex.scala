@@ -35,6 +35,8 @@ import graft.core.Pins
   */
 object FingerprintIndex {
 
+  private[graft] val MetaVersion = 1
+
   private def bvp(band: Column, v: Column, mod: Int): Column =
     concat(lit("p"), band.cast("string"), lit("_"),
       pmod(v, lit(mod)).cast("string"))
@@ -66,15 +68,12 @@ object FingerprintIndex {
     math.min(256L, math.max(1L, nFps / math.max(1L, rowsPerBucket))).toInt
   }
 
-  // frozen contract through the shared fingerprint-fenced memo
-  // (optimization r13, [[IndexStores.readTinyStore]]): the earlier
-  // invalidate-on-write cache missed rewrites from other JVMs; the
-  // fingerprint fence catches any committed rewrite
-  private def contract(spark: SparkSession, path: String): (Int, Int, Int) = {
-    val r = IndexStores.readTinyStore(spark, s"$path/meta").head
-    val mod = if (r.schema.fieldNames.contains("bucket_mod"))
-      r.getAs[Int]("bucket_mod") else 256
-    (r.getAs[Int]("n_bits"), r.getAs[Int]("max_hamming"), mod)
+  private[graft] def contract(spark: SparkSession,
+      path: String): (Int, Int, Int) = {
+    val r = IndexStores.readMeta(spark, s"$path/meta", MetaVersion,
+      Map("bucket_mod" -> 256))
+    (r.getAs[Int]("n_bits"), r.getAs[Int]("max_hamming"),
+      r.getAs[Int]("bucket_mod"))
   }
 
   /** The fps store, or a schema-correct empty frame when no file
@@ -123,9 +122,9 @@ object FingerprintIndex {
       banded(fps, nBits, maxHamming + 1, mod)
         .repartition(col("bvp"))
         .write.mode("overwrite").partitionBy("bvp").parquet(s"$staging/fps")
-      Seq((nBits, maxHamming, mod)).toDF("n_bits", "max_hamming", "bucket_mod")
-        .coalesce(1)
-        .write.mode("overwrite").parquet(s"$staging/meta")
+      IndexStores.writeMeta(Seq((nBits, maxHamming, mod))
+        .toDF("n_bits", "max_hamming", "bucket_mod"), s"$staging/meta",
+        MetaVersion)
       IndexStores.swapInto(spark, path, staging)
     }
   }

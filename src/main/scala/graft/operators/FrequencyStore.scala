@@ -93,7 +93,7 @@ object FrequencyStore {
         s"confidence=${m.confidence}, seed=${m.seed}); extend declared " +
         s"(eps=$eps, confidence=$confidence, seed=$seed)")
     requireKeyFormatMeta(m, path, keyFormat)
-    val applied = appliedRanges(spark, path)
+    val applied = IndexStores.sketchRanges(spark, path)
     if (IndexStores.rangesApplied(applied, producer, batchId))
       return // replay — counted
     val (batchBytes, n) = sketchAndCount(df, key, eps, confidence, seed)
@@ -197,7 +197,7 @@ object FrequencyStore {
     val m = metaOf(spark, path)
     import spark.implicits._
     Seq((m.eps, m.confidence, m.seed, m.totalItems,
-      IndexStores.rangesCount(appliedRanges(spark, path)), m.generation))
+      IndexStores.rangesCount(IndexStores.sketchRanges(spark, path)), m.generation))
       .toDF("eps", "confidence", "seed", "total_items",
         "applied_batches", "generation")
   }
@@ -205,40 +205,24 @@ object FrequencyStore {
   private final case class Meta(eps: Double, confidence: Double,
       seed: Int, totalItems: Long, generation: Long,
       keyFormat: String)
+  private[graft] val MetaVersion = 1
 
   // internal readers assume the caller healed the root (every public
   // entry point does, once — repeated ParquetTable.exists probes per
   // streaming trigger are dead FS work on object stores)
   private def metaOf(spark: SparkSession, path: String): Meta = {
-    // fingerprint-memoized (optimization r13): meta changes only via
-    // the staged-swap publish, which changes the dir fingerprint —
-    // [[IndexStores.readTinyStore]]
-    val r = IndexStores.readTinyStore(spark, s"$path/meta").head
     // pre-marker stores carry no key_format column: read as "" (the
     // unversioned format), so versioned callers reject them loudly
-    val kf =
-      if (r.schema.fieldNames.contains("key_format"))
-        r.getAs[String]("key_format")
-      else ""
+    val r = IndexStores.readMeta(spark, s"$path/meta", MetaVersion,
+      Map("key_format" -> ""))
     Meta(r.getAs[Double]("eps"), r.getAs[Double]("confidence"),
       r.getAs[Int]("seed"), r.getAs[Long]("total_items"),
-      r.getAs[Long]("generation"), kf)
+      r.getAs[Long]("generation"), r.getAs[String]("key_format"))
   }
 
   private def sketchBytes(spark: SparkSession, path: String): Array[Byte] =
-    // fingerprint-memoized (optimization r13), like the meta above
     IndexStores.readTinyStore(spark, s"$path/sketch")
       .head.getAs[Array[Byte]](0)
-
-  /** The applied-id ledger in RANGE form — contiguous per-producer
-    * runs stay one entry on disk AND in memory (VERDICT r12 #7), so
-    * the per-extend fence is O(ranges), not O(triggers); fencing is
-    * exact because gaps never fold. Also the `applied_batches` audit
-    * surface in [[stats]] via [[IndexStores.rangesCount]].
-    */
-  private def appliedRanges(spark: SparkSession,
-      path: String): Seq[(String, Long, Long)] =
-    IndexStores.sketchRanges(spark, path)
 
   /** ONE aggregation pass over the batch: the counter matrix and the
     * exact non-null item count together — the hot ingest path reads
@@ -272,7 +256,7 @@ object FrequencyStore {
     IndexStores.publishSketchGeneration(spark, path, bytes,
       Seq((eps, confidence, seed, totalItems, generation, keyFormat))
         .toDF("eps", "confidence", "seed", "total_items", "generation",
-          "key_format"),
+          "key_format"), MetaVersion,
       batches)
   }
 }

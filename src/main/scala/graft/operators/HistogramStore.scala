@@ -48,11 +48,10 @@ object HistogramStore {
   final case class HistMeta(valueCol: String, lo: Long, hi: Long,
       nBins: Int)
 
+  private[graft] val MetaVersion = 1
+
   private def metaOf(spark: SparkSession, path: String): HistMeta = {
-    // fingerprint-memoized (optimization r13): geometry is frozen at
-    // write/rebin, and every serve/extend/drift/quantiles call pays a
-    // Spark job re-reading this one row — [[IndexStores.readTinyStore]]
-    val r = IndexStores.readTinyStore(spark, s"$path/meta").head
+    val r = IndexStores.readMeta(spark, s"$path/meta", MetaVersion)
     HistMeta(r.getAs[String]("value_col"), r.getAs[Long]("lo"),
       r.getAs[Long]("hi"), r.getAs[Int]("n_bins"))
   }
@@ -117,9 +116,8 @@ object HistogramStore {
     val m = HistMeta(valueCol, lo, hi, nBins)
     import spark.implicits._
     val staging = IndexStores.stagingFor(spark, path)
-    Seq((valueCol, lo, hi, nBins))
-      .toDF("value_col", "lo", "hi", "n_bins").coalesce(1)
-      .write.mode("overwrite").parquet(s"$staging/meta")
+    IndexStores.writeMeta(Seq((valueCol, lo, hi, nBins))
+      .toDF("value_col", "lo", "hi", "n_bins"), s"$staging/meta", MetaVersion)
     // fresh path inside the staging root: RollupStore writes in place
     // with its ledger as the (inner) commit point; the OUTER swap
     // below is what publishes meta+bins together
@@ -436,9 +434,8 @@ object HistogramStore {
         max("max_val").as("max_val"))
     import spark.implicits._
     val staging = IndexStores.stagingFor(spark, dstPath)
-    Seq((m.valueCol, m.lo, m.hi, nBinsNew))
-      .toDF("value_col", "lo", "hi", "n_bins").coalesce(1)
-      .write.mode("overwrite").parquet(s"$staging/meta")
+    IndexStores.writeMeta(Seq((m.valueCol, m.lo, m.hi, nBinsNew))
+      .toDF("value_col", "lo", "hi", "n_bins"), s"$staging/meta", MetaVersion)
     // the delegated bins store's grain is ("bin"; "v") — the binned()
     // projection's names, exactly what write() declares — so a later
     // extend() of the rebinned store passes its grain check

@@ -46,7 +46,9 @@ import graft.core.Pins
   */
 object HistoryStore {
 
-  private final case class Meta(key: String, orderCol: String,
+  private[graft] val MetaVersion = 1
+
+  private[graft] final case class Meta(key: String, orderCol: String,
       stateCols: Seq[String], tieCols: Seq[String], nBuckets: Int,
       autoBuckets: Boolean = false)
 
@@ -103,20 +105,15 @@ object HistoryStore {
       Meta(key, orderCol, stateCols, tieCols, nBuckets),
       Seq(("base", 0L)))
 
-  /** Shared base-build: ONE commit point whatever the caller or the
-    * store's state. Against a FRESH path the delta is written in
-    * place and the ledger commit is the atomic point (a crash before
-    * it leaves no ledger; the replay overwrites the same uncommitted
-    * dirs idempotently). Against a LIVE store (a rebuild from the
-    * full change log) everything — meta, delta, ledger — is staged
-    * under a fresh root and swapped in atomically: an in-place write
-    * would destroy committed, ledgered dirs before the new commit.
-    * Note a rebuild REPLACES the store wholesale, purge state
-    * included (the new history is built from whatever log the caller
-    * passed). The scd2 frame is pinned so the data and frontier
-    * writes don't run the window pipeline twice, and the derivable
-    * `is_current` stays OFF disk (a later closure would make the
-    * stored value a lie; [[serve]] recomputes it from `valid_to`).
+  /** Shared base-build ([[IndexStores.publishBase]]): against a LIVE
+    * store (a rebuild from the full change log) meta, delta and ledger
+    * are staged and swapped in together. A rebuild REPLACES the store
+    * wholesale, purge state included (the new history is built from
+    * whatever log the caller passed). The scd2 frame is pinned so the
+    * data and frontier writes don't run the window pipeline twice,
+    * and the derivable `is_current` stays OFF disk (a later closure
+    * would make the stored value a lie; [[serve]] recomputes it from
+    * `valid_to`).
     */
   private def writeBase(changes: DataFrame, path: String, m: Meta,
       pairs: Seq[(String, Long)]): Unit = {
@@ -134,8 +131,7 @@ object HistoryStore {
           m.copy(nBuckets = chooseBuckets(spark, dim.count()),
             autoBuckets = true)
         else m
-      val tag = IndexStores.tagFor(pairs.head._1, pairs.head._2)
-      def writeInto(root: String, commit: Boolean): Unit = {
+      IndexStores.publishBase(spark, path, pairs) { (root, tag) =>
         writeMeta(spark, root, mr)
         writeDelta(spark, root, tag,
           data = dim.drop("last_changed", "is_current"),
@@ -143,19 +139,7 @@ object HistoryStore {
           frontier = dim.groupBy(m.key).agg(max("last_changed")
             .as("last_changed")),
           meta = mr)
-        val ledger = pairs.map(p => (p._1, p._2, tag))
-        if (commit) commitLedger(spark, root, ledger)
-        else {
-          import spark.implicits._
-          ledger.toDF("producer", "batch_id", "tag").coalesce(1)
-            .write.mode("overwrite").parquet(s"$root/batches")
-        }
       }
-      if (IndexStores.hasStore(spark, s"$path/batches")) {
-        val staging = IndexStores.stagingFor(spark, path)
-        writeInto(staging, commit = false)
-        IndexStores.swapInto(spark, path, staging)
-      } else writeInto(path, commit = true)
     }
   }
 
@@ -191,7 +175,7 @@ object HistoryStore {
         s"${m.nBuckets} buckets); extend declared ($key; $orderCol; " +
         s"${stateCols.mkString(",")}; ${tieCols.mkString(",")}; " +
         s"$nBuckets buckets)")
-    val applied = ledger(spark, path)
+    val applied = IndexStores.tagLedger(spark, path)
     if (applied.exists(r => r._1 == producer && r._2 == batchId))
       return // replay — already folded
     Pins.scoped {
@@ -244,10 +228,10 @@ object HistoryStore {
       val tag = IndexStores.tagFor(producer, batchId)
       writeDelta(spark, path, tag, newRows, closures, frontier, m)
       // single-writer tripwire just before the commit point
-      require(ledger(spark, path) == applied,
+      require(IndexStores.tagLedger(spark, path) == applied,
         s"history store at $path advanced during extend — a second " +
           "concurrent writer is folding batches; serialise producers")
-      commitLedger(spark, path, applied :+ ((producer, batchId, tag)))
+      IndexStores.commitTagLedger(spark, path, applied :+ ((producer, batchId, tag)))
     }
   }
 
@@ -339,7 +323,7 @@ object HistoryStore {
   def compact(spark: SparkSession, path: String): Unit = {
     IndexStores.healRoot(spark, path)
     val m = metaOf(spark, path)
-    val applied = ledger(spark, path)
+    val applied = IndexStores.tagLedger(spark, path)
     require(applied.nonEmpty,
       s"history store at $path has no committed batches to compact")
     // GC dirs no CURRENT ledger tag references (previous compact's
@@ -386,9 +370,9 @@ object HistoryStore {
           frontier = dim.groupBy(m.key).agg(max("last_changed")
             .as("last_changed")),
           meta = m2)
-        require(ledger(spark, path) == applied,
+        require(IndexStores.tagLedger(spark, path) == applied,
           s"history store at $path advanced during compact")
-        commitLedger(spark, staging, applied.map(r => (r._1, r._2, tag)))
+        IndexStores.commitTagLedger(spark, staging, applied.map(r => (r._1, r._2, tag)))
         IndexStores.swapInto(spark, path, staging)
         return
       }
@@ -398,9 +382,9 @@ object HistoryStore {
         frontier = dim.groupBy(m.key).agg(max("last_changed")
           .as("last_changed")),
         meta = m)
-      require(ledger(spark, path) == applied,
+      require(IndexStores.tagLedger(spark, path) == applied,
         s"history store at $path advanced during compact")
-      commitLedger(spark, path, applied.map(r => (r._1, r._2, tag)))
+      IndexStores.commitTagLedger(spark, path, applied.map(r => (r._1, r._2, tag)))
       // superseded tag dirs stay on disk for the grace window; the
       // NEXT compact's opening GC removes them (see scaladoc)
       //
@@ -449,7 +433,7 @@ object HistoryStore {
     // built from local values; releasing costs it nothing.
     Pins.scoped {
       val m = metaOf(spark, path)
-      val applied = ledger(spark, path)
+      val applied = IndexStores.tagLedger(spark, path)
       val purgeList = purgedLocal(spark, path)
       val d = serveBuckets(spark, path, m, None, purgeList).agg(
         count(lit(1)), count(when(col("is_current"), 1)),
@@ -489,7 +473,7 @@ object HistoryStore {
     */
   private def dataSchemaOf(spark: SparkSession, path: String)
       : org.apache.spark.sql.types.StructType = {
-    val tags = ledger(spark, path).map(_._3).distinct
+    val tags = IndexStores.tagLedger(spark, path).map(_._3).distinct
     tags.collectFirst {
       case t if IndexStores.hasParquetFiles(spark, s"$path/data/$t") =>
         spark.read.parquet(s"$path/data/$t").schema
@@ -530,9 +514,7 @@ object HistoryStore {
     * broadcast-vs-join — a byte-tiny list over the row cap still
     * takes the join-based path.
     */
-  private def purgeTinyBytes(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.history.purgeTinyBytes")
-      .map(_.toLong).getOrElse(4L * 1024 * 1024)
+  private val PurgeTinyBytes = 4L * 1024 * 1024
 
   private def purgedLocal(spark: SparkSession,
       path: String): Option[PurgeList] = {
@@ -549,12 +531,11 @@ object HistoryStore {
     // delta/RLE-compressed million-key list — byte-tiny but far over
     // the row cap — is routed to the join-based path below without
     // its rows ever landing on the driver, exactly the protection
-    // purgeLocalCap documents.
-    val tiny = IndexStores.tinyStoreBytes(spark, s"$path/purged")
-      .filter(_ <= purgeTinyBytes(spark))
-      .flatMap(_ => IndexStores.parquetFooterRows(spark, s"$path/purged"))
-      .filter(n => n > 0 && n <= purgeLocalCap(spark))
-      .map(_ => IndexStores.readTinyStore(spark, s"$path/purged"))
+    // purgeLocalCap documents. Gates and collect share ONE listing.
+    val dir = s"$path/purged"
+    val tiny = IndexStores.tinyListing(spark, dir).flatMap(ls =>
+      IndexStores.readGated(spark, dir, ls, PurgeTinyBytes,
+        purgeLocalCap(spark)))
     tiny match {
       case Some(rows) if rows.nonEmpty =>
         return Some(PurgeList(
@@ -629,7 +610,7 @@ object HistoryStore {
       bkps: Option[Seq[String]],
       purgeList: Option[PurgeList]): DataFrame = {
     import org.apache.spark.sql.types.StructType
-    val tags = ledger(spark, path).map(_._3).distinct
+    val tags = IndexStores.tagLedger(spark, path).map(_._3).distinct
     // an EMPTY prune list (empty batch) short-circuits to empty frames
     // outright — isin() of zero values must never widen to a scan, and
     // even the per-tag dir listings are skipped (IndexStores
@@ -710,33 +691,21 @@ object HistoryStore {
   private def writeMeta(spark: SparkSession, path: String,
       m: Meta): Unit = {
     import spark.implicits._
-    Seq((m.key, m.orderCol, m.stateCols.mkString(","),
+    IndexStores.writeMeta(Seq((m.key, m.orderCol, m.stateCols.mkString(","),
       m.tieCols.mkString(","), m.nBuckets, m.autoBuckets))
       .toDF("key", "order_col", "state_cols", "tie_cols", "n_buckets",
-        "auto_buckets")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+        "auto_buckets"), s"$path/meta", MetaVersion)
   }
 
-  private def metaOf(spark: SparkSession, path: String): Meta = {
-    // fingerprint-memoized (optimization r13): the dimension contract
-    // changes only through full-store swaps; see
-    // [[IndexStores.readTinyStore]]
-    val r = IndexStores.readTinyStore(spark, s"$path/meta").head
-    Meta(r.getString(0), r.getString(1),
-      r.getString(2).split(",").toSeq.filter(_.nonEmpty),
-      r.getString(3).split(",").toSeq.filter(_.nonEmpty),
-      r.getInt(4),
-      // stores written before the flag existed are treated as
-      // explicitly bucketed — compact must not migrate them
-      r.schema.fieldNames.contains("auto_buckets") &&
-        r.getAs[Boolean]("auto_buckets"))
+  private[graft] def metaOf(spark: SparkSession, path: String): Meta = {
+    // stores written before the auto_buckets flag existed are treated
+    // as explicitly bucketed — compact must not migrate them
+    val r = IndexStores.readMeta(spark, s"$path/meta", MetaVersion,
+      Map("auto_buckets" -> false))
+    def list(c: String) = r.getAs[String](c).split(",").toSeq.filter(_.nonEmpty)
+    Meta(r.getAs[String]("key"), r.getAs[String]("order_col"),
+      list("state_cols"), list("tie_cols"), r.getAs[Int]("n_buckets"),
+      r.getAs[Boolean]("auto_buckets"))
   }
 
-  private def ledger(spark: SparkSession,
-      path: String): Seq[(String, Long, String)] =
-    IndexStores.tagLedger(spark, path)
-
-  private def commitLedger(spark: SparkSession, path: String,
-      applied: Seq[(String, Long, String)]): Unit =
-    IndexStores.commitTagLedger(spark, path, applied)
 }

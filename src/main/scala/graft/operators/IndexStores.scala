@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{GenericRowWithSchema, Literal}
 import org.apache.spark.sql.functions._
-import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 
 import graft.core.{ParquetTable, Pins}
 
@@ -15,6 +17,22 @@ import graft.core.{ParquetTable, Pins}
   * ([[landTrigger]]) every `b_*`-tag stream publishes through — so a
   * hardening of any of them cannot silently miss a twin (the
   * `BenchUtil.parquetDataFiles` stance).
+  *
+  * THE meta codec: every persisted store keeps its contract in a
+  * one-row `meta/` table, written only by [[writeMeta]] and read only
+  * by [[readMeta]] (a source-guard spec enforces it), through the
+  * fingerprint-fenced tiny-read memo ([[readTinyStore]]). Column 0 is
+  * `meta_version`, the store's format version; a store bumps it
+  * whenever an older reader would misread the new layout. Policy:
+  *  - a meta without `meta_version` is a pre-codec store, version 0;
+  *  - a stored version NEWER than the reader's fails loudly, naming
+  *    the dir and both versions — an older build never probes a layout
+  *    it does not know (and the pre-codec builds' positional readers,
+  *    shifted by `meta_version` at column 0, throw a type error);
+  *  - a column the reader declares in `defaults` but the row lacks
+  *    reads as its default (stores written before that column
+  *    existed), so callers read every field by name;
+  *  - anything but exactly one row is a partial write or not a store.
   */
 private[graft] object IndexStores {
 
@@ -32,18 +50,16 @@ private[graft] object IndexStores {
     */
   def hasStore(spark: SparkSession, dir: String): Boolean = {
     ParquetTable.exists(spark, dir) // heals .__old_-only; false if absent
-    val f = fs(spark, dir)
-    val p = new Path(dir)
-    f.exists(p) && {
-      val it = f.listFiles(p, true)
-      var found = false
-      while (!found && it.hasNext) {
-        val s = it.next()
-        found = s.getPath.getName.endsWith(".parquet") &&
-          !s.getPath.toString.contains("_temporary")
-      }
-      found
-    }
+    val (f, p) = (fs(spark, dir), new Path(dir))
+    f.exists(p) && committedFiles(f, p).hasNext
+  }
+
+  /** The committed parquet data files under `p`, recursively. */
+  private def committedFiles(f: FileSystem, p: Path): Iterator[FileStatus] = {
+    val it = f.listFiles(p, true)
+    Iterator.continually(it).takeWhile(_.hasNext).map(_.next(): FileStatus)
+      .filter(s => s.getPath.getName.endsWith(".parquet") &&
+        !s.getPath.toString.contains("_temporary"))
   }
 
   /** Read a store, first healing the staged-swap crash window (a kill
@@ -67,19 +83,23 @@ private[graft] object IndexStores {
     * rewrite of these artifacts lands via staged write + atomic
     * rename with fresh randomized part-file names, so ANY rewrite —
     * this JVM or a concurrent process — changes the fingerprint and
-    * forces a re-read; no invalidation hook to forget. An absent dir
-    * is never cached (a store can be created later).
+    * forces a re-read; no invalidation hook to forget. The rows of an
+    * entry are read from exactly the files of the listing its
+    * fingerprint names, so an entry can never pair one generation's
+    * fingerprint with another's rows. An absent dir is never cached
+    * (a store can be created later).
     */
   private val tinyReadCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Seq[org.apache.spark.sql.Row], Long)]()
+    String, (String, Seq[Row], Long)]()
   // approximate retained bytes (per-entry on-disk dir size — an upper
   // proxy for the collected rows that matters exactly for the entries
   // that matter: serialized sketch blobs): the cache must stay a
   // bounded accelerator, not a monotonic leak across every store path
   // a long-lived session ever touches (review finding). Crossing the
   // cap clears the whole map — correct (it is a pure cache; the next
-  // read repopulates) and rare at the default 256 MB.
+  // read repopulates) and rare.
   private val tinyReadBytes = new java.util.concurrent.atomic.AtomicLong(0L)
+  private val TinyCacheCap = 256L * 1024 * 1024
 
   /** Test probe: (entries, accounted bytes) of the tiny-read memo — the
     * byte-accounting spec pins that rewrites of one store never charge
@@ -87,85 +107,149 @@ private[graft] object IndexStores {
     */
   private[graft] def tinyReadStats: (Int, Long) =
     (tinyReadCache.size, tinyReadBytes.get)
-  private def tinyCacheCap(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.store.tinyCacheBytes")
-      .map(_.toLong).getOrElse(256L * 1024 * 1024)
 
   private def dirListing(spark: SparkSession,
-      dir: String): Option[Array[org.apache.hadoop.fs.FileStatus]] = {
+      dir: String): Option[Array[FileStatus]] = {
     val f = fs(spark, dir)
     val p = new Path(dir)
     if (!f.exists(p)) None else Some(f.listStatus(p))
   }
 
-  private def fingerprintOf(
-      ls: Array[org.apache.hadoop.fs.FileStatus]): String =
+  private def fingerprintOf(ls: Array[FileStatus]): String =
     ls.map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
       .sorted.mkString("|")
 
-  /** Total on-disk bytes of a store directory (None when absent) — the
-    * byte gate callers use to decide whether [[readTinyStore]] may
-    * collect the table at all (optimization r14: the purge-list memo).
-    */
-  private[graft] def tinyStoreBytes(spark: SparkSession,
-      dir: String): Option[Long] =
-    dirListing(spark, dir).map(_.map(_.getLen).sum)
+  private def dataFiles(ls: Array[FileStatus]): Array[FileStatus] =
+    ls.filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+
+  private def footerRows(spark: SparkSession, ls: Array[FileStatus]): Long = {
+    val conf = spark.sessionState.newHadoopConf()
+    dataFiles(ls).map { f =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
+      try r.getRecordCount finally r.close()
+    }.sum
+  }
 
   /** EXACT row count of a parquet store from the file footers — a
     * driver-side metadata read (no Spark job), one footer per data
-    * file. This is the guard that lets a caller refuse to collect a
-    * byte-tiny store whose ROW count is huge (review r14: delta/RLE
-    * encoding can pack millions of long-pair rows under any byte
-    * gate, and a collect of those rows is exactly the driver-heap
-    * cliff the row caps exist to prevent). None when the dir is
-    * absent.
+    * file. None when the dir is absent.
     */
   private[graft] def parquetFooterRows(spark: SparkSession,
       dir: String): Option[Long] =
-    dirListing(spark, dir).map { ls =>
-      val conf = spark.sessionState.newHadoopConf()
-      ls.filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-        .map { f =>
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile
-              .fromStatus(f, conf))
-          try r.getRecordCount finally r.close()
-        }.sum
+    dirListing(spark, dir).map(footerRows(spark, _))
+
+  /** A listing of `dir` (healing the `.__old_`-only crash window
+    * first, the [[readStore]] contract); None when the dir is absent.
+    */
+  private[graft] def tinyListing(spark: SparkSession,
+      dir: String): Option[Array[FileStatus]] = {
+    ParquetTable.exists(spark, dir)
+    dirListing(spark, dir)
+  }
+
+  /** `body` over listing `ls` of `dir`; None when it fails because a
+    * rewrite replaced the listed files (the dir's fingerprint moved
+    * on). Any other failure propagates.
+    */
+  private def unlessMoved[T](spark: SparkSession, dir: String,
+      ls: Array[FileStatus])(body: => T): Option[T] =
+    try Some(body) catch {
+      case scala.util.control.NonFatal(_) if !dirListing(spark, dir)
+          .map(fingerprintOf).contains(fingerprintOf(ls)) => None
     }
 
-  /** Collect a bounded-tiny store table through the fingerprint memo.
-    * Heals the `.__old_`-only crash window first (the [[readStore]]
-    * contract). Rows keep their schema ([[GenericRowWithSchema]]), so
-    * callers can still probe optional columns.
+  /** The rows of exactly the data files in listing `ls` of `dir`,
+    * through the fingerprint memo; None when a rewrite replaced them.
     */
-  def readTinyStore(spark: SparkSession,
-      dir: String): Seq[org.apache.spark.sql.Row] = {
-    ParquetTable.exists(spark, dir)
-    dirListing(spark, dir) match {
-      case None => // let the parquet reader raise the canonical error
-        spark.read.parquet(dir).collect().toSeq
-      case Some(ls) =>
-        val fp = fingerprintOf(ls)
-        val cached = tinyReadCache.get(dir)
-        if (cached != null && cached._1 == fp) cached._2
-        else {
-          val rows = spark.read.parquet(dir).collect().toSeq
-          val bytes = ls.map(_.getLen).sum
-          // replacing a stale entry must return its bytes to the budget
-          // (optimization r14, VERDICT r13 #3): without the subtraction a
-          // store rewritten N times charges N× its size and forces
-          // premature whole-cache clears in exactly the long-lived-session
-          // case the bound exists for
-          val prev = tinyReadCache.put(dir, (fp, rows, bytes))
-          val delta = bytes - (if (prev == null) 0L else prev._3)
-          if (tinyReadBytes.addAndGet(delta) > tinyCacheCap(spark)) {
-            tinyReadCache.clear()
-            tinyReadBytes.set(bytes)
-            tinyReadCache.put(dir, (fp, rows, bytes))
-          }
-          rows
+  private def collectListed(spark: SparkSession, dir: String,
+      ls: Array[FileStatus]): Option[Seq[Row]] = {
+    val fp = fingerprintOf(ls)
+    val cached = tinyReadCache.get(dir)
+    if (cached != null && cached._1 == fp) return Some(cached._2)
+    unlessMoved(spark, dir, ls)(spark.read
+      .parquet(dataFiles(ls).map(_.getPath.toString): _*).collect().toSeq)
+      .map { rows =>
+        val bytes = ls.map(_.getLen).sum
+        // replacing a stale entry must return its bytes to the budget
+        // (optimization r14, VERDICT r13 #3): without the subtraction a
+        // store rewritten N times charges N× its size and forces
+        // premature whole-cache clears in exactly the long-lived-session
+        // case the bound exists for
+        val prev = tinyReadCache.put(dir, (fp, rows, bytes))
+        val delta = bytes - (if (prev == null) 0L else prev._3)
+        if (tinyReadBytes.addAndGet(delta) > TinyCacheCap) {
+          tinyReadCache.clear()
+          tinyReadBytes.set(bytes)
+          tinyReadCache.put(dir, (fp, rows, bytes))
         }
+        rows
+      }
+  }
+
+  /** [[readTinyStore]]'s rows, None when the dir is absent. */
+  private def tinyRows(spark: SparkSession, dir: String): Option[Seq[Row]] =
+    tinyListing(spark, dir).map(ls => collectListed(spark, dir, ls)
+      .getOrElse(readTinyStore(spark, dir))) // replaced mid-read: re-list
+
+  /** Collect a bounded-tiny store table through the fingerprint memo.
+    * Rows keep their schema ([[GenericRowWithSchema]]). An absent dir
+    * raises the parquet reader's canonical not-found error.
+    */
+  def readTinyStore(spark: SparkSession, dir: String): Seq[Row] =
+    tinyRows(spark, dir).getOrElse(spark.read.parquet(dir).collect().toSeq)
+
+  /** Collect the store in listing `ls` of `dir` only if that listing
+    * passes both gates: at most `maxBytes` on disk and at most `maxRows`
+    * rows by the parquet footers (a delta/RLE-encoded table can pack
+    * millions of rows under any byte gate, and collecting those is the
+    * driver-heap cliff a row cap exists to prevent). The rows come
+    * from exactly the files the gates checked. None when over a gate
+    * or when a rewrite replaced the listed files — the caller takes
+    * its unbounded (count) path; a list nobody checked is never
+    * collected.
+    */
+  private[graft] def readGated(spark: SparkSession, dir: String,
+      ls: Array[FileStatus], maxBytes: Long, maxRows: Long): Option[Seq[Row]] =
+    unlessMoved(spark, dir, ls)(ls.map(_.getLen).sum <= maxBytes &&
+      footerRows(spark, ls) <= maxRows)
+      .filter(identity).flatMap(_ => collectListed(spark, dir, ls))
+
+  /** Write a store's one-row meta table at `dir`, `meta_version` =
+    * `version` first (the meta codec, see the object doc).
+    */
+  def writeMeta(meta: DataFrame, dir: String, version: Int): Unit =
+    ParquetTable.overwriteAtomic(meta.sparkSession, dir,
+      meta.select(lit(version).as("meta_version"), col("*")).coalesce(1))
+
+  /** The meta row of `dir` through the tiny-read memo, under the
+    * codec policy of the object doc. `required = false` reads an
+    * absent dir as a version-0 row of `defaults` (a store that
+    * predates its meta); otherwise an absent dir raises the canonical
+    * not-found error.
+    */
+  def readMeta(spark: SparkSession, dir: String, version: Int,
+      defaults: Map[String, Any] = Map.empty,
+      required: Boolean = true): Row = {
+    val row = tinyRows(spark, dir).getOrElse(
+      if (required) readTinyStore(spark, dir) // raises the not-found error
+      else Seq(new GenericRowWithSchema(Array.empty, new StructType()))) match {
+      case Seq(r) => r
+      case rs => throw new IllegalStateException(
+        s"$dir: expected exactly one meta row, found ${rs.length} — not " +
+          "a store of this kind, or a partial write")
     }
+    val names = row.schema.fieldNames.toSet
+    val stored = if (names("meta_version")) row.getAs[Int]("meta_version") else 0
+    if (stored > version) throw new IllegalStateException(
+      s"$dir was written at meta_version $stored, but this build reads " +
+        s"up to meta_version $version — read the store with the build " +
+        "that wrote it, or rebuild it")
+    val absent = defaults.toSeq.filterNot(d => names(d._1))
+    if (absent.isEmpty) row
+    else new GenericRowWithSchema((row.toSeq ++ absent.map(_._2)).toArray,
+      StructType(row.schema.fields ++ absent.map { case (k, v) =>
+        StructField(k, Literal(v).dataType) }))
   }
 
   /** Append ids to the store's tombstone table (logical delete). */
@@ -295,13 +379,7 @@ private[graft] object IndexStores {
         val dirs = math.max(1,
           f.listStatus(p).count(st =>
             st.isDirectory && st.getPath.getName.contains("=")))
-        var files = 0
-        val it = f.listFiles(p, true)
-        while (it.hasNext) {
-          val st = it.next()
-          if (st.getPath.getName.endsWith(".parquet") &&
-              !st.getPath.toString.contains("_temporary")) files += 1
-        }
+        val files = committedFiles(f, p).size
         Some((s, files.toLong, dirs.toLong,
           files.toDouble / dirs, tombstoned))
       }
@@ -509,7 +587,7 @@ private[graft] object IndexStores {
     * rows — see [[readTinyStore]].
     */
   private def ledgerRows(spark: SparkSession,
-      path: String): Seq[(org.apache.spark.sql.Row, Long, Long)] =
+      path: String): Seq[(Row, Long, Long)] =
     if (!hasStore(spark, s"$path/batches")) Seq.empty
     else {
       val rows = readTinyStore(spark, s"$path/batches")
@@ -546,6 +624,28 @@ private[graft] object IndexStores {
     folded.toDF("producer", "batch_id", "tag", "lo_id").coalesce(1)
       .write.mode("overwrite").parquet(staging)
     swapInto(spark, s"$path/batches", staging)
+  }
+
+  /** The delta-tag stores' base-build — ONE commit point whatever the
+    * caller or the store's state. `writePieces(root, tag)` writes the
+    * store's meta and its base delta under `tag`; the ledger of
+    * `pairs` under that tag commits last. Against a FRESH path the
+    * pieces are written in place and the ledger commit is the atomic
+    * point (a crash before it leaves no ledger; the replay overwrites
+    * the same uncommitted dirs idempotently). Against a LIVE store (a
+    * rebuild) everything is staged under a fresh root and swapped in
+    * atomically — an in-place write would destroy committed, ledgered
+    * dirs before the new commit, and a crash mid-write (or a
+    * concurrent reader) would see a store that lies.
+    */
+  def publishBase(spark: SparkSession, path: String,
+      pairs: Seq[(String, Long)])(writePieces: (String, String) => Unit): Unit = {
+    val tag = tagFor(pairs.head._1, pairs.head._2)
+    val live = hasStore(spark, s"$path/batches")
+    val root = if (live) stagingFor(spark, path) else path
+    writePieces(root, tag)
+    commitTagLedger(spark, root, pairs.map(p => (p._1, p._2, tag)))
+    if (live) swapInto(spark, path, root)
   }
 
   /** The next compaction generation: max over every ledgered tag's
@@ -648,12 +748,12 @@ private[graft] object IndexStores {
     * root and writes the store's own artifact under it.
     */
   def publishGeneration(spark: SparkSession, path: String,
-      writePayload: String => Unit, meta: DataFrame,
+      writePayload: String => Unit, meta: DataFrame, metaVersion: Int,
       batches: Seq[(String, Long, Long)]): Unit = {
     import spark.implicits._
     val staging = stagingFor(spark, path)
     writePayload(staging)
-    meta.coalesce(1).write.mode("overwrite").parquet(s"$staging/meta")
+    writeMeta(meta, s"$staging/meta", metaVersion)
     if (batches.nonEmpty) {
       // range-folded on disk (see the ledger codec note above): a
       // streaming producer's contiguous ids stay ONE row however many
@@ -673,13 +773,13 @@ private[graft] object IndexStores {
     * (both sketch stores' shape).
     */
   def publishSketchGeneration(spark: SparkSession, path: String,
-      sketch: Array[Byte], meta: DataFrame,
+      sketch: Array[Byte], meta: DataFrame, metaVersion: Int,
       batches: Seq[(String, Long, Long)]): Unit = {
     import spark.implicits._
     publishGeneration(spark, path, staging =>
       Seq(Tuple1(sketch)).toDF("sketch").coalesce(1)
         .write.mode("overwrite").parquet(s"$staging/sketch"),
-      meta, batches)
+      meta, metaVersion, batches)
   }
 
   /** The pruned presence probe both indexes' incremental appends share:

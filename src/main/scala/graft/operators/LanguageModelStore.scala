@@ -37,6 +37,8 @@ import graft.core.Pins
   */
 object LanguageModelStore {
 
+  private[graft] val MetaVersion = 1
+
   /** The frozen model, loaded once: count DataFrames stay lazy reads
     * of the store (never collected); only `vocabSize` is a scalar.
     * Streaming legs hold one of these across triggers so no heal /
@@ -65,8 +67,8 @@ object LanguageModelStore {
         .as[(Long, Long)].head()
       require(v > 0,
         s"empty reference corpus: a bigram LM needs at least one token ($path)")
-      Seq((v, n)).toDF("vocab_size", "total_tokens").coalesce(1)
-        .write.mode("overwrite").parquet(s"$staging/meta")
+      IndexStores.writeMeta(Seq((v, n)).toDF("vocab_size", "total_tokens"),
+        s"$staging/meta", MetaVersion)
       IndexStores.swapInto(spark, path, staging)
     }
   }
@@ -98,8 +100,8 @@ object LanguageModelStore {
         .write.mode("overwrite").parquet(s"$staging/bigrams") // executes pre-swap: old generation still intact
       val (v, n) = uni.agg(count(lit(1)), coalesce(sum("cw"), lit(0L)))
         .as[(Long, Long)].head()
-      Seq((v, n)).toDF("vocab_size", "total_tokens").coalesce(1)
-        .write.mode("overwrite").parquet(s"$staging/meta")
+      IndexStores.writeMeta(Seq((v, n)).toDF("vocab_size", "total_tokens"),
+        s"$staging/meta", MetaVersion)
       IndexStores.swapInto(spark, path, staging)
     }
   }
@@ -140,10 +142,8 @@ object LanguageModelStore {
     */
   def load(spark: SparkSession, path: String): Model = {
     IndexStores.healRoot(spark, path)
-    // fingerprint-memoized one-row read (optimization r13) —
-    // [[IndexStores.readTinyStore]]
-    val v = IndexStores.readTinyStore(spark, s"$path/meta")
-      .head.getAs[Long]("vocab_size")
+    val v = IndexStores.readMeta(spark, s"$path/meta", MetaVersion)
+      .getAs[Long]("vocab_size")
     Model(IndexStores.readStore(spark, s"$path/unigrams"),
       IndexStores.readStore(spark, s"$path/bigrams"), v)
   }

@@ -43,6 +43,8 @@ import graft.core.Pins
   */
 object LayoutStore {
 
+  private[graft] val MetaVersion = 1
+
   /** The frozen layout state: grid definition + bounds + curve
     * (`"z"` or `"hilbert"` — the key expression and box enumerator
     * differ; every other store path is curve-blind).
@@ -111,11 +113,10 @@ object LayoutStore {
         .write.mode("overwrite").partitionBy("idp")
         .parquet(s"$staging/ids")
       import spark.implicits._
-      Seq((cols, idCol, bits, cellBits, mins, maxs, curve, idpMod))
-        .toDF("cols", "id_col", "bits", "cell_bits", "mins", "maxs",
-          "curve", "idp_mod")
-        .coalesce(1)
-        .write.mode("overwrite").parquet(s"$staging/meta")
+      IndexStores.writeMeta(
+        Seq((cols, idCol, bits, cellBits, mins, maxs, curve, idpMod))
+          .toDF("cols", "id_col", "bits", "cell_bits", "mins", "maxs",
+            "curve", "idp_mod"), s"$staging/meta", MetaVersion)
       IndexStores.swapInto(spark, path, staging)
     }
   }
@@ -134,29 +135,15 @@ object LayoutStore {
 
   def loadMeta(spark: SparkSession, path: String): LayoutMeta = {
     IndexStores.healRoot(spark, path)
-    // fingerprint-memoized (optimization r13) — [[IndexStores.readTinyStore]]
-    val row = IndexStores.readTinyStore(spark, s"$path/meta") match {
-      case Seq(r) => r
-      case rs => throw new IllegalStateException(
-        s"$path/meta: expected one meta row, found ${rs.length}")
-    }
-    // curve is read DEFENSIVELY: stores persisted before the hilbert
-    // family existed carry a 6-column meta row, and those layouts are
-    // all z-order by construction — defaulting beats bricking every
-    // pre-existing store with an index error (ADVICE r10)
-    val curve =
-      if (row.schema.fieldNames.contains("curve")) row.getString(6)
-      else "z"
-    // stores persisted before the adaptive sidecar geometry carry no
-    // idp_mod — they were all written 256-way (same defensive posture
-    // as `curve`)
-    val idpMod =
-      if (row.schema.fieldNames.contains("idp_mod"))
-        row.getInt(row.fieldIndex("idp_mod"))
-      else 256
-    LayoutMeta(row.getSeq[String](0), row.getString(1), row.getInt(2),
-      row.getInt(3), row.getSeq[Long](4), row.getSeq[Long](5),
-      curve, idpMod)
+    // stores persisted before the hilbert family are all z-order
+    // (ADVICE r10); before the adaptive sidecar geometry, all 256-way
+    val r = IndexStores.readMeta(spark, s"$path/meta", MetaVersion,
+      Map("curve" -> "z", "idp_mod" -> 256))
+    LayoutMeta(r.getSeq[String](r.fieldIndex("cols")),
+      r.getAs[String]("id_col"), r.getAs[Int]("bits"),
+      r.getAs[Int]("cell_bits"), r.getSeq[Long](r.fieldIndex("mins")),
+      r.getSeq[Long](r.fieldIndex("maxs")), r.getAs[String]("curve"),
+      r.getAs[Int]("idp_mod"))
   }
 
   /** Ingest a batch under the frozen grid: encode with the stored

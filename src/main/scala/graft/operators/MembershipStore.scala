@@ -43,6 +43,8 @@ import graft.core.Pins
   */
 object MembershipStore {
 
+  private[graft] val MetaVersion = 1
+
   /** Build the store over a corpus of items. `expectedItems` sizes the
     * filter for its LIFETIME insertion count (write + all extends) —
     * the one capacity decision; fpp degrades past it (watch
@@ -84,7 +86,7 @@ object MembershipStore {
       s"membership store at $path was built as (expectedItems=" +
         s"${m.expectedItems}, fpp=${m.fpp}); extend declared " +
         s"(expectedItems=$expectedItems, fpp=$fpp)")
-    val applied = appliedRanges(spark, path)
+    val applied = IndexStores.sketchRanges(spark, path)
     if (IndexStores.rangesApplied(applied, producer, batchId))
       return // replay
     val (batchBytes, n) = buildFilter(df, key, expectedItems, fpp)
@@ -188,7 +190,7 @@ object MembershipStore {
     import spark.implicits._
     Seq((m.expectedItems, m.fpp, m.totalAdded,
       f.expectedFpp(), f.bitSize(),
-      IndexStores.rangesCount(appliedRanges(spark, path))))
+      IndexStores.rangesCount(IndexStores.sketchRanges(spark, path))))
       .toDF("expected_items", "fpp", "items_added", "current_fpp",
         "bit_size", "applied_batches")
   }
@@ -227,23 +229,15 @@ object MembershipStore {
     out.toByteArray
   }
 
-  // both fingerprint-memoized (optimization r13): every probe/extend
-  // trigger re-read the blob and the one-row meta as full Spark jobs;
-  // the staged-swap publish changes the dir fingerprint, so a new
-  // generation is always re-read — [[IndexStores.readTinyStore]]
   private def sketchBytes(spark: SparkSession, path: String): Array[Byte] =
     IndexStores.readTinyStore(spark, s"$path/sketch")
       .head.getAs[Array[Byte]](0)
 
   private def metaOf(spark: SparkSession, path: String): Meta = {
-    val r = IndexStores.readTinyStore(spark, s"$path/meta").head
+    val r = IndexStores.readMeta(spark, s"$path/meta", MetaVersion)
     Meta(r.getAs[Long]("expected_items"), r.getAs[Double]("fpp"),
       r.getAs[Long]("total_added"), r.getAs[Long]("generation"))
   }
-
-  private def appliedRanges(spark: SparkSession,
-      path: String): Seq[(String, Long, Long)] =
-    IndexStores.sketchRanges(spark, path)
 
   /** Stage one complete generation (sketch + meta + ledger) and swap
     * it in atomically ([[IndexStores.publishSketchGeneration]] — the
@@ -257,6 +251,6 @@ object MembershipStore {
     IndexStores.publishSketchGeneration(spark, path, bytes,
       Seq((expectedItems, fpp, totalAdded, generation))
         .toDF("expected_items", "fpp", "total_added", "generation"),
-      batches)
+      MetaVersion, batches)
   }
 }

@@ -64,6 +64,8 @@ import graft.core.Pins
   */
 object ReservoirStore {
 
+  private[graft] val MetaVersion = 1
+
   /** Sampling contract, frozen at build: every extend recomputes the
     * SAME priorities or rejects loudly.
     */
@@ -146,7 +148,7 @@ object ReservoirStore {
         s"${stored.schema.simpleString}; the batch carries " +
         s"${df.schema.simpleString} — rows of a different shape do " +
         "not merge")
-    val applied = appliedRanges(spark, path)
+    val applied = IndexStores.sketchRanges(spark, path)
     if (IndexStores.rangesApplied(applied, producer, batchId))
       return // replay
     Pins.scoped {
@@ -203,7 +205,7 @@ object ReservoirStore {
     publish(spark, path,
       bottomK(stored, m.idCol, newCapacity, m.seed, m.groupCol),
       m.copy(capacity = newCapacity, generation = m.generation + 1L),
-      appliedRanges(spark, path))
+      IndexStores.sketchRanges(spark, path))
   }
 
   /** The current sample — ≤ capacity payload rows, as ingested. */
@@ -223,7 +225,7 @@ object ReservoirStore {
     import spark.implicits._
     Seq((m.capacity.toLong, m.seed, m.nSeen, size,
       if (m.nSeen == 0L) 1000000L else size * 1000000L / m.nSeen,
-      IndexStores.rangesCount(appliedRanges(spark, path)),
+      IndexStores.rangesCount(IndexStores.sketchRanges(spark, path)),
       m.generation))
       .toDF("capacity", "seed", "n_seen", "sample_size",
         "inclusion_ppm", "applied_batches", "generation")
@@ -452,16 +454,11 @@ object ReservoirStore {
   }
 
   private def metaOf(spark: SparkSession, path: String): ResMeta = {
-    // fingerprint-memoized (optimization r13) — [[IndexStores.readTinyStore]]
-    val r = IndexStores.readTinyStore(spark, s"$path/meta").head
+    val r = IndexStores.readMeta(spark, s"$path/meta", MetaVersion)
     ResMeta(r.getAs[String]("id_col"), r.getAs[Int]("capacity"),
       r.getAs[String]("seed"), r.getAs[Long]("n_seen"),
       r.getAs[Long]("generation"), r.getAs[String]("group_col"))
   }
-
-  private def appliedRanges(spark: SparkSession,
-      path: String): Seq[(String, Long, Long)] =
-    IndexStores.sketchRanges(spark, path)
 
   /** Stage one complete generation (sample + meta + ledger) under one
     * root and swap it in atomically — the shared single-artifact
@@ -484,7 +481,7 @@ object ReservoirStore {
       Seq((m.idCol, m.capacity, m.seed, m.nSeen, m.generation,
         m.groupCol))
         .toDF("id_col", "capacity", "seed", "n_seen", "generation",
-          "group_col"),
+          "group_col"), MetaVersion,
       batches)
   }
 }

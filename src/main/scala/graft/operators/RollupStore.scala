@@ -101,37 +101,17 @@ object RollupStore {
     writeBase(normalized, path, keyCols, valueCol, Seq(("base", 0L)))
   }
 
-  /** Shared base-build — ONE commit point whatever the caller or the
-    * store's state. Against a FRESH path the pieces are written in
-    * place and the ledger commit is the atomic point (a crash before
-    * it leaves no ledger; the replay overwrites the same uncommitted
-    * dirs idempotently). Against a LIVE store (a rebuild) everything
-    * is staged under a fresh root and swapped in atomically — an
-    * in-place write would destroy committed, ledgered dirs before the
-    * new commit, and a crash mid-write (or a concurrent reader) would
-    * see a store that lies.
-    */
+  /** Shared base-build ([[IndexStores.publishBase]]). */
   private def writeBase(partials: DataFrame, path: String,
       keyCols: Seq[String], valueCol: String,
       pairs: Seq[(String, Long)]): Unit = {
     val spark = partials.sparkSession
     import spark.implicits._
-    val tag = IndexStores.tagFor(pairs.head._1, pairs.head._2)
-    def writeInto(root: String, commit: Boolean): Unit = {
-      Seq((keyCols.mkString(","), valueCol))
-        .toDF("key_cols", "value_col").coalesce(1)
-        .write.mode("overwrite").parquet(s"$root/meta")
+    IndexStores.publishBase(spark, path, pairs) { (root, tag) =>
+      IndexStores.writeMeta(Seq((keyCols.mkString(","), valueCol))
+        .toDF("key_cols", "value_col"), s"$root/meta", MetaVersion)
       writeTag(partials, s"$root/data/$tag")
-      val ledger = pairs.map(p => (p._1, p._2, tag))
-      if (commit) IndexStores.commitTagLedger(spark, root, ledger)
-      else ledger.toDF("producer", "batch_id", "tag").coalesce(1)
-        .write.mode("overwrite").parquet(s"$root/batches")
     }
-    if (IndexStores.hasStore(spark, s"$path/batches")) {
-      val staging = IndexStores.stagingFor(spark, path)
-      writeInto(staging, commit = false)
-      IndexStores.swapInto(spark, path, staging)
-    } else writeInto(path, commit = true)
   }
 
   /** Write one tag's parquet, guaranteeing a schema-bearing file even
@@ -252,11 +232,10 @@ object RollupStore {
   }
 
   private final case class Meta(keyCols: Seq[String], valueCol: String)
+  private[graft] val MetaVersion = 1
 
   private def metaOf(spark: SparkSession, path: String): Meta = {
-    // fingerprint-memoized (optimization r13): the grain is frozen at
-    // writeBase; see [[IndexStores.readTinyStore]]
-    val r = IndexStores.readTinyStore(spark, s"$path/meta").head
+    val r = IndexStores.readMeta(spark, s"$path/meta", MetaVersion)
     Meta(r.getAs[String]("key_cols").split(",").toSeq,
       r.getAs[String]("value_col"))
   }

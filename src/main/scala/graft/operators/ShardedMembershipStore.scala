@@ -59,6 +59,8 @@ import graft.core.{ParquetTable, Pins}
   */
 object ShardedMembershipStore {
 
+  private[graft] val MetaVersion = 1
+
   /** Build a fresh store over a corpus. Rejects an existing store —
     * rebuild by deleting first (the store is a generation artifact).
     */
@@ -285,15 +287,14 @@ object ShardedMembershipStore {
       IndexStores.publishGeneration(spark, s"$path/ctl", _ => (),
         Seq((expectedItems, fpp, shards, totalAdded, generation))
           .toDF("expected_items", "fpp", "shards", "total_added",
-            "generation"),
+            "generation"), MetaVersion,
         batches)
     }
   }
 
   private def metaOf(spark: SparkSession, path: String): Meta = {
     IndexStores.healRoot(spark, s"$path/ctl")
-    // fingerprint-memoized (optimization r13) — [[IndexStores.readTinyStore]]
-    val r = IndexStores.readTinyStore(spark, s"$path/ctl/meta").head
+    val r = IndexStores.readMeta(spark, s"$path/ctl/meta", MetaVersion)
     Meta(r.getAs[Long]("expected_items"), r.getAs[Double]("fpp"),
       r.getAs[Int]("shards"), r.getAs[Long]("total_added"),
       r.getAs[Long]("generation"))

@@ -34,6 +34,8 @@ import org.apache.spark.sql.functions._
   */
 object SketchStore {
 
+  private[graft] val MetaVersion = 1
+
   /** Build the store over a corpus: one scan, bounded map-side
     * partials, staged + atomic swap.
     */
@@ -45,8 +47,8 @@ object SketchStore {
     SketchOps.kmvSketch(df, Seq(group), key, k)
       .drop("sk_k")
       .write.mode("overwrite").parquet(s"$staging/sketches")
-    Seq((group, k)).toDF("group_col", "k").coalesce(1)
-      .write.mode("overwrite").parquet(s"$staging/meta")
+    IndexStores.writeMeta(Seq((group, k)).toDF("group_col", "k"),
+      s"$staging/meta", MetaVersion)
     IndexStores.swapInto(spark, path, staging)
   }
 
@@ -93,8 +95,8 @@ object SketchStore {
       // mid-write crash
       .write.mode("overwrite").parquet(s"$staging/sketches")
     import spark.implicits._
-    Seq((mg, mk)).toDF("group_col", "k").coalesce(1)
-      .write.mode("overwrite").parquet(s"$staging/meta")
+    IndexStores.writeMeta(Seq((mg, mk)).toDF("group_col", "k"),
+      s"$staging/meta", MetaVersion)
     IndexStores.swapInto(spark, path, staging)
   }
 
@@ -104,9 +106,7 @@ object SketchStore {
     */
   private def metaOf(spark: SparkSession, path: String): (String, Int) = {
     IndexStores.healRoot(spark, path)
-    // fingerprint-memoized (optimization r13): one Spark job per read
-    // of a frozen one-row table — [[IndexStores.readTinyStore]]
-    val m = IndexStores.readTinyStore(spark, s"$path/meta").head
+    val m = IndexStores.readMeta(spark, s"$path/meta", MetaVersion)
     (m.getAs[String]("group_col"), m.getAs[Int]("k"))
   }
 

@@ -29,6 +29,8 @@ import org.apache.spark.sql.functions._
   */
 object TokenizerStore {
 
+  private[graft] val MetaVersion = 1
+
   /** Train on `docs` and persist the tokenizer. Staged + atomic swap. */
   def write(docs: DataFrame, path: String, numMerges: Int = 200,
             maxWords: Int = 50000): Unit = {
@@ -60,9 +62,8 @@ object TokenizerStore {
     val staging = IndexStores.stagingFor(spark, path)
     mergesDf(spark, merges).coalesce(1)
       .write.mode("overwrite").parquet(s"$staging/merges")
-    Seq((merges.length, maxWords)).toDF("num_merges", "max_words")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$staging/meta")
+    IndexStores.writeMeta(Seq((merges.length, maxWords))
+      .toDF("num_merges", "max_words"), s"$staging/meta", MetaVersion)
     IndexStores.swapInto(spark, path, staging)
   }
 
@@ -114,9 +115,8 @@ object TokenizerStore {
     val spark = docs.sparkSession
     require(extraMerges > 0, "TokenizerStore.extend: extraMerges <= 0")
     val stored = load(spark, path)
-    // fingerprint-memoized (optimization r13) — [[IndexStores.readTinyStore]]
-    val maxWords = IndexStores.readTinyStore(spark, s"$path/meta")
-      .head.getAs[Int]("max_words")
+    val maxWords = IndexStores.readMeta(spark, s"$path/meta", MetaVersion)
+      .getAs[Int]("max_words")
     val grown = TextOps.bpeTrain(docs, stored.length + extraMerges, maxWords)
     require(grown.take(stored.length) == stored,
       "TokenizerStore.extend: stored merges are not a prefix of the " +

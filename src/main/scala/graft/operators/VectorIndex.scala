@@ -37,6 +37,8 @@ import graft.core.Pins
   */
 object VectorIndex {
 
+  private[graft] val MetaVersion = 1
+
   import VectorOps.{Auto, IvfPqModel, MaxTrainRows, PqTrainRows}
 
   /** Build and persist an IVF-PQ index for `embeddings` under `path`.
@@ -89,12 +91,12 @@ object VectorIndex {
         .write.mode("overwrite").partitionBy("cell")
         .parquet(s"$staging/vectors")
     import spark.implicits._
-    Seq((model.dim, model.dsub, model.m, model.kCent, model.nprobe,
-        model.centers.map(_.toSeq).toSeq,
-        model.codebooks.map(_.map(_.toSeq).toSeq)))
-      .toDF("dim", "dsub", "m", "k_cent", "nprobe", "centers", "codebooks")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$staging/meta")
+    IndexStores.writeMeta(
+      Seq((model.dim, model.dsub, model.m, model.kCent, model.nprobe,
+          model.centers.map(_.toSeq).toSeq,
+          model.codebooks.map(_.map(_.toSeq).toSeq)))
+        .toDF("dim", "dsub", "m", "k_cent", "nprobe", "centers", "codebooks"),
+      s"$staging/meta", MetaVersion)
     IndexStores.swapInto(spark, path, staging)
     model.copy(codes = loadCodes(spark, path))
   }
@@ -139,10 +141,25 @@ object VectorIndex {
       }
       .toDF("vec_id", "scale", "codes")
     coded.write.mode("overwrite").parquet(s"$staging/codes")
-    Seq((dim, "sq8"))
-      .toDF("dim", "kind").coalesce(1)
-      .write.mode("overwrite").parquet(s"$staging/meta")
+    writeSq8Meta(spark, s"$staging/meta", dim)
     IndexStores.swapInto(spark, path, staging)
+  }
+
+  private def writeSq8Meta(spark: SparkSession, dir: String, dim: Int): Unit = {
+    import spark.implicits._
+    IndexStores.writeMeta(Seq((dim, "sq8")).toDF("dim", "kind"), dir,
+      MetaVersion)
+  }
+
+  /** The dimension of the SQ8 store at `path`; rejects any other store
+    * kind.
+    */
+  private def sq8Dim(spark: SparkSession, path: String): Int = {
+    val meta = IndexStores.readMeta(spark, s"$path/meta", MetaVersion,
+      Map("kind" -> ""))
+    require(meta.getAs[String]("kind") == "sq8",
+      s"VectorIndex: the store at $path is not an SQ8 index")
+    meta.getAs[Int]("dim")
   }
 
   /** O(batch) logical delete for the SQ8 store — the family's delete
@@ -170,12 +187,12 @@ object VectorIndex {
     */
   def compactSq8(spark: SparkSession, path: String): Unit = {
     IndexStores.healRoot(spark, path)
-    val meta = IndexStores.readStore(spark, s"$path/meta")
+    val dim = sq8Dim(spark, path)
     val survivors = IndexStores.survivors(spark, path,
       IndexStores.readStore(spark, s"$path/codes"), "vec_id")
     val staging = IndexStores.stagingFor(spark, path)
     survivors.write.mode("overwrite").parquet(s"$staging/codes")
-    meta.coalesce(1).write.mode("overwrite").parquet(s"$staging/meta")
+    writeSq8Meta(spark, s"$staging/meta", dim)
     IndexStores.swapInto(spark, path, staging)
   }
 
@@ -209,16 +226,7 @@ object VectorIndex {
     // store this would otherwise surface as an unresolved-column
     // AnalysisException on `scale`, and a dim-mismatched query as a
     // per-row ByteDot error mid-scan
-    // fingerprint-memoized (optimization r13) — [[IndexStores.readTinyStore]]
-    val metaRows = IndexStores.readTinyStore(spark, s"$path/meta")
-    require(metaRows.length == 1,
-      s"searchSq8: expected exactly one meta row at $path/meta, got " +
-        s"${metaRows.length} — partial or duplicated store write")
-    val meta = metaRows.head
-    require(meta.schema.fieldNames.contains("kind") &&
-      meta.getAs[String]("kind") == "sq8",
-      s"searchSq8: the store at $path is not an SQ8 index")
-    val dim = meta.getAs[Int]("dim")
+    val dim = sq8Dim(spark, path)
     // validate EVERY query row (the set is broadcast-sized by
     // contract): a one-row probe would let a mixed-dimension or
     // null-vector set through to a raw per-row kernel error mid-scan
@@ -263,19 +271,14 @@ object VectorIndex {
     */
   def loadIvfPq(spark: SparkSession, path: String): IvfPqModel = {
     IndexStores.healRoot(spark, path)
-    // fingerprint-memoized (optimization r13) — [[IndexStores.readTinyStore]]
-    val row = IndexStores.readTinyStore(spark, s"$path/meta") match {
-      case Seq(r) => r
-      case rs => throw new IllegalStateException(
-        s"$path/meta: expected exactly one meta row, found ${rs.length} — " +
-          "not a VectorIndex layout (or a partial write)")
-    }
-    val centers = row.getSeq[scala.collection.Seq[Double]](5)
+    val r = IndexStores.readMeta(spark, s"$path/meta", MetaVersion)
+    val centers = r.getSeq[scala.collection.Seq[Double]](r.fieldIndex("centers"))
       .map(_.toArray).toArray
-    val codebooks = row.getSeq[scala.collection.Seq[scala.collection.Seq[Double]]](6)
-      .map(_.map(_.toArray).toArray)
-    IvfPqModel(centers, row.getInt(4), row.getInt(0), row.getInt(1),
-      row.getInt(2), row.getInt(3), codebooks.toSeq, loadCodes(spark, path))
+    val codebooks = r.getSeq[scala.collection.Seq[scala.collection.Seq[Double]]](
+      r.fieldIndex("codebooks")).map(_.map(_.toArray).toArray)
+    IvfPqModel(centers, r.getAs[Int]("nprobe"), r.getAs[Int]("dim"),
+      r.getAs[Int]("dsub"), r.getAs[Int]("m"), r.getAs[Int]("k_cent"),
+      codebooks.toSeq, loadCodes(spark, path))
   }
 
   /** Incrementally add vectors to a persisted index under its FROZEN

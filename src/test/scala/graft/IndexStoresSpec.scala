@@ -42,4 +42,32 @@ class IndexStoresSpec extends SparkSpec {
       s"budget drifted $drift bytes across 5 rewrites of a " +
         s"${dirBytes(a)}-byte store — cumulative charging")
   }
+
+  test("the gated tiny read never collects a list it did not check") {
+    import spark.implicits._
+    val dir = tmpDir("purge-race") + "/purged"
+    // staged write + swap, the purge list's own publish
+    def publishList(n: Int): Unit = {
+      val staging = IndexStores.stagingFor(spark, dir)
+      (1L to n.toLong).map((_, 1L)).toDF("key", "erased_gen")
+        .coalesce(1).write.parquet(staging)
+      IndexStores.swapInto(spark, dir, staging)
+    }
+    val (maxBytes, cap) = (4L << 20, 10L)
+    publishList(3)
+    val stale = IndexStores.tinyListing(spark, dir).get
+    publishList(50) // an over-cap list swaps in after the listing
+    val (raced, jobs) = jobsDuring(
+      IndexStores.readGated(spark, dir, stale, maxBytes, cap))
+    assert(raced.isEmpty,
+      "a stale listing must fall back, never collect the swapped-in list")
+    assert(jobs === 0, "no read job may run against a list nobody checked")
+    val fresh = IndexStores.tinyListing(spark, dir).get
+    assert(jobsDuring(IndexStores.readGated(spark, dir, fresh, maxBytes,
+      cap)) === ((None, 0)), "the over-cap list is refused by its footers")
+    publishList(4)
+    assert(IndexStores.readGated(spark, dir,
+      IndexStores.tinyListing(spark, dir).get, maxBytes, cap)
+      .map(_.size) === Some(4))
+  }
 }

@@ -27,7 +27,7 @@ class LedgerFoldSpec extends SparkSpec {
     assert(ranges.size === 3,
       "10k contiguous triggers must hold ONE in-memory range")
     IndexStores.publishSketchGeneration(spark, path,
-      Array[Byte](1, 2, 3), metaDf, ranges)
+      Array[Byte](1, 2, 3), metaDf, 1, ranges)
     // flat on disk: 1 range row for A's 10k run, 2 for B's gap
     val disk = spark.read.parquet(s"$path/batches")
     assert(disk.count() === 3L,
