@@ -129,6 +129,9 @@ object Bench {
         org.apache.spark.sql.DataFrame)] = names)
         : Seq[(String, Double, Boolean, Long)] = {
       spark.catalog.clearCache()
+      // the near-dup gates' latched checkpoints too: each holds its last
+      // call's blocks until its next call, a pass later
+      graft.core.Pins.releaseLatches(spark.sparkContext)
       System.gc()
       // absorb the post-GC/post-clearCache ramp on a FIXED untimed
       // primer: without it the alphabetically-first query bills the

@@ -2,6 +2,7 @@ package graft.core
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftshim.FooterSchema
 
 /** Plain-parquet "table directory" helpers: existence-tolerant reads and
   * staged atomic-swap overwrites.
@@ -97,14 +98,15 @@ object ParquetTable {
     if (root.startsWith("jdbc:")) None
     else readBucketMarker(spark, s"$root/$table.parquet")
 
-  /** `mergeSchema` because destinations evolve file-by-file (a
-    * schema-widening upsert rewrites only touched partitions) — the
-    * default single-footer schema would silently drop newer columns on
-    * the next rewrite.
+  /** The table at `path`, None when absent. Its schema is merged over
+    * every file's footer (`mergeSchema`) because destinations evolve
+    * file-by-file (a schema-widening upsert rewrites only touched
+    * partitions) — a single-footer schema would silently drop newer
+    * columns on the next rewrite. The footers are read on the driver
+    * ([[FooterSchema]]), not by an inference job.
     */
   def read(spark: SparkSession, path: String): Option[DataFrame] =
-    if (exists(spark, path))
-      Some(spark.read.option("mergeSchema", true).parquet(path))
+    if (exists(spark, path)) Some(FooterSchema.read(spark, Seq(path), mergeSchema = true))
     else None
 
   /** The swap protocol every staged overwrite shares (table overwrites

@@ -3,6 +3,7 @@ package graft.core
 import java.util.concurrent.ConcurrentHashMap
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
@@ -121,6 +122,17 @@ object Pins {
     out
   }
 
+  /** Free every pin latched under `sc`, whatever its key — a caller
+    * between independent rounds of calls (a benchmark pass) bounds the
+    * retained blocks to none instead of one call per key. A frame
+    * returned by a latched call before this is superseded as by a
+    * next call.
+    */
+  def releaseLatches(sc: SparkContext): Unit =
+    latches.keySet.asScala.filter(_._1 eq sc).foreach { k =>
+      Option(latches.remove(k)).foreach(_.values.foreach(_.unpersist(blocking = true)))
+    }
+
   /** Run `body` with no scope open on this thread. */
   private[graft] def unscoped[T](body: => T): T = {
     val outer = scopes.get
@@ -131,4 +143,8 @@ object Pins {
   /** Ids held by the latch under (`sc`, `key`). */
   private[graft] def latchedIds(sc: SparkContext, key: String): Set[Int] =
     Option(latches.get((sc, key))).map(_.keySet).getOrElse(Set.empty)
+
+  /** Ids held by every latch under `sc`. */
+  private[graft] def latchedIds(sc: SparkContext): Set[Int] =
+    latches.asScala.collect { case ((c, _), pins) if c eq sc => pins.keySet }.flatten.toSet
 }

@@ -5,6 +5,7 @@ import java.sql.Timestamp
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.FooterSchema
 import org.apache.spark.sql.types._
 
 import graft.core._
@@ -278,8 +279,8 @@ object QueueExtractor extends Extractor {
       .filter(_.getName.endsWith(".parquet"))
     if (snapped.isEmpty) return
     onSnapshot()
-    val snapRows = spark.read.option("mergeSchema", true)
-      .parquet(snapped.map(_.toString).toIndexedSeq: _*)
+    val snapRows = FooterSchema.read(spark, snapped.map(_.toString).toIndexedSeq,
+      mergeSchema = true)
     val schema = snapRows.schema
     // 2. stage the survivors of exactly the snapped files
     val staging = new Path(qp + s".__staging_${ParquetTable.stamp()}")
@@ -457,8 +458,10 @@ object QueueExtractor extends Extractor {
     view.write.mode("overwrite").parquet(dir)
     // the schema is the view's own (no inference job, and a fileless
     // empty snapshot reads as empty); the row count is the footers'
-    // (a driver-side metadata read, no count job)
-    val entries = spark.read.schema(view.schema).parquet(dir)
+    // (a driver-side metadata read, no count job). One partition: the
+    // snapshot is one file of ≤ batchSize rows, and a single partition
+    // satisfies the last-write-wins window's clustering with no exchange
+    val entries = spark.read.schema(view.schema).parquet(dir).coalesce(1)
     val cnt = IndexStores.parquetFooterRows(spark, dir).getOrElse(0L)
 
     val batch = changeBatch(spark, spec, entries)

@@ -1,8 +1,13 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ColumnBridge
+import org.apache.spark.sql.types.StructType
 
 import graft.core._
 
@@ -21,9 +26,16 @@ import graft.core._
   * REPLACE and REMOVE are folded into ONE rewrite pass per batch (one
   * anti-join, one atomic swap) — SURVEY §7.4 H4's "one MERGE-shaped
   * plan", so a REMOVE-then-reINSERT of the same PK in one batch resolves
-  * by method, not by file-write ordering. The touched-key set is ≤ batch
-  * size, so the anti-join broadcasts the keys and the target table
-  * streams through without a shuffle.
+  * by method, not by file-write ordering.
+  *
+  * One action per load ([[touchedBy]]): it materialises the cached batch
+  * and returns the INSERT count plus the method and key of every
+  * REPLACE/REMOVE row (≤ batch size; INSERT keys stay on the
+  * executors). Everything after it is planned from those driver-held
+  * keys without a job: the anti-join is a key predicate on the target
+  * scan ([[untouched]]) and the touched buckets are a projection over a
+  * local relation. The reference likewise ships one statement per
+  * method inside one transaction (`loader_default.go:9-72`).
   *
   * Destination layout (SURVEY §7.4 H1): upsert-bearing tables migrate
   * to a PK-hash-bucketed directory layout ONCE bucketing can actually
@@ -31,7 +43,7 @@ import graft.core._
   * n buckets touches n·(1−e^(−k/n)) of them, so the rewritten fraction
   * only drops below 1 when n ≫ k — a 32-bucket table under 1000-row
   * batches rewrites EVERYTHING every batch and pays the partitioned
-  * write overhead on top (measured 3× slower than flat in DrainBench).
+  * write overhead on top (measured 3× slower than flat on a 1k-batch drain).
   * Auto policy therefore: tables START FLAT; when a rewrite-bearing
   * load finds the flat table has grown to where
   * `bytes / TargetBytesPerBucket ≥ PruneWorthyFactor × batch-keys`, it
@@ -115,6 +127,61 @@ object MethodRoutedLoader {
       math.pow(2, math.ceil(math.log(wanted) / math.log(2)))).toInt)
   }
 
+  /** What a load's one action returns: the INSERT count and, for every
+    * REPLACE/REMOVE row, its method followed by `keyCols` (the PK, plus
+    * the `PartitionBy` column when the layout needs it).
+    */
+  private final case class Touched(inserts: Long, rows: Seq[Row], schema: StructType,
+                                   pkCols: Seq[String]) {
+    val removes: Long = rows.count(_.getString(0) == Method.Remove.name).toLong
+    def replaces: Long = rows.length - removes
+    def rewrites: Boolean = rows.nonEmpty
+    /** The touched rows' values of column `c`. */
+    def values(c: String): Seq[Any] = rows.map(_.getAs[Any](c))
+    /** One row of PK values per touched row, typed by [[keySchema]]. */
+    def keys: Seq[Row] = rows.map(r => Row.fromSeq(pkCols.map(r.getAs[Any])))
+    def keySchema: StructType = StructType(pkCols.map(schema(_)))
+    def counts: Map[String, Long] = Map(Method.Insert.name -> inserts,
+      Method.Replace.name -> replaces, Method.Remove.name -> removes)
+  }
+
+  /** The load's one action over the cached batch `df`: the INSERT count
+    * is an observed metric of the same scan that collects the method
+    * and `keyCols` of the other rows.
+    */
+  private def touchedBy(df: DataFrame, pkCols: Seq[String], keyCols: Seq[String]): Touched = {
+    val isInsert = col(Method.Col) === Method.Insert.name
+    val keyed = df.observe("load_inserts", count(when(isInsert, 1)).as("inserts"))
+      .filter(!isInsert)
+      .select((Method.Col +: keyCols).map(col): _*)
+    val rows = keyed.collect().toSeq
+    Touched(keyed.queryExecution.observedMetrics("load_inserts").getLong(0), rows,
+      keyed.schema, pkCols)
+  }
+
+  /** `target LEFT ANTI JOIN touched ON pkCols` as a row predicate over
+    * the target, with the join's NULL semantics: a target row with a
+    * NULL PK component is kept, and a touched key with a NULL component
+    * matches nothing. The key set is the driver-held [[Touched.keys]],
+    * typed as the batch's PK columns, so the predicate plans with no
+    * job (an `InSet` once it is past a handful of keys).
+    */
+  private def untouched(t: Touched): Column = {
+    val complete = t.keys.filterNot(r => (0 until r.length).exists(r.isNullAt)).distinct
+    if (complete.isEmpty) lit(true)
+    else {
+      val fields = t.keySchema.fields.toSeq
+      val (value, lits) =
+        if (fields.size == 1)
+          (col(fields.head.name), complete.map(r => Literal.create(r.get(0), fields.head.dataType)))
+        else
+          (struct(fields.map(f => col(f.name)): _*),
+            complete.map(r => Literal.create(r, t.keySchema)))
+      fields.map(f => col(f.name).isNull).reduce(_ || _) ||
+        !value.isin(lits.map(ColumnBridge.column): _*)
+    }
+  }
+
   /** @return rows loaded per method, for logging/metrics parity with the
     *         reference's per-batch loglines (`loader_default.go:61`).
     */
@@ -135,18 +202,12 @@ object MethodRoutedLoader {
     val inserts = df.filter(methodOf === Method.Insert.name).drop(Method.Col)
     val replaces = df.filter(methodOf =!= Method.Insert.name &&
       methodOf =!= Method.Remove.name).drop(Method.Col)
-    val removes = df.filter(methodOf === Method.Remove.name).drop(Method.Col)
 
-    // one global-agg job for all three bucket counts (a count per bucket
-    // would pay three scheduler round-trips per micro-batch — the
-    // dominant cost of small-batch drains)
-    val c = df.agg(
-      sum(when(methodOf === Method.Insert.name, 1L).otherwise(0L)),
-      sum(when(methodOf === Method.Remove.name, 1L).otherwise(0L)),
-      count(lit(1))).head()
-    val nIns = if (c.isNullAt(0)) 0L else c.getLong(0)
-    val nRem = if (c.isNullAt(1)) 0L else c.getLong(1)
-    val nRep = c.getLong(2) - nIns - nRem // unknown methods → REPLACE
+    // the PartitionBy column rides along when the batch carries it: the
+    // value-partitioned rewrite prunes to the values it touches
+    val t = touchedBy(df, pkCols, pkCols ++ params.partitionByCol
+      .filter(c => df.columns.contains(c) && !pkCols.contains(c)))
+    val (nIns, nRep) = (t.inserts, t.replaces)
 
     if (graft.sources.JdbcTable.isJdbc(destPath)) {
       // JDBC destination (reference parity: MySQL sink,
@@ -161,11 +222,9 @@ object MethodRoutedLoader {
       val insAligned =
         if (nIns > 0) graft.sources.JdbcTable.align(inserts, destPath, batch.table)
         else inserts
-      if (nRep > 0 || nRem > 0) {
-        val touched = replaces.select(pkCols.map(col): _*)
-          .union(removes.select(pkCols.map(col): _*))
-          .distinct().collect().map(_.toSeq)
-        graft.sources.JdbcTable.deleteKeys(destPath, batch.table, pkCols, touched)
+      if (t.rewrites) {
+        graft.sources.JdbcTable.deleteKeys(destPath, batch.table, pkCols,
+          t.keys.map(_.toSeq).distinct)
         if (nRep > 0)
           graft.sources.JdbcTable.append(repAligned, destPath, batch.table,
             params.insertBatchSize)
@@ -174,8 +233,7 @@ object MethodRoutedLoader {
         graft.sources.JdbcTable.append(insAligned, destPath, batch.table,
           params.insertBatchSize)
       df.unpersist()
-      return Map(Method.Insert.name -> nIns, Method.Replace.name -> nRep,
-        Method.Remove.name -> nRem)
+      return t.counts
     }
 
     // value-partitioned layout (PartitionBy) is an explicit, exclusive
@@ -183,11 +241,10 @@ object MethodRoutedLoader {
     // law), otherwise the column layout applies to every load
     if (params.partitionByCol.isDefined &&
         ParquetTable.readBucketMarker(spark, target).isEmpty) {
-      loadValuePartitioned(spark, target, pkCols, params,
-        params.partitionByCol.get, inserts, replaces, removes, nIns, nRep, nRem)
+      loadValuePartitioned(spark, target, params, params.partitionByCol.get,
+        inserts, replaces, t)
       df.unpersist()
-      return Map(Method.Insert.name -> nIns, Method.Replace.name -> nRep,
-        Method.Remove.name -> nRem)
+      return t.counts
     }
 
     var buckets = resolveBuckets(spark, target, params)
@@ -197,7 +254,7 @@ object MethodRoutedLoader {
     // filesystem content summary — no Spark job per batch; the
     // migration itself is one table rewrite, amortised over every
     // pruned rewrite after it.
-    if (buckets == 0 && (nRep > 0 || nRem > 0) &&
+    if (buckets == 0 && t.rewrites &&
         params.partitionBuckets == Params.AutoBuckets &&
         ParquetTable.exists(spark, target)) {
       val tp = new Path(target)
@@ -216,16 +273,12 @@ object MethodRoutedLoader {
       }
     }
     if (buckets > 0)
-      loadBucketed(spark, target, pkCols, params, buckets, inserts, replaces,
-        removes, nIns, nRep, nRem)
+      loadBucketed(spark, target, pkCols, params, buckets, inserts, replaces, t)
     else {
-      if (nRep > 0 || nRem > 0) {
-        val touchedKeys = replaces.select(pkCols.map(col): _*)
-          .union(removes.select(pkCols.map(col): _*))
-        val existing = ParquetTable.read(spark, target)
-        val kept = existing match {
-          case Some(t) => t.join(broadcast(touchedKeys), pkCols, "left_anti")
-          case None    => replaces.limit(0) // empty, replaces schema
+      if (t.rewrites) {
+        val kept = ParquetTable.read(spark, target) match {
+          case Some(existing) => existing.filter(untouched(t))
+          case None           => replaces.limit(0) // empty, replaces schema
         }
         ParquetTable.overwriteAtomic(spark, target,
           kept.unionByName(replaces, allowMissingColumns = true))
@@ -235,8 +288,7 @@ object MethodRoutedLoader {
     }
 
     df.unpersist()
-    Map(Method.Insert.name -> nIns, Method.Replace.name -> nRep,
-      Method.Remove.name -> nRem)
+    t.counts
   }
 
   /** Value-partitioned destination (`PartitionBy`): the lakehouse layout
@@ -260,11 +312,9 @@ object MethodRoutedLoader {
     * dir name derived with the exact escaping Spark's writer uses).
     */
   private def loadValuePartitioned(spark: SparkSession, target: String,
-                                   pkCols: Seq[String], params: Params,
-                                   pcol: String,
+                                   params: Params, pcol: String,
                                    inserts: DataFrame, replaces: DataFrame,
-                                   removes: DataFrame,
-                                   nIns: Long, nRep: Long, nRem: Long): Unit = {
+                                   t: Touched): Unit = {
     import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
     val p = new Path(target)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -276,12 +326,11 @@ object MethodRoutedLoader {
     // types whose toString matches Spark's partition encoding. Checked
     // on EVERY load (insert-only ones included): an unsupported type
     // must fail before it lays out a table no rewrite could service
-    (if (nIns > 0) inserts else if (nRep > 0) replaces else removes)
-      .schema.find(_.name == pcol).foreach { f =>
-        require(Seq("string", "bigint", "int", "smallint", "tinyint")
-          .contains(f.dataType.simpleString),
-          s"PartitionBy column `$pcol` must be string or integral, got ${f.dataType}")
-      }
+    inserts.schema.find(_.name == pcol).foreach { f =>
+      require(Seq("string", "bigint", "int", "smallint", "tinyint")
+        .contains(f.dataType.simpleString),
+        s"PartitionBy column `$pcol` must be string or integral, got ${f.dataType}")
+    }
 
     // layout guard: a destination seeded BEFORE PartitionBy was
     // configured holds root-level data files. Writing partition dirs
@@ -296,18 +345,15 @@ object MethodRoutedLoader {
         ParquetTable.overwriteAtomicPartitioned(spark, target, existing, pcol)
       }
 
-    if (nRep > 0 || nRem > 0) {
+    if (t.rewrites) {
       val existing = ParquetTable.read(spark, target)
-      val touchedVals = replaces.select(pcol).union(removes.select(pcol))
-        .distinct().collect().map(r => if (r.isNullAt(0)) null else r.get(0))
+      val touchedVals = t.values(pcol).distinct
       val prunable = !touchedVals.contains(null) && existing.isDefined
-      val touchedKeys = replaces.select(pkCols.map(col): _*)
-        .union(removes.select(pkCols.map(col): _*))
       val kept = existing match {
-        case Some(t) if prunable =>
-          t.filter(col(pcol).isin(touchedVals: _*)) // partition pruning
-            .join(broadcast(touchedKeys), pkCols, "left_anti")
-        case Some(t) => t.join(broadcast(touchedKeys), pkCols, "left_anti")
+        case Some(e) if prunable =>
+          e.filter(col(pcol).isin(touchedVals: _*)) // partition pruning
+            .filter(untouched(t))
+        case Some(e) => e.filter(untouched(t))
         case None => replaces.limit(0)
       }
       val out = kept.unionByName(replaces, allowMissingColumns = true)
@@ -330,7 +376,7 @@ object MethodRoutedLoader {
       } else
         ParquetTable.overwriteAtomicPartitioned(spark, target, out, pcol)
     }
-    if (nIns > 0) {
+    if (t.inserts > 0) {
       val w = inserts.write.mode("append").partitionBy(pcol)
       (if (params.insertBatchSize > 0)
         w.option("maxRecordsPerFile", params.insertBatchSize.toLong) else w)
@@ -355,24 +401,22 @@ object MethodRoutedLoader {
   private def loadBucketed(spark: SparkSession, target: String,
                            pkCols: Seq[String], params: Params, n: Int,
                            inserts: DataFrame, replaces: DataFrame,
-                           removes: DataFrame,
-                           nIns: Long, nRep: Long, nRem: Long): Unit = {
+                           t: Touched): Unit = {
     def bucketed(d: DataFrame): DataFrame =
       d.withColumn(BucketCol, pmod(xxhash64(pkCols.map(col): _*), lit(n.toLong)))
 
     val p = new Path(target)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-    if (nRep > 0 || nRem > 0) {
-      val touched = bucketed(replaces).select(BucketCol)
-        .union(bucketed(removes).select(BucketCol))
-        .distinct().collect().map(_.getLong(0)).toSeq
-      val touchedKeys = replaces.select(pkCols.map(col): _*)
-        .union(removes.select(pkCols.map(col): _*))
+    if (t.rewrites) {
+      // the batch's own hash over the driver-held keys: a projection of
+      // a local relation, evaluated on the driver with no job
+      val touched = bucketed(spark.createDataFrame(t.keys.asJava, t.keySchema))
+        .select(BucketCol).collect().map(_.getLong(0)).distinct.toSeq
       val kept = ParquetTable.read(spark, target) match {
-        case Some(t) =>
-          t.filter(col(BucketCol).isin(touched: _*)) // partition pruning
-            .join(broadcast(touchedKeys), pkCols, "left_anti")
+        case Some(e) =>
+          e.filter(col(BucketCol).isin(touched: _*)) // partition pruning
+            .filter(untouched(t))
         case None => bucketed(replaces).limit(0)
       }
       val out = kept.unionByName(bucketed(replaces), allowMissingColumns = true)
@@ -395,7 +439,7 @@ object MethodRoutedLoader {
       }
       fs.delete(staging, true)
     }
-    if (nIns > 0) {
+    if (t.inserts > 0) {
       val w = bucketed(inserts).write.mode("append").partitionBy(BucketCol)
       (if (params.insertBatchSize > 0)
         w.option("maxRecordsPerFile", params.insertBatchSize.toLong) else w)

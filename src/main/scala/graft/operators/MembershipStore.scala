@@ -116,6 +116,7 @@ object MembershipStore {
     */
   def seen(df: DataFrame, key: Column, path: String): DataFrame = {
     IndexStores.healRoot(df.sparkSession, path)
+    metaOf(df.sparkSession, path) // rejects a store written at a newer meta_version
     df.withColumn("seen",
       graft.functions.BloomProbe.contains(
         sketchBytes(df.sparkSession, path), key.cast("string")))

@@ -211,6 +211,7 @@ object ReservoirStore {
   /** The current sample — ≤ capacity payload rows, as ingested. */
   def serve(spark: SparkSession, path: String): DataFrame = {
     IndexStores.healRoot(spark, path)
+    metaOf(spark, path) // rejects a store written at a newer meta_version
     IndexStores.readStore(spark, s"$path/sample")
   }
 

@@ -72,6 +72,8 @@ object TokenizerStore {
     */
   def load(spark: SparkSession, path: String): Seq[(String, String)] = {
     IndexStores.healRoot(spark, path)
+    // rejects a store written at a newer meta_version
+    IndexStores.readMeta(spark, s"$path/meta", MetaVersion)
     // fingerprint-memoized (optimization r13), ordered driver-side —
     // the un-memoized orderBy+collect was a full shuffle job per load
     // of a model-sized constant ([[IndexStores.readTinyStore]])

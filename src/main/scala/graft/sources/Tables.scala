@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.FooterSchema
 
 /** Table catalog over a directory of parquet files (one per table),
   * the layout the test harness provides (`TESTDATA.md`).
@@ -11,9 +12,11 @@ import org.apache.spark.sql.functions._
   * dynamic. We keep that property: everything below is `DataFrame`-typed
   * and column names come from the parquet footer, not compile-time types.
   *
-  * Scale note: a plain `spark.read.parquet(dir)` is already the right call
-  * at 100 TB — Catalyst pushes filters into the scan (row-group pruning)
-  * and prunes columns; nothing here materialises data.
+  * Scale note: a parquet table is one plain file-source read at 100 TB —
+  * Catalyst pushes filters into the scan (row-group pruning) and prunes
+  * columns; its schema comes from the file footers on the driver
+  * ([[FooterSchema]]); nothing here materialises
+  * data.
   */
 object Tables {
 
@@ -59,14 +62,17 @@ object Tables {
       val p = new org.apache.hadoop.fs.Path(s"$sfDir/$table.$suffix")
       p.getFileSystem(conf).exists(p)
     }
-    if (exists("parquet")) spark.read.parquet(s"$sfDir/$table.parquet")
+    // Spark's default schema choice (one file unless the session merges),
+    // taken from the footers on the driver instead of by an inference job
+    def parquet = FooterSchema.read(spark, Seq(s"$sfDir/$table.parquet"),
+      mergeSchema = spark.sessionState.conf.isParquetSchemaMergingEnabled)
+    if (exists("parquet")) parquet
     else if (exists("orc")) spark.read.orc(s"$sfDir/$table.orc")
     else if (exists("csv"))
       spark.read.option("header", true).option("inferSchema", true)
         .csv(s"$sfDir/$table.csv")
     else if (exists("json")) spark.read.json(s"$sfDir/$table.json")
-    else // surface the canonical path in the error, as a plain read would
-      spark.read.parquet(s"$sfDir/$table.parquet")
+    else parquet // surfaces the canonical path in Spark's not-found error
   }
 
   def lineitem(spark: SparkSession, dir: String): DataFrame  = readTable(spark, dir, "lineitem")

@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.Pins
 import graft.queries.ExtQueries
 
 /** The near-dup gates' checkpoint latch (optimization r14, VERDICT r13
@@ -25,6 +26,18 @@ class NearDupGateLatchSpec extends SparkSpec {
     // its own cached exchange outputs — also safe: same rows.)
     val e = intercept[Exception] { f1.collect() }
     assert(Option(e.getMessage).nonEmpty)
+  }
+
+  test("releaseLatches frees every gate's latched pins at once") {
+    val sc = spark.sparkContext
+    val r1 = ExtQueries.multimodalNearDup(spark, sf).collect().toSeq
+    ExtQueries.multimodalAudioNearDup(spark, sf).collect()
+    val held = Pins.latchedIds(sc)
+    assert(held.nonEmpty)
+    Pins.releaseLatches(sc)
+    assert(Pins.latchedIds(sc).isEmpty)
+    assert((sc.getPersistentRDDs.keySet.toSet & held).isEmpty, "released pins still persisted")
+    assert(ExtQueries.multimodalNearDup(spark, sf).collect().toSeq === r1)
   }
 
   test("a failed build releases its own pins immediately") {

@@ -97,7 +97,17 @@ class StoreMetaSpec extends SparkSpec {
         Seq((9L, Seq(1.0, 0.0))).toDF("qid", "qv")).collect()),
     Family("vector-ivfpq", VectorIndex.MetaVersion,
       p => VectorIndex.writeIvfPq(sources.Tables.embeddings(spark, sf), p),
-      VectorIndex.loadIvfPq(spark, _)))
+      VectorIndex.loadIvfPq(spark, _)),
+    // the serving reads of three families above, each its own entry
+    Family("membership-seen", MembershipStore.MetaVersion,
+      MembershipStore.write(words, col("w"), _, 1000L),
+      p => MembershipStore.seen(words, col("w"), p).collect()),
+    Family("reservoir-serve", ReservoirStore.MetaVersion,
+      ReservoirStore.write(docs, _, "doc_id", 2, "s"),
+      p => ReservoirStore.serve(spark, p).collect()),
+    Family("tokenizer-load", TokenizerStore.MetaVersion,
+      TokenizerStore.write(docs, _, numMerges = 5),
+      TokenizerStore.load(spark, _)))
 
   /** Each family built once; every test works on a fresh copy. */
   private lazy val built: Map[String, Path] = families.map { f =>
