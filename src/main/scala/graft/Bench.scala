@@ -1,5 +1,7 @@
 package graft
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every SparkEntry query against
@@ -9,6 +11,10 @@ import org.apache.spark.sql.SparkSession
   * columns and time only the row count).
   */
 object Bench {
+  /** One timed serve of a gate, with the trace of its Spark work. */
+  final case class Run(name: String, secs: Double, ok: Boolean, heapMb: Long,
+                       trace: graft.core.Trace.Counts)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
@@ -21,6 +27,7 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     GraftSession.configure(spark)
+    val sc = spark.sparkContext
     // per-query peak-heap attribution (VERDICT r8 #6): each pool's
     // peak counter is RESET before a query and read after, so the
     // 23 GB whole-run number decomposes into per-gate suspects before
@@ -126,8 +133,7 @@ object Bench {
     // succeeds in 5 s ran for 5 s. `sel` defaults to the full suite;
     // the per-gate floor redraws pass just the stragglers.
     def runPass(sel: Seq[(String, (SparkSession, String) =>
-        org.apache.spark.sql.DataFrame)] = names)
-        : Seq[(String, Double, Boolean, Long)] = {
+        org.apache.spark.sql.DataFrame)] = names): Seq[Run] = {
       spark.catalog.clearCache()
       // the near-dup gates' latched checkpoints too: each holds its last
       // call's blocks until its next call, a pass later
@@ -147,16 +153,20 @@ object Bench {
       finally runPeakMb = math.max(runPeakMb, heapPeakMb())
       sel.map { case (name, fn) =>
         resetHeapPeaks()
-        val t0 = System.nanoTime()
-        val ok =
+        // the serve is one trace span: its wall time and its Spark work
+        // come from the same run, read after the serve returned
+        val serve = new graft.core.Trace.Group(sc)
+        val ok = serve(name) {
           try { BenchUtil.sink(fn(spark, sfDir)); true }
           catch { case e: Throwable =>
             System.err.println(s"[bench] $name failed: ${e.getMessage}")
             false
           }
+        }
         val w = heapPeakMb()
         runPeakMb = math.max(runPeakMb, w)
-        (name, (System.nanoTime() - t0) / 1e9, ok, w)
+        val (_, secs, trace) = serve.counts().head
+        Run(name, secs, ok, w, trace)
       }
     }
     // Contention tripwire (VERDICT r8 #2/#3): on a shared box, two
@@ -191,9 +201,9 @@ object Bench {
         s"at $floorPath for sf=$sfDir — the absolute contention guard " +
         "is DISARMED for this draw (missing file, unparseable JSON, " +
         "or a floor recorded against a different sf dir)")
-    val passBuf = scala.collection.mutable.ArrayBuffer.empty[Seq[(String, Double, Boolean, Long)]]
+    val passBuf = scala.collection.mutable.ArrayBuffer.empty[Seq[Run]]
     (1 to passes).foreach(_ => passBuf += runPass())
-    def totals = passBuf.map(_.map(_._2).sum)
+    def totals = passBuf.map(_.map(_.secs).sum)
     // the stop condition is the BEST AGREEING PAIR, not global
     // max/min: one contaminated 900 s pass must not force the full
     // extra budget after two fresh passes already agree — sorted
@@ -211,12 +221,17 @@ object Bench {
     // passes over just the gates that sat above their own floor) feed
     // the same min — ONE definition of the reported number.
     val redrawBuf = scala.collection.mutable.ArrayBuffer
-      .empty[Seq[(String, Double, Boolean, Long)]]
-    def measuredMins: Map[String, Double] = names.map(_._1).map { n =>
-      val runs = (passBuf ++ redrawBuf).flatMap(_.find(_._1 == n))
-      val good = runs.filter(_._3)
-      n -> (if (good.nonEmpty) good.map(_._2).min else runs.map(_._2).max)
-    }.toMap
+      .empty[Seq[Run]]
+    def runsOf(n: String): Seq[Run] =
+      (passBuf ++ redrawBuf).flatMap(_.find(_.name == n)).toSeq
+    // the run a gate's number comes from: its fastest success, else its
+    // slowest failure
+    def reported(n: String): Run = {
+      val good = runsOf(n).filter(_.ok)
+      if (good.nonEmpty) good.minBy(_.secs) else runsOf(n).maxBy(_.secs)
+    }
+    def measuredMins: Map[String, Double] =
+      names.map(_._1).map(n => n -> reported(n).secs).toMap
     def floorState = BenchUtil.floorVerdict(floorQueries, measuredMins)
     var extras = 0
     while (extras < extraCap && passBuf.size >= 2 &&
@@ -272,7 +287,6 @@ object Bench {
         "artifact is labeled, do not adjudicate per-gate numbers " +
         "from it")
     }
-    val allPasses: Seq[Seq[(String, Double, Boolean, Long)]] = passBuf.toSeq
     val contendedPass = BenchUtil.contendedPass(totals.toSeq)
     if (contendedPass)
       System.err.println(f"[bench] WARNING: contended_pass — pass 2 " +
@@ -282,20 +296,16 @@ object Bench {
     // the reported min does (measuredMins), and an artifact saying
     // "failed":["g"] beside "g":0.6 from a succeeding redraw would be
     // unreadable — a gate is failed only if EVERY run of it failed
-    def runsOf(n: String): Seq[(String, Double, Boolean, Long)] =
-      (passBuf ++ redrawBuf).flatMap(_.find(_._1 == n)).toSeq
-    val failed = names.map(_._1).filter(n => runsOf(n).forall(!_._3))
+    val failed = names.map(_._1).filter(n => runsOf(n).forall(!_.ok))
     // ONE definition of the reported per-query number: the same
     // measuredMins the floor tripwire adjudicated — two copies of the
     // min-composition drifting apart would let the floor judge a
     // different number than the artifact reports
     val minsByName = measuredMins
     val results = names.map(_._1).map(n => n -> minsByName(n))
-    val qs = results.map { case (k, v) => "\"" + k + f"\":$v%.3f" }
-      .mkString("{", ",", "}")
     val total = results.map(_._2).sum
-    val passTotals = allPasses.map(p => f"${p.map(_._2).sum}%.3f").mkString("[", ",", "]")
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    // the artifact's seconds and ratios are rounded to the millisecond
+    def r3(x: Double) = java.math.BigDecimal.valueOf(x).setScale(3, java.math.RoundingMode.HALF_UP)
     // per-pass per-query detail: a contended draw is diagnosable from
     // the artifact alone (the r4 driver file carried 5×-inflated cheap
     // queries that only a clean re-run could adjudicate — with every
@@ -303,11 +313,7 @@ object Bench {
     // in the JSON itself). A FAILED run is recorded as the NEGATED
     // wall time, so a fast failure (threw at 0.3 s) can never be
     // mistaken for a fast clean draw when adjudicating from the file.
-    val perPass = allPasses.map(p =>
-      p.map { case (n, t, ok, _) =>
-        "\"" + n + f"""\":${if (ok) t else -t}%.3f"""
-      }.mkString("{", ",", "}"))
-      .mkString("[", ",", "]")
+    def times(p: Seq[Run]) = ListMap(p.map(r => r.name -> r3(if (r.ok) r.secs else -r.secs)): _*)
     // peak JVM heap, now ATTRIBUTED: per-query max-over-passes of the
     // reset-read pool-peak sum (upper bound on the simultaneous peak —
     // pools peak at different instants — never an understatement:
@@ -315,12 +321,7 @@ object Bench {
     // alarms). The run-wide headline is the max over gates; a
     // collect()/broadcast that fits at sf0.1 and OOMs at 10× now has
     // a NAME before a 100× run finds it.
-    val heapPerQuery = names.map(_._1).map { name =>
-      name -> runsOf(name).map(_._4).max
-    }
-    val heapJson = heapPerQuery.map { case (k, v) => "\"" + k + s"""\":$v""" }
-      .mkString("{", ",", "}")
-    val peakHeapMb = runPeakMb
+    val heapPerQuery = names.map(_._1).map(n => n -> runsOf(n).map(_.heapMb).max)
     // pass-total dispersion = the BEST AGREEING PAIR's ratio — the
     // SAME bestPairRatio the tripwire stopped on (re-reading it here,
     // not re-deriving it, keeps the reported number and the loop's
@@ -335,38 +336,45 @@ object Bench {
     // verdict. "floor_ratio": null = no applicable floor (missing
     // file, sf mismatch, or zero shared gates) — distinct from a
     // passing 1.0.
-    val floorJson = finalFloor match {
-      case Some((r, fSub, _, n)) =>
-        f""""floor_ratio":$r%.3f,"floor_subtotal":$fSub%.3f,"floor_gates":$n,"contaminated":$contaminated"""
-      case None =>
-        s""""floor_ratio":null,"contaminated":false"""
+    val floorFields: ListMap[String, Any] = finalFloor match {
+      case Some((r, fSub, _, n)) => ListMap("floor_ratio" -> r3(r),
+        "floor_subtotal" -> r3(fSub), "floor_gates" -> n, "contaminated" -> contaminated)
+      case None => ListMap("floor_ratio" -> null, "contaminated" -> false)
     }
     // per-gate adjudication detail: each shared gate's reported-min /
     // committed-floor ratio, the gates still above 2x after the
     // bounded redraws, and every redraw's raw times — a judge reads
     // the verdict from the artifact instead of re-running gates
-    val gateRatioJson = {
-      val mins = minsByName
-      floorQueries.keySet.intersect(mins.keySet).toSeq.sorted
-        .filter(n => floorQueries(n) > 0.0)
-        .map(n => "\"" + n + f"""\":${mins(n) / floorQueries(n)}%.3f""")
-        .mkString("{", ",", "}")
+    val gateRatios = floorQueries.keySet.intersect(minsByName.keySet).toSeq.sorted
+      .filter(n => floorQueries(n) > 0.0)
+      .map(n => n -> r3(minsByName(n) / floorQueries(n)))
+    // per-gate trace of the run each reported time comes from; par_eff
+    // = task seconds / (wall seconds x cores)
+    val trace = names.map(_._1).map { n =>
+      val r = reported(n)
+      val c = r.trace
+      n -> ListMap("jobs" -> c.jobs, "stages" -> c.stages, "task_s" -> r3(c.taskS),
+        "shuffle_bytes" -> c.shuffleBytes, "result_bytes" -> c.resultBytes,
+        "par_eff" -> r3(if (r.secs > 0) c.taskS / (r.secs * cpus.toInt) else 0.0))
     }
-    val stragglerJson = finalStragglers.map("\"" + _ + "\"")
-      .mkString("[", ",", "]")
-    val redrawJson = redrawBuf.map(p =>
-      p.map { case (n, t, ok, _) =>
-        "\"" + n + f"""\":${if (ok) t else -t}%.3f"""
-      }.mkString("{", ",", "}"))
-      .mkString("[", ",", "]")
-    val line =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir","passes":$passTotals,"per_pass":$perPass,"failed":$failedJson,"peak_heap_mb":$peakHeapMb,"heap_mb":$heapJson,"dispersion":$dispersion%.3f,$floorJson,"gate_floor_ratio":$gateRatioJson,"floor_stragglers":$stragglerJson,"gate_redraws":$redrawJson,"contended_pass":$contendedPass}"""
+    val passTotals = passBuf.toSeq.map(p => r3(p.map(_.secs).sum))
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+      .registerModule(com.fasterxml.jackson.module.scala.DefaultScalaModule)
+    val line = json.writeValueAsString(ListMap("metric" -> "total", "value" -> r3(total),
+      "unit" -> "sec", "queries" -> ListMap(results.map { case (k, v) => k -> r3(v) }: _*),
+      "sf" -> sfDir, "passes" -> passTotals, "per_pass" -> passBuf.toSeq.map(times),
+      "failed" -> failed, "peak_heap_mb" -> runPeakMb, "heap_mb" -> ListMap(heapPerQuery: _*),
+      "dispersion" -> r3(dispersion)) ++ floorFields ++ ListMap(
+      "gate_floor_ratio" -> ListMap(gateRatios: _*), "floor_stragglers" -> finalStragglers,
+      "gate_redraws" -> redrawBuf.toSeq.map(times), "trace" -> ListMap(trace: _*),
+      "contended_pass" -> contendedPass))
     // Short headline FIRST, then the full per-query line LAST: a reader
     // of the final stdout line gets the per-query map, and one that
     // truncates the long line mid-object still finds the headline
     // parsing on its own just above it.
-    val headline =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","passes":$passTotals,"sf":"$sfDir",$floorJson,"contended_pass":$contendedPass}"""
+    val headline = json.writeValueAsString(ListMap("metric" -> "total", "value" -> r3(total),
+      "unit" -> "sec", "passes" -> passTotals, "sf" -> sfDir) ++ floorFields ++
+      ListMap("contended_pass" -> contendedPass))
     // the lines must be machine-readable: print to stdout (forked run
     // output bypasses sbt's logger, see build.sbt outputStrategy) AND
     // drop the full line in a file so log-scraping never has to parse

@@ -48,9 +48,10 @@ object GraftSession {
     // policy: static `preferSortMergeJoin=false` (planner picks SHJ
     // from Catalyst size ESTIMATES) + the AQE runtime threshold.
     // Optimization r14 (VERDICT r13 #2) re-adjudicated with an
-    // INTERLEAVED per-gate A/C/B probe (PlanProbe shjab — alternating
-    // single serves in one process, so box drift hits every variant
-    // equally, the confound that poisoned r13's whole-suite draws):
+    // INTERLEAVED per-gate A/C/B probe (alternating single serves in
+    // one process, so box drift hits every variant equally, the
+    // confound that poisoned r13's whole-suite draws; its output is
+    // committed in plans/r14/shjab_probe.txt):
     // on every gate r13 credited to the confs (sketch_kmv_indexed/
     // overlap, dedup_cosine_pairs, dedup_incremental_indexed,
     // text_quality_classifier, scd2_pit_join) the AQE-only variant is
@@ -69,7 +70,7 @@ object GraftSession {
     graft.functions.GraftFunctions.register(spark)
     spark.udf.register("geomean",
       org.apache.spark.sql.functions.udaf(graft.functions.GeoMean))
-    graft.core.Metrics.attach(spark)
+    graft.core.Trace.attach(spark.sparkContext)
   }
 
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {

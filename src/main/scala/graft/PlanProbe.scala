@@ -26,8 +26,7 @@ object PlanProbe {
     // exit 0 (the PlanDump posture) — before/after plan evidence that
     // is silently absent reads as "nothing to dump"
     val known = Set("triangles", "triangles_after", "kcore_after",
-      "mm", "cppart", "triwedges", "labelprop", "kcore", "gatejobs",
-      "shjab")
+      "mm", "cppart", "triwedges", "labelprop", "kcore")
     require((which -- known).isEmpty,
       s"PlanProbe knows no probe(s): ${(which -- known).toSeq.sorted
         .mkString(", ")} — known: ${known.toSeq.sorted.mkString(", ")}")
@@ -206,94 +205,6 @@ object PlanProbe {
       BenchUtil.sink(coPairs.selectExpr("least(pa,pb) u", "greatest(pa,pb) v")
         .where("u <> v").distinct())
       println(f"[planprobe] canon distinct=${(System.nanoTime() - e0) / 1e9}%.3f s")
-    }
-    if (which("gatejobs")) {
-      // Spark-job count per gate serve (optimization r14, VERDICT r13
-      // #3/#6): every job submitted during construction is a
-      // sequential driver-blocking barrier (eager checkpoints, bounded
-      // collects) — on an object store each is a LIST+GET round trip
-      // the serve cannot overlap. Counts jobs from gate-fn entry
-      // through one full materialisation (collect).
-      val gates = sys.env.getOrElse("SPARK_GRAFT_PROBE_GATES",
-        "dedup_incremental_verified,dedup_incremental_verified_indexed," +
-          "scd2_purge_history,scd2_store_history")
-        .split(",").map(_.trim).filter(_.nonEmpty)
-      // optional conf overrides for in-process A/B (e.g. forcing the
-      // purge list off the driver via spark.graft.history.purgeLocalCap=0)
-      sys.env.get("SPARK_GRAFT_PROBE_CONF").foreach(_.split(",")
-        .map(_.trim).filter(_.contains("=")).foreach { kv =>
-          val Array(k, v) = kv.split("=", 2)
-          spark.conf.set(k, v)
-          println(s"[planprobe] conf $k=$v")
-        })
-      val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          counter.incrementAndGet()
-      }
-      spark.sparkContext.addSparkListener(listener)
-      gates.foreach { g =>
-        // warm serve first: session-cached index/model builds and their
-        // one-time jobs land outside the measured serve
-        SparkEntry.queries(g)(spark, sfDir).collect()
-        Thread.sleep(500) // let queued listener events drain
-        counter.set(0)
-        // the drain sleep stays OUTSIDE the timed block (review r14:
-        // a constant +0.5 s would overstate every sub-second serve)
-        val (_, t: Double) = time {
-          SparkEntry.queries(g)(spark, sfDir).collect()
-        }
-        Thread.sleep(500)
-        val n = counter.get()
-        println(f"[planprobe] gatejobs $g jobs=$n%d wall=$t%.3f s")
-      }
-      spark.sparkContext.removeSparkListener(listener)
-    }
-    if (which("shjab")) {
-      // interleaved A/B/A of the session join-strategy confs (VERDICT
-      // r13 #2): preferSortMergeJoin=false + AQE SHJ threshold ON
-      // (A, the session default) vs planner default SMJ (B), three
-      // serves each per phase, min per phase — interleaving in ONE
-      // process removes the box-drift confound that poisoned r13's
-      // whole-suite comparisons.
-      val gates = sys.env.getOrElse("SPARK_GRAFT_PROBE_GATES",
-        "text_quality_classifier,dedup_cosine_pairs")
-        .split(",").map(_.trim).filter(_.nonEmpty)
-      // A = both halves on (r13 session default: static
-      // preferSortMergeJoin=false + AQE SHJ threshold 64m);
-      // C = AQE half only (the spill-safe leg: static planner keeps
-      // SMJ, AQE converts from MEASURED map output);
-      // B = neither (planner defaults)
-      val variants = Seq(
-        "A" -> ("false", "64m"), "C" -> ("true", "64m"),
-        "B" -> ("true", "0"))
-      def setConfs(v: String): Unit = {
-        val (smj, thr) = variants.toMap.apply(v)
-        spark.conf.set("spark.sql.join.preferSortMergeJoin", smj)
-        spark.conf.set(
-          "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", thr)
-      }
-      def serve(g: String): Double = {
-        val (_, t) = time(BenchUtil.sink(SparkEntry.queries(g)(spark, sfDir)))
-        t
-      }
-      gates.foreach { g =>
-        serve(g); serve(g) // warm (session caches, codegen)
-        // ALTERNATE single serves A,C,B,A,C,B,… so a monotonic
-        // warm-up / drift trend hits every variant equally
-        val draws = (0 until 15).map { i =>
-          val v = variants(i % 3)._1
-          setConfs(v); (v, serve(g))
-        }
-        setConfs("C") // restore the session policy (AQE half only, r14)
-        def fmt(v: String): String = {
-          val ts = draws.filter(_._1 == v).map(_._2)
-          f"${ts.min}%.3f(${ts.map(t => f"$t%.2f").mkString("/")})"
-        }
-        println(s"[planprobe] shjab $g " +
-          variants.map(v => s"${v._1}=${fmt(v._1)}").mkString(" "))
-      }
     }
     if (which("labelprop")) {
       val seeds = graft.sources.Tables.part(spark, sfDir)

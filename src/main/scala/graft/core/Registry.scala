@@ -22,8 +22,15 @@ object Registry {
     DedupTransformer.name -> DedupTransformer,
     QualityFilterTransformer.name -> QualityFilterTransformer)
 
+  private val added = new java.util.concurrent.ConcurrentHashMap[String, Extractor]()
+
+  /** Add an extractor under its name, as the reference's callers add to
+    * its exported `ExtractorMap`; built-in names resolve first.
+    */
+  def register(e: Extractor): Unit = added.put(e.name, e)
+
   def extractor(name: String): Extractor =
-    extractors.getOrElse(name,
+    extractors.get(name).orElse(Option(added.get(name))).getOrElse(
       throw new IllegalArgumentException(
         s"Could not resolve extractor '$name' (have: ${extractors.keys.mkString(", ")})"))
 

@@ -2,6 +2,8 @@ package graft.core
 
 import java.util.concurrent.atomic.AtomicReference
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.SparkSession
 
 import graft.operators._
@@ -27,10 +29,15 @@ object RunState {
 final case class ErrorContext(stage: String, table: String)
 object ErrorContext {
   val Init = "init"; val Extract = "extract"; val Transform = "transform"
-  val Load = "load"; val Commit = "commit"; val Compact = "compact"
+  val Load = "load"; val Commit = "commit"; val Cleanup = "cleanup"; val Compact = "compact"
 }
 
-private[core] final class StageFailure(val stage: String, cause: Throwable)
+/** A stage's failure. `committed` is the status a batch committed before
+  * its cleanup failed: the position moved, so the caller must not keep
+  * the old one.
+  */
+private[core] final class StageFailure(val stage: String, cause: Throwable,
+                                       val committed: Option[TrackingStatus] = None)
   extends RuntimeException(s"[$stage] ${cause.getMessage}", cause)
 
 /** One bound per-table pipeline: extract → transform → load → commit
@@ -53,40 +60,77 @@ final class Pipeline(spark: SparkSession, val spec: PipelineSpec,
     tracking.getOrSeed(spec.sourceDatabase, spec.sourceTable, spec.sourceKey)
   }
 
-  private def stage[T](name: String)(body: => T): T =
-    try body catch {
-      case e: StageFailure => throw e
-      case e: Throwable    => throw new StageFailure(name, e)
+  /** Runs one named stage in its own [[Trace]] span of `trace`; a
+    * failure is wrapped with the stage name, at most once.
+    */
+  private def stage[T](name: String, trace: Trace.Group)(body: => T): T =
+    trace(name) {
+      try body catch {
+        case e: StageFailure => throw e
+        case e: Throwable    => throw new StageFailure(name, e)
+      }
     }
 
-  /** One micro-batch. @return (rows loaded by method, moreData). */
+  /** One micro-batch. @return (rows loaded by method, moreData).
+    *
+    * Cleanup ALWAYS runs, as its own stage — a leaked extractor cache
+    * both holds memory and poisons the next identical plan with stale
+    * results (see ExtractResult.cleanup). A cleanup failure never hides
+    * the batch's own failure (it is added as suppressed); after a
+    * successful commit it is raised with the committed status.
+    *
+    * Each batch logs one JSON event line at INFO (fields in USAGE.md),
+    * finished on the listener bus: no Spark job, no wait.
+    */
   def runBatch(status: TrackingStatus): (Map[String, Long], Boolean, TrackingStatus) = {
-    val res = stage(ErrorContext.Extract) { extractor.extract(spark, spec, status) }
+    val trace = new Trace.Group(spark.sparkContext)
+    var (counts, position, failed) = (Map.empty[String, Long], status, Option.empty[String])
     try {
-      val batch = TableBatch(spec.destinationDatabase, spec.destinationTable, res.df)
-      val outBatches = stage(ErrorContext.Transform) {
-        transformer(batch, spec.params,
-          graft.operators.TransformContext(spark, spec.destinationPath, spec.pkColumns))
-      }
-      val counts = stage(ErrorContext.Load) {
-        outBatches.map { b =>
-          MethodRoutedLoader.load(spark, b, spec.destinationPath, spec.pkColumns, spec.params)
-        }.foldLeft(Map.empty[String, Long].withDefaultValue(0L)) { (acc, m) =>
-          m.foldLeft(acc) { case (a, (k, v)) => a.updated(k, a(k) + v) }
+      val res = stage(ErrorContext.Extract, trace) { extractor.extract(spark, spec, status) }
+      var primary: Throwable = null
+      try {
+        val batch = TableBatch(spec.destinationDatabase, spec.destinationTable, res.df)
+        val outBatches = stage(ErrorContext.Transform, trace) {
+          transformer(batch, spec.params,
+            graft.operators.TransformContext(spark, spec.destinationPath, spec.pkColumns))
         }
+        counts = stage(ErrorContext.Load, trace) {
+          outBatches.flatMap { b =>
+            MethodRoutedLoader.load(spark, b, spec.destinationPath, spec.pkColumns, spec.params)
+          }.groupMapReduce(_._1)(_._2)(_ + _).withDefaultValue(0L)
+        }
+        // remember what was actually written (transformers rename/fan out)
+        // so drain-boundary compaction follows the loader, not the spec
+        outBatches.foreach(b => touchedTables += b.table)
+        // commit AFTER load: tracking position, then extractor side-effects
+        stage(ErrorContext.Commit, trace) {
+          tracking.put(res.newStatus)
+          res.commit()
+        }
+        position = res.newStatus
+        (counts, res.moreData, res.newStatus)
+      } catch { case e: Throwable => primary = e; throw e }
+      finally try stage(ErrorContext.Cleanup, trace)(res.cleanup()) catch {
+        case c: StageFailure if primary != null => primary.addSuppressed(c)
+        case c: StageFailure => throw new StageFailure(c.stage, c.getCause, Some(res.newStatus))
       }
-      // remember what was actually written (transformers rename/fan out)
-      // so drain-boundary compaction follows the loader, not the spec
-      outBatches.foreach(b => touchedTables += b.table)
-      // commit AFTER load: tracking position, then extractor side-effects
-      stage(ErrorContext.Commit) {
-        tracking.put(res.newStatus)
-        res.commit()
-      }
-      (counts, res.moreData, res.newStatus)
-    } finally res.cleanup() // ALWAYS release extractor caches — a leaked
-    // entry both holds memory and poisons the next identical plan with
-    // stale results (see ExtractResult.cleanup)
+    } catch { case e: StageFailure => failed = Some(e.stage); throw e }
+    finally trace.report { stages =>
+      // the event line: per-stage wall seconds, jobs and input rows
+      // (stages that did not run are absent), rows by method, the
+      // position before and after (equal unless committed), the
+      // failing stage or null
+      def pos(t: TrackingStatus): Any =
+        t.timestampPosition.map(_.toString).getOrElse(t.sequentialPosition)
+      if (log.isInfoEnabled) log.info(Pipeline.json.writeValueAsString(ListMap(
+        "event" -> "batch", "pipeline" -> s"${spec.sourceDatabase}.${spec.sourceTable}",
+        "stages" -> ListMap(stages.map { case (n, s, c) =>
+          n -> ListMap("s" -> math.rint(s * 1e3) / 1e3, "jobs" -> c.jobs, "rows_read" -> c.rowsRead)
+        }: _*),
+        "rows" -> ListMap(counts.toSeq.sorted: _*),
+        "position" -> ListMap("old" -> pos(status), "new" -> pos(position)),
+        "failed" -> failed)))
+    }
   }
 
   /** Drain until the extractor reports no more data (the reference loops
@@ -144,7 +188,8 @@ final class Pipeline(spark: SparkSession, val spec: PipelineSpec,
     if (th <= 0 || graft.sources.JdbcTable.isJdbc(spec.destinationPath)) return
     // NB: no early returns inside the staged block — `return` from a
     // by-name body unwinds via ControlThrowable and would be wrapped
-    stage(ErrorContext.Compact) { touchedTables.toSeq.foreach { table =>
+    val trace = new Trace.Group(spark.sparkContext)
+    try stage(ErrorContext.Compact, trace) { touchedTables.toSeq.foreach { table =>
       val path = s"${spec.destinationPath}/$table.parquet"
       // both partitioned layouts keep their directories: bucketed
       // tables are told by the marker, value-partitioned (PartitionBy)
@@ -163,7 +208,7 @@ final class Pipeline(spark: SparkSession, val spec: PipelineSpec,
             ParquetTable.compactToFileCount(spark, path, desired.toInt)
         }
       }
-    } }
+    } } finally trace.report(_ => ())
   }
 }
 
@@ -172,6 +217,9 @@ object Pipeline {
     * scale object stores and parquet readers like).
     */
   val CompactTargetFileBytes: Long = 256L * 1024 * 1024
+
+  private val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    .registerModule(com.fasterxml.jackson.module.scala.DefaultScalaModule)
 }
 
 /** Multi-pipeline job — reference `Migrator` (`migrator.go:27-59`): one
@@ -205,6 +253,9 @@ final class Runner(spark: SparkSession, specs: Seq[PipelineSpec],
     state.set(RunState.Running)
     threads = pipelines.map { p =>
       val t = new Thread(() => {
+        // local properties are inherited: a span open in the starting
+        // thread must not claim this pipeline's jobs
+        spark.sparkContext.setLocalProperty(Trace.Key, null)
         // init with retry-forever (reference `migrator.go:312-327`):
         // a missing source/tracking store at start-up must not kill the
         // pipeline thread silently
@@ -230,6 +281,7 @@ final class Runner(spark: SparkSession, specs: Seq[PipelineSpec],
               }
             } catch {
               case sf: StageFailure =>
+                sf.committed.foreach(status = _)
                 errorCallback(ErrorContext(sf.stage, table), sf.getCause)
                 sleepInterruptibly(p.spec.params.sleepBetweenRunsSec)
               case e: Throwable =>

@@ -315,12 +315,8 @@ object MethodRoutedLoader {
                                    params: Params, pcol: String,
                                    inserts: DataFrame, replaces: DataFrame,
                                    t: Touched): Unit = {
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
     val p = new Path(target)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-    def dirName(v: Any): String =
-      ExternalCatalogUtils.getPartitionPathString(pcol, String.valueOf(v))
 
     // partition-dir names must round-trip values exactly; permit the
     // types whose toString matches Spark's partition encoding. Checked
@@ -348,40 +344,13 @@ object MethodRoutedLoader {
     if (t.rewrites) {
       val existing = ParquetTable.read(spark, target)
       val touchedVals = t.values(pcol).distinct
-      val prunable = !touchedVals.contains(null) && existing.isDefined
-      val kept = existing match {
-        case Some(e) if prunable =>
-          e.filter(col(pcol).isin(touchedVals: _*)) // partition pruning
-            .filter(untouched(t))
-        case Some(e) => e.filter(untouched(t))
-        case None => replaces.limit(0)
-      }
-      val out = kept.unionByName(replaces, allowMissingColumns = true)
-      if (prunable) {
-        val staging = new Path(target + s".__staging_${ParquetTable.stamp()}")
-        out.write.mode("overwrite").partitionBy(pcol).parquet(staging.toString)
-        if (!fs.exists(p)) fs.mkdirs(p)
-        touchedVals.foreach { v =>
-          val dst = new Path(p, dirName(v))
-          val src = new Path(staging, dirName(v))
-          // displace the live partition INTO the staging dir before the
-          // swap: a crash mid-swap leaves the old data recoverable in
-          // .__staging_* instead of deleted outright (the staging dir is
-          // only removed after every touched partition has swapped)
-          if (fs.exists(dst))
-            fs.rename(dst, new Path(staging, s"__displaced_${dirName(v)}"))
-          if (fs.exists(src)) fs.rename(src, dst)
-        }
-        fs.delete(staging, true)
-      } else
-        ParquetTable.overwriteAtomicPartitioned(spark, target, out, pcol)
+      if (!touchedVals.contains(null) && existing.isDefined)
+        rewritePartitions(spark, target, existing, pcol, touchedVals, replaces, t)
+      else ParquetTable.overwriteAtomicPartitioned(spark, target,
+        existing.map(_.filter(untouched(t))).getOrElse(replaces.limit(0))
+          .unionByName(replaces, allowMissingColumns = true), pcol)
     }
-    if (t.inserts > 0) {
-      val w = inserts.write.mode("append").partitionBy(pcol)
-      (if (params.insertBatchSize > 0)
-        w.option("maxRecordsPerFile", params.insertBatchSize.toLong) else w)
-        .parquet(target)
-    }
+    if (t.inserts > 0) appendPartitioned(inserts, pcol, target, params)
   }
 
   /** Partition-pruned variant (SURVEY §7.4 H1): REPLACE/REMOVE computes
@@ -405,49 +374,64 @@ object MethodRoutedLoader {
     def bucketed(d: DataFrame): DataFrame =
       d.withColumn(BucketCol, pmod(xxhash64(pkCols.map(col): _*), lit(n.toLong)))
 
-    val p = new Path(target)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
     if (t.rewrites) {
       // the batch's own hash over the driver-held keys: a projection of
       // a local relation, evaluated on the driver with no job
       val touched = bucketed(spark.createDataFrame(t.keys.asJava, t.keySchema))
         .select(BucketCol).collect().map(_.getLong(0)).distinct.toSeq
-      val kept = ParquetTable.read(spark, target) match {
-        case Some(e) =>
-          e.filter(col(BucketCol).isin(touched: _*)) // partition pruning
-            .filter(untouched(t))
-        case None => bucketed(replaces).limit(0)
-      }
-      val out = kept.unionByName(bucketed(replaces), allowMissingColumns = true)
-
-      // 1. materialise to staging (completes the read of the target)
-      val staging = new Path(target + s".__staging_${ParquetTable.stamp()}")
-      out.write.mode("overwrite").partitionBy(BucketCol).parquet(staging.toString)
-      // 2. swap per touched bucket: staged partition in, stale (possibly
-      //    emptied) partition out. Output buckets ⊆ touched buckets, so
-      //    one pass over `touched` covers both.
-      if (!fs.exists(p)) fs.mkdirs(p)
-      touched.foreach { b =>
-        val dst = new Path(p, s"$BucketCol=$b")
-        val src = new Path(staging, s"$BucketCol=$b")
-        // displace rather than delete: a crash mid-swap leaves the old
-        // bucket recoverable inside .__staging_* instead of gone
-        if (fs.exists(dst))
-          fs.rename(dst, new Path(staging, s"__displaced_$BucketCol=$b"))
-        if (fs.exists(src)) fs.rename(src, dst)
-      }
-      fs.delete(staging, true)
+      rewritePartitions(spark, target, ParquetTable.read(spark, target), BucketCol, touched,
+        bucketed(replaces), t)
     }
-    if (t.inserts > 0) {
-      val w = bucketed(inserts).write.mode("append").partitionBy(BucketCol)
-      (if (params.insertBatchSize > 0)
-        w.option("maxRecordsPerFile", params.insertBatchSize.toLong) else w)
-        .parquet(target)
-    }
+    if (t.inserts > 0) appendPartitioned(bucketed(inserts), BucketCol, target, params)
     // self-describing layout: later loads and the extract side's bucket
     // pruning read the count from the table, never from config
     if (ParquetTable.readBucketMarker(spark, target).isEmpty)
       ParquetTable.writeBucketMarker(spark, target, n)
+  }
+
+  /** Rewrite the partitions `touched` of `target` (partitioned by
+    * `pcol`) to their rows the batch did not touch plus `replaces`. The
+    * rewrite is first written in full to a staging directory, which
+    * completes its read of the partitions it replaces; then each touched
+    * partition is swapped: the live one is displaced INTO the staging
+    * dir and the staged one renamed in. A crash mid-swap leaves the old
+    * data recoverable in `.__staging_*`, which is deleted only after
+    * every swap. Output values ⊆ touched values, so a partition the
+    * rewrite emptied simply has no staged replacement. Directory names
+    * use the escaping Spark's writer uses.
+    */
+  private def rewritePartitions(spark: SparkSession, target: String,
+                                existing: Option[DataFrame], pcol: String, touched: Seq[Any],
+                                replaces: DataFrame, t: Touched): Unit = {
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    val kept = existing match {
+      case Some(e) => e.filter(col(pcol).isin(touched: _*)).filter(untouched(t)) // partition pruning
+      case None => replaces.limit(0)
+    }
+    val out = kept.unionByName(replaces, allowMissingColumns = true)
+    val p = new Path(target)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val staging = new Path(target + s".__staging_${ParquetTable.stamp()}")
+    out.write.mode("overwrite").partitionBy(pcol).parquet(staging.toString)
+    if (!fs.exists(p)) fs.mkdirs(p)
+    touched.foreach { v =>
+      val dir = ExternalCatalogUtils.getPartitionPathString(pcol, String.valueOf(v))
+      val dst = new Path(p, dir)
+      if (fs.exists(dst)) fs.rename(dst, new Path(staging, s"__displaced_$dir"))
+      val src = new Path(staging, dir)
+      if (fs.exists(src)) fs.rename(src, dst)
+    }
+    fs.delete(staging, true)
+  }
+
+  /** Append `df` to `target` partitioned by `pcol`, at most
+    * `insertBatchSize` rows per file.
+    */
+  private def appendPartitioned(df: DataFrame, pcol: String, target: String,
+                                params: Params): Unit = {
+    val w = df.write.mode("append").partitionBy(pcol)
+    (if (params.insertBatchSize > 0)
+      w.option("maxRecordsPerFile", params.insertBatchSize.toLong) else w)
+      .parquet(target)
   }
 }

@@ -556,8 +556,8 @@ class DedupTransformerSpec extends SparkSpec {
         stream, idx, out, ckpt, minJaccard = 0.5, compactEvery = 2)
         .awaitTermination()
     finally {
-      // listener bus is async — give captures a moment to drain
-      Thread.sleep(2000)
+      // listener bus is async: deliver every capture before reading
+      graft.core.Trace.flush(spark.sparkContext)
       spark.listenerManager.unregister(listener)
     }
 

@@ -134,16 +134,3 @@ class CompactionSpec extends SparkSpec {
     assert(!specs.head.params.extra.contains("CompactFileThreshold"))
   }
 }
-
-class MetricsSpec extends SparkSpec {
-  test("query execution listener records actions and failures") {
-    graft.core.Metrics.clear()
-    sources.Tables.region(spark, sf).count()
-    // listener delivery is async on the listener bus
-    val deadline = System.currentTimeMillis() + 10000
-    while (System.currentTimeMillis() < deadline &&
-      graft.core.Metrics.snapshot().isEmpty) Thread.sleep(100)
-    val (n, fails, secs) = graft.core.Metrics.summary()
-    assert(n >= 1 && fails === 0 && secs > 0)
-  }
-}

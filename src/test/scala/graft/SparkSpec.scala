@@ -15,34 +15,51 @@ trait SparkSpec extends AnyFunSuite {
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
-  /** Run `body` and count the Spark jobs it started on this thread (and
-    * on the threads Spark hands its local properties to). A marker job
-    * run afterwards flushes the listener bus: once its start event is
-    * seen, every earlier job's start event has been delivered.
+  /** Run `body` in a [[graft.core.Trace]] span and count the Spark jobs
+    * it started on this thread (and on the threads Spark hands its local
+    * properties to); the count is read after a listener-bus flush.
     */
   def jobsDuring[T](body: => T): (T, Int) = {
+    val trace = new graft.core.Trace.Group(spark.sparkContext)
+    val r = trace("body")(body)
+    (r, trace.counts().head._3.jobs)
+  }
+
+  /** The batch event lines (logger `graft.core.Pipeline`, INFO) logged
+    * while `body` ran, parsed. Read after a listener-bus flush: the
+    * trace finishes each line on the bus.
+    */
+  def batchEvents[T](body: => T): (T, Seq[com.fasterxml.jackson.databind.JsonNode]) = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{Configurator, Property}
     val sc = spark.sparkContext
-    val key = "graft.spec.jobTag"
-    val tag = java.util.UUID.randomUUID().toString
-    val started = new java.util.concurrent.atomic.AtomicInteger(0)
-    val flushed = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val t = Option(e.properties).map(_.getProperty(key)).orNull
-        if (t == tag) started.incrementAndGet()
-        else if (t == s"$tag-marker") flushed.countDown()
-      }
+    val name = classOf[graft.core.Pipeline].getName
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val app = new AbstractAppender(s"capture-${java.util.UUID.randomUUID()}", null, null,
+        true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = lines.add(e.getMessage.getFormattedMessage)
     }
-    sc.addSparkListener(listener)
+    app.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    Configurator.setLevel(name, Level.INFO)
+    val cfg = ctx.getConfiguration.getLoggerConfig(name)
+    cfg.setAdditive(false)
+    cfg.addAppender(app, Level.INFO, null)
+    ctx.updateLoggers()
     try {
-      sc.setLocalProperty(key, tag)
-      val r = try body finally sc.setLocalProperty(key, null)
-      sc.setLocalProperty(key, s"$tag-marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(key, null)
-      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS),
-        "listener bus did not deliver the marker job")
-      (r, started.get)
-    } finally sc.removeSparkListener(listener)
+      val r = body
+      graft.core.Trace.flush(sc)
+      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+      (r, lines.asScala.toSeq.map(mapper.readTree))
+    } finally {
+      cfg.removeAppender(app.getName)
+      cfg.setAdditive(true)
+      cfg.setLevel(ctx.getConfiguration.getRootLogger.getLevel)
+      ctx.updateLoggers()
+      app.stop()
+    }
   }
 }
