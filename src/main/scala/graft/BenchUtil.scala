@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graftshim.FooterSchema
 
 /** Shared measurement helpers for the benchmark/probe mains
   * ([[Bench]], [[AnnRecall]], [[ScaleProbe]]) — one implementation of
@@ -105,22 +106,18 @@ private[graft] object BenchUtil {
       .sorted
 
   /** Count the parquet data files under `dir` (recursive), skipping
-    * `.__staging_`/`.__old_` directories a killed atomic rewrite can
-    * leave behind — ONE implementation for the compaction probe and
-    * the file-count specs, so they can never count differently.
+    * the entries Spark's listing hides: the staged and replaced copies
+    * a killed swap can leave behind and uncommitted `_temporary` task
+    * output — ONE implementation for the compaction probe and the
+    * file-count specs, so they can never count differently (and a count
+    * that disagreed with what a read sees would mislead the compaction
+    * dial).
     */
   def parquetDataFiles(dir: String): Int = {
     def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) {
-        // skip staged/retired generations AND uncommitted task output —
-        // IndexStores.hasStore judges presence by committed files only,
-        // and a file count that disagreed with it after a killed write
-        // would mislead the compaction dial
-        if (f.getName.contains(".__staging_") ||
-            f.getName.contains(".__old_") ||
-            f.getName == "_temporary") Seq.empty
-        else Option(f.listFiles()).toSeq.flatten.flatMap(walk)
-      } else Seq(f)
+      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten
+        .filterNot(c => FooterSchema.hiddenName(c.getName)).flatMap(walk)
+      else Seq(f)
     walk(new java.io.File(dir)).count(_.getName.endsWith(".parquet"))
   }
 

@@ -1,11 +1,11 @@
 package graft.core
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graftshim.FooterSchema
 
 /** Plain-parquet "table directory" helpers: existence-tolerant reads and
-  * staged atomic-swap overwrites.
+  * the ONE staged swap every persisted generation is published through.
   *
   * The reference gets transactional batch loads from MySQL
   * (`loader_default.go:30-67`); on plain parquet we emulate the atomicity
@@ -14,10 +14,27 @@ import org.apache.spark.sql.graftshim.FooterSchema
   * on a 100 TB table the cost is the rewrite itself, which the loader
   * bounds by only rewriting when REPLACE/REMOVE rows exist (appends never
   * rewrite).
+  *
+  * This object alone stages, swaps, retires and heals a directory
+  * generation ([[staging]], [[swap]], [[retire]], [[heal]],
+  * [[healChildren]]), whether the live directory is a table root, a
+  * store, a `b_*` output tag or a `col=`/`_bucket=` partition. Its
+  * leftovers sit beside the live directory under dot-prefixed names,
+  * which Spark's file listing and the `b_*` glob both skip:
+  *  - `.__staging_<name>_<stamp>`: a generation being written, or one
+  *    being retired. Never restored; deleted by the next [[staging]] or
+  *    [[retire]] of `<name>`.
+  *  - `.__replaced_<name>_<stamp>`: the previous generation during a
+  *    swap. With `<name>` absent (a crash between the swap's two
+  *    renames) it is the only complete copy, and [[heal]] restores the
+  *    newest one; beside a live `<name>` it is stale and collected.
+  * Names an older build left (`<name>.__staging_<stamp>`,
+  * `<name>.__old_<stamp>`) are read as the same two kinds, so a store
+  * left mid-swap by that build still heals.
   */
 object ParquetTable {
 
-  /** Monotonic name stamp for staging/old/snapshot dirs. Wall-clock
+  /** Monotonic name stamp for staged and replaced dirs. Wall-clock
     * based (so ordering survives JVM restarts — `System.nanoTime()` has
     * an arbitrary per-JVM origin and can even be negative, making
     * lexicographic OR numeric cross-restart comparison meaningless) and
@@ -28,38 +45,146 @@ object ParquetTable {
   private[graft] def stamp(): Long =
     lastStamp.updateAndGet(prev => math.max(prev + 1, System.currentTimeMillis()))
 
-  /** Numeric suffix of a staged-dir name, for temporal ordering; names
-    * written by older builds used raw nanoTime — still parsed, just not
-    * meaningfully comparable across restarts (documented limitation the
-    * wall-clock stamp removes going forward).
+  /** The entry of `entries` with the newest stamp. Stamps compare as
+    * PARSED numbers: lexicographic order of unpadded numbers puts "9…"
+    * after "10…" and would pick an older generation. Entries without a
+    * stamp are never picked.
     */
-  private def numericSuffix(name: String, prefix: String): Long =
-    try name.substring(prefix.length).toLong
-    catch { case _: NumberFormatException => Long.MinValue }
+  private[graft] def newestByStamp[A](entries: Seq[A])(stampOf: A => Option[Long]): Option[A] =
+    entries.flatMap(e => stampOf(e).map(e -> _)).maxByOption(_._2).map(_._1)
+
+  private val log = org.slf4j.LoggerFactory.getLogger("graft.core.ParquetTable")
+
+  /** A leftover of a swap beside live dir `name`. */
+  private final case class Leftover(entry: String, name: String, replaced: Boolean, stamp: Long)
+
+  /** Leftover forms as (prefix, infix before the stamp, replaced copy?):
+    * this build's two, then the two an older build wrote.
+    */
+  private val Forms = Seq((".__staging_", "_", false), (".__replaced_", "_", true),
+    ("", ".__staging_", false), ("", ".__old_", true))
+
+  /** What directory entry `entry` is a leftover of, if it is one. The
+    * stamp follows the last `_`, so a `<name>` holding `_` parses whole.
+    */
+  private def leftover(entry: String): Option[Leftover] = {
+    val cut = entry.lastIndexOf('_') + 1
+    val head = entry.substring(0, cut)
+    entry.substring(cut).toLongOption.flatMap(stamp => Forms.collectFirst {
+      case (pre, infix, replaced) if head.startsWith(pre) && head.endsWith(infix) &&
+          head.length > pre.length + infix.length =>
+        Leftover(entry, head.substring(pre.length, head.length - infix.length), replaced, stamp)
+    })
+  }
+
+  private def fsOf(spark: SparkSession, path: Path): FileSystem =
+    path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Entry names of `dir`; empty when it does not exist. */
+  private def names(fs: FileSystem, dir: Path): Seq[String] =
+    try fs.listStatus(dir).map(_.getPath.getName).toSeq
+    catch { case _: java.io.FileNotFoundException => Seq.empty }
+
+  /** Restore absent `live` from its newest replaced copy among `listed`
+    * (its parent's entries); the restored entry's name, None when there
+    * is no copy.
+    */
+  private def restore(fs: FileSystem, live: Path, listed: Seq[String]): Option[String] =
+    newestByStamp(listed.flatMap(leftover).filter(l => l.replaced && l.name == live.getName))(
+      l => Some(l.stamp)).map { l =>
+      val copy = new Path(live.getParent, l.entry)
+      if (fs.rename(copy, live))
+        log.warn(s"healed $live: restored the replaced copy $copy " +
+          "(a swap was cut between its two renames)")
+      else if (!fs.exists(live)) // a concurrent heal may have restored it first
+        throw new java.io.IOException(s"could not restore $live from its replaced copy $copy")
+      l.entry
+    }
+
+  /** Heal `live`: when it is absent, restore its newest replaced copy —
+    * without this the next load would see "no table" and quietly
+    * rebuild it from one batch. True iff `live` exists afterwards.
+    */
+  private[graft] def heal(fs: FileSystem, live: Path): Boolean =
+    fs.exists(live) || (live.getParent != null &&
+      restore(fs, live, names(fs, live.getParent)).isDefined)
+
+  /** Heal `live` from `listed`, then delete its every other leftover:
+    * stale replaced copies (now beside a live dir) and staged or retired
+    * ones (the contract everywhere is a single quiesced producer, so a
+    * staged sibling is a failed write's leak — without this every
+    * crashed rebuild of a large table leaks a near-full-size directory).
+    */
+  private def settle(fs: FileSystem, live: Path, listed: Seq[String]): Unit = {
+    val restored = if (listed.contains(live.getName)) None else restore(fs, live, listed)
+    listed.flatMap(leftover).filter(l => l.name == live.getName && !restored.contains(l.entry))
+      .foreach(l => fs.delete(new Path(live.getParent, l.entry), true))
+  }
+
+  /** A fresh staging path beside `live` for its next generation, after
+    * healing `live` and collecting its leftovers (one listing).
+    */
+  private[graft] def staging(fs: FileSystem, live: Path): Path = {
+    settle(fs, live, names(fs, live.getParent))
+    new Path(live.getParent, s".__staging_${live.getName}_${stamp()}")
+  }
+
+  /** Swap `staged` in as `live`: rename the current copy aside, rename
+    * `staged` in, roll back on failure — never leave `live` absent while
+    * a complete copy exists (Hadoop rename reports failure by boolean).
+    * The final delete of the replaced copy is LOUD on failure: a stale
+    * generation left behind silently would be resurrected by [[heal]] if
+    * `live` is ever removed, serving retired data instead of "no such
+    * table".
+    */
+  private[graft] def swap(fs: FileSystem, live: Path, staged: Path): Unit = {
+    val replaced = new Path(live.getParent, s".__replaced_${live.getName}_${stamp()}")
+    val hadLive = fs.exists(live)
+    if (hadLive && !fs.rename(live, replaced))
+      throw new java.io.IOException(s"could not rename $live aside to $replaced")
+    if (!fs.rename(staged, live)) {
+      if (hadLive && !fs.rename(replaced, live))
+        throw new java.io.IOException(s"could not swap $staged into $live, nor roll " +
+          s"back: the previous copy is at $replaced, which the next heal restores")
+      throw new java.io.IOException(s"could not swap $staged into $live")
+    }
+    if (hadLive && !fs.delete(replaced, true))
+      throw new java.io.IOException(s"swap into $live complete, but the replaced " +
+        s"copy at $replaced could not be deleted — remove it manually (a heal " +
+        "would otherwise resurrect it if the live path is removed)")
+  }
+
+  /** Remove `live` and every leftover of it for good: its replaced
+    * copies go first ([[staging]] collects them, so none outlives it for
+    * a heal to resurrect), then it is renamed aside under the staged
+    * name — which no heal restores — and deleted. A crash before that
+    * delete leaves only hidden storage for the next [[staging]] or
+    * [[retire]] to collect.
+    */
+  private[graft] def retire(fs: FileSystem, live: Path): Unit = {
+    val aside = staging(fs, live)
+    if (fs.exists(live) && !fs.rename(live, aside))
+      throw new java.io.IOException(s"could not rename $live aside to retire it")
+    if (fs.exists(aside) && !fs.delete(aside, true))
+      throw new java.io.IOException(s"retired $live, but $aside could not be deleted")
+  }
+
+  /** Heal every child of `dir` (a partitioned table's partitions) from
+    * one listing, collecting their leftovers: a crash between a
+    * partition's two swap renames otherwise leaves it out of the table,
+    * and the next rewrite of that partition would keep only the batch's
+    * rows.
+    */
+  private[graft] def healChildren(spark: SparkSession, path: String): Unit = {
+    val (dir, fs) = (new Path(path), fsOf(spark, new Path(path)))
+    val listed = names(fs, dir)
+    listed.flatMap(leftover).map(_.name).distinct
+      .foreach(n => settle(fs, new Path(dir, n), listed))
+  }
 
   def exists(spark: SparkSession, path: String): Boolean = {
     val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) true
-    else recoverFromOld(fs, p) // crash between the two swap renames
-  }
-
-  /** Crash recovery: a failure between `rename(p, old)` and
-    * `rename(staging, p)` leaves the table only under a `.__old_` name.
-    * Restore the newest such copy — without this, the next load would
-    * see "no table" and quietly rebuild it from one batch. "Newest" is
-    * decided by the PARSED numeric suffix: lexicographic comparison of
-    * unpadded numbers would order "9…" after "10…" and resurrect an
-    * older snapshot.
-    */
-  private def recoverFromOld(fs: org.apache.hadoop.fs.FileSystem, p: Path): Boolean = {
-    val parent = p.getParent
-    if (parent == null || !fs.exists(parent)) return false
-    val prefix = p.getName + ".__old_"
-    val olds = fs.listStatus(parent).map(_.getPath)
-      .filter(_.getName.startsWith(prefix))
-      .sortBy(path => numericSuffix(path.getName, prefix))
-    olds.lastOption.exists(fs.rename(_, p))
+    heal(fsOf(spark, p), p) // crash between the two swap renames
   }
 
   /** Name of the bucket-count marker file a hash-bucketed table carries
@@ -73,8 +198,7 @@ object ParquetTable {
 
   def writeBucketMarker(spark: SparkSession, tablePath: String, n: Int): Unit = {
     val p = new Path(tablePath, BucketMarker)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
+    val out = fsOf(spark, p).create(p, true)
     try out.write(n.toString.getBytes("UTF-8")) finally out.close()
   }
 
@@ -109,68 +233,12 @@ object ParquetTable {
     if (exists(spark, path)) Some(FooterSchema.read(spark, Seq(path), mergeSchema = true))
     else None
 
-  /** The swap protocol every staged overwrite shares (table overwrites
-    * here, index-root rebuilds in `IndexStores`): stage out the current
-    * copy under `.__old_`, rename staging in, roll back on failure —
-    * never leave the path absent (Hadoop rename reports failure by
-    * boolean). The final delete of the staged-out copy is LOUD on
-    * failure: a stale full `.__old_` generation left behind silently
-    * would be resurrected by [[recoverFromOld]] if the live path is
-    * ever removed (e.g. a deliberate decommission), serving retired
-    * data instead of "no such table".
-    */
-  private[graft] def swap(fs: org.apache.hadoop.fs.FileSystem,
-                          p: Path, staging: Path): Unit = {
-    val old = new Path(p.toString + s".__old_${stamp()}")
-    val hadOld = fs.exists(p)
-    if (hadOld && !fs.rename(p, old))
-      throw new java.io.IOException(s"could not stage out current table at $p")
-    if (!fs.rename(staging, p)) {
-      if (hadOld) fs.rename(old, p)
-      throw new java.io.IOException(s"could not swap staging into $p")
-    }
-    if (hadOld && !fs.delete(old, true))
-      throw new java.io.IOException(
-        s"swap into $p complete, but the stale previous copy at $old " +
-          "could not be deleted — remove it manually (crash recovery " +
-          "would otherwise resurrect it if the live path is removed)")
-  }
-
-  /** Garbage-collect dead staged dirs before starting a new staged
-    * write (caller contract everywhere is a single quiesced producer,
-    * so any `.__staging_` sibling is a failed write's leak — without
-    * this, every crashed rebuild of a large table permanently leaks a
-    * near-full-size directory). Stale `.__old_` siblings are removed
-    * only when the live path EXISTS: then they are leftovers of a
-    * swap whose final delete failed, whereas with the path absent the
-    * newest `.__old_` is the crash-window copy [[recoverFromOld]]
-    * needs.
-    */
-  private[graft] def cleanStaleStaged(fs: org.apache.hadoop.fs.FileSystem,
-                                      p: Path): Unit = {
-    val parent = p.getParent
-    if (parent == null || !fs.exists(parent)) return
-    val live = fs.exists(p)
-    fs.listStatus(parent).map(_.getPath).foreach { c =>
-      val n = c.getName
-      if (n.startsWith(p.getName + ".__staging_") ||
-          (live && n.startsWith(p.getName + ".__old_")))
-        fs.delete(c, true)
-    }
-  }
-
   /** Materialise `df` (which may itself read from `path`) into a staging
     * dir, then swap it in. The read happens fully before the old data is
     * touched.
     */
-  def overwriteAtomic(spark: SparkSession, path: String, df: DataFrame): Unit = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    cleanStaleStaged(fs, p)
-    val staging = new Path(path + s".__staging_${stamp()}")
-    df.write.mode("overwrite").parquet(staging.toString)
-    swap(fs, p, staging)
-  }
+  def overwriteAtomic(spark: SparkSession, path: String, df: DataFrame): Unit =
+    publish(spark, path)(staged => df.write.mode("overwrite").parquet(staged.toString))
 
   /** [[overwriteAtomic]] with a partitioned staging write — used by the
     * loader's flat→bucketed layout migration, where the replacement
@@ -182,14 +250,21 @@ object ParquetTable {
     */
   def overwriteAtomicPartitioned(spark: SparkSession, path: String,
                                  df: DataFrame, partitionCol: String,
-                                 bucketMarker: Option[Int] = None): Unit = {
+                                 bucketMarker: Option[Int] = None): Unit =
+    publish(spark, path) { staged =>
+      df.write.mode("overwrite").partitionBy(partitionCol).parquet(staged.toString)
+      bucketMarker.foreach(n => writeBucketMarker(spark, staged.toString, n))
+    }
+
+  /** Write a new generation of `path` with `write` into a fresh staging
+    * dir, then [[swap]] it in.
+    */
+  private def publish(spark: SparkSession, path: String)(write: Path => Unit): Unit = {
     val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    cleanStaleStaged(fs, p)
-    val staging = new Path(path + s".__staging_${stamp()}")
-    df.write.mode("overwrite").partitionBy(partitionCol).parquet(staging.toString)
-    bucketMarker.foreach(n => writeBucketMarker(spark, staging.toString, n))
-    swap(fs, p, staging)
+    val fs = fsOf(spark, p)
+    val staged = staging(fs, p)
+    write(staged)
+    swap(fs, p, staged)
   }
 
   /** Compact a table's small files (the debt a long-running append /

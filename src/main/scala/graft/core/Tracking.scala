@@ -47,6 +47,16 @@ final class TrackingStore(spark: SparkSession, root: String) {
   private def fs = new Path(root).getFileSystem(hconf)
   private val pointer = new Path(root, "_CURRENT")
 
+  /** The pointer's file system without client-side checksums: a flip
+    * renames a checksummed file and then its checksum file, so a
+    * checksummed read racing it fails. The pointer is a few bytes naming
+    * a snapshot dir, and a torn name fails the snapshot read anyway.
+    */
+  private def pointerFs = fs match {
+    case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
+    case f => f
+  }
+
   /** In-memory image of the (tiny, O(#pipelines)) table, loaded once and
     * kept in sync by `put` — point reads and commits then cost zero
     * Spark jobs. The store is owned by one runner; an external writer
@@ -56,45 +66,56 @@ final class TrackingStore(spark: SparkSession, root: String) {
 
   private def loadAll(): Vector[TrackingStatus] = synchronized {
     cached.getOrElse {
-      val v = currentSnapshot() match {
-        case Some(ver) => spark.read.schema(schema).parquet(s"$root/$ver")
-          .collect().toVector.map(fromRow)
-        case None => Vector.empty
-      }
+      val v = read(currentSnapshot())
       cached = Some(v)
       v
     }
   }
 
-  /** Numeric snapshot version from a `v<number>` dir name; unparseable
-    * names sort lowest. Parsing (instead of lexicographic name order)
-    * matters because an unpadded or negative numeric suffix — e.g. the
-    * raw `nanoTime` names older builds wrote, whose origin is arbitrary
-    * per JVM — would make "newest by name" resurrect an OLDER snapshot
-    * after a crash in a new JVM, regressing every pipeline position and
-    * replaying whole tables as duplicate INSERTs.
+  /** The rows of snapshot `ver`. A reader in another store can resolve
+    * the pointer just before a `put` flips it and collects an older
+    * snapshot; `put` keeps the replaced one, and if the one read is gone
+    * all the same (several `put`s in between) the read follows the
+    * pointer again.
     */
-  private def versionNum(name: String): Long =
-    try name.drop(1).toLong catch { case _: NumberFormatException => Long.MinValue }
+  @scala.annotation.tailrec
+  private def read(ver: Option[String]): Vector[TrackingStatus] = {
+    val rows = scala.util.Try(ver.toVector.flatMap(v =>
+      spark.read.schema(schema).parquet(s"$root/$v").collect().map(fromRow)))
+    val now = if (rows.isFailure) currentSnapshot() else ver
+    if (now != ver) read(now) else rows.get
+  }
 
-  private def currentSnapshot(): Option[String] = {
-    if (!fs.exists(pointer)) {
-      // pointer lost (e.g. crash on a filesystem without atomic rename):
+  /** Numeric snapshot version of a `v<number>` dir name. Parsing
+    * ([[ParquetTable.newestByStamp]]) matters because an unpadded or
+    * negative numeric suffix — e.g. the raw `nanoTime` names older
+    * builds wrote, whose origin is arbitrary per JVM — would make
+    * "newest by name" resurrect an OLDER snapshot after a crash in a
+    * new JVM, regressing every pipeline position and replaying whole
+    * tables as duplicate INSERTs.
+    */
+  private def version(name: String): Option[Long] =
+    if (name.startsWith("v")) name.tail.toLongOption else None
+
+  private def snapshots(): Seq[String] =
+    if (!fs.exists(new Path(root))) Seq.empty
+    else fs.listStatus(new Path(root)).map(_.getPath.getName).toSeq.filter(version(_).isDefined)
+
+  private def currentSnapshot(): Option[String] =
+    try {
+      val in = pointerFs.open(pointer)
+      try Some(new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8").trim)
+        .filter(_.nonEmpty)
+      finally in.close()
+    } catch {
+      // pointer absent: lost (a crash on a filesystem without atomic
+      // rename) or mid-flip (an overwrite rename may delete it first):
       // recover the newest snapshot dir — losing the pointer must not
       // reset every pipeline position to the seed (which would replay
       // whole tables as duplicate INSERTs)
-      if (!fs.exists(new Path(root))) return None
-      val vs = fs.listStatus(new Path(root)).map(_.getPath.getName)
-        .filter(_.startsWith("v")).sortBy(versionNum)
-      return vs.lastOption
+      case _: java.io.FileNotFoundException =>
+        ParquetTable.newestByStamp(snapshots())(version)
     }
-    val in = fs.open(pointer)
-    try {
-      val v = new String(
-        org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8").trim
-      if (v.isEmpty) None else Some(v)
-    } finally in.close()
-  }
 
   /** All tracking rows (empty DataFrame with the right schema if the
     * store was never written).
@@ -133,21 +154,26 @@ final class TrackingStore(spark: SparkSession, root: String) {
     val prev = currentSnapshot()
     // strictly-increasing persisted version: one past the newest existing
     // snapshot (recovery then picks the true latest by numeric order even
-    // with the pointer gone — see versionNum)
-    val next = s"v${math.max(prev.map(versionNum).getOrElse(0L), 0L) + 1L}"
+    // with the pointer gone — see version)
+    val prevNum = prev.flatMap(version)
+    val next = s"v${math.max(prevNum.getOrElse(0L), 0L) + 1L}"
     writeSnapshot(new Path(root, next), rows)
     cached = Some(rows.toVector)
     val tmp = new Path(root, s"_CURRENT.tmp${ParquetTable.stamp()}")
-    val out = fs.create(tmp, true)
+    val out = pointerFs.create(tmp, true)
     try out.write(next.getBytes("UTF-8")) finally out.close()
     // atomic overwrite-rename (FileContext supports Rename.OVERWRITE;
     // plain FileSystem.rename would need a delete first, leaving a crash
     // window with no pointer at all)
     org.apache.hadoop.fs.FileContext.getFileContext(pointer.toUri, hconf)
       .rename(tmp, pointer, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    // GC the superseded snapshot — a long drain commits every batch and
-    // would otherwise accumulate one tiny dir per micro-batch forever
-    prev.filter(_ != next).foreach(v => fs.delete(new Path(root, v), true))
+    // GC the snapshots older than the one just replaced — a long drain
+    // commits every batch and would otherwise accumulate one tiny dir
+    // per micro-batch forever. The replaced one stays until the next
+    // put: a reader that resolved the pointer just before the flip is
+    // still reading it.
+    prevNum.foreach(p => snapshots().filter(version(_).exists(_ < p))
+      .foreach(v => fs.delete(new Path(root, v), true)))
   }
 
   /** The Parquet image of [[schema]], as Spark's own writer derives it

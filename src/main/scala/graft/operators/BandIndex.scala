@@ -289,7 +289,7 @@ object BandIndex {
     * lost. Classify results are unchanged (spec-pinned). Crash-safe
     * order: bands, then shingles, then the tombstone table — each
     * store swap heals its own crash window on the next read
-    * ([[IndexStores.readStore]] restores a `.__old_`-only store), a
+    * ([[IndexStores.readStore]] restores a cut swap's store), a
     * replayed anti-join rewrite is a no-op, and the tombstone list
     * keeps suppressing until it is the last thing deleted.
     */

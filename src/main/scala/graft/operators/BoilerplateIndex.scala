@@ -84,7 +84,7 @@ object BoilerplateIndex {
     IndexStores.healRoot(spark, path)
     // heal the counts store's own swap window BEFORE appending (a
     // compact() that died between its two renames leaves the history
-    // only under counts.__old_*, and an append that recreates a live
+    // only under its replaced copy, and an append that recreates a live
     // counts/ first would strand — then stale-clean — that history),
     // and assert it exists: an unhealed/absent store must reject, not
     // fall through to a bare append that fabricates a count-only index

@@ -201,8 +201,15 @@ object QueueExtractor extends Extractor {
   val name = "queue"
 
   /** Changelog schema parity: `record_queue.sql:2-13`. */
-  val queueCols = Seq("sourceDatabase", "sourceTable", "pkColumn", "pkValue",
-    "timestampUpdated", "method")
+  val queueSchema: StructType = StructType(Seq(
+    StructField("sourceDatabase", StringType, nullable = false),
+    StructField("sourceTable", StringType, nullable = false),
+    StructField("pkColumn", StringType, nullable = false),
+    StructField("pkValue", StringType, nullable = false),
+    StructField("timestampUpdated", TimestampType, nullable = false),
+    StructField("method", StringType, nullable = false)))
+
+  val queueCols: Seq[String] = queueSchema.fieldNames.toSeq
 
   /** Logical queue view: raw changelog minus acked entries. */
   private def queue(spark: SparkSession, spec: PipelineSpec): DataFrame = {
@@ -273,7 +280,7 @@ object QueueExtractor extends Extractor {
     val p = new Path(qp)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) return
-    ParquetTable.cleanStaleStaged(fs, p)
+    val staging = ParquetTable.staging(fs, p)
     // 1. the fence: only these files are rewritten and deleted
     val snapped = fs.listStatus(p).map(_.getPath)
       .filter(_.getName.endsWith(".parquet"))
@@ -283,7 +290,6 @@ object QueueExtractor extends Extractor {
       mergeSchema = true)
     val schema = snapRows.schema
     // 2. stage the survivors of exactly the snapped files
-    val staging = new Path(qp + s".__staging_${ParquetTable.stamp()}")
     snapRows.join(acks(spark, spec, schema).get, queueCols, "left_anti")
       .write.mode("overwrite").parquet(staging.toString)
     // 3. move in, then delete the snapshot. When the survivors are
@@ -320,7 +326,10 @@ object QueueExtractor extends Extractor {
       .delete(ap, true)
   }
 
-  private def queuePath(spec: PipelineSpec): String =
+  /** The changelog of `spec`: its `QueuePath`, by default
+    * `MigratorRecordQueue` under the source path.
+    */
+  def queuePath(spec: PipelineSpec): String =
     spec.queuePath.getOrElse(s"${spec.sourcePath}/MigratorRecordQueue")
 
   private def ackPath(spec: PipelineSpec): String = queuePath(spec) + "__acks"

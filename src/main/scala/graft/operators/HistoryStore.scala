@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Pins
+import graft.core.{ParquetTable, Pins}
 
 /** Persisted SCD2 dimension — a MUTABLE versioned dimension served
   * from APPEND-ONLY storage. Ninth persisted family, and the one that
@@ -317,8 +317,9 @@ object HistoryStore {
     * lazy [[serve]] plan (this session or another) still resolves the
     * old tags' files during the swap window, so each compact instead
     * GARBAGE-COLLECTS the dirs the PREVIOUS compact left unreferenced
-    * — one full compaction cycle of grace, the tag-store analogue of
-    * [[graft.core.ParquetTable]]'s `.__old_` retention.
+    * — one full compaction cycle of grace, which a
+    * [[graft.core.ParquetTable.swap]] does not keep (it deletes the
+    * replaced copy at once).
     */
   def compact(spark: SparkSession, path: String): Unit = {
     IndexStores.healRoot(spark, path)
@@ -577,19 +578,13 @@ object HistoryStore {
     IndexStores.swapInto(spark, s"$path/purged", staging)
   }
 
-  /** Remove the purge list AND its `.__old_` swap-window siblings —
-    * a bare delete of the live dir would let a later
-    * [[ParquetTable.exists]] heal resurrect a stale list, re-hiding
-    * and re-freezing keys whose erasure already completed.
+  /** Remove the purge list AND its swap leftovers
+    * ([[ParquetTable.retire]]) — a bare delete of the live dir would
+    * let a later [[ParquetTable.exists]] heal resurrect a stale list,
+    * re-hiding and re-freezing keys whose erasure already completed.
     */
-  private def clearPurged(spark: SparkSession, path: String): Unit = {
-    val fs = storeFs(spark, path)
-    val live = new Path(s"$path/purged")
-    if (fs.exists(live)) fs.delete(live, true)
-    for (d <- Option(fs.globStatus(new Path(s"$path/purged.__old_*")))
-        .getOrElse(Array.empty))
-      fs.delete(d.getPath, true)
-  }
+  private def clearPurged(spark: SparkSession, path: String): Unit =
+    ParquetTable.retire(storeFs(spark, path), new Path(s"$path/purged"))
 
   private def emptyClosures(spark: SparkSession, dim: DataFrame,
       key: String): DataFrame =

@@ -10,13 +10,14 @@ import graft.core.{ParquetTable, Pins}
 
 /** Store plumbing for every persisted store and output-landing
   * stream — ONE implementation each of the tombstone lifecycle, the
-  * committed-data presence check and the staged root swap (the two
-  * indexes, [[BandIndex]] and [[VectorIndex]]), the applied-batch
-  * ledgers and their range codec, the staged generation publish of
-  * the single-artifact stores, and the per-trigger output landing
-  * ([[landTrigger]]) every `b_*`-tag stream publishes through — so a
-  * hardening of any of them cannot silently miss a twin (the
-  * `BenchUtil.parquetDataFiles` stance).
+  * committed-data presence check, the applied-batch ledgers and their
+  * range codec, the staged generation publish of the single-artifact
+  * stores, and the per-trigger output landing ([[landTrigger]]) every
+  * `b_*`-tag stream publishes through — so a hardening of any of them
+  * cannot silently miss a twin. Every staged publish here
+  * ([[stagingFor]]/[[swapInto]], [[landTrigger]]) goes through
+  * [[ParquetTable]]'s one swap, which owns the leftover names and
+  * their heal.
   *
   * THE meta codec: every persisted store keeps its contract in a
   * one-row `meta/` table, written only by [[writeMeta]] and read only
@@ -46,10 +47,10 @@ private[graft] object IndexStores {
     * `_temporary`-only) dir — judging presence by it would send every
     * later read into an unreadable store and brick the index. Checked
     * after healing a swap-window crash ([[ParquetTable.exists]]
-    * restores a store left only under its `.__old_` name).
+    * restores a store left only under its replaced copy).
     */
   def hasStore(spark: SparkSession, dir: String): Boolean = {
-    ParquetTable.exists(spark, dir) // heals .__old_-only; false if absent
+    ParquetTable.exists(spark, dir) // heals a cut swap; false if absent
     val (f, p) = (fs(spark, dir), new Path(dir))
     f.exists(p) && committedFiles(f, p).hasNext
   }
@@ -63,10 +64,10 @@ private[graft] object IndexStores {
   }
 
   /** Read a store, first healing the staged-swap crash window (a kill
-    * between `rename(store, old)` and `rename(staging, store)` leaves
-    * the store only under `.__old_`; [[ParquetTable.exists]] restores
-    * the newest such copy — without it the documented
-    * "replaying compaction is a no-op" recovery could never run).
+    * between the swap's two renames leaves the store only under its
+    * replaced copy; [[ParquetTable.exists]] restores the newest such
+    * copy — without it the documented "replaying compaction is a no-op"
+    * recovery could never run).
     */
   def readStore(spark: SparkSession, dir: String): DataFrame = {
     ParquetTable.exists(spark, dir)
@@ -139,7 +140,7 @@ private[graft] object IndexStores {
       dir: String): Option[Long] =
     dirListing(spark, dir).map(footerRows(spark, _))
 
-  /** A listing of `dir` (healing the `.__old_`-only crash window
+  /** A listing of `dir` (healing a cut swap of it
     * first, the [[readStore]] contract); None when the dir is absent.
     */
   private[graft] def tinyListing(spark: SparkSession,
@@ -309,23 +310,16 @@ private[graft] object IndexStores {
     * generation visible atomically — the OLD index stays readable
     * until the replacement is complete, so a failed rebuild (OOM, bad
     * input, preemption) leaves consumers on the previous generation
-    * instead of on rubble. Same rename dance + `.__old_` recovery
-    * convention as [[ParquetTable.overwriteAtomic]].
+    * instead of on rubble. [[ParquetTable.staging]]: dead staged dirs
+    * and stale replaced copies are collected first.
     */
-  def stagingFor(spark: SparkSession, path: String): String = {
-    // GC dead staged dirs first: a rebuild that died mid-staging-write
-    // (the longest phase) leaves a near-full-index-size leak that no
-    // later rebuild would reuse (fresh stamp every time) — and a
-    // stale `.__old_` beside a LIVE index is a swap whose final delete
-    // failed, which crash recovery could later resurrect as the index
-    ParquetTable.cleanStaleStaged(fs(spark, path), new Path(path))
-    path + s".__staging_${ParquetTable.stamp()}"
-  }
+  def stagingFor(spark: SparkSession, path: String): String =
+    ParquetTable.staging(fs(spark, path), new Path(path)).toString
 
   /** Heal the INDEX ROOT's swap window: [[swapInto]] can die between
-    * its two renames, leaving the whole index only under `.__old_` —
-    * [[ParquetTable.exists]] restores the newest such copy. Called at
-    * every public entry point; per-store `.__old_` windows (compact's
+    * its two renames, leaving the whole index only under its replaced
+    * copy — [[ParquetTable.exists]] restores the newest such copy.
+    * Called at every public entry point; per-store windows (compact's
     * per-store swaps) are healed by [[readStore]]/[[hasStore]].
     */
   def healRoot(spark: SparkSession, path: String): Unit = {
@@ -333,7 +327,7 @@ private[graft] object IndexStores {
     ()
   }
 
-  /** Heal ONE store's swap window explicitly (the `.__old_`-only crash
+  /** Heal ONE store's swap window explicitly (the cut-swap crash
     * shape [[hasStore]] repairs as a side effect of its probe) and
     * REQUIRE the store present — the writer-side precondition an
     * append asserts before writing into the directory. Exists so call
@@ -346,10 +340,7 @@ private[graft] object IndexStores {
       s"store at $dir is absent or holds no committed parquet data " +
         "— build it (write) before appending to it")
 
-  /** Swap a staged rebuild in — the ONE swap protocol
-    * ([[ParquetTable.swap]]) shared with the table overwrites, so a
-    * hardening of the rename dance cannot miss one of its call sites.
-    */
+  /** Swap a staged rebuild in ([[ParquetTable.swap]]). */
   def swapInto(spark: SparkSession, path: String, staging: String): Unit =
     ParquetTable.swap(fs(spark, path), new Path(path), new Path(staging))
 
@@ -451,17 +442,15 @@ private[graft] object IndexStores {
     * place — a direct `mode(overwrite)` deletes the live tag before
     * its job runs, so a replay whose write fails loses that trigger's
     * rows, and a crash mid-flight leaves a partial or schema-less
-    * `b_*` dir the documented glob reads (or fails on). The rows
-    * land in a DOT-PREFIXED sibling (`.__staging_<tag>_<stamp>` —
-    * invisible to the `b_*` glob at every crash point; the shared
-    * [[ParquetTable.swap]] names its windows `<tag>.__staging_*` /
-    * `<tag>.__old_*`, which the glob WOULD match, so this publish
-    * keeps its own dance), then one rename makes the tag visible. A
-    * replay first renames the old tag aside (also dot-prefixed) —
-    * between that and the publish rename the tag is briefly ABSENT,
-    * so a concurrent glob reader misses that one batch's rows rather
-    * than reading half of them; the replayed trigger restores it.
-    * Leaked dot-dirs from a crash are GC'd on the tag's next landing.
+    * `b_*` dir the documented glob reads (or fails on). The rows land
+    * in a [[ParquetTable.staging]] sibling and [[ParquetTable.swap]]
+    * publishes them; both name their dirs dot-prefixed, invisible to
+    * the `b_*` glob at every crash point. During a replay's swap the
+    * tag is briefly ABSENT, so a concurrent glob reader misses that one
+    * batch's rows rather than reading half of them. The next landing
+    * of the tag heals a cut swap (restores the replaced copy) before it
+    * collects the tag's leaked dirs, so the last complete copy is
+    * never deleted.
     *
     * MIGRATION tripwire: streams that predate the tagged layout wrote
     * flat `part-*` files directly under `outDir`. Landing tags BESIDE
@@ -484,56 +473,11 @@ private[graft] object IndexStores {
           "the output across two layouts (each read misses the other " +
           "half). Migrate the flat rows into a one-off tag dir and " +
           "delete them first; see landTrigger's scaladoc.")
-    val tag = tagFor(producer, batchId)
-    val dir = s"$outDir/$tag"
-    val tagPath = new Path(dir)
-    // HEAL before GC: a crash between the stage-out rename and the
-    // publish rename leaves the batch's ONLY complete copy under
-    // `.__replaced_<tag>_*` with the tag absent — restore the newest
-    // such copy first, so the GC below never deletes the last copy
-    // and a failed re-write later still leaves the old generation
-    // servable (the "never leave the tag absent while we hold a
-    // complete copy" invariant, crash window included).
-    if (f.exists(root) && !f.exists(tagPath)) {
-      val prefix = s".__replaced_${tag}_"
-      // newest by PARSED numeric stamp (the ParquetTable.recoverFromOld
-      // lesson: lexicographic unpadded numbers order "9" after "10")
-      val replacedOf = f.listStatus(root).map(_.getPath)
-        .filter(_.getName.startsWith(prefix))
-        .sortBy(p =>
-          try p.getName.substring(prefix.length).toLong
-          catch { case _: NumberFormatException => Long.MinValue })
-      replacedOf.lastOption.foreach(f.rename(_, tagPath))
-    }
-    // GC this tag's remaining leaked dot-dirs from earlier crashes
-    // (single producer per tag — Structured Streaming replays a batch
-    // id serially), then stage, then publish with one rename
-    if (f.exists(root))
-      f.listStatus(root).map(_.getPath).foreach { c =>
-        if (c.getName.startsWith(s".__staging_${tag}_") ||
-            c.getName.startsWith(s".__replaced_${tag}_"))
-          f.delete(c, true)
-      }
-    val stamp = ParquetTable.stamp()
-    val staging = s"$outDir/.__staging_${tag}_$stamp"
-    df.write.mode("overwrite").parquet(staging)
-    forceSchemaBearing(df, staging)
-    val replaced = new Path(s"$outDir/.__replaced_${tag}_$stamp")
-    if (f.exists(tagPath) && !f.rename(tagPath, replaced))
-      throw new java.io.IOException(
-        s"landTrigger: could not stage out the replayed tag at $dir")
-    if (!f.rename(new Path(staging), tagPath)) {
-      // roll the old generation back — never leave the tag absent
-      // when we still hold a complete copy of it
-      if (f.exists(replaced)) f.rename(replaced, tagPath)
-      throw new java.io.IOException(
-        s"landTrigger: could not publish the staged tag into $dir")
-    }
-    if (f.exists(replaced) && !f.delete(replaced, true))
-      throw new java.io.IOException(
-        s"landTrigger: published $dir, but the replaced copy at " +
-          s"$replaced could not be deleted — remove it manually " +
-          "(it is glob-invisible but leaks storage)")
+    val tagPath = new Path(root, tagFor(producer, batchId))
+    val staging = ParquetTable.staging(f, tagPath)
+    df.write.mode("overwrite").parquet(staging.toString)
+    forceSchemaBearing(df, staging.toString)
+    ParquetTable.swap(f, tagPath, staging)
   }
 
   /** The per-batch tag a delta-tag store writes its delta under:

@@ -239,8 +239,13 @@ object MethodRoutedLoader {
     // value-partitioned layout (PartitionBy) is an explicit, exclusive
     // choice: an existing bucket marker still wins (physical layout is
     // law), otherwise the column layout applies to every load
-    if (params.partitionByCol.isDefined &&
-        ParquetTable.readBucketMarker(spark, target).isEmpty) {
+    val marker = ParquetTable.readBucketMarker(spark, target)
+    // a partitioned load first heals partitions a cut swap left out of
+    // the table: its rewrite keeps the untouched rows of what it finds,
+    // and an append would recreate the partition beside its only copy
+    if (params.partitionByCol.isDefined || marker.isDefined)
+      ParquetTable.healChildren(spark, target)
+    if (params.partitionByCol.isDefined && marker.isEmpty) {
       loadValuePartitioned(spark, target, params, params.partitionByCol.get,
         inserts, replaces, t)
       df.unpersist()
@@ -393,12 +398,13 @@ object MethodRoutedLoader {
     * `pcol`) to their rows the batch did not touch plus `replaces`. The
     * rewrite is first written in full to a staging directory, which
     * completes its read of the partitions it replaces; then each touched
-    * partition is swapped: the live one is displaced INTO the staging
-    * dir and the staged one renamed in. A crash mid-swap leaves the old
-    * data recoverable in `.__staging_*`, which is deleted only after
-    * every swap. Output values ⊆ touched values, so a partition the
-    * rewrite emptied simply has no staged replacement. Directory names
-    * use the escaping Spark's writer uses.
+    * partition with a staged replacement is swapped in
+    * ([[ParquetTable.swap]]), and each the rewrite emptied (output
+    * values ⊆ touched values, so it has none) is retired. A crash
+    * between a partition's two swap renames leaves its replaced copy,
+    * which the retried load heals before it reads
+    * ([[ParquetTable.healChildren]]).
+    * Directory names use the escaping Spark's writer uses.
     */
   private def rewritePartitions(spark: SparkSession, target: String,
                                 existing: Option[DataFrame], pcol: String, touched: Seq[Any],
@@ -411,15 +417,14 @@ object MethodRoutedLoader {
     val out = kept.unionByName(replaces, allowMissingColumns = true)
     val p = new Path(target)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new Path(target + s".__staging_${ParquetTable.stamp()}")
+    val staging = ParquetTable.staging(fs, p)
     out.write.mode("overwrite").partitionBy(pcol).parquet(staging.toString)
     if (!fs.exists(p)) fs.mkdirs(p)
     touched.foreach { v =>
       val dir = ExternalCatalogUtils.getPartitionPathString(pcol, String.valueOf(v))
-      val dst = new Path(p, dir)
-      if (fs.exists(dst)) fs.rename(dst, new Path(staging, s"__displaced_$dir"))
-      val src = new Path(staging, dir)
-      if (fs.exists(src)) fs.rename(src, dst)
+      val (live, staged) = (new Path(p, dir), new Path(staging, dir))
+      if (fs.exists(staged)) ParquetTable.swap(fs, live, staged)
+      else if (fs.exists(live)) ParquetTable.retire(fs, live)
     }
     fs.delete(staging, true)
   }

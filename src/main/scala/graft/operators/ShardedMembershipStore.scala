@@ -144,7 +144,7 @@ object ShardedMembershipStore {
     * finding: a per-shard read loop is N sequential Spark jobs per
     * probe call). The per-dir presence probes stay — they are driver
     * FS metadata calls, and each one also heals that shard's
-    * `.__old_` swap window. NOTE the probe-side residual the class
+    * swap window. NOTE the probe-side residual the class
     * doc owns: a projection probe must materialize the fleet of
     * filters once per query (it rides the plan, broadcast once per
     * stage with the task binary); at a store too big for one driver,

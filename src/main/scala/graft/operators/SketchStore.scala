@@ -66,8 +66,8 @@ object SketchStore {
       path: String): Unit = {
     val spark = df.sparkSession
     // heal the ROOT swap window BEFORE the presence probe: a crash
-    // between swap's two renames leaves the whole store only under
-    // `path.__old_`, and judging presence without healing would send
+    // between swap's two renames leaves the whole store only under its
+    // replaced copy, and judging presence without healing would send
     // the bootstrap branch off to rebuild the store from this one
     // batch — silently discarding every earlier generation
     IndexStores.healRoot(spark, path)
@@ -101,8 +101,8 @@ object SketchStore {
   }
 
   /** Read meta, healing the root swap window first — every public
-    * read path goes through here, so a store recoverable from
-    * `.__old_` is healed before any `$path/...` read can miss it.
+    * read path goes through here, so a store recoverable from its
+    * replaced copy is healed before any `$path/...` read can miss it.
     */
   private def metaOf(spark: SparkSession, path: String): (String, Int) = {
     IndexStores.healRoot(spark, path)

@@ -395,8 +395,8 @@ object VectorIndex {
     * rewrite drops exactly the rows the tombstone anti-join already
     * suppressed. Crash-safe order: codes, then vectors, then the
     * tombstone table — each store swap heals its own crash window on
-    * the next read ([[IndexStores.readStore]] restores a
-    * `.__old_`-only store), a replayed anti-join rewrite is a no-op,
+    * the next read ([[IndexStores.readStore]] restores a cut swap's
+    * store), a replayed anti-join rewrite is a no-op,
     * and the tombstone list keeps suppressing until it is the last
     * thing deleted.
     */

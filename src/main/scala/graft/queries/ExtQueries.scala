@@ -2121,7 +2121,7 @@ object ExtQueries {
   private def sq8StorePath(spark: SparkSession, dir: String): String =
     // cache the temp ROOT (the sibling caches' posture): evicting a
     // cached subdir would orphan the parent dir + any crashed
-    // .__staging_* sibling inside it
+    // staging sibling inside it
     sq8StoreCache.get(spark, dir) {
       val root = java.nio.file.Files
         .createTempDirectory("graft-sq8-index").toString

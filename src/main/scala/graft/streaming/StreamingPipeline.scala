@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types._
 
 import graft.core._
 import graft.operators.{IndexStores, MethodRoutedLoader, QueueExtractor}
@@ -98,18 +97,9 @@ object StreamingPipeline {
       .digest(checkpoint.getBytes("UTF-8"))
       .map("%02x".format(_)).mkString.take(8)
 
-  /** Changelog schema parity: `record_queue.sql:2-13`. */
-  val queueSchema: StructType = StructType(Seq(
-    StructField("sourceDatabase", StringType, nullable = false),
-    StructField("sourceTable", StringType, nullable = false),
-    StructField("pkColumn", StringType, nullable = false),
-    StructField("pkValue", StringType, nullable = false),
-    StructField("timestampUpdated", TimestampType, nullable = false),
-    StructField("method", StringType, nullable = false)))
-
   def changelogStream(spark: SparkSession, queuePath: String,
                       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val r = spark.readStream.schema(queueSchema)
+    val r = spark.readStream.schema(QueueExtractor.queueSchema)
     maxFilesPerTrigger.foreach(n => r.option("maxFilesPerTrigger", n))
     r.parquet(queuePath)
   }
@@ -143,9 +133,8 @@ object StreamingPipeline {
     */
   def start(spark: SparkSession, spec: PipelineSpec, checkpoint: String,
             trigger: Trigger): StreamingQuery = {
-    val queuePath = spec.queuePath.getOrElse(s"${spec.sourcePath}/MigratorRecordQueue")
     val transformer = Registry.transformer(spec.transformer)
-    val stream = changelogStream(spark, queuePath)
+    val stream = changelogStream(spark, QueueExtractor.queuePath(spec))
       .filter(col("sourceDatabase") === spec.sourceDatabase &&
         col("sourceTable") === spec.sourceTable)
     wire(stream, checkpoint, trigger) { (entries, _) =>

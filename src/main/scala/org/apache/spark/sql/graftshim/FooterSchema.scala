@@ -48,6 +48,12 @@ object FooterSchema {
     * fileless directory with its unable-to-infer-schema error, as the
     * inferring read does.
     */
+  /** Whether Spark's file listing skips an entry named `name`
+    * (dot- or underscore-prefixed, partition dirs like `_bucket=3` kept).
+    */
+  def hiddenName(name: String): Boolean =
+    org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
+
   def read(spark: SparkSession, paths: Seq[String], mergeSchema: Boolean): DataFrame = {
     // the read Spark would make, with nothing to infer yet: it lists the
     // files and infers the partition columns, and it starts no job

@@ -30,13 +30,24 @@ trait SparkSpec extends AnyFunSuite {
     * trace finishes each line on the bus.
     */
   def batchEvents[T](body: => T): (T, Seq[com.fasterxml.jackson.databind.JsonNode]) = {
+    val (r, lines) = logLines(classOf[graft.core.Pipeline].getName) {
+      val r = body
+      graft.core.Trace.flush(spark.sparkContext)
+      r
+    }
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    (r, lines.map(mapper.readTree))
+  }
+
+  /** The messages logger `name` logged at INFO or above while `body`
+    * ran, captured by a log4j appender.
+    */
+  def logLines[T](name: String)(body: => T): (T, Seq[String]) = {
     import scala.jdk.CollectionConverters._
     import org.apache.logging.log4j.{Level, LogManager}
     import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
     import org.apache.logging.log4j.core.appender.AbstractAppender
     import org.apache.logging.log4j.core.config.{Configurator, Property}
-    val sc = spark.sparkContext
-    val name = classOf[graft.core.Pipeline].getName
     val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val app = new AbstractAppender(s"capture-${java.util.UUID.randomUUID()}", null, null,
         true, Property.EMPTY_ARRAY) {
@@ -51,9 +62,7 @@ trait SparkSpec extends AnyFunSuite {
     ctx.updateLoggers()
     try {
       val r = body
-      graft.core.Trace.flush(sc)
-      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-      (r, lines.asScala.toSeq.map(mapper.readTree))
+      (r, lines.asScala.toSeq)
     } finally {
       cfg.removeAppender(app.getName)
       cfg.setAdditive(true)

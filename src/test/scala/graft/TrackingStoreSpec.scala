@@ -55,8 +55,34 @@ class TrackingStoreSpec extends SparkSpec {
     assert(byTable(store) === statuses)
     val moved = statuses.head.copy(sequentialPosition = 99L)
     store.put(moved)
-    assert(!new java.io.File(s"$root/v1").exists(), "superseded snapshot GC'd")
+    assert(new java.io.File(s"$root/v1").exists(), "the replaced snapshot is kept one put")
     assert(byTable(new TrackingStore(spark, root)) === moved +: statuses.tail)
+    store.put(moved)
+    assert(!new java.io.File(s"$root/v1").exists(), "older snapshots GC'd")
+    assert(new java.io.File(s"$root/v2").exists())
+  }
+
+  test("a second store reading while 200 puts run never fails") {
+    val root = tmpDir("trk-race")
+    val writer = new TrackingStore(spark, root)
+    writer.put(statuses.head)
+    @volatile var done = false
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val reads = new java.util.concurrent.atomic.AtomicInteger(0)
+    val reader = new Thread(() => {
+      do {
+        try {
+          assert(new TrackingStore(spark, root).get("a", "seq").isDefined)
+          reads.incrementAndGet()
+        } catch { case t: Throwable => failures.add(t) }
+      } while (!done)
+    })
+    reader.start()
+    try (1 to 200).foreach(i => writer.put(statuses.head.copy(sequentialPosition = i.toLong)))
+    finally { done = true; reader.join() }
+    assert(failures.isEmpty, s"${failures.size} of ${failures.size + reads.get} reads " +
+      s"failed, first: ${Option(failures.peek()).map(_.toString).orNull}")
+    assert(new TrackingStore(spark, root).get("a", "seq").get.sequentialPosition === 200L)
   }
 
   test("put starts no Spark job") {
