@@ -1,7 +1,8 @@
 package graft.core
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.graftshim.FooterSchema
 
 /** Plain-parquet "table directory" helpers: existence-tolerant reads and
@@ -31,6 +32,11 @@ import org.apache.spark.sql.graftshim.FooterSchema
   * Names an older build left (`<name>.__staging_<stamp>`,
   * `<name>.__old_<stamp>`) are read as the same two kinds, so a store
   * left mid-swap by that build still heals.
+  *
+  * It also owns a table's layout: [[layout]] reads it from one listing
+  * of the root (flat, `col=` partitions, or `_bucket=` hash buckets with
+  * their [[BucketMarker]]), and [[loadLayout]] states the one rule for
+  * what a load writes.
   */
 object ParquetTable {
 
@@ -177,9 +183,16 @@ object ParquetTable {
     */
   private[graft] def healChildren(spark: SparkSession, path: String): Unit = {
     val (dir, fs) = (new Path(path), fsOf(spark, new Path(path)))
-    val listed = names(fs, dir)
-    listed.flatMap(leftover).map(_.name).distinct
-      .foreach(n => settle(fs, new Path(dir, n), listed))
+    healChildren(fs, dir, names(fs, dir))
+  }
+
+  /** [[healChildren]] over `listed`, the entries of `dir`; true iff it
+    * found leftovers to settle.
+    */
+  private def healChildren(fs: FileSystem, dir: Path, listed: Seq[String]): Boolean = {
+    val healed = listed.flatMap(leftover).map(_.name).distinct
+    healed.foreach(n => settle(fs, new Path(dir, n), listed))
+    healed.nonEmpty
   }
 
   def exists(spark: SparkSession, path: String): Boolean = {
@@ -190,11 +203,16 @@ object ParquetTable {
   /** Name of the bucket-count marker file a hash-bucketed table carries
     * inside its directory. Underscore-prefixed so parquet readers ignore
     * it like `_SUCCESS`. The marker makes the layout self-describing:
-    * later loads (and the queue extractor's bucket-pruned lookups) read
-    * the count from the table instead of trusting a config value that
-    * could silently disagree with the physical hash partitioning.
+    * [[layout]] reads the count from the table instead of trusting a
+    * config value that could silently disagree with the physical hash
+    * partitioning.
     */
   val BucketMarker = "_graft_buckets"
+
+  /** Partition column of a hash-bucketed table, `pmod(xxhash64(pk), n)`:
+    * a system column, dropped by consumers that want the logical schema.
+    */
+  val BucketCol = "_bucket"
 
   def writeBucketMarker(spark: SparkSession, tablePath: String, n: Int): Unit = {
     val p = new Path(tablePath, BucketMarker)
@@ -205,22 +223,141 @@ object ParquetTable {
   def readBucketMarker(spark: SparkSession, tablePath: String): Option[Int] = {
     if (tablePath.startsWith("jdbc:")) return None
     val p = new Path(tablePath, BucketMarker)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(new String(
-        org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8").trim.toInt)
-      finally in.close()
+    val fs = fsOf(spark, p)
+    if (fs.exists(p)) Some(readMarker(fs, p)) else None
+  }
+
+  private def readMarker(fs: FileSystem, p: Path): Int = {
+    val in = fs.open(p)
+    try new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8").trim.toInt
+    finally in.close()
+  }
+
+  /** A table directory's physical layout, as [[layout]] reads it. */
+  sealed trait Layout
+
+  /** Data files at the root: `files`, none when the table is absent. */
+  final case class Flat(files: Seq[FileStatus]) extends Layout
+
+  /** `col=` partition directories. `buckets` is the hash bucket count of
+    * a [[BucketCol]]-partitioned table, read from its [[BucketMarker]].
+    */
+  final case class Partitioned(col: String, buckets: Option[Int]) extends Layout
+
+  /** The layout of the table at `path`, from one listing of its root.
+    * With `heal` (a writer about to load or compact the table) the root
+    * is healed first and the partitions a cut swap left out are healed
+    * from that listing; a reader passes false and changes nothing. A
+    * directory no load leaves fails loudly, naming the table:
+    * `_bucket=` dirs without the marker that records their hash, dirs of
+    * two partition columns, or data files beside partition dirs.
+    */
+  def layout(spark: SparkSession, path: String, heal: Boolean = true): Layout = {
+    if (path.startsWith("jdbc:")) return Flat(Nil)
+    val (p, fs) = (new Path(path), fsOf(spark, new Path(path)))
+    if (heal) this.heal(fs, p)
+    def list(): Seq[FileStatus] =
+      try fs.listStatus(p).toSeq catch { case _: java.io.FileNotFoundException => Nil }
+    val listed = list() match {
+      case l if heal && healChildren(fs, p, l.map(_.getPath.getName)) => list()
+      case l => l
+    }
+    val (dirs, files) = listed.filterNot(s => FooterSchema.hiddenName(s.getPath.getName))
+      .partition(_.isDirectory)
+    val cols = dirs.map(_.getPath.getName).filter(_.contains('='))
+      .map(d => ExternalCatalogUtils.unescapePathName(d.takeWhile(_ != '='))).distinct
+    val marker = listed.find(_.getPath.getName == BucketMarker).map(s => readMarker(fs, s.getPath))
+    def broken(what: String): Nothing = throw new IllegalStateException(
+      s"table $path holds $what, a layout no load leaves; repair or move it before loading")
+    if (cols.size > 1) broken(s"partition directories of ${cols.mkString(", ")}")
+    if ((cols.nonEmpty || marker.isDefined) && files.nonEmpty)
+      broken("data files beside its partition directories")
+    (cols.headOption, marker) match {
+      case (Some(BucketCol), None) =>
+        broken(s"`$BucketCol=` directories without the $BucketMarker file that records their hash")
+      case (Some(c), Some(_)) if c != BucketCol =>
+        broken(s"`$c=` directories beside a $BucketMarker file")
+      case (_, Some(n)) => Partitioned(BucketCol, Some(n))
+      case (Some(c), None) => Partitioned(c, None)
+      case (None, None) => Flat(files)
     }
   }
 
-  /** Marker lookup by (catalog root, table) — the layout the extract
-    * side sees. JDBC roots have no directory layout → None.
+  /** The layout a load writes into the table at `path`, found laid out
+    * as `found`; `rewrites` says whether the batch carries REPLACE or
+    * REMOVE rows. The one rule:
+    *  - an existing partitioned layout is law: config never changes it,
+    *    and a `PartitionBy` naming another column fails loudly;
+    *  - a flat or absent table takes the config: `PartitionBy` lays it
+    *    out by that column's values, `PartitionBuckets` > 0 into that
+    *    many hash buckets, and under [[Params.AutoBuckets]] a
+    *    rewrite-bearing load buckets it once it has grown past
+    *    [[autoBuckets]]' threshold. Otherwise it stays flat.
+    * A flat table given a partitioned layout is migrated by that load.
     */
-  def readBucketMarker(spark: SparkSession, root: String, table: String): Option[Int] =
-    if (root.startsWith("jdbc:")) None
-    else readBucketMarker(spark, s"$root/$table.parquet")
+  def loadLayout(path: String, found: Layout, params: Params, rewrites: Boolean): Layout =
+    found match {
+      case p: Partitioned =>
+        params.partitionByCol.filter(_ != p.col).foreach(c => throw new IllegalArgumentException(
+          s"table $path is partitioned by `${p.col}`, but PartitionBy names `$c`: " +
+            "a destination keeps the partition column it was laid out with"))
+        p
+      case Flat(files) =>
+        params.partitionByCol.map(Partitioned(_, None)).orElse(
+          (if (params.partitionBuckets > 0) Some(params.partitionBuckets)
+           else if (rewrites && params.partitionBuckets == Params.AutoBuckets)
+             autoBuckets(files.map(_.getLen).sum, params)
+           else None).map(n => Partitioned(BucketCol, Some(n))))
+          .getOrElse(found)
+    }
+
+  /** Auto-bucketing granule: buckets are sized to hold about this many
+    * BYTES of parquet (big enough that files stay healthy, small enough
+    * that a touched bucket is cheap to rewrite). Bytes, not rows, because
+    * the trigger must cost nothing per batch: the sizes come from the
+    * listing [[layout]] already took, never from a Spark job.
+    * Overridable per pipeline via `params.extra("autoBucketTargetBytes")`.
+    */
+  val TargetBytesPerBucket = 256L * 1024 * 1024
+
+  /** Bucketing must out-prune its overhead: migrate only when the bucket
+    * count would be at least this multiple of the pipeline's CONFIGURED
+    * batch size (the steady-state bound on rewrite keys per batch — the
+    * current batch's count would let one trickle batch lock in a layout
+    * that is pessimal for every full batch after it), i.e. a full batch
+    * still leaves ≥ (1 − 1/factor) of the table untouched.
+    * Overridable via `params.extra("autoBucketPruneFactor")`.
+    */
+  val PruneWorthyFactor = 8L
+
+  /** Bucket-count ceiling (directory-entry hygiene; at the cap buckets
+    * simply grow past the target size).
+    */
+  val MaxAutoBuckets = 65536
+
+  /** The bucket count a flat table of `tableBytes` migrates to under the
+    * auto policy, None while bucketing could not pay for itself. A batch
+    * of k random PKs over n buckets touches n·(1−e^(−k/n)) of them, so
+    * the rewritten fraction only drops below 1 when n ≫ k — a 32-bucket
+    * table under 1000-row batches rewrites EVERYTHING every batch and
+    * pays the partitioned write overhead on top (measured 3× slower than
+    * flat on a 1k-batch drain). So tables start flat and migrate once
+    * `bytes / TargetBytesPerBucket ≥ PruneWorthyFactor × batch size`, to
+    * n = 2^⌈log2(bytes/TargetBytesPerBucket)⌉ buckets (capped at
+    * [[MaxAutoBuckets]]); from then on a rewrite touches ≈ k of n
+    * buckets. At 100 TB that is the 65k-bucket cap (~1.5 GB each), and a
+    * 1k batch rewrites ~1.5% of the table instead of all of it.
+    */
+  private def autoBuckets(tableBytes: Long, params: Params): Option[Int] = {
+    val targetBytes = params.extra.get("autoBucketTargetBytes")
+      .map(_.toLong).getOrElse(TargetBytesPerBucket)
+    val factor = params.extra.get("autoBucketPruneFactor")
+      .map(_.toLong).getOrElse(PruneWorthyFactor)
+    val wanted = tableBytes.toDouble / targetBytes
+    if (wanted < math.max(2L, factor * math.max(1L, params.batchSize.toLong))) None
+    else Some(math.min(MaxAutoBuckets.toDouble,
+      math.pow(2, math.ceil(math.log(wanted) / math.log(2)))).toInt)
+  }
 
   /** The table at `path`, None when absent. Its schema is merged over
     * every file's footer (`mergeSchema`) because destinations evolve
@@ -241,12 +378,12 @@ object ParquetTable {
     publish(spark, path)(staged => df.write.mode("overwrite").parquet(staged.toString))
 
   /** [[overwriteAtomic]] with a partitioned staging write — used by the
-    * loader's flat→bucketed layout migration, where the replacement
-    * must land as `partitionCol=` directories in one staged swap.
+    * loader's flat→partitioned migration, where the replacement must
+    * land as `partitionCol=` directories in one staged swap.
     * `bucketMarker` writes the [[BucketMarker]] file INTO the staging
     * dir before the rename: data and layout marker then become visible
-    * in the same atomic swap (a marker written after the swap leaves a
-    * crash window where bucketed data reads as flat).
+    * in the same atomic swap (a marker written after the data leaves a
+    * crash window where bucketed data has no recorded hash).
     */
   def overwriteAtomicPartitioned(spark: SparkSession, path: String,
                                  df: DataFrame, partitionCol: String,
@@ -268,22 +405,9 @@ object ParquetTable {
   }
 
   /** Compact a table's small files (the debt a long-running append /
-    * streaming drain accumulates) into ~`targetRecordsPerFile`-row
-    * files via an atomic rewrite. The maintenance companion to
-    * streaming-mode loads, where per-trigger appends produce one file
-    * per micro-batch.
-    */
-  def compact(spark: SparkSession, path: String,
-              targetRecordsPerFile: Long = 1000000L): Unit =
-    read(spark, path).foreach { df =>
-      val total = df.count()
-      val files = math.max(1, math.ceil(total.toDouble / targetRecordsPerFile).toInt)
-      overwriteAtomic(spark, path, df.repartition(files))
-    }
-
-  /** [[compact]] with an explicit output file count — used when the
-    * caller already sized the target from file-listing metadata (bytes)
-    * and a row count() would be a second full-table pass.
+    * streaming drain accumulates) into `files` files via an atomic
+    * rewrite. The caller sizes `files` from the listing's bytes, so no
+    * row count() adds a second full-table pass.
     */
   def compactToFileCount(spark: SparkSession, path: String, files: Int): Unit =
     read(spark, path).foreach { df =>

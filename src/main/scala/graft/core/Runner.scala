@@ -179,7 +179,7 @@ final class Pipeline(spark: SparkSession, val spec: PipelineSpec,
     * no count(), no data read unless compaction actually runs — and the
     * post-compaction layout fails the trigger, so a large healthy table
     * is never rewritten again and again merely for being big. Runs only
-    * at drain boundaries; bucketed layouts are skipped (the flat
+    * at drain boundaries; partitioned layouts are skipped (the flat
     * rewrite would destroy the partition dirs the loader prunes by);
     * JDBC destinations have no files.
     */
@@ -191,22 +191,15 @@ final class Pipeline(spark: SparkSession, val spec: PipelineSpec,
     val trace = new Trace.Group(spark.sparkContext)
     try stage(ErrorContext.Compact, trace) { touchedTables.toSeq.foreach { table =>
       val path = s"${spec.destinationPath}/$table.parquet"
-      // both partitioned layouts keep their directories: bucketed
-      // tables are told by the marker, value-partitioned (PartitionBy)
-      // ones by config — compacting either would collapse the layout
-      if (spec.params.partitionByCol.isEmpty &&
-          ParquetTable.readBucketMarker(spark, path).isEmpty) {
-        val p = new org.apache.hadoop.fs.Path(path)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(p)) {
-          val files = fs.listStatus(p)
-            .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
-          val totalBytes = files.map(_.getLen).sum
+      // a partitioned layout keeps its directories: a flat compaction
+      // would collapse them
+      ParquetTable.layout(spark, path) match {
+        case ParquetTable.Flat(files) =>
           val desired = math.max(1L,
-            math.ceil(totalBytes.toDouble / Pipeline.CompactTargetFileBytes).toLong)
+            math.ceil(files.map(_.getLen).sum.toDouble / Pipeline.CompactTargetFileBytes).toLong)
           if (files.length > th && files.length >= 2 * desired)
             ParquetTable.compactToFileCount(spark, path, desired.toInt)
-        }
+        case _ =>
       }
     } } finally trace.report(_ => ())
   }

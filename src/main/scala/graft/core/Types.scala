@@ -50,34 +50,35 @@ final case class Params(
       * replacement for the reference's stubbed JS hook,
       * `transformer_js.go:24-84`). */
     expressions: Map[String, String] = Map.empty,
-    /** hash-bucket the destination table into this many partitions so
-      * REPLACE/REMOVE rewrites touch only affected partitions instead of
-      * the whole table (SURVEY §7.4 H1). 0 = unpartitioned;
-      * [[Params.AutoBuckets]] (the default) lets the loader decide: an
-      * existing table keeps its recorded layout, and an upsert-bearing
-      * flat table auto-migrates to a growth-sized bucket count once
-      * bucketing can out-prune its overhead (balls-in-bins math in
-      * [[graft.operators.MethodRoutedLoader]]; thresholds overridable
-      * via `extra("autoBucketTargetBytes")` /
-      * `extra("autoBucketPruneFactor")`). Insert-only tables stay flat
-      * (appends never rewrite, so bucketing would only cost small
-      * files). */
+    /** Destination layout. The rule, stated once in
+      * [[ParquetTable.loadLayout]]: an existing partitioned layout is
+      * law, and these two settings apply only to a flat or absent table,
+      * which the next load creates or migrates accordingly. A
+      * `PartitionBy` naming another column than a partitioned table's
+      * fails loudly, and so do `_bucket=` dirs without their marker.
+      *
+      * `partitionBuckets`: hash-bucket the table into this many
+      * partitions by PK, so REPLACE/REMOVE rewrites touch only the
+      * affected ones (SURVEY §7.4 H1). 0 = flat; [[Params.AutoBuckets]]
+      * (the default) keeps the table flat until a rewrite-bearing load
+      * finds it grown past the point where bucketing out-prunes its
+      * overhead (thresholds overridable via
+      * `extra("autoBucketTargetBytes")` /
+      * `extra("autoBucketPruneFactor")`). */
     partitionBuckets: Int = Params.AutoBuckets,
-    /** value-partition the destination by this (string or integral)
-      * column — the lakehouse layout for predicate pruning: incremental
-      * timestamp scans and any query filtering on the column read only
-      * the matching partition directories (`PartitionFilters` in the
-      * scan), and REPLACE/REMOVE rewrites touch only the partitions the
-      * batch's rows live in. Mutually exclusive with hash bucketing
-      * (`PartitionBuckets`): bucketing prunes by PRIMARY KEY for point
-      * upserts; `PartitionBy` prunes by PREDICATE columns for scans —
-      * pick per table. */
+    /** `partitionByCol`: value-partition the table by this (string or
+      * integral, per-key immutable) column — the lakehouse layout for
+      * predicate pruning: scans filtering on the column read only the
+      * matching directories, and rewrites touch only the partitions the
+      * batch's rows live in. Bucketing prunes by PRIMARY KEY for point
+      * upserts, `PartitionBy` by PREDICATE columns for scans; the two
+      * are mutually exclusive (see [[partitionBuckets]] for the rule). */
     partitionByCol: Option[String] = None,
     /** compact the destination at drain boundaries once it holds more
       * than this many data files (streaming-mode drains append ~one
       * file per micro-batch; the debt is bounded small files, SURVEY
       * §7.4). 0 (default) disables; flat parquet destinations only
-      * (bucketed layouts keep their partition dirs, JDBC has no
+      * (partitioned layouts keep their partition dirs, JDBC has no
       * files). */
     compactFileThreshold: Int = 0,
     /** free-form passthrough, reference `Parameters = map[string]any`. */

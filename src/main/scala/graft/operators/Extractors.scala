@@ -178,8 +178,8 @@ class TimestampFallbackExtractor(clock: () => Timestamp = () => new Timestamp(Sy
   * `extractor_queue.go:75-90`) is split and cast ONCE on the tiny queue
   * side, never concat-built per base row, so the join key is the base
   * table's own columns and min/max row-group pruning applies. When the
-  * base table is hash-bucketed (its dir carries a bucket-count marker,
-  * [[graft.core.ParquetTable.readBucketMarker]]), the base read is
+  * base table is hash-bucketed ([[graft.core.ParquetTable.layout]]
+  * reads the count from the table), the base read is
   * additionally pruned to the buckets the batch touches — an O(batch)
   * lookup like the reference's indexed point reads, not an O(table)
   * scan. Per SURVEY §7.4 H4 the batch is first deduped to the latest
@@ -376,15 +376,14 @@ object QueueExtractor extends Extractor {
     // buckets the batch touches (reference parity: indexed point
     // lookups, `extractor_queue.go:74-96`). The bucket-id collect is
     // bounded by the batch size.
-    val bucketed = ParquetTable.readBucketMarker(spark, spec.sourcePath,
-      spec.sourceTable).filter(_ => base0.columns.contains(MethodRoutedLoader.BucketCol))
-    val base = bucketed match {
-      case Some(nb) =>
+    val base = ParquetTable.layout(spark, s"${spec.sourcePath}/${spec.sourceTable}.parquet",
+        heal = false) match {
+      case ParquetTable.Partitioned(_, Some(nb)) =>
         val touched = updateKeys
           .select(pmod(xxhash64(pkCols.map(col): _*), lit(nb.toLong)).as("b"))
           .distinct().collect().map(_.getLong(0)).toSeq
         base0.filter(col(MethodRoutedLoader.BucketCol).isin(touched: _*))
-      case None => base0
+      case _ => base0
     }
 
     val updates = base

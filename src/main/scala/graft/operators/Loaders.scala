@@ -37,29 +37,18 @@ import graft.core._
   * local relation. The reference likewise ships one statement per
   * method inside one transaction (`loader_default.go:9-72`).
   *
-  * Destination layout (SURVEY §7.4 H1): upsert-bearing tables migrate
-  * to a PK-hash-bucketed directory layout ONCE bucketing can actually
-  * prune. The balls-in-bins math decides: a batch of k random PKs over
-  * n buckets touches n·(1−e^(−k/n)) of them, so the rewritten fraction
-  * only drops below 1 when n ≫ k — a 32-bucket table under 1000-row
-  * batches rewrites EVERYTHING every batch and pays the partitioned
-  * write overhead on top (measured 3× slower than flat on a 1k-batch drain).
-  * Auto policy therefore: tables START FLAT; when a rewrite-bearing
-  * load finds the flat table has grown to where
-  * `bytes / TargetBytesPerBucket ≥ PruneWorthyFactor × batch-keys`, it
-  * migrates to n = 2^⌈log2(bytes/TargetBytesPerBucket)⌉ buckets (capped
-  * at [[MaxAutoBuckets]]) in one rewrite and writes the marker. From
-  * then on a rewrite touches ≈ k buckets out of n; at 100 TB that is
-  * the 65k-bucket cap (~1.5 GB each) and a 1k batch rewrites ~1.5% of
-  * the table instead of all of it. The growth probe is a filesystem
-  * content summary, not a Spark job — flat small tables pay nothing. The layout is self-describing
-  * (a [[graft.core.ParquetTable.BucketMarker]] file records the count),
-  * which also lets the queue extractor prune its lookup joins. Layout
-  * resolution: an existing marker is LAW (a config value disagreeing
-  * with the physical hash partitioning would corrupt pruning); an
-  * explicit `PartitionBuckets` pins the layout at creation; insert-only
-  * tables stay flat (appends never rewrite; bucketing them would only
-  * fragment files).
+  * Destination layout (SURVEY §7.4 H1): the table decides it, once per
+  * load, through [[graft.core.ParquetTable.layout]] and
+  * [[graft.core.ParquetTable.loadLayout]], which state the rule: an
+  * existing partitioned layout is law, and config (`PartitionBy`,
+  * `PartitionBuckets`, or auto-bucketing once a flat table has grown)
+  * applies only to a flat or absent table. The load then takes one of
+  * two paths: flat, or partitioned by a column — hash bucketing being
+  * value partitioning on the derived column
+  * `_bucket = pmod(xxhash64(pk), n)`, whose count the table records in
+  * its marker. A flat or absent table given a partitioned layout is
+  * migrated by one staged publish of its whole new content, marker
+  * inside, so data and layout appear in one rename.
   *
   * Schema evolution: upsert batches may add or omit columns relative to
   * the destination (`allowMissingColumns` union) — absent sides fill
@@ -71,61 +60,7 @@ object MethodRoutedLoader {
   /** Partition column for bucketed destinations — a system column,
     * dropped by consumers that want the logical schema.
     */
-  val BucketCol = "_bucket"
-
-  /** Auto-migration granule: buckets are sized to hold about this many
-    * BYTES of parquet (big enough that files stay healthy, small enough
-    * that a touched bucket is cheap to rewrite). Bytes, not rows,
-    * because the trigger must cost nothing per batch — a filesystem
-    * content summary, never a Spark job. Overridable per pipeline via
-    * `params.extra("autoBucketTargetBytes")`.
-    */
-  val TargetBytesPerBucket = 256L * 1024 * 1024
-
-  /** Bucketing must out-prune its overhead: migrate only when the bucket
-    * count would be at least this multiple of the pipeline's CONFIGURED
-    * batch size (the steady-state bound on rewrite keys per batch — the
-    * current batch's count would let one trickle batch lock in a layout
-    * that is pessimal for every full batch after it), i.e. a full batch
-    * still leaves ≥ (1 − 1/factor) of the table untouched.
-    * Overridable via `params.extra("autoBucketPruneFactor")`.
-    */
-  val PruneWorthyFactor = 8L
-
-  /** Bucket-count ceiling (directory-entry hygiene; at the cap buckets
-    * simply grow past the target size).
-    */
-  val MaxAutoBuckets = 65536
-
-  /** Resolve the physical layout for this load. Marker > explicit param
-    * > auto (flat until growth-triggered migration, handled in [[load]]);
-    * see the class doc for the rules.
-    */
-  private def resolveBuckets(spark: SparkSession, target: String,
-                             params: Params): Int =
-    ParquetTable.readBucketMarker(spark, target) match {
-      case Some(n) => n // physical layout is law
-      case None if ParquetTable.exists(spark, target) => 0 // flat so far
-      case None =>
-        if (params.partitionBuckets == Params.AutoBuckets) 0 // start flat
-        else math.max(params.partitionBuckets, 0)
-    }
-
-  /** Growth-triggered migration decision for a flat table under the
-    * auto policy: returns the new bucket count when pruning has become
-    * worth the partitioned-write overhead (see class doc math).
-    */
-  private def autoMigrationBuckets(tableBytes: Long,
-                                   params: Params): Option[Int] = {
-    val targetBytes = params.extra.get("autoBucketTargetBytes")
-      .map(_.toLong).getOrElse(TargetBytesPerBucket)
-    val factor = params.extra.get("autoBucketPruneFactor")
-      .map(_.toLong).getOrElse(PruneWorthyFactor)
-    val wanted = tableBytes.toDouble / targetBytes
-    if (wanted < math.max(2L, factor * math.max(1L, params.batchSize.toLong))) None
-    else Some(math.min(MaxAutoBuckets.toDouble,
-      math.pow(2, math.ceil(math.log(wanted) / math.log(2)))).toInt)
-  }
+  val BucketCol: String = ParquetTable.BucketCol
 
   /** What a load's one action returns: the INSERT count and, for every
     * REPLACE/REMOVE row, its method followed by `keyCols` (the PK, plus
@@ -136,8 +71,10 @@ object MethodRoutedLoader {
     val removes: Long = rows.count(_.getString(0) == Method.Remove.name).toLong
     def replaces: Long = rows.length - removes
     def rewrites: Boolean = rows.nonEmpty
-    /** The touched rows' values of column `c`. */
-    def values(c: String): Seq[Any] = rows.map(_.getAs[Any](c))
+    /** The touched rows' values of column `c`; NULL (unknown) when the
+      * batch does not carry it. */
+    def values(c: String): Seq[Any] =
+      if (schema.fieldNames.contains(c)) rows.map(_.getAs[Any](c)) else rows.map(_ => null)
     /** One row of PK values per touched row, typed by [[keySchema]]. */
     def keys: Seq[Row] = rows.map(r => Row.fromSeq(pkCols.map(r.getAs[Any])))
     def keySchema: StructType = StructType(pkCols.map(schema(_)))
@@ -189,6 +126,16 @@ object MethodRoutedLoader {
            pkCols: Seq[String], params: Params): Map[String, Long] = {
     require(batch.df.columns.contains(Method.Col),
       s"batch for ${batch.table} lacks the ${Method.Col} column")
+    val target = s"$destPath/${batch.table}.parquet"
+    // the one layout decision, after healing the table. A value
+    // partition column rides along in the action when the batch carries
+    // it: the rewrite prunes to the values it touches
+    val found = ParquetTable.layout(spark, target)
+    val byValue = ParquetTable.loadLayout(target, found, params, rewrites = false) match {
+      case ParquetTable.Partitioned(c, None) if batch.df.columns.contains(c) && !pkCols.contains(c) =>
+        Seq(c)
+      case _ => Nil
+    }
     // NULL methods route to REPLACE like any other unknown verb
     // (`loader_default.go:20-26`) — without the coalesce they would fall
     // through every null-propagating bucket filter and be dropped while
@@ -196,17 +143,13 @@ object MethodRoutedLoader {
     val df = batch.df
       .withColumn(Method.Col, coalesce(col(Method.Col), lit(Method.Replace.name)))
       .cache()
-    val target = s"$destPath/${batch.table}.parquet"
 
     val methodOf = col(Method.Col)
     val inserts = df.filter(methodOf === Method.Insert.name).drop(Method.Col)
     val replaces = df.filter(methodOf =!= Method.Insert.name &&
       methodOf =!= Method.Remove.name).drop(Method.Col)
 
-    // the PartitionBy column rides along when the batch carries it: the
-    // value-partitioned rewrite prunes to the values it touches
-    val t = touchedBy(df, pkCols, pkCols ++ params.partitionByCol
-      .filter(c => df.columns.contains(c) && !pkCols.contains(c)))
+    val t = touchedBy(df, pkCols, pkCols ++ byValue)
     val (nIns, nRep) = (t.inserts, t.replaces)
 
     if (graft.sources.JdbcTable.isJdbc(destPath)) {
@@ -236,162 +179,81 @@ object MethodRoutedLoader {
       return t.counts
     }
 
-    // value-partitioned layout (PartitionBy) is an explicit, exclusive
-    // choice: an existing bucket marker still wins (physical layout is
-    // law), otherwise the column layout applies to every load
-    val marker = ParquetTable.readBucketMarker(spark, target)
-    // a partitioned load first heals partitions a cut swap left out of
-    // the table: its rewrite keeps the untouched rows of what it finds,
-    // and an append would recreate the partition beside its only copy
-    if (params.partitionByCol.isDefined || marker.isDefined)
-      ParquetTable.healChildren(spark, target)
-    if (params.partitionByCol.isDefined && marker.isEmpty) {
-      loadValuePartitioned(spark, target, params, params.partitionByCol.get,
-        inserts, replaces, t)
-      df.unpersist()
-      return t.counts
-    }
-
-    var buckets = resolveBuckets(spark, target, params)
-    // growth-triggered auto-migration: a flat table under the auto
-    // policy converts to a bucketed layout once pruning beats the
-    // partitioned-write overhead (class doc math). The size probe is a
-    // filesystem content summary — no Spark job per batch; the
-    // migration itself is one table rewrite, amortised over every
-    // pruned rewrite after it.
-    if (buckets == 0 && t.rewrites &&
-        params.partitionBuckets == Params.AutoBuckets &&
-        ParquetTable.exists(spark, target)) {
-      val tp = new Path(target)
-      val bytes = tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .getContentSummary(tp).getLength
-      autoMigrationBuckets(bytes, params).foreach { n =>
-        val existing = ParquetTable.read(spark, target).get
-        // marker rides inside the staged directory so layout + marker
-        // swap in atomically — a crash can never leave bucketed data
-        // that the next load would misread as flat
-        ParquetTable.overwriteAtomicPartitioned(spark, target,
-          existing.withColumn(BucketCol,
-            pmod(xxhash64(pkCols.map(col): _*), lit(n.toLong))), BucketCol,
-          bucketMarker = Some(n))
-        buckets = n
-      }
-    }
-    if (buckets > 0)
-      loadBucketed(spark, target, pkCols, params, buckets, inserts, replaces, t)
-    else {
-      if (t.rewrites) {
-        val kept = ParquetTable.read(spark, target) match {
-          case Some(existing) => existing.filter(untouched(t))
-          case None           => replaces.limit(0) // empty, replaces schema
+    ParquetTable.loadLayout(target, found, params, t.rewrites) match {
+      case ParquetTable.Partitioned(pcol, buckets) =>
+        loadPartitioned(spark, target, pkCols, params, pcol, buckets,
+          migrate = found.isInstanceOf[ParquetTable.Flat], inserts, replaces, t)
+      case _ =>
+        if (t.rewrites) {
+          val kept = ParquetTable.read(spark, target) match {
+            case Some(existing) => existing.filter(untouched(t))
+            case None           => replaces.limit(0) // empty, replaces schema
+          }
+          ParquetTable.overwriteAtomic(spark, target,
+            kept.unionByName(replaces, allowMissingColumns = true))
         }
-        ParquetTable.overwriteAtomic(spark, target,
-          kept.unionByName(replaces, allowMissingColumns = true))
-      }
-      if (nIns > 0)
-        ParquetTable.append(spark, target, inserts, params.insertBatchSize)
+        if (nIns > 0)
+          ParquetTable.append(spark, target, inserts, params.insertBatchSize)
     }
 
     df.unpersist()
     t.counts
   }
 
-  /** Value-partitioned destination (`PartitionBy`): the lakehouse layout
-    * for PREDICATE pruning — incremental timestamp scans and any filter
-    * on the partition column read only matching directories
-    * (`PartitionFilters` in the scan), and REPLACE/REMOVE rewrites
-    * touch only the partitions the batch's rows live in.
+  /** Load into a table partitioned by `pcol`: by its values
+    * (`PartitionBy`), or by hash into `buckets` ([[BucketCol]]). A value
+    * layout serves PREDICATE pruning (scans filtering on the column read
+    * only matching directories); a bucketed one prunes by PRIMARY KEY
+    * for point upserts, and lets the queue extractor prune its lookups.
+    * Either way a REPLACE/REMOVE rewrites only the partitions the
+    * batch's rows live in ([[rewritePartitions]]) and INSERTs append
+    * partitioned.
     *
-    * Pruning contract: the partition column must be IMMUTABLE per key
-    * (creation date, region, tenant — the standard lakehouse
-    * constraint). An update that moved a row across partitions would
-    * leave its old version untouched in an unpruned partition. Rows
-    * whose partition value is unknown (NULL — e.g. a CDC-synthesized
-    * REMOVE that only carries the PK) make the batch unprunable: the
-    * load falls back to one full anti-join rewrite, still written in
-    * the partitioned layout.
-    *
-    * Same read-before-overwrite discipline as [[loadBucketed]]: rewrite
-    * output is fully staged before any target partition is swapped, and
-    * a partition emptied by REMOVEs is deleted in the same pass (its
-    * dir name derived with the exact escaping Spark's writer uses).
+    * Pruning contract for a value layout: the partition column must be
+    * IMMUTABLE per key (creation date, region, tenant — the standard
+    * lakehouse constraint). An update that moved a row across partitions
+    * would leave its old version untouched in an unpruned partition.
+    * Rows whose value is unknown (NULL, or a batch without the column —
+    * e.g. a CDC-synthesized REMOVE that only carries the PK) make the
+    * batch unprunable. Such a batch, and a `migrate` of a flat or absent
+    * table, is one staged publish of the whole new table: its untouched
+    * rows, the replacements and the inserts, marker inside.
     */
-  private def loadValuePartitioned(spark: SparkSession, target: String,
-                                   params: Params, pcol: String,
-                                   inserts: DataFrame, replaces: DataFrame,
-                                   t: Touched): Unit = {
-    val p = new Path(target)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
+  private def loadPartitioned(spark: SparkSession, target: String, pkCols: Seq[String],
+                              params: Params, pcol: String, buckets: Option[Int],
+                              migrate: Boolean, inserts: DataFrame, replaces: DataFrame,
+                              t: Touched): Unit = {
+    def laidOut(d: DataFrame): DataFrame = buckets.fold(d)(n =>
+      d.withColumn(BucketCol, pmod(xxhash64(pkCols.map(col): _*), lit(n.toLong))))
     // partition-dir names must round-trip values exactly; permit the
     // types whose toString matches Spark's partition encoding. Checked
     // on EVERY load (insert-only ones included): an unsupported type
     // must fail before it lays out a table no rewrite could service
-    inserts.schema.find(_.name == pcol).foreach { f =>
+    if (buckets.isEmpty) inserts.schema.find(_.name == pcol).foreach { f =>
       require(Seq("string", "bigint", "int", "smallint", "tinyint")
         .contains(f.dataType.simpleString),
         s"PartitionBy column `$pcol` must be string or integral, got ${f.dataType}")
     }
-
-    // layout guard: a destination seeded BEFORE PartitionBy was
-    // configured holds root-level data files. Writing partition dirs
-    // next to them would duplicate replaced rows and break partition
-    // discovery, so such a table is migrated to the partitioned layout
-    // in one atomic rewrite first (mirror of the bucket-marker "physical
-    // layout is law" rule, with the flat files as the tell).
-    def isFlatLayout: Boolean = fs.exists(p) &&
-      fs.listStatus(p).exists(s => s.isFile && s.getPath.getName.startsWith("part-"))
-    if (isFlatLayout)
-      ParquetTable.read(spark, target).foreach { existing =>
-        ParquetTable.overwriteAtomicPartitioned(spark, target, existing, pcol)
-      }
-
-    if (t.rewrites) {
-      val existing = ParquetTable.read(spark, target)
-      val touchedVals = t.values(pcol).distinct
-      if (!touchedVals.contains(null) && existing.isDefined)
-        rewritePartitions(spark, target, existing, pcol, touchedVals, replaces, t)
-      else ParquetTable.overwriteAtomicPartitioned(spark, target,
-        existing.map(_.filter(untouched(t))).getOrElse(replaces.limit(0))
-          .unionByName(replaces, allowMissingColumns = true), pcol)
-    }
-    if (t.inserts > 0) appendPartitioned(inserts, pcol, target, params)
-  }
-
-  /** Partition-pruned variant (SURVEY §7.4 H1): REPLACE/REMOVE computes
-    * the touched bucket set from the batch keys (≤ batch size) and
-    * rewrites ONLY those partitions — the target read is partition-
-    * pruned by the same bucket filter.
-    *
-    * The rewritten rows are fully materialised into a staging directory
-    * BEFORE any target partition is touched (read-before-overwrite
-    * safety: the output derives from the partitions it replaces, and on
-    * a cluster a lost executor would otherwise recompute it from a
-    * half-overwritten target — a `cache()` is only a hint, not a
-    * barrier). Staged partitions are then swapped in per bucket; a
-    * bucket emptied by REMOVEs produces no staged partition and its
-    * stale directory is deleted by the same per-bucket pass.
-    */
-  private def loadBucketed(spark: SparkSession, target: String,
-                           pkCols: Seq[String], params: Params, n: Int,
-                           inserts: DataFrame, replaces: DataFrame,
-                           t: Touched): Unit = {
-    def bucketed(d: DataFrame): DataFrame =
-      d.withColumn(BucketCol, pmod(xxhash64(pkCols.map(col): _*), lit(n.toLong)))
-
-    if (t.rewrites) {
-      // the batch's own hash over the driver-held keys: a projection of
-      // a local relation, evaluated on the driver with no job
-      val touched = bucketed(spark.createDataFrame(t.keys.asJava, t.keySchema))
+    if (!t.rewrites && t.inserts == 0) return
+    // the touched buckets are the batch's own hash over the driver-held
+    // keys: a projection of a local relation, evaluated with no job
+    val touched: Seq[Any] = buckets match {
+      case None => t.values(pcol).distinct
+      case Some(_) => laidOut(spark.createDataFrame(t.keys.asJava, t.keySchema))
         .select(BucketCol).collect().map(_.getLong(0)).distinct.toSeq
-      rewritePartitions(spark, target, ParquetTable.read(spark, target), BucketCol, touched,
-        bucketed(replaces), t)
     }
-    if (t.inserts > 0) appendPartitioned(bucketed(inserts), BucketCol, target, params)
-    // self-describing layout: later loads and the extract side's bucket
-    // pruning read the count from the table, never from config
-    if (ParquetTable.readBucketMarker(spark, target).isEmpty)
-      ParquetTable.writeBucketMarker(spark, target, n)
+    if (migrate || touched.contains(null))
+      ParquetTable.overwriteAtomicPartitioned(spark, target,
+        laidOut(ParquetTable.read(spark, target).map(_.filter(untouched(t)))
+          .getOrElse(replaces.limit(0))
+          .unionByName(replaces, allowMissingColumns = true)
+          .unionByName(inserts, allowMissingColumns = true)), pcol, buckets)
+    else {
+      if (t.rewrites)
+        rewritePartitions(spark, target, ParquetTable.read(spark, target).get, pcol, touched,
+          laidOut(replaces), t)
+      if (t.inserts > 0) appendPartitioned(laidOut(inserts), pcol, target, params)
+    }
   }
 
   /** Rewrite the partitions `touched` of `target` (partitioned by
@@ -403,23 +265,19 @@ object MethodRoutedLoader {
     * values ⊆ touched values, so it has none) is retired. A crash
     * between a partition's two swap renames leaves its replaced copy,
     * which the retried load heals before it reads
-    * ([[ParquetTable.healChildren]]).
+    * ([[ParquetTable.layout]]).
     * Directory names use the escaping Spark's writer uses.
     */
   private def rewritePartitions(spark: SparkSession, target: String,
-                                existing: Option[DataFrame], pcol: String, touched: Seq[Any],
+                                existing: DataFrame, pcol: String, touched: Seq[Any],
                                 replaces: DataFrame, t: Touched): Unit = {
     import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    val kept = existing match {
-      case Some(e) => e.filter(col(pcol).isin(touched: _*)).filter(untouched(t)) // partition pruning
-      case None => replaces.limit(0)
-    }
-    val out = kept.unionByName(replaces, allowMissingColumns = true)
+    val out = existing.filter(col(pcol).isin(touched: _*)).filter(untouched(t)) // partition pruning
+      .unionByName(replaces, allowMissingColumns = true)
     val p = new Path(target)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val staging = ParquetTable.staging(fs, p)
     out.write.mode("overwrite").partitionBy(pcol).parquet(staging.toString)
-    if (!fs.exists(p)) fs.mkdirs(p)
     touched.foreach { v =>
       val dir = ExternalCatalogUtils.getPartitionPathString(pcol, String.valueOf(v))
       val (live, staged) = (new Path(p, dir), new Path(staging, dir))

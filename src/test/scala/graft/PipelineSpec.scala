@@ -61,7 +61,7 @@ class CompactionSpec extends SparkSpec {
     }
     def files = new java.io.File(p).listFiles.count(_.getName.endsWith(".parquet"))
     assert(files >= 20)
-    graft.core.ParquetTable.compact(spark, p, targetRecordsPerFile = 100)
+    graft.core.ParquetTable.compactToFileCount(spark, p, files = 1)
     assert(files === 1)
     val got = spark.read.parquet(p).orderBy("id")
       .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
