@@ -1,9 +1,10 @@
 package graft.core
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.graftshim.FooterSchema
+import org.apache.spark.sql.types.StructType
 
 /** Plain-parquet "table directory" helpers: existence-tolerant reads and
   * the ONE staged swap every persisted generation is published through.
@@ -390,8 +391,33 @@ object ParquetTable {
                                  bucketMarker: Option[Int] = None): Unit =
     publish(spark, path) { staged =>
       df.write.mode("overwrite").partitionBy(partitionCol).parquet(staged.toString)
+      // no rows, so no partition was written: keep one, or the table
+      // would lose its schema. A bucketed table keeps bucket 0, a value
+      // layout a partition it had; one never laid out stays flat
+      if (partitionDirs(fsOf(spark, staged), staged).isEmpty) {
+        val p = new Path(path)
+        val keep = if (bucketMarker.isDefined) Some(s"$partitionCol=0")
+          else partitionDirs(fsOf(spark, p), p).headOption
+        keep match {
+          case Some(d) => writeEmpty(spark, new Path(staged, d),
+            StructType(df.schema.filterNot(_.name == partitionCol)))
+          case None => writeEmpty(spark, staged, df.schema)
+        }
+      }
       bucketMarker.foreach(n => writeBucketMarker(spark, staged.toString, n))
     }
+
+  /** The visible partition directories of `dir` (`col=value` names). */
+  private[graft] def partitionDirs(fs: FileSystem, dir: Path): Seq[String] =
+    names(fs, dir).filter(n => n.contains('=') && !FooterSchema.hiddenName(n))
+
+  /** Write one empty parquet file of `schema` into `dir`, replacing what
+    * it holds: the file a generation without rows keeps so that its
+    * schema stays readable.
+    */
+  private[graft] def writeEmpty(spark: SparkSession, dir: Path, schema: StructType): Unit =
+    spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+      .write.mode("overwrite").parquet(dir.toString)
 
   /** Write a new generation of `path` with `write` into a fresh staging
     * dir, then [[swap]] it in.

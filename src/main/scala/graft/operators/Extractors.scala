@@ -4,8 +4,9 @@ import java.sql.Timestamp
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.FooterSchema
+import org.apache.spark.sql.graftshim.{ColumnBridge, FooterSchema}
 import org.apache.spark.sql.types._
 
 import graft.core._
@@ -24,6 +25,14 @@ import graft.core._
   * no global sort, no full shuffle. Unlike the reference's unordered
   * `LIMIT` (MySQL-arbitrary subset), our batches are deterministic
   * (SURVEY §7.4 H5, an intentional semantic upgrade).
+  *
+  * The ordered disciplines (sequential, timestamp) also bound the read
+  * from above ([[footerBound]]): the reference's index range scan reads
+  * about the batch, and `key > pos` alone reads every row past the
+  * position. The parquet footers give each row group's key range and
+  * count; `key <= u` for the smallest `u` whose wholly-covered groups
+  * hold the batch prunes the read to at most one partial group plus the
+  * whole groups the batch needs, and never changes the batch.
   */
 trait Extractor {
   def name: String
@@ -38,6 +47,29 @@ trait Extractor {
     graft.sources.Tables.readTable(spark, spec.sourcePath, spec.sourceTable)
 
   protected def now(): Timestamp = new Timestamp(System.currentTimeMillis())
+
+  /** `key <= u` for the smallest `u` such that the row groups of `src`
+    * lying wholly in `(pos, u]` (`pos` None: unbounded below) hold at
+    * least `n` non-NULL keys, from the footers
+    * ([[FooterSchema.columnStats]]; `pos` and `u` are the key's internal
+    * values). Exact: at least `n` rows lie in `(pos, u]`, so the `n`
+    * smallest keys past `pos` are all `<= u`, ties at `u` included, and
+    * an ordered limit over `key > pos AND key <= u` takes the batch it
+    * takes without the bound. None (the unbounded read) when the footers
+    * cannot bound the key — a non-parquet or JDBC source, a partition or
+    * derived key, a type whose stored value is not Spark's — or when the
+    * groups past `pos` hold fewer than `n` rows.
+    */
+  protected def footerBound(spark: SparkSession, src: DataFrame, key: String,
+                            pos: Option[Long], n: Int): Option[Column] =
+    FooterSchema.columnStats(spark, src, key).flatMap { groups =>
+      groups.filter(g => pos.forall(g.min > _)).sortBy(_.max).iterator
+        .scanLeft((0L, 0L)) { case ((_, rows), g) => (g.max, rows + g.nonNull) }
+        .drop(1).find(_._2 >= n).map(_._1)
+    }.map { u =>
+      val dt = if (src.schema(key).dataType == TimestampType) TimestampType else LongType
+      col(key) <= ColumnBridge.column(Literal(u, dt))
+    }
 }
 
 /** Keyset pagination on an integer key:
@@ -63,8 +95,10 @@ object SequentialExtractor extends Extractor {
     // runner's unpersist wouldn't match it) and, on an idle poll whose
     // position didn't move, poison the next identical plan with the
     // stale empty result (see ExtractResult.cleanup).
-    val batch = source(spark, spec)
-      .filter(col(key) > lit(status.sequentialPosition))
+    val src = source(spark, spec)
+    val past = src.filter(col(key) > lit(status.sequentialPosition))
+    val batch = footerBound(spark, src, key, Some(status.sequentialPosition), n)
+      .fold(past)(past.filter)
       .orderBy(spec.keyColumns.map(col): _*)
       .limit(n)
       .withColumn(Method.Col, lit(method.name))
@@ -96,6 +130,11 @@ class TimestampExtractor(val name: String = "timestamp",
   /** Position expression; the fallback subclass coalesces two columns. */
   protected def posExpr(spec: PipelineSpec): Column = col(spec.keyColumns.head)
 
+  /** The stored column the position is, which [[footerBound]] bounds;
+    * None for a derived position.
+    */
+  protected def posColumn(spec: PipelineSpec): Option[String] = Some(spec.keyColumns.head)
+
   override def validate(spark: SparkSession, spec: PipelineSpec): Unit = {
     val schema = source(spark, spec).schema
     spec.keyColumns.foreach { k =>
@@ -113,7 +152,14 @@ class TimestampExtractor(val name: String = "timestamp",
       .getOrElse(lit(true))
     val nowTs = clock()
     val upper = if (spec.params.onlyPast) pos <= lit(nowTs) else lit(true)
-    val probe = source(spark, spec)
+    // the footer bound leaves OnlyPast's batch as it is: if u > now, no
+    // row past u passes `<= now`; otherwise every row in (wm, u] does
+    val src = source(spark, spec)
+    val bounded = posColumn(spec)
+      .flatMap(c => footerBound(spark, src, c,
+        status.timestampPosition.map(Literal(_).value.asInstanceOf[Long]), n))
+      .fold(src)(src.filter)
+    val probe = bounded
       .filter(lower && upper)
       .orderBy(pos)
       .limit(n)
@@ -142,9 +188,9 @@ class TimestampExtractor(val name: String = "timestamp",
         val below = probe.filter(pos < lit(top.get)).agg(max(pos)).head()
         if (!below.isNullAt(0)) {
           val wm = toTs(below.get(0))
-          (source(spark, spec).filter(lower && upper && pos <= lit(wm)), Some(wm))
+          (bounded.filter(lower && upper && pos <= lit(wm)), Some(wm))
         } else
-          (source(spark, spec).filter(lower && upper && pos <= lit(top.get)), top)
+          (bounded.filter(lower && upper && pos <= lit(top.get)), top)
       } else (probe, top.orElse(status.timestampPosition))
     ExtractResult(
       batch.withColumn(Method.Col, lit(Method.Replace.name)),
@@ -164,6 +210,9 @@ class TimestampFallbackExtractor(clock: () => Timestamp = () => new Timestamp(Sy
       s"timestamp_fallback needs two comma-separated columns, got ${spec.sourceKey}")
     coalesce(col(spec.keyColumns.head), col(spec.keyColumns(1)))
   }
+
+  // a coalesced position has no footer statistics of its own
+  override protected def posColumn(spec: PipelineSpec): Option[String] = None
 }
 
 /** Trigger-fed CDC changelog scan (reference `extractor_queue.go:17-172`):
@@ -464,15 +513,24 @@ object QueueExtractor extends Extractor {
     // batch was never acked and the retry re-snapshots from the queue.
     val dir = s"${inflightRoot(spec)}/b_${java.util.UUID.randomUUID()}"
     view.write.mode("overwrite").parquet(dir)
-    // the schema is the view's own (no inference job, and a fileless
-    // empty snapshot reads as empty); the row count is the footers'
-    // (a driver-side metadata read, no count job). One partition: the
-    // snapshot is one file of ≤ batchSize rows, and a single partition
-    // satisfies the last-write-wins window's clustering with no exchange
-    val entries = spark.read.schema(view.schema).parquet(dir).coalesce(1)
+    // the row count is the footers' (a driver-side metadata read, no
+    // count job)
     val cnt = IndexStores.parquetFooterRows(spark, dir).getOrElse(0L)
-
-    val batch = changeBatch(spark, spec, entries)
+    val batch =
+      if (cnt == 0) {
+        // an idle poll: an empty local batch of the change batch's schema.
+        // Over no entries the change batch plans to an empty relation, so
+        // resolving its schema starts no job, and the loader loads an
+        // empty local batch without one
+        val none = java.util.Collections.emptyList[org.apache.spark.sql.Row]()
+        spark.createDataFrame(none,
+          changeBatch(spark, spec, spark.createDataFrame(none, view.schema)).schema)
+      } else
+        // the schema is the view's own (no inference job). One partition:
+        // the snapshot is one file of ≤ batchSize rows, and a single
+        // partition satisfies the last-write-wins window's clustering
+        // with no exchange
+        changeBatch(spark, spec, spark.read.schema(view.schema).parquet(dir).coalesce(1))
 
     val ack = () => {
       // Ack by MOVING the consumed snapshot's data files into the ack

@@ -3,10 +3,14 @@ package graft.operators
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.analysis.TypeCoercion
+import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.ColumnBridge
+import org.apache.spark.sql.graftshim.KeySet
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
 import graft.core._
@@ -100,23 +104,37 @@ object MethodRoutedLoader {
     * the target, with the join's NULL semantics: a target row with a
     * NULL PK component is kept, and a touched key with a NULL component
     * matches nothing. The key set is the driver-held [[Touched.keys]],
-    * typed as the batch's PK columns, so the predicate plans with no
-    * job (an `InSet` once it is past a handful of keys).
+    * so the predicate plans with no job: one [[KeySet]] node, which
+    * neither walks nor prints one literal per key.
     */
-  private def untouched(t: Touched): Column = {
+  private def untouched(target: DataFrame, t: Touched): DataFrame = {
     val complete = t.keys.filterNot(r => (0 until r.length).exists(r.isNullAt)).distinct
-    if (complete.isEmpty) lit(true)
-    else {
-      val fields = t.keySchema.fields.toSeq
-      val (value, lits) =
-        if (fields.size == 1)
-          (col(fields.head.name), complete.map(r => Literal.create(r.get(0), fields.head.dataType)))
-        else
-          (struct(fields.map(f => col(f.name)): _*),
-            complete.map(r => Literal.create(r, t.keySchema)))
-      fields.map(f => col(f.name).isNull).reduce(_ || _) ||
-        !value.isin(lits.map(ColumnBridge.column): _*)
+    if (complete.isEmpty) return target
+    // compared in the wider of each key column's two types, as `In`
+    // coerces them: a widening cast of the target column and of the keys
+    val fields = t.keySchema.fields.toSeq.map { f =>
+      val targetType = target.schema(f.name).dataType
+      f -> TypeCoercion.findWiderTypeForTwo(f.dataType, targetType).getOrElse(
+        throw new IllegalArgumentException(s"key column `${f.name}` of the batch is " +
+          s"${f.dataType.simpleString}, of the table ${targetType.simpleString}"))
     }
+    def widened(i: Int, v: Any): Any = {
+      val (f, wide) = fields(i)
+      if (f.dataType == wide) v
+      else CatalystTypeConverters.convertToScala(
+        Cast(Literal.create(v, f.dataType), wide, Some(SQLConf.get.sessionLocalTimeZone)).eval(),
+        wide)
+    }
+    val (value, dt, values) =
+      if (fields.size == 1)
+        (col(fields.head._1.name).cast(fields.head._2), fields.head._2,
+          complete.map(r => widened(0, r.get(0))))
+      else
+        (struct(fields.map { case (f, wide) => col(f.name).cast(wide).as(f.name) }: _*),
+          StructType(fields.map { case (f, wide) => f.copy(dataType = wide) }),
+          complete.map(r => Row.fromSeq(fields.indices.map(i => widened(i, r.get(i))))))
+    target.filter(fields.map(f => col(f._1.name).isNull).reduce(_ || _) ||
+      !KeySet.column(value, dt, values))
   }
 
   /** @return rows loaded per method, for logging/metrics parity with the
@@ -135,6 +153,11 @@ object MethodRoutedLoader {
       case ParquetTable.Partitioned(c, None) if batch.df.columns.contains(c) && !pkCols.contains(c) =>
         Seq(c)
       case _ => Nil
+    }
+    // an empty local batch (an idle queue poll) loads nothing, with no job
+    batch.df.queryExecution.logical match {
+      case l: LocalRelation if l.data.isEmpty => return Touched(0L, Nil, l.schema, pkCols).counts
+      case _ =>
     }
     // NULL methods route to REPLACE like any other unknown verb
     // (`loader_default.go:20-26`) — without the coalesce they would fall
@@ -186,7 +209,7 @@ object MethodRoutedLoader {
       case _ =>
         if (t.rewrites) {
           val kept = ParquetTable.read(spark, target) match {
-            case Some(existing) => existing.filter(untouched(t))
+            case Some(existing) => untouched(existing, t)
             case None           => replaces.limit(0) // empty, replaces schema
           }
           ParquetTable.overwriteAtomic(spark, target,
@@ -244,7 +267,7 @@ object MethodRoutedLoader {
     }
     if (migrate || touched.contains(null))
       ParquetTable.overwriteAtomicPartitioned(spark, target,
-        laidOut(ParquetTable.read(spark, target).map(_.filter(untouched(t)))
+        laidOut(ParquetTable.read(spark, target).map(untouched(_, t))
           .getOrElse(replaces.limit(0))
           .unionByName(replaces, allowMissingColumns = true)
           .unionByName(inserts, allowMissingColumns = true)), pcol, buckets)
@@ -262,7 +285,10 @@ object MethodRoutedLoader {
     * completes its read of the partitions it replaces; then each touched
     * partition with a staged replacement is swapped in
     * ([[ParquetTable.swap]]), and each the rewrite emptied (output
-    * values ⊆ touched values, so it has none) is retired. A crash
+    * values ⊆ touched values, so it has none) is retired — except that a
+    * rewrite emptying every partition keeps one, holding an empty file
+    * of the table's schema, so the table stays readable and keeps its
+    * layout. A crash
     * between a partition's two swap renames leaves its replaced copy,
     * which the retried load heals before it reads
     * ([[ParquetTable.layout]]).
@@ -272,14 +298,22 @@ object MethodRoutedLoader {
                                 existing: DataFrame, pcol: String, touched: Seq[Any],
                                 replaces: DataFrame, t: Touched): Unit = {
     import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    val out = existing.filter(col(pcol).isin(touched: _*)).filter(untouched(t)) // partition pruning
+    val out = untouched(existing.filter(col(pcol).isin(touched: _*)), t) // partition pruning
       .unionByName(replaces, allowMissingColumns = true)
     val p = new Path(target)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val staging = ParquetTable.staging(fs, p)
     out.write.mode("overwrite").partitionBy(pcol).parquet(staging.toString)
-    touched.foreach { v =>
-      val dir = ExternalCatalogUtils.getPartitionPathString(pcol, String.valueOf(v))
+    val dirs = touched.map(v => ExternalCatalogUtils.getPartitionPathString(pcol, String.valueOf(v)))
+    // a rewrite that leaves no partition keeps the last one it empties,
+    // as one empty file: the table keeps its schema and its layout
+    val refilled = dirs.filter(d => fs.exists(new Path(staging, d)))
+    val emptied = dirs.filter(d => !refilled.contains(d) && fs.exists(new Path(p, d)))
+    if (refilled.isEmpty && emptied.nonEmpty &&
+        ParquetTable.partitionDirs(fs, p).forall(dirs.contains))
+      ParquetTable.writeEmpty(spark, new Path(staging, emptied.last),
+        StructType(out.schema.filterNot(_.name == pcol)))
+    dirs.foreach { dir =>
       val (live, staged) = (new Path(p, dir), new Path(staging, dir))
       if (fs.exists(staged)) ParquetTable.swap(fs, live, staged)
       else if (fs.exists(live)) ParquetTable.retire(fs, live)

@@ -1,6 +1,9 @@
 package graft.operators
 
+import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.KeySet
+import org.apache.spark.sql.types.StringType
 
 import graft.core._
 
@@ -128,14 +131,16 @@ object QualityFilterTransformer extends Transformer {
   * nothing about its sibling columns. Rows with a NULL dedup value
   * pass through too ("no content" is not one piece of shared content).
   *
-  * Scale shape: the batch side is ≤ BatchSize rows, so both joins
-  * BROADCAST the batch, never the destination — the destination
-  * contributes one column-pruned scan of the fingerprint column per
-  * batch (`left_semi` against the broadcast batch yields the ≤ batch
-  * collision set, which then anti-joins the batch). The destination is
-  * never shuffled. At 100 TB with small batches, amortise the scan
-  * with larger batches or maintain a bucketed fingerprint index table;
-  * the join direction here is the one that survives either way.
+  * Scale shape: the batch is ≤ BatchSize rows, so it is planned as one
+  * partition, where the min-PK survivor window needs no shuffle. Its
+  * distinct fingerprints (≤ BatchSize) are collected to the driver, one
+  * column-pruned scan of the destination collects the ones it already
+  * holds (each scan task returns its distinct hits), and the survivors
+  * are filtered on that driver-held set ([[KeySet]]). Two jobs, both in
+  * this transform, and the plan the loader caches has no shuffle or
+  * broadcast exchange. The destination is never shuffled, but it is
+  * scanned whole per batch: O(destination), which a fingerprint index
+  * kept beside the destination would make O(batch).
   */
 object DedupTransformer extends Transformer {
   val name = "dedup"
@@ -170,7 +175,9 @@ object DedupTransformer extends Transformer {
           col(dedupCol).isNotNull)
       else batch.df.filter(col(dedupCol).isNotNull)
 
-    val withFp = rest.withColumn(FpCol, md5(lower(col(dedupCol))))
+    val fingerprint = md5(lower(col(dedupCol)))
+    // one partition satisfies the window's clustering: no exchange
+    val withFp = rest.coalesce(1).withColumn(FpCol, fingerprint)
     // deterministic in-batch survivor: min PK within each fingerprint
     val order = ctx.pkCols.filter(rest.columns.contains)
     val inBatch =
@@ -183,12 +190,16 @@ object DedupTransformer extends Transformer {
     val target = s"${ctx.destinationPath}/${batch.table}.parquet"
     val deduped = graft.core.ParquetTable.read(ctx.spark, target) match {
       case Some(dest) if dest.columns.contains(dedupCol) =>
-        val destFps = dest.select(md5(lower(col(dedupCol))).as(FpCol))
-        // ≤ batch-size collision set; the destination only streams
-        val hits = destFps.join(
-          broadcast(inBatch.select(FpCol).distinct()), Seq(FpCol), "left_semi")
-          .distinct()
-        inBatch.join(broadcast(hits), Seq(FpCol), "left_anti")
+        val fps = withFp.select(FpCol).collect().map(_.getString(0)).toSet
+        val hits =
+          if (fps.isEmpty) Set.empty[String]
+          else dest.select(fingerprint.as(FpCol))
+            .filter(KeySet.column(col(FpCol), StringType, fps))
+            .as[String](Encoders.STRING)
+            .mapPartitions(_.toSet.iterator)(Encoders.STRING)
+            .collect().toSet
+        if (hits.isEmpty) inBatch
+        else inBatch.filter(!KeySet.column(col(FpCol), StringType, hits))
       case _ => inBatch
     }
     Seq(batch.copy(df = deduped.drop(FpCol).unionByName(passthrough)))

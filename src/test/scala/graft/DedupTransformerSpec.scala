@@ -105,6 +105,95 @@ class DedupTransformerSpec extends SparkSpec {
     assert(got.agg(sum("id")).head.getLong(0) === (1L to 40L).sum)
   }
 
+  /** The plan this transformer had before it dropped its exchange
+    * stages — a window shuffle, a broadcast semi join of the destination's
+    * fingerprints and a broadcast anti join — kept as the oracle.
+    */
+  private def exchangeDedup(batch: org.apache.spark.sql.DataFrame, dedupCol: String,
+                            pkCols: Seq[String], target: String): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val fp = "__fp"
+    val insert = coalesce(col(Method.Col), lit(Method.Replace.name)) === Method.Insert.name
+    val passthrough = batch.filter(!insert || col(dedupCol).isNull)
+    val rest = batch.filter(insert && col(dedupCol).isNotNull)
+    val withFp = rest.withColumn(fp, md5(lower(col(dedupCol))))
+    val inBatch = withFp.withColumn("__rn", row_number().over(
+        Window.partitionBy(fp).orderBy(pkCols.map(col): _*)))
+      .filter(col("__rn") === 1).drop("__rn")
+    val deduped = ParquetTable.read(spark, target) match {
+      case Some(dest) =>
+        val hits = dest.select(md5(lower(col(dedupCol))).as(fp))
+          .join(broadcast(inBatch.select(fp).distinct()), Seq(fp), "left_semi").distinct()
+        inBatch.join(broadcast(hits), Seq(fp), "left_anti")
+      case None => inBatch
+    }
+    deduped.drop(fp).unionByName(passthrough)
+  }
+
+  test("the exchange-free dedup equals the exchange plan: seeded batches of every " +
+      "method, NULL methods and texts, single and composite keys") {
+    val vocab = (1 to 12).map(i => s"doc number $i about topic ${i % 5}")
+    def variant(r: scala.util.Random, t: String) = r.nextInt(3) match {
+      case 0 => t
+      case 1 => t.toUpperCase
+      case _ => t.capitalize
+    }
+    for (seed <- 1 to 6) {
+      val r = new scala.util.Random(seed)
+      val composite = seed % 2 == 0
+      val pk = if (composite) Seq("k1", "k2") else Seq("id")
+      def keyed(i: Int, text: String, method: String) =
+        if (composite) (Some(i % 7L), Some(s"p${i / 7}"), Option(text), Option(method))
+        else (Some(i.toLong), None, Option(text), Option(method))
+      def frame(rows: Seq[(Option[Long], Option[String], Option[String], Option[String])]) = {
+        val df = rows.toDF("k1", "k2", "text", Method.Col)
+        if (composite) df else df.drop("k2").withColumnRenamed("k1", "id")
+      }
+      val dest = tmpDir("dt-prop")
+      val sink = (1000 until 1030).map(i => keyed(i, variant(r, vocab(r.nextInt(vocab.size))), "INSERT"))
+      MethodRoutedLoader.load(spark, TableBatch("b", "t", frame(sink)), dest, pk, Params())
+      val methods = Seq("INSERT", "INSERT", "INSERT", "REPLACE", "REMOVE", null)
+      val batch = frame(r.shuffle((0 until 60).toList).map { i =>
+        keyed(i, if (r.nextInt(7) == 0) null else variant(r, vocab(r.nextInt(vocab.size))),
+          methods(r.nextInt(methods.size)))
+      })
+      val got = DedupTransformer(TableBatch("b", "t", batch), Params(),
+        TransformContext(spark, dest, pk)).head.df
+      val want = exchangeDedup(batch, "text", pk, s"$dest/t.parquet")
+      assert(got.collect().map(_.toString).sorted === want.collect().map(_.toString).sorted,
+        s"seed $seed")
+    }
+  }
+
+  test("a sequential batch through dedup runs at most extract 2, transform 2, load 3 " +
+      "jobs, and the plan the loader caches has no exchange") {
+    val src = tmpDir("dt-jobs-src"); val dest = tmpDir("dt-jobs-dest")
+    (1L to 300L).map(i => (i, s"Content ${i % 120}")).toDF("id", "text")
+      .write.parquet(s"$src/t.parquet")
+    val spec = PipelineSpec("a", "t", "id", "b", "t", src, dest, transformer = "dedup",
+      params = Params(batchSize = 100))
+    val p = new Pipeline(spark, spec, new TrackingStore(spark, s"$dest/_tracking"))
+    // the first batch creates the sink
+    val ((_, _, st), _) = batchEvents(p.runBatch(p.init()))
+    val ((_, _, next), evs) = batchEvents(p.runBatch(st))
+    assert(evs.size === 1)
+    val jobs = Seq("extract", "transform", "load")
+      .map(s => s -> evs.head.get("stages").get(s).get("jobs").asInt).toMap
+    assert(jobs("extract") === 2 && jobs("transform") <= 2 && jobs("load") <= 3, jobs)
+
+    val res = operators.SequentialExtractor.extract(spark, spec, next)
+    try {
+      val out = DedupTransformer(TableBatch("b", "t", res.df), spec.params,
+        TransformContext(spark, dest, Seq("id"))).head.df
+      val plan = out.queryExecution.executedPlan.toString
+      assert(!plan.contains("Exchange"), plan)
+    } finally res.cleanup()
+    p.drain()
+    val got = spark.read.parquet(s"$dest/t.parquet")
+    assert(got.count() === 120L)
+    assert(got.agg(sum("id")).head.getLong(0) === (1L to 120L).sum)
+  }
+
   test("streaming near-dedup drops repeated simhash sightings, bounds state") {
     val src = tmpDir("nd-src")
     val rows = (0 until 60).map { i =>

@@ -95,6 +95,39 @@ class DestinationLayoutSpec extends SparkSpec {
     assert(spark.read.parquet(target).count() === 300)
   }
 
+  test("a table whose every row is removed keeps its schema and its layout: " +
+      "buckets, PartitionBy and flat") {
+    val rows = (1L to 20L).map(i => (i, s"c${i % 3}", s"v$i")).toDF("id", "cat", "v")
+    for ((params, removes, what) <- Seq(
+        (Params(partitionBuckets = 4), rows, "buckets 4"),
+        (Params(partitionByCol = Some("cat")), rows, "PartitionBy cat"),
+        // a PK-only REMOVE cannot prune by value: the full rewrite path
+        (Params(partitionByCol = Some("cat")), rows.select("id"), "PartitionBy cat, PK-only REMOVE"),
+        (Params(), rows, "flat"))) {
+      val dest = tmpDir("layout-emptied")
+      val target = s"$dest/t.parquet"
+      load(dest, rows, "INSERT", params)
+      val layout = ParquetTable.layout(spark, target, heal = false)
+      load(dest, removes, "REMOVE", params)
+      assert(spark.read.parquet(target).count() === 0L, what)
+      assert(ParquetTable.layout(spark, target, heal = false) match {
+        case ParquetTable.Flat(_) => layout.isInstanceOf[ParquetTable.Flat]
+        case l => l === layout
+      }, what)
+      load(dest, Seq((7L, "c1", "v7-NEW")).toDF("id", "cat", "v"), "REPLACE", params)
+      assert(ParquetTable.layout(spark, target, heal = false) match {
+        case ParquetTable.Flat(_) => layout.isInstanceOf[ParquetTable.Flat]
+        case l => l === layout
+      }, what)
+      val (dirs, files) = laidOut(target)
+      if (layout.isInstanceOf[ParquetTable.Partitioned]) assert(dirs.nonEmpty && files.isEmpty, what)
+      else assert(dirs.isEmpty, what)
+      val got = spark.read.parquet(target)
+      assert(got.select("id", "cat", "v").as[(Long, String, String)].collect().toSeq ===
+        Seq((7L, "c1", "v7-NEW")), what)
+    }
+  }
+
   test("source guard: only ParquetTable decides the destination layout") {
     val root = new File("src/main/scala")
     assert(root.isDirectory, s"source tree not found from ${new File(".").getAbsolutePath}")

@@ -454,4 +454,209 @@ class ExtractorsSpec extends SparkSpec {
         _.references.exists(_.name == MethodRoutedLoader.BucketCol))),
       s"no bucket partition filter in:\n${batch.queryExecution.sparkPlan}")
   }
+
+  // ---- the footer bound of the ordered extracts ----
+
+  /** Write `rows` as one parquet file in their order, with row groups
+    * of `group` rows; timestamps as INT64 micros, or INT96 when `int96`.
+    */
+  private def grouped(rows: org.apache.spark.sql.DataFrame, path: String, group: Int,
+                      mode: String = "error", int96: Boolean = false): Unit = {
+    val key = "spark.sql.parquet.outputTimestampType"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, if (int96) "INT96" else "TIMESTAMP_MICROS")
+    try rows.coalesce(1).write.mode(mode)
+      .option("parquet.block.row.count.limit", group.toLong).parquet(path)
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** `body`'s result and the source rows its Spark jobs read. */
+  private def rowsRead[T](body: => T): (T, Long) = {
+    val trace = new Trace.Group(spark.sparkContext)
+    val r = trace("body")(body)
+    (r, trace.counts().head._3.rowsRead)
+  }
+
+  /** One extract at `status`: its batch rows (without the method column,
+    * as strings, in batch order), the rows its jobs read and the next
+    * status.
+    */
+  private def poll(ex: Extractor, spec: PipelineSpec,
+                   status: TrackingStatus): (Seq[String], Long, TrackingStatus) = {
+    val (res, read) = rowsRead(ex.extract(spark, spec, status))
+    try (res.df.drop(Method.Col).collect().map(_.toString).toSeq, read, res.newStatus)
+    finally res.cleanup()
+  }
+
+  private def seqSpec(src: String, n: Int) =
+    PipelineSpec("a", "t", "id", "b", "t", src, tmpDir("bound-dest"), params = Params(batchSize = n))
+
+  /** The sequential batch without the bound: `key > pos ORDER BY key LIMIT n`. */
+  private def seqOracle(src: String, pos: Long, n: Int): Seq[String] =
+    spark.read.parquet(s"$src/t.parquet").filter($"id" > pos).orderBy("id").limit(n)
+      .collect().map(_.toString).toSeq
+
+  private def seqStatus(pos: Long) = TrackingStatus("a", "t", "id", sequentialPosition = pos)
+
+  test("footer bound: a sorted source reads one partial group plus the whole groups it needs") {
+    val src = tmpDir("bound-sorted")
+    grouped((1L to 1000L).map(i => (i, s"v$i")).toDF("id", "v"), s"$src/t.parquet", 100)
+    val groups = org.apache.spark.sql.graftshim.FooterSchema
+      .columnStats(spark, spark.read.parquet(s"$src/t.parquet"), "id").get
+    assert(groups.map(g => (g.min, g.max, g.nonNull)) ===
+      (0 until 10).map(i => (i * 100L + 1, i * 100L + 100, 100L)))
+    val spec = seqSpec(src, 150)
+    // from 0: groups 1-2 hold the batch (200 rows scanned); from 150:
+    // group 2 is partial, groups 3-4 whole (300 rows); the batch's own
+    // 150 rows are read again from the cache by the count
+    for ((pos, scanned) <- Seq((0L, 200L), (150L, 300L))) {
+      val (got, read, next) = poll(SequentialExtractor, spec, seqStatus(pos))
+      assert(got === seqOracle(src, pos, 150))
+      assert(next.sequentialPosition === pos + 150)
+      assert(read <= scanned + 150, s"from $pos read $read rows")
+    }
+    // fewer rows left than a batch: no bound
+    assert(poll(SequentialExtractor, spec, seqStatus(900L))._1 === seqOracle(src, 900L, 150))
+  }
+
+  test("footer bound: overlapping, unsorted and NULL-keyed groups give the unbounded batch") {
+    val src = tmpDir("bound-unsorted")
+    val rnd = new scala.util.Random(17)
+    // even keys in random order (every group spans the key range), and
+    // a second file of sorted odd keys inside that range: keys are
+    // unique, so a batch is one set of rows
+    val ids: Seq[java.lang.Long] = rnd.shuffle((1L to 1200L).toList)
+      .map(k => if (k % 7 == 0) null else java.lang.Long.valueOf(2 * k))
+    grouped(ids.map(i => (i, s"v$i")).toDF("id", "v"), s"$src/t.parquet", 100)
+    grouped((1L to 2400L by 6).map(i => (i, s"w$i")).toDF("id", "v"),
+      s"$src/t.parquet", 50, mode = "append")
+    val spec = seqSpec(src, 130)
+    var st = seqStatus(0L)
+    var more = true
+    while (more) {
+      val (got, _, next) = poll(SequentialExtractor, spec, st)
+      assert(got === seqOracle(src, st.sequentialPosition, 130), s"from ${st.sequentialPosition}")
+      more = got.size == 130
+      st = next
+    }
+    assert(st.sequentialPosition === 2400L)
+    // NULL keys count for nothing: sorted ids with every third NULL
+    val nulls = tmpDir("bound-nulls")
+    grouped((1L to 900L).map(i => (if (i % 3 == 0) null else java.lang.Long.valueOf(i), s"v$i"))
+      .toDF("id", "v"), s"$nulls/t.parquet", 90)
+    var pos = 0L
+    (1 to 4).foreach { _ =>
+      val (got, read, next) = poll(SequentialExtractor, seqSpec(nulls, 100), seqStatus(pos))
+      assert(got === seqOracle(nulls, pos, 100), s"from $pos")
+      assert(read < 900L, s"from $pos read $read rows")
+      pos = next.sequentialPosition
+    }
+  }
+
+  test("footer bound: ties straddling the bound are all read, sequential and timestamp") {
+    // group 1 holds 100 rows of key 7, group 2 starts with 50 more: the
+    // bound is 7, and the rows of 7 in group 2 must be candidates too
+    val src = tmpDir("bound-ties-seq")
+    grouped(((1 to 150).map(_ => 7L) ++ (8L to 400L)).zipWithIndex.map { case (k, i) => (k, s"r$i") }
+      .toDF("id", "v"), s"$src/t.parquet", 100)
+    val (got, read, next) = poll(SequentialExtractor, seqSpec(src, 100), seqStatus(0L))
+    def keys(rs: Seq[String]) = rs.map(_.stripPrefix("[").takeWhile(_ != ','))
+    assert(keys(got) === keys(seqOracle(src, 0L, 100)))
+    assert(next.sequentialPosition === 7L)
+    assert(read <= 200L + 100L, s"read $read rows")
+
+    // timestamps: all n rows share one timestamp, so the whole tie group
+    // is the batch (150 rows, across the bound)
+    val t0 = mkTs("2024-01-01 00:00:00").getTime
+    def at(i: Long) = new Timestamp(t0 + i * 1000L)
+    val rows = ((1 to 150).map(_ => 0L) ++ (1L to 250L)).zipWithIndex.map { case (t, i) => (i.toLong, at(t)) }
+      .toDF("id", "ts")
+    val (bounded, unbounded) = (tmpDir("bound-ties-ts"), tmpDir("bound-ties-ts96"))
+    grouped(rows, s"$bounded/t.parquet", 100)
+    grouped(rows, s"$unbounded/t.parquet", 100, int96 = true)
+    val ex = new TimestampExtractor()
+    var (sb, su) = (TrackingStatus("a", "t", "ts"), TrackingStatus("a", "t", "ts"))
+    (1 to 3).foreach { i =>
+      val (gb, rb, nb) = poll(ex, tsSpec(bounded, tmpDir("d"), "timestamp"), sb)
+      val (gu, ru, nu) = poll(ex, tsSpec(unbounded, tmpDir("d"), "timestamp"), su)
+      assert(gb.sorted === gu.sorted, s"poll $i")
+      assert(nb.timestampPosition === nu.timestampPosition)
+      if (i == 1) {
+        assert(gb.size === 150)
+        assert(rb < ru, s"bounded read $rb rows, unbounded $ru")
+      }
+      sb = nb; su = nu
+    }
+  }
+
+  test("footer bound: OnlyPast with the bound past now keeps the batch") {
+    // group 1 in the past, group 2 half past and half in 2099: the bound
+    // lies past now, and `<= now` still decides
+    val t0 = mkTs("2024-01-01 00:00:00").getTime
+    val rows = ((0L until 150L).map(i => new Timestamp(t0 + i * 1000L)) ++
+      (0L until 150L).map(i => new Timestamp(mkTs("2099-01-01 00:00:00").getTime + i * 1000L)))
+      .zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "ts")
+    val (bounded, unbounded) = (tmpDir("bound-past"), tmpDir("bound-past96"))
+    grouped(rows, s"$bounded/t.parquet", 100)
+    grouped(rows, s"$unbounded/t.parquet", 100, int96 = true)
+    val ex = new TimestampExtractor(clock = () => mkTs("2025-01-01 00:00:00"))
+    var (sb, su) = (TrackingStatus("a", "t", "ts"), TrackingStatus("a", "t", "ts"))
+    (1 to 2).foreach { i =>
+      val spec = (src: String) => tsSpec(src, tmpDir("d"), "timestamp", batch = 120, onlyPast = true)
+      val (gb, _, nb) = poll(ex, spec(bounded), sb)
+      val (gu, _, nu) = poll(ex, spec(unbounded), su)
+      assert(gb.sorted === gu.sorted, s"poll $i")
+      assert(nb.timestampPosition === nu.timestampPosition)
+      sb = nb; su = nu
+    }
+    assert(sb.timestampPosition.get === new Timestamp(t0 + 149 * 1000L))
+  }
+
+  test("footer bound: CSV, JDBC, partition, INT96 and coalesced positions fall back") {
+    import org.apache.spark.sql.graftshim.FooterSchema
+    val src = tmpDir("bound-fallback")
+    val rows = (1L to 300L).map(i => (i, s"c${i % 3}", new Timestamp(1717200000000L + i * 1000L)))
+      .toDF("id", "cat", "ts")
+    rows.write.option("header", true).csv(s"$src/c.csv")
+    assert(FooterSchema.columnStats(spark, sources.Tables.readTable(spark, src, "c"), "id") === None)
+    val url = s"jdbc:derby:memory:bound_${System.nanoTime()};create=true"
+    rows.select("id").write.jdbc(url, "T", new java.util.Properties())
+    assert(FooterSchema.columnStats(spark, sources.Tables.readTable(spark, url, "T"), "ID") === None)
+    rows.write.partitionBy("cat").parquet(s"$src/p.parquet")
+    val parted = sources.Tables.readTable(spark, src, "p")
+    assert(FooterSchema.columnStats(spark, parted, "cat") === None)
+    assert(FooterSchema.columnStats(spark, parted, "id").exists(_.nonEmpty))
+    grouped(rows, s"$src/i.parquet", 100, int96 = true)
+    assert(FooterSchema.columnStats(spark, sources.Tables.readTable(spark, src, "i"), "ts") === None)
+    // a derived key (a projection computing it) has no stats of its own
+    assert(FooterSchema.columnStats(spark, parted.withColumn("id", $"id" + 1), "id") === None)
+
+    // timestamp_fallback reads every row past its position; timestamp
+    // on the same column is bounded
+    grouped(rows.withColumn("upd", lit(null).cast("timestamp")), s"$src/t.parquet", 50)
+    val (fb, fbRead, _) = poll(new TimestampFallbackExtractor(),
+      tsSpec(src, tmpDir("d"), "timestamp_fallback", key = "upd,ts", batch = 60),
+      TrackingStatus("a", "t", "upd,ts"))
+    val (ts, tsRead, _) = poll(new TimestampExtractor(),
+      tsSpec(src, tmpDir("d"), "timestamp", batch = 60), TrackingStatus("a", "t", "ts"))
+    assert(fb.sorted === ts.sorted)
+    assert(fbRead >= 300L && tsRead < 300L, s"fallback read $fbRead, bounded $tsRead")
+  }
+
+  test("footer bound: a file appended between polls is seen through the memo") {
+    val src = tmpDir("bound-append")
+    grouped((1L to 300L).map(i => (i, s"v$i")).toDF("id", "v"), s"$src/t.parquet", 100)
+    val spec = seqSpec(src, 150)
+    val (first, _, st) = poll(SequentialExtractor, spec, seqStatus(0L))
+    assert(first === seqOracle(src, 0L, 150))
+    val (second, _, st2) = poll(SequentialExtractor, spec, st)
+    assert(second === seqOracle(src, 150L, 150) && st2.sequentialPosition === 300L)
+    grouped((301L to 600L).map(i => (i, s"v$i")).toDF("id", "v"), s"$src/t.parquet", 100,
+      mode = "append")
+    // the new file's groups bound the poll: 301..500 scanned, not 301..600
+    val (third, read, st3) = poll(SequentialExtractor, spec, st2)
+    assert(third === seqOracle(src, 300L, 150))
+    assert(st3.sequentialPosition === 450L)
+    assert(read <= 200L + 150L, s"read $read rows")
+  }
 }

@@ -96,6 +96,17 @@ class OneActionLoadSpec extends SparkSpec {
     }
   }
 
+  test("a REPLACE whose key column is narrower than the table's matches by value") {
+    val dest = tmpDir("narrow-key")
+    MethodRoutedLoader.load(spark, TableBatch("b", "t", (1L to 5L).map(i => (i, s"v$i"))
+      .toDF("id", "v").withColumn(Method.Col, lit("INSERT"))), dest, Seq("id"), Params())
+    // int keys against a bigint table, as `In` compared them
+    MethodRoutedLoader.load(spark, TableBatch("b", "t", Seq((2, "new2"), (4, "new4"))
+      .toDF("id", "v").withColumn(Method.Col, lit("REPLACE"))), dest, Seq("id"), Params())
+    assert(rows(spark.read.parquet(s"$dest/t.parquet").select($"id".cast("long"), $"v")) ===
+      Seq("[1,v1]", "[2,new2]", "[3,v3]", "[4,new4]", "[5,v5]"))
+  }
+
   test("a queue extract and its load run pinned job counts") {
     val src = tmpDir("queue-jobs-src"); val dest = tmpDir("queue-jobs-dest")
     (1L to 50L).map(i => (i, s"v$i")).toDF("id", "v").write.parquet(s"$src/t.parquet")
@@ -122,5 +133,33 @@ class OneActionLoadSpec extends SparkSpec {
     assert(drainOne() === ((2, 4)))
     assert(drainOne() === ((2, 4)))
     assert(QueueExtractor.pending(spark, spec).count() === 5L)
+  }
+
+  test("an idle queue poll runs the extract's 2 jobs and none in transform or load") {
+    // flat, and a bucketed base and sink (the change batch prunes its
+    // base read to the touched buckets)
+    for (buckets <- Seq(0, 4)) {
+      val src = tmpDir("queue-idle-src"); val dest = tmpDir("queue-idle-dest")
+      MethodRoutedLoader.load(spark, TableBatch("a", "t", (1L to 50L).map(i => (i, s"v$i"))
+        .toDF("id", "v").withColumn(Method.Col, lit("INSERT"))), src, Seq("id"),
+        Params(partitionBuckets = buckets))
+      (1 to 6).map(i => ("a", "t", "id", i.toString,
+          new Timestamp(1717200000000L + i * 1000L), if (i % 5 == 0) "REMOVE" else "UPDATE"))
+        .toDF(QueueExtractor.queueCols: _*)
+        .coalesce(1).write.parquet(s"$src/MigratorRecordQueue")
+      val spec = PipelineSpec("a", "t", "id", "b", "t", src, s"$dest/$buckets",
+        extractor = "queue", params = Params(batchSize = 10, partitionBuckets = buckets))
+      val p = new Pipeline(spark, spec, new TrackingStore(spark, s"$dest/$buckets/_tracking"))
+      val ((counts, more, st), _) = batchEvents(p.runBatch(p.init()))
+      assert(counts("REPLACE") === 5L && counts("REMOVE") === 1L && !more)
+      val ((idle, _, _), evs) = batchEvents(p.runBatch(st))
+      assert(idle === Map("INSERT" -> 0L, "REPLACE" -> 0L, "REMOVE" -> 0L))
+      assert(evs.size === 1)
+      val jobs = Seq("extract", "transform", "load")
+        .map(s => s -> evs.head.get("stages").get(s).get("jobs").asInt).toMap
+      assert(jobs === Map("extract" -> 2, "transform" -> 0, "load" -> 0), s"buckets $buckets")
+      // the five updated rows; the removed key was never loaded
+      assert(spark.read.parquet(s"$dest/$buckets/t.parquet").count() === 5L)
+    }
   }
 }
