@@ -17,16 +17,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.configure(spark)
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS")
+      .fold(Runtime.getRuntime.availableProcessors())(_.toInt)
+    val spark = GraftSession.local(cpus)
     val sc = spark.sparkContext
     // per-query peak-heap attribution (VERDICT r8 #6): each pool's
     // peak counter is RESET before a query and read after, so the
@@ -355,7 +348,7 @@ object Bench {
       val c = r.trace
       n -> ListMap("jobs" -> c.jobs, "stages" -> c.stages, "task_s" -> r3(c.taskS),
         "shuffle_bytes" -> c.shuffleBytes, "result_bytes" -> c.resultBytes,
-        "par_eff" -> r3(if (r.secs > 0) c.taskS / (r.secs * cpus.toInt) else 0.0))
+        "par_eff" -> r3(if (r.secs > 0) c.taskS / (r.secs * cpus) else 0.0))
     }
     val passTotals = passBuf.toSeq.map(p => r3(p.map(_.secs).sum))
     val json = new com.fasterxml.jackson.databind.ObjectMapper()

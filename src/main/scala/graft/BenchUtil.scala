@@ -1,18 +1,12 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.graftshim.FooterSchema
 
-/** Shared measurement helpers for the benchmark/probe mains
-  * ([[Bench]], [[AnnRecall]], [[ScaleProbe]]) — one implementation of
-  * the protocol so a change (pass count, sink, release policy) cannot
-  * silently diverge across the three.
+/** [[Bench]]'s measurement helpers: the noop-format sink it times, and
+  * the floor adjudication over a committed BENCH_FLOOR.json, kept apart
+  * from the main so `BenchFloorSpec` can pin it.
   */
 private[graft] object BenchUtil {
-
-  def time(f: => Unit): Double = {
-    val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-  }
 
   /** Full materialisation through a noop-format write — a bare
     * `count()` would let Catalyst prune the computed columns and time
@@ -20,12 +14,6 @@ private[graft] object BenchUtil {
     */
   def sink(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
-
-  /** Min-of-N wall time — the per-query Bench protocol: a host
-    * contention spike must hit every pass to survive the min.
-    */
-  def minOf(passes: Int)(f: => Unit): Double =
-    (1 to passes).map(_ => time(f)).min
 
   /** Parse a committed BENCH_FLOOR.json (VERDICT r9 #1) into its
     * per-gate clean-draw seconds — empty when the file is missing,
@@ -104,37 +92,4 @@ private[graft] object BenchUtil {
     floor.keySet.intersect(measured.keySet).toSeq
       .filter(n => floor(n) > 0.0 && measured(n) / floor(n) > band)
       .sorted
-
-  /** Count the parquet data files under `dir` (recursive), skipping
-    * the entries Spark's listing hides: the staged and replaced copies
-    * a killed swap can leave behind and uncommitted `_temporary` task
-    * output — ONE implementation for the compaction probe and the
-    * file-count specs, so they can never count differently (and a count
-    * that disagreed with what a read sees would mislead the compaction
-    * dial).
-    */
-  def parquetDataFiles(dir: String): Int = {
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten
-        .filterNot(c => FooterSchema.hiddenName(c.getName)).flatMap(walk)
-      else Seq(f)
-    walk(new java.io.File(dir)).count(_.getName.endsWith(".parquet"))
-  }
-
-  /** Bloom-prefilter selectivity measurement over distinct gram
-    * tables — ONE implementation shared by [[ScaleProbe]] and
-    * `DecontaminateSpec` so the published numbers and the spec's
-    * bounds can never measure different pipelines.
-    *
-    * @return (total corpus grams, truly shared, sketch candidates)
-    */
-  def bloomStats(corpusGrams: DataFrame, benchGrams: DataFrame,
-                 bitsPerItem: Int): (Long, Long, Long) = {
-    import org.apache.spark.sql.functions.col
-    val sketch = graft.functions.Bloom.sketchOf(benchGrams, "s", bitsPerItem)
-    (corpusGrams.count(),
-      corpusGrams.join(benchGrams, "s").count(),
-      corpusGrams.filter(
-        graft.functions.Bloom.mightContain(sketch, col("s"))).count())
-  }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
@@ -16,7 +16,8 @@ import graft.core.Pins
   * the before/after evidence for plans/rNN/.
   *
   * Usage: runMain graft.PlanProbe <sfDir> <outDir> <probe>[,probe...]
-  * Probes: triangles, labelprop, kcore
+  * Probes: triangles, triangles_after, kcore_after, triwedges,
+  * labelprop, kcore
   */
 object PlanProbe {
   def main(args: Array[String]): Unit = {
@@ -26,19 +27,11 @@ object PlanProbe {
     // exit 0 (the PlanDump posture) — before/after plan evidence that
     // is silently absent reads as "nothing to dump"
     val known = Set("triangles", "triangles_after", "kcore_after",
-      "mm", "cppart", "triwedges", "labelprop", "kcore")
+      "triwedges", "labelprop", "kcore")
     require((which -- known).isEmpty,
       s"PlanProbe knows no probe(s): ${(which -- known).toSeq.sorted
         .mkString(", ")} — known: ${known.toSeq.sorted.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.configure(spark)
+    val spark = GraftSession.local(sys.env.get("SPARK_GRAFT_CPUS").fold(32)(_.toInt))
     Files.createDirectories(Paths.get(outDir))
 
     def fmt(df: DataFrame): String = df.queryExecution.explainString(
@@ -99,95 +92,6 @@ object PlanProbe {
       write("graph_kcore_after",
         f"// one peel round over the checkpointed edge table, bcastKeep=true: noop-sink=$t%.3f s\n" +
           fmt(round))
-    }
-    if (which("mm")) {
-      // multimodal_neardup_indexed decomposition: probe-side dHash
-      // kernel vs the classify join (the index build is session-cached
-      // and untimed in the bench protocol)
-      val docs = graft.sources.Tables.readTable(spark, sfDir, "documents")
-      val m0 = graft.operators.MultimodalOps.noisePngMedia(spark, docs)
-      val m = Pins.checkpoint(m0.unionByName(
-        graft.operators.MultimodalOps.perturbClones(spark, m0)))
-      println(s"[planprobe] media rows=${m.count()}")
-      val (_, tDecodeWarm) = time(BenchUtil.sink(
-        graft.operators.MultimodalOps.imageDHash(spark, m)))
-      val (_, tDecode) = time(BenchUtil.sink(
-        graft.operators.MultimodalOps.imageDHash(spark, m)))
-      println(f"[planprobe] imageDHash sink warm1=$tDecodeWarm%.3f warm2=$tDecode%.3f s")
-      val (_, tGen) = time(BenchUtil.sink(m0))
-      println(f"[planprobe] media synth (noisePngMedia) sink=$tGen%.3f s")
-      // full indexed-gate replica: build the index once (untimed, the
-      // session-cache posture), then time classify twice
-      val fps = graft.operators.MultimodalOps.imageDHash(spark, m)
-        .withColumnRenamed("dhash", "fp")
-      val idx = java.nio.file.Files
-        .createTempDirectory("graft-probe-fp").toString
-      graft.operators.FingerprintIndex.write(fps, idx, 56)
-      def classifyOnce(): Double = {
-        val (_, t) = time {
-          val r = graft.operators.FingerprintIndex.classify(spark, idx, fps)
-            .filter(col("media_id") < col("indexed_id"))
-            .select(col("media_id").as("a"), col("indexed_id").as("b"),
-              col("hamming"))
-            .orderBy("a", "b")
-          r.collect()
-        }
-        t
-      }
-      println(f"[planprobe] classify warm1=${classifyOnce()}%.3f warm2=${classifyOnce()}%.3f s")
-      // decompose: banded cp + prefix collect vs pruned scan vs join
-      val (bb2: DataFrame, tBb) = time {
-        Pins.checkpoint(graft.operators.MultimodalOps.imageDHash(spark, m)
-          .withColumnRenamed("dhash", "fp")
-          .select(col("media_id"), col("fp"),
-            explode(expr(
-              """transform(sequence(0, 4), b -> struct(
-                |  b AS band,
-                |  shiftright(fp, int(b * 56 / 5)) &
-                |    (shiftleft(1L, int((b + 1) * 56 / 5)
-                |               - int(b * 56 / 5)) - 1) AS v))""".stripMargin))
-              .as("e"))
-          .select(col("media_id"), col("fp"),
-            col("e.band").as("band"), col("e.v").as("v"))
-          .withColumn("bvp", concat(lit("p"), col("band").cast("string"),
-            lit("_"), pmod(col("v"), lit(256)).cast("string"))))
-      }
-      val (pf: Seq[String], tPf) = time(
-        bb2.select("bvp").distinct().collect().map(_.getString(0)).toSeq)
-      println(f"[planprobe] banded cp=$tBb%.3f s, prefixes collect=$tPf%.3f s (n=${pf.size})")
-      val (_, tScan) = time(BenchUtil.sink(
-        spark.read.parquet(s"$idx/fps").filter(col("bvp").isin(pf: _*))))
-      val (_, tScan2) = time(BenchUtil.sink(
-        spark.read.parquet(s"$idx/fps").filter(col("bvp").isin(pf: _*))))
-      println(f"[planprobe] pruned fps scan warm1=$tScan%.3f warm2=$tScan2%.3f s")
-      val (_, tFull) = time(BenchUtil.sink(spark.read.parquet(s"$idx/fps")))
-      println(f"[planprobe] full fps scan (no filter)=$tFull%.3f s")
-      // same rows, flat layout (no partition dirs): is it the file count?
-      val flat = java.nio.file.Files
-        .createTempDirectory("graft-probe-flat").toString
-      spark.read.parquet(s"$idx/fps").repartition(8)
-        .write.mode("overwrite").parquet(flat)
-      val (_, tFlat) = time(BenchUtil.sink(
-        spark.read.parquet(flat).filter(col("bvp").isin(pf: _*))))
-      val (_, tFlat2) = time(BenchUtil.sink(
-        spark.read.parquet(flat).filter(col("bvp").isin(pf: _*))))
-      println(f"[planprobe] flat 8-file scan warm1=$tFlat%.3f warm2=$tFlat2%.3f s")
-    }
-    if (which("cppart")) {
-      // does Dataset.localCheckpoint preserve outputPartitioning /
-      // outputOrdering into the LogicalRDD? (decides whether the
-      // posting-list self-joins can skip their exchanges)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val df = Pins.checkpoint(
-        spark.range(100000).selectExpr("id % 997 as k", "id as v")
-          .repartition(col("k")).sortWithinPartitions("k"))
-      val j = df.as("a").join(df.as("b"),
-        col("a.k") === col("b.k") && col("a.v") < col("b.v"))
-      val p = j.queryExecution.executedPlan.toString
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      println(s"[planprobe] self-join exchanges=${"Exchange".r.findAllIn(p).size} " +
-        s"sorts=${"(?m)^\\s*[+:]?-? ?\\*?\\(?\\d*\\)? ?Sort ".r.findAllIn(p).size}")
-      println(p.linesIterator.take(12).mkString("\n"))
     }
     if (which("triwedges")) {
       // stage decomposition of the triangleSummary pipeline: where do

@@ -554,7 +554,7 @@ object CorpusOps {
     * Scale shape: a PURE PROJECTION — S md5 calls per row folded by
     * `greatest`, no join, no shuffle, no shard-list broadcast beyond
     * the plan literals (plan-shape spec-pinned: zero Exchange). Cost
-    * is O(S) per row — measured (ScaleProbe) at ~1 µs/shard/row up to
+    * is O(S) per row — measured (PLANS.md Round 10) at ~1 µs/shard/row up to
     * 64 shards and ~2 µs/shard/row at 512 (the md5 fold outgrows one
     * whole-stage-codegen method) — so route hierarchically (rendezvous
     * to a shard GROUP, then within it: 2·√S hashes/row) once S passes
@@ -607,7 +607,7 @@ object CorpusOps {
     * over the matched group's shards, so a row EVALUATES only
     * G + |its group| md5s (~2·√S at balanced fan-out — CASE runs only
     * the matched branch) instead of the flat form's S. Measured at
-    * S = 512 (32×16, ScaleProbe): 1.7× faster wall — less than the
+    * S = 512 (32×16, PLANS.md Round 10): 1.7× faster wall — less than the
     * ~10× hash-count drop because a plan this wide leaves whole-stage
     * codegen and the surviving hashes run interpreted; the gap WIDENS
     * with S (the flat form's cost keeps growing, this form's per-row

@@ -627,7 +627,8 @@ object GraphOps {
     * the maximal degree — orients every edge INWARD and contributes
     * ZERO oriented wedges through itself; its mass reappears only via
     * its higher-degree peers, of which a hub has few. Spec-pinned on a
-    * synthetic hub graph; probed with wall times in ScaleProbe.
+    * synthetic hub graph (`GraphOpsSpec`, "celebrity node"); wall times
+    * are in PLANS.md, Round 10.
     */
   def wedgeCounts(pairs: DataFrame): (Long, Long) = {
     val (oriented, deg) = orientedEdges(pairs)

@@ -204,8 +204,8 @@ object TextOps {
 
   /** The langId tf table — the (doc, lang, trigram, tf) training +
     * feature artifact [[langId]] checkpoints (one corpus scan, zero
-    * pre-checkpoint shuffles). Exposed for the scale probe
-    * ([[graft.ScaleProbe]]) that pins its linear growth.
+    * pre-checkpoint shuffles). Exposed for the `TextOpsSpec` row-count
+    * test that pins its linear growth.
     */
   private[graft] def langIdTf(docs: DataFrame): DataFrame =
     docs.filter(length(col("text")) >= 3)
@@ -838,8 +838,8 @@ object TextOps {
   }
 
   /** The IDF-weighted posting-list index — the (doc_id, s, w2) artifact
-    * [[cosinePairs]] checkpoints. Exposed for the scale probe
-    * ([[graft.ScaleProbe]]) that pins its linear growth.
+    * [[cosinePairs]] checkpoints. Exposed for the `TextOpsSpec`
+    * row-count test that pins its linear growth.
     */
   private[graft] def cosineWeightedIndex(docs: DataFrame,
                                          maxDfFrac: Double = 0.1,
@@ -1206,8 +1206,7 @@ object TextOps {
 
   /** The stride-1 window table — the (doc_id, n_tokens, pos, h)
     * artifact [[substringDedup]] checkpoints (md5 profile). Exposed for
-    * the scale probe ([[graft.ScaleProbe]]) that pins its linear
-    * growth.
+    * the `TextOpsSpec` row-count test that pins its linear growth.
     */
   private[graft] def substringWindowTable(docs: DataFrame, k: Int = 20): DataFrame = {
     import org.apache.spark.sql.graftshim.ColumnBridge._

@@ -288,7 +288,7 @@ object VectorOps {
       reuse.getOrElse(trainIvfAssignment(embeddings, nlist, nprobe, maxTrainRows))
     // an EXPLICIT nprobe always wins — a reused assignment carries only
     // its own auto default, and silently discarding the caller's probe
-    // width would make probe-sensitivity sweeps (AnnRecall) meaningless
+    // width would make nprobe sweeps meaningless (pinned in VectorOpsSpec)
     val nprobeEff = if (nprobe != Auto) nprobe else assignNprobe
 
     import spark.implicits._

@@ -70,18 +70,18 @@ object FooterSchema {
     known.flatMap { case (f, v) => v.orElse(fresh.get(f.getPath.toString)) }.map(_.asInstanceOf[V])
   }
 
-  /** The parquet read of `paths`, its data schema merged over every
-    * file (`mergeSchema`) or taken from one file (Spark's default).
-    * A missing path fails with Spark's path-not-found error and a
-    * fileless directory with its unable-to-infer-schema error, as the
-    * inferring read does.
-    */
   /** Whether Spark's file listing skips an entry named `name`
     * (dot- or underscore-prefixed, partition dirs like `_bucket=3` kept).
     */
   def hiddenName(name: String): Boolean =
     org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
 
+  /** The parquet read of `paths`, its data schema merged over every
+    * file (`mergeSchema`) or taken from one file (Spark's default).
+    * A missing path fails with Spark's path-not-found error and a
+    * fileless directory with its unable-to-infer-schema error, as the
+    * inferring read does.
+    */
   def read(spark: SparkSession, paths: Seq[String], mergeSchema: Boolean): DataFrame = {
     // the read Spark would make, with nothing to infer yet: it lists the
     // files and infers the partition columns, and it starts no job

@@ -44,7 +44,7 @@ class BoilerplateIndexSpec extends SparkSpec {
     }
     // append-per-trigger would leave 5 files; the atomic rewrite
     // leaves exactly ONE however many triggers have landed
-    assert(BenchUtil.parquetDataFiles(s"$path/batches") === 1,
+    assert(parquetDataFiles(s"$path/batches") === 1,
       "ledger must stay one file after N fenced updates")
     val cnt = spark.read.parquet(s"$path/counts").count()
     // crash-replay of an already-ledgered pair: no count delta lands
@@ -53,7 +53,7 @@ class BoilerplateIndexSpec extends SparkSpec {
       path, "p", 2L)
     assert(spark.read.parquet(s"$path/counts").count() === cnt,
       "a replayed (producer, batchId) must not re-append its delta")
-    assert(BenchUtil.parquetDataFiles(s"$path/batches") === 1)
+    assert(parquetDataFiles(s"$path/batches") === 1)
   }
 
   test("segmentation contract is stored: strip uses the build-time width") {

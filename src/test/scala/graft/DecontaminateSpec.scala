@@ -83,7 +83,7 @@ class DecontaminateSpec extends SparkSpec {
 
     // compaction folds fragments, kept set pinned
     ContaminationIndex.compact(spark, path)
-    assert(BenchUtil.parquetDataFiles(s"$path/grams") == 1)
+    assert(parquetDataFiles(s"$path/grams") == 1)
     assert(keptVia(path) == after,
       "kept set changed across a pure compaction")
   }
@@ -134,10 +134,22 @@ class DecontaminateSpec extends SparkSpec {
       kept.contains(5L), s"only the copy is over threshold: $kept")
   }
 
+  /** Bloom-prefilter selectivity over distinct gram tables.
+    *
+    * @return (total corpus grams, truly shared, sketch candidates)
+    */
+  private def bloomStats(corpusGrams: DataFrame, benchGrams: DataFrame,
+                         bitsPerItem: Int): (Long, Long, Long) = {
+    val sketch = Bloom.sketchOf(benchGrams, "s", bitsPerItem)
+    (corpusGrams.count(),
+      corpusGrams.join(benchGrams, "s").count(),
+      corpusGrams.filter(Bloom.mightContain(sketch, col("s"))).count())
+  }
+
   test("sketch prefilter is selective and complete over a real corpus") {
-    // the SAME measurement ScaleProbe publishes (BenchUtil.bloomStats)
+    // the measurement behind PLANS.md "Round 5: bloom decontamination"
     val docs = sources.Tables.documents(spark, sf)
-    val (total, truth, candidates) = BenchUtil.bloomStats(
+    val (total, truth, candidates) = bloomStats(
       TextOps.shingles(docs.filter(col("doc_id") % 100 =!= 0))
         .select("s").distinct(),
       TextOps.shingles(docs.filter(col("doc_id") % 100 === 0))

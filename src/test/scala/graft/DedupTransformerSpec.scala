@@ -447,7 +447,7 @@ class DedupTransformerSpec extends SparkSpec {
     assert(spark.read.parquet(s"$path/shingles")
       .filter(col("doc_id") === 3L).count() === 0,
       "compaction left tombstoned shingle rows behind")
-    assert(BenchUtil.parquetDataFiles(s"$path/bands") <= bandDirs,
+    assert(parquetDataFiles(s"$path/bands") <= bandDirs,
       "expected at most one file per prefix directory after compaction")
     assert(rows(BandIndex.classify(spark, path, batch, minJaccard = 0.5)) == before,
       "classify results changed across compaction")
@@ -679,7 +679,7 @@ class DedupTransformerSpec extends SparkSpec {
     // the final trigger (4th, compactEvery=2) ended with a compaction:
     // each store's append fragments are folded to one file per dir
     for ((store, pcol) <- Seq(("bands", "bkp"), ("shingles", "dp"))) {
-      val files = BenchUtil.parquetDataFiles(s"$idx/$store")
+      val files = parquetDataFiles(s"$idx/$store")
       val dirs = spark.read.parquet(s"$idx/$store")
         .select(pcol).distinct().count()
       assert(files <= dirs,

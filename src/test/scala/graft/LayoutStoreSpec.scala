@@ -112,7 +112,7 @@ class LayoutStoreSpec extends SparkSpec {
       .filter(col("id").isin(victims: _*)).count()
     assert(raw === 0L)
     // fully folded: at most one file per cell directory
-    val files = BenchUtil.parquetDataFiles(s"$path/data")
+    val files = parquetDataFiles(s"$path/data")
     val dirs = spark.read.parquet(s"$path/data")
       .select("zcell").distinct().count()
     assert(files <= dirs)
@@ -359,7 +359,7 @@ class LayoutStoreSpec extends SparkSpec {
     val wide = Seq((0L, 1000L), (0L, 5000L))
     assert(dumpBox(path, wide) === dumpBox(ref, wide),
       "stream-ingested layout diverged from the batch append")
-    val files = BenchUtil.parquetDataFiles(s"$path/data")
+    val files = parquetDataFiles(s"$path/data")
     val dirs = spark.read.parquet(s"$path/data")
       .select("zcell").distinct().count()
     assert(files <= dirs,

@@ -443,4 +443,22 @@ class ReservoirStoreSpec extends SparkSpec {
     assert(plan.contains("TakeOrderedAndProject"),
       s"expected TakeOrderedAndProject, got:\n$plan")
   }
+
+  test("extend reads the batch and the bounded sample, never the corpus: " +
+    "the same batch into stores whose n_seen differs 10x reads the same rows") {
+    // the batch comes from parquet so its scan shows in rowsRead
+    val batchDir = tmpDir("rs-batch") + "/b"
+    docs(1000000 until 1000500).write.parquet(batchDir)
+    val batch = spark.read.parquet(batchDir)
+    val (seen, reads) = Seq(1000, 10000).map { n =>
+      val path = tmpDir("rs-seen") + "/r"
+      ReservoirStore.write(docs(0 until n), path, "doc_id", 100, "s1")
+      val (_, c) = countsDuring(ReservoirStore.extend(batch, path, 1L, 100, "s1"))
+      (ReservoirStore.stats(spark, path).head.getAs[Long]("n_seen") - 500L, c.rowsRead)
+    }.unzip
+    assert(seen === Seq(1000L, 10000L))
+    assert(reads.head >= 500L, s"the batch scan must be traced: $reads")
+    assert(reads(1) === reads.head,
+      s"extend read grew with n_seen: $reads rows for n_seen $seen")
+  }
 }

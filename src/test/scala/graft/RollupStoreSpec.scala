@@ -205,4 +205,23 @@ class RollupStoreSpec extends SparkSpec {
     assert(RollupStore.stats(spark, path)
       .head.getAs[Long]("applied_batches") === 3L)
   }
+
+  test("extend reads the batch, never the stored grain: the same batch " +
+    "into stores ~10x apart reads the same rows") {
+    // the batch comes from parquet so its scan shows in rowsRead
+    val batchDir = tmpDir("ru-batch") + "/b"
+    mk(500, 1000000).write.parquet(batchDir)
+    val batch = spark.read.parquet(batchDir)
+    val idKey = Seq("id")
+    val (grains, reads) = Seq(1000, 10000).map { n =>
+      val path = tmpDir("ru-grain") + "/store"
+      RollupStore.write(mk(n, 0), path, idKey, "v")
+      val (_, c) = countsDuring(RollupStore.extend(batch, path, batchId = 1L, idKey, "v"))
+      (RollupStore.stats(spark, path).head.getAs[Long]("stored_keys") - 500L, c.rowsRead)
+    }.unzip
+    assert(grains === Seq(1000L, 10000L))
+    assert(reads.head >= 500L, s"the batch scan must be traced: $reads")
+    assert(reads(1) === reads.head,
+      s"extend read grew with the stored grain: $reads rows for grains $grains")
+  }
 }

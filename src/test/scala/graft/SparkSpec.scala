@@ -15,14 +15,34 @@ trait SparkSpec extends AnyFunSuite {
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
-  /** Run `body` in a [[graft.core.Trace]] span and count the Spark jobs
-    * it started on this thread (and on the threads Spark hands its local
-    * properties to); the count is read after a listener-bus flush.
+  /** Count the parquet data files under `dir` (recursive), skipping
+    * the entries Spark's listing hides: the staged and replaced copies
+    * a killed swap can leave behind and uncommitted `_temporary` task
+    * output — so a file count never disagrees with what a read sees.
     */
-  def jobsDuring[T](body: => T): (T, Int) = {
+  def parquetDataFiles(dir: String): Int = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten
+        .filterNot(c => org.apache.spark.sql.graftshim.FooterSchema.hiddenName(c.getName))
+        .flatMap(walk)
+      else Seq(f)
+    walk(new java.io.File(dir)).count(_.getName.endsWith(".parquet"))
+  }
+
+  /** Run `body` in a [[graft.core.Trace]] span: what Spark work it
+    * started on this thread (and on the threads Spark hands its local
+    * properties to), read after a listener-bus flush.
+    */
+  def countsDuring[T](body: => T): (T, graft.core.Trace.Counts) = {
     val trace = new graft.core.Trace.Group(spark.sparkContext)
     val r = trace("body")(body)
-    (r, trace.counts().head._3.jobs)
+    (r, trace.counts().head._3)
+  }
+
+  /** The Spark jobs `body` started, as [[countsDuring]] counts them. */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    val (r, c) = countsDuring(body)
+    (r, c.jobs)
   }
 
   /** The batch event lines (logger `graft.core.Pipeline`, INFO) logged

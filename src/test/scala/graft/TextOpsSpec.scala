@@ -676,4 +676,27 @@ class TextOpsSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("maxDfAbs"))
   }
+
+  test("checkpoint artifacts' rows are per-document linear counts of the " +
+    "input text, at sf0.001 and sf0.01") {
+    for (dir <- Seq(sf, new java.io.File(sf).getParent + "/sf0.01")) {
+      val d = sources.Tables.documents(spark, dir)
+      val texts = d.select("text").collect().flatMap(r => Option(r.getString(0)))
+      val toks = texts.map(_.split(" ", -1))
+      // the kernel emits no window below k tokens
+      val k = 20
+      val windows = toks.map(t => math.max(0, t.length - k + 1).toLong).sum
+      assert(TextOps.substringWindowTable(d, k).count() === windows, dir)
+      // the tf table holds one row per distinct code-point trigram of a
+      // doc, so at most the chars − 2 trigrams its kernel explodes
+      val grams = texts.map(_.codePoints().toArray.sliding(3).filter(_.length == 3)
+        .map(_.toSeq).toSet.size.toLong).sum
+      assert(TextOps.langIdTf(d).count() === grams, dir)
+      // the posting index keeps each doc's distinct 3-shingles minus the stop ones
+      val shingles = toks.map(t => t.sliding(3).filter(_.length == 3)
+        .map(_.mkString(" ")).toSet.size.toLong).sum
+      val idx = TextOps.cosineWeightedIndex(d).count()
+      assert(idx > 0 && idx <= shingles, s"$dir: $idx index rows, $shingles shingles")
+    }
+  }
 }

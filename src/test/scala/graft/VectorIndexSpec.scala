@@ -219,7 +219,7 @@ class VectorIndexSpec extends SparkSpec {
     }
     val queries = VectorOps.collectQueries(embs, (0L until 5L).toSeq).toSeq
     val before = dump(VectorIndex.searchIvfPq(spark, path, queries))
-    val filesBefore = BenchUtil.parquetDataFiles(s"$path/codes")
+    val filesBefore = parquetDataFiles(s"$path/codes")
     val cells = spark.read.parquet(s"$path/codes")
       .select("cell").distinct().count()
 
@@ -231,7 +231,7 @@ class VectorIndexSpec extends SparkSpec {
       s"stats disagree with listing before compaction: $statBefore")
 
     VectorIndex.compactIvfPq(spark, path)
-    val filesAfter = BenchUtil.parquetDataFiles(s"$path/codes")
+    val filesAfter = parquetDataFiles(s"$path/codes")
     assert(filesAfter < filesBefore,
       s"compaction did not shrink the file count ($filesBefore -> $filesAfter)")
     assert(VectorIndex.stats(spark, path)
@@ -312,7 +312,7 @@ class VectorIndexSpec extends SparkSpec {
     // compactEvery=1 means the final trigger ended with a compaction:
     // at most one file per cell directory remains in both stores
     for (store <- Seq("codes", "vectors")) {
-      val files = BenchUtil.parquetDataFiles(s"$path/$store")
+      val files = parquetDataFiles(s"$path/$store")
       val dirs = spark.read.parquet(s"$path/$store")
         .select("cell").distinct().count()
       assert(files <= dirs,

@@ -6,6 +6,29 @@ import graft.operators.VectorOps
 
 class VectorOpsSpec extends SparkSpec {
 
+  /** Seeded mixture-of-Gaussians corpus: `kClusters` unit-norm centers,
+    * each vector = center(id mod k) + N(0, sigma²) noise per dim. At
+    * sigma ≈ 0.08 with 64 dims the intra-cluster spread (‖noise‖ ≈
+    * sigma·√dim ≈ 0.64) is comparable to FAISS's clustered benchmark
+    * regimes — neighbours are overwhelmingly same-cluster, but ranking
+    * WITHIN the cluster still needs fine-grained distances, which is
+    * precisely what PQ codes must preserve.
+    */
+  private def clusteredCorpus(n: Int, dim: Int, kClusters: Int,
+                              sigma: Double, seed: Long): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(seed)
+    val centers = Array.fill(kClusters) {
+      val c = Array.fill(dim)(rnd.nextGaussian())
+      val nrm = math.sqrt(c.map(x => x * x).sum)
+      c.map(x => x / nrm)
+    }
+    (0 until n).map { i =>
+      val c = centers(i % kClusters)
+      (i.toLong, Array.tabulate(dim)(j => (c(j) + sigma * rnd.nextGaussian()).toFloat))
+    }.toDF("vec_id", "embedding")
+  }
+
   test("PqEncode kernel is fold-order identical to the composed HOF encode") {
     import org.apache.spark.sql.functions._
     val embs = sources.Tables.embeddings(spark, sf)
@@ -302,8 +325,9 @@ class VectorOpsSpec extends SparkSpec {
     // On a near-UNIFORM corpus both paths sit in the same
     // distance-concentration floor and (b) is noise — which is why
     // this spec fabricates cluster structure instead of using the
-    // parquet fixture (AnnRecall measures both regimes).
-    val emb = graft.AnnRecall.clusteredCorpus(spark, n = 500, dim = 64,
+    // parquet fixture (PLANS.md "Round 5: residual IVF-PQ" records
+    // recall in both regimes).
+    val emb = clusteredCorpus(n = 500, dim = 64,
       kClusters = 16, sigma = 0.08, seed = 7L).localCheckpoint()
     val qs = (0L until 10L).toSeq
     val k = 10
@@ -433,7 +457,7 @@ class VectorOpsSpec extends SparkSpec {
   }
 
   test("rerank recovers quantization error: recall >= plain ADC, scores exact, deterministic") {
-    val emb = graft.AnnRecall.clusteredCorpus(spark, n = 500, dim = 64,
+    val emb = clusteredCorpus(n = 500, dim = 64,
       kClusters = 16, sigma = 0.08, seed = 7L).localCheckpoint()
     val qs = (0L until 10L).toSeq
     val k = 10
