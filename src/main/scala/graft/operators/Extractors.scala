@@ -2,12 +2,15 @@ package graft.operators
 
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.{ColumnBridge, FooterSchema}
+import org.apache.spark.sql.graftshim.{ColumnBridge, DriverRows, FooterSchema, KeySet}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core._
 
@@ -220,27 +223,24 @@ class TimestampFallbackExtractor(clock: () => Timestamp = () => new Timestamp(Sy
   * rows for deletes (`extractor_queue.go:57-72`), and fetch the latest
   * row for updates.
   *
-  * Where the reference does one point query per entry (an index-driven
-  * nested-loop join), we run ONE broadcast hash join of the (≤ batch,
-  * always small) queue batch against the base table, on the REAL typed
-  * PK columns — the comma-joined `pkValue` string (reference
-  * `extractor_queue.go:75-90`) is split and cast ONCE on the tiny queue
-  * side, never concat-built per base row, so the join key is the base
-  * table's own columns and min/max row-group pruning applies. When the
-  * base table is hash-bucketed ([[graft.core.ParquetTable.layout]]
-  * reads the count from the table), the base read is
-  * additionally pruned to the buckets the batch touches — an O(batch)
-  * lookup like the reference's indexed point reads, not an O(table)
-  * scan. Per SURVEY §7.4 H4 the batch is first deduped to the latest
-  * entry per PK so set-based processing converges to the same end state
-  * as the reference's strictly-ordered per-entry replay.
+  * Each batch of ≤ BatchSize entries is pinned as a parquet snapshot,
+  * read back on the driver with no job ([[DriverRows]]), and turned into
+  * the change batch there ([[changeBatch]]): last-write-wins per PK
+  * (SURVEY §7.4 H4, so set-based processing converges to the same end
+  * state as the reference's strictly-ordered per-entry replay), keys
+  * typed to the base's own PK columns, and the base rows of the updated
+  * keys read through a driver-held key set with a pushed-down key
+  * range, as the reference does one indexed point query per entry. A
+  * hash-bucketed base ([[graft.core.ParquetTable.layout]] reads the
+  * count from the table) is read only in the buckets the batch
+  * touches. No broadcast, window or shuffle: the load over the batch
+  * is its one action and its rewrite.
   *
   * Acks are append-only: the deferred `commit` callback (run only after
   * the sink succeeded) moves the consumed batch's snapshot files into a
   * sibling `<queue>__acks` table by rename — the rows are never
   * re-written — and the queue read anti-joins the acks on
-  * [[queueCols]]; the batch's row count is read from those files'
-  * parquet footers. An ack is O(batch files) and never rewrites the
+  * [[queueCols]]. An ack is O(batch files) and never rewrites the
   * changelog, so entries appended by a live CDC producer mid-batch are
   * never lost (the previous read/anti-join/swap design deleted them).
   * [[compactQueue]] folds accumulated acks back into the changelog as
@@ -383,75 +383,108 @@ object QueueExtractor extends Extractor {
 
   private def ackPath(spec: PipelineSpec): String = queuePath(spec) + "__acks"
 
-  /** Build the method-tagged change batch from a set of changelog
-    * entries: last-write-wins dedup per PK (H4), typed broadcast lookup
-    * join for updates (J1), REMOVE-row synthesis (R8), bucket-pruned
-    * base read when the base layout allows. Shared by the micro-batch
-    * extractor and the Structured Streaming facade
-    * ([[graft.streaming.StreamingPipeline]]).
+  /** The changelog fields a change batch reads, in this order. */
+  private val entryCols = Seq("pkValue", "timestampUpdated", "method")
+
+  /** [[changeBatch]] of the changelog entries `entries`, collected once
+    * (one job; none when `entries` is a local relation). The streaming
+    * facade ([[graft.streaming.StreamingPipeline]]) and the J1 gate
+    * build their batches this way.
     */
-  def changeBatch(spark: SparkSession, spec: PipelineSpec, entries: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+  def changeBatch(spark: SparkSession, spec: PipelineSpec, entries: DataFrame): DataFrame =
+    changeBatch(spark, spec, entries.select(entryCols.map(col): _*).collect().toSeq)
 
-    // H4: last-write-wins — keep only the newest entry per PK so one
-    // set-based pass equals the reference's ordered per-entry replay.
-    val latest = entries
-      .withColumn("_rn", row_number().over(
-        Window.partitionBy(col("pkValue"))
-          .orderBy(col("timestampUpdated").desc, col("method").desc)))
-      .filter(col("_rn") === 1)
-      .drop("_rn")
+  /** The order last-write-wins keeps the first of: `timestampUpdated`,
+    * then `method`, both descending with NULLs last, strings compared as
+    * Spark compares them.
+    */
+  private val newestFirst: Ordering[Row] = new Ordering[Row] {
+    private def desc(a: Any, b: Any): Int = (a, b) match {
+      case (null, null) => 0
+      case (null, _) => 1
+      case (_, null) => -1
+      case (x: String, y: String) => UTF8String.fromString(y).compareTo(UTF8String.fromString(x))
+      case (x, y) => y.asInstanceOf[Comparable[Any]].compareTo(x)
+    }
+    def compare(x: Row, y: Row): Int = {
+      val t = desc(x.get(1), y.get(1))
+      if (t != 0) t else desc(x.get(2), y.get(2))
+    }
+  }
 
+  /** The method-tagged change batch of changelog `entries`, rows of
+    * `(pkValue, timestampUpdated, method)` held on the driver:
+    *  - H4: last-write-wins per `pkValue` ([[newestFirst]]), so one
+    *    set-based pass equals the reference's ordered per-entry replay.
+    *    A winner with a NULL method is dropped.
+    *  - The comma-joined `pkValue` (reference `extractor_queue.go:75-90`)
+    *    is split and cast to the base's own PK types by a projection over
+    *    a local relation, which the optimizer evaluates with no job and
+    *    with Spark's cast semantics (ANSI included).
+    *  - J1: REPLACE rows are the base rows of the updated keys, looked
+    *    up like the reference's indexed point reads
+    *    (`extractor_queue.go:74-96`): a driver-held key set
+    *    ([[KeySet]]) plus a pushed-down `lo <= pk <= hi` per PK column,
+    *    so row groups outside the batch's key range are skipped, and on
+    *    a hash-bucketed base only the touched buckets are read. A key
+    *    with a NULL component matches nothing; base rows sharing a key
+    *    all match, once per `pkValue` that typed to that key.
+    *  - R8: a REMOVE row carries its typed PK, NULL elsewhere: the base
+    *    row is gone.
+    *
+    * Columns: the PK, the base's other columns, [[Method.Col]]. With no
+    * update the batch is a local relation, so an idle poll loads with no
+    * job.
+    */
+  def changeBatch(spark: SparkSession, spec: PipelineSpec, entries: Seq[Row]): DataFrame = {
+    val latest = entries.groupBy(r => Option(r.getString(0))).values.map(_.min(newestFirst))
+      .filter(_.get(2) != null).toSeq
     val base0 = source(spark, spec)
     val pkCols = spec.pkColumns
-    val pkTypes = pkCols.map(c => base0.schema(c).dataType)
+    val cols = pkCols ++ base0.columns.filterNot(c =>
+      pkCols.contains(c) || c == MethodRoutedLoader.BucketCol)
+    val keySchema = StructType(pkCols.map(c => base0.schema(c).copy(nullable = true)))
+    val parts = split(col("pkValue"), ",")
+    val typed = spark.createDataFrame(latest.map(r => Row(r.get(0), r.get(2))).asJava,
+        StructType(Seq(StructField("pkValue", StringType), StructField("method", StringType))))
+      .select(keySchema.zipWithIndex.map { case (f, i) =>
+        parts.getItem(i).cast(f.dataType).as(f.name) } :+ col("method"): _*)
+      .collect().toSeq
+    val (removeRows, updateRows) = typed.partition(_.get(pkCols.size) == Method.Remove.name)
+    val removeKeys = removeRows.map(r => Row.fromSeq(r.toSeq.init))
+    val updateKeys = updateRows.map(r => Row.fromSeq(r.toSeq.init)).filterNot(_.anyNull)
 
-    // Composite PKs arrive comma-joined (reference
-    // `extractor_queue.go:75-90`): split ONCE on the ≤batch-size queue
-    // side into the base's own typed columns. Joining on real columns
-    // (instead of a concat_ws string built per base row) keeps the base
-    // scan free of derived-key work and lets parquet min/max stats and
-    // partition pruning see the predicate.
-    def typedKeys(df: DataFrame): DataFrame = {
-      val parts = split(col("pkValue"), ",")
-      df.select(pkCols.zip(pkTypes).zipWithIndex.map {
-        case ((c, dt), i) => parts.getItem(i).cast(dt).as(c)
-      }: _*)
-    }
+    val removes = spark.createDataFrame(removeKeys.map(k => Row.fromSeq(k.toSeq ++
+        Seq.fill(cols.size - pkCols.size)(null) :+ Method.Remove.name)).asJava,
+      StructType(cols.map(c => base0.schema(c).copy(nullable = true)) :+
+        StructField(Method.Col, StringType)))
+    if (updateKeys.isEmpty) return removes
 
-    val updateKeys = typedKeys(latest.filter(col("method") =!= "REMOVE"))
-
-    // O(batch) base read when the base is hash-bucketed: prune to the
-    // buckets the batch touches (reference parity: indexed point
-    // lookups, `extractor_queue.go:74-96`). The bucket-id collect is
-    // bounded by the batch size.
     val base = ParquetTable.layout(spark, s"${spec.sourcePath}/${spec.sourceTable}.parquet",
         heal = false) match {
       case ParquetTable.Partitioned(_, Some(nb)) =>
-        val touched = updateKeys
-          .select(pmod(xxhash64(pkCols.map(col): _*), lit(nb.toLong)).as("b"))
-          .distinct().collect().map(_.getLong(0)).toSeq
+        val touched = spark.createDataFrame(updateKeys.asJava, keySchema)
+          .select(pmod(xxhash64(pkCols.map(col): _*), lit(nb.toLong)))
+          .collect().map(_.getLong(0)).distinct.toSeq
         base0.filter(col(MethodRoutedLoader.BucketCol).isin(touched: _*))
       case _ => base0
     }
-
-    val updates = base
-      .join(broadcast(updateKeys), pkCols, "inner")
-      .drop(MethodRoutedLoader.BucketCol)
-      .withColumn(Method.Col, lit(Method.Replace.name))
-
-    // R8: deletes synthesize a PK-only row — the base row is gone.
-    val removeRows = typedKeys(latest.filter(col("method") === "REMOVE"))
-      .withColumn(Method.Col, lit(Method.Remove.name))
-
-    // Align REMOVE rows to the full batch schema (missing cols → null)
-    // so the two legs union cleanly; the loader only reads the PK cols.
-    val removeAligned = updates.columns.foldLeft(removeRows) { (df, c) =>
-      if (df.columns.contains(c)) df
-      else df.withColumn(c, lit(null).cast(updates.schema(c).dataType))
-    }.select(updates.columns.map(col): _*)
-
-    updates.unionByName(removeAligned)
+    def lookup(keys: Seq[Row]): DataFrame = {
+      val (value, dt, values) =
+        if (pkCols.size == 1) (col(pkCols.head), keySchema.head.dataType, keys.map(_.get(0)))
+        else (struct(pkCols.map(col): _*), keySchema, keys)
+      base.filter(keySchema.zipWithIndex.map { case (f, i) =>
+          col(f.name).isNotNull && KeySet.range(col(f.name), f.dataType, keys.map(_.get(i)))
+        }.reduce(_ && _) && KeySet.column(value, dt, values))
+        .select(cols.map(col): _*)
+        .withColumn(Method.Col, lit(Method.Replace.name))
+    }
+    // "7" and "07" type to one key: it matches once per pkValue
+    val byKey = updateKeys.groupBy(identity).values.toSeq
+    val updates = (1 to byKey.map(_.size).max)
+      .map(n => lookup(byKey.filter(_.size >= n).map(_.head)))
+      .reduce(_.unionByName(_))
+    if (removeKeys.isEmpty) updates else updates.unionByName(removes)
   }
 
   /** Staging root for the consumed-batch snapshot files — a sibling
@@ -495,17 +528,15 @@ object QueueExtractor extends Extractor {
     val view = pending(spark, spec)
       .orderBy(col("timestampUpdated"), col("pkValue"))
       .limit(n)
-    // Pin the consumed batch as FILES, executor-side (VERDICT r10 #5,
-    // retiring the driver collect + its size cap): a producer
-    // appending to the changelog through the same session triggers
+    // Pin the consumed batch as FILES: a producer appending to the
+    // changelog through the same session triggers
     // CacheManager.recacheByPath, which silently RE-COMPUTES a cached
     // plan over the refreshed file listing — the "snapshot" would
     // grow mid-batch and the ack below would ack entries that were
-    // never applied. Written parquet is immutable: the lookup join,
-    // the ack and any replay all see the IDENTICAL rows, and the
-    // batch never touches driver heap — the ordered limit drains
-    // through one (spillable) executor task into the staging dir, so
-    // batchSize is bounded by executor disk, not driver memory.
+    // never applied. Written parquet is immutable: the change batch,
+    // the ack and any replay all see the IDENTICAL rows. The driver
+    // holds the batch's (pkValue, timestampUpdated, method) triples,
+    // as the loader holds every REPLACE/REMOVE key it rewrites.
     // Lifetime: the files outlive the load (unlike evictable
     // localCheckpoint blocks) and are removed in cleanup(), which the
     // runner fires ALWAYS — success or failure (runBatch's finally;
@@ -513,24 +544,15 @@ object QueueExtractor extends Extractor {
     // batch was never acked and the retry re-snapshots from the queue.
     val dir = s"${inflightRoot(spec)}/b_${java.util.UUID.randomUUID()}"
     view.write.mode("overwrite").parquet(dir)
-    // the row count is the footers' (a driver-side metadata read, no
-    // count job)
-    val cnt = IndexStores.parquetFooterRows(spark, dir).getOrElse(0L)
-    val batch =
-      if (cnt == 0) {
-        // an idle poll: an empty local batch of the change batch's schema.
-        // Over no entries the change batch plans to an empty relation, so
-        // resolving its schema starts no job, and the loader loads an
-        // empty local batch without one
-        val none = java.util.Collections.emptyList[org.apache.spark.sql.Row]()
-        spark.createDataFrame(none,
-          changeBatch(spark, spec, spark.createDataFrame(none, view.schema)).schema)
-      } else
-        // the schema is the view's own (no inference job). One partition:
-        // the snapshot is one file of ≤ batchSize rows, and a single
-        // partition satisfies the last-write-wins window's clustering
-        // with no exchange
-        changeBatch(spark, spec, spark.read.schema(view.schema).parquet(dir).coalesce(1))
+    // the snapshot's ≤ batchSize entries, read back on the driver with
+    // no job: the change batch is planned from them
+    val snapshot = new Path(dir)
+    val fs = snapshot.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = fs.listStatus(snapshot).filter(_.getPath.getName.endsWith(".parquet")).toSeq
+    val entries = DriverRows.read(spark, files, view.schema,
+      StructType(entryCols.map(view.schema(_))))
+    val cnt = entries.size
+    val batch = changeBatch(spark, spec, entries)
 
     val ack = () => {
       // Ack by MOVING the consumed snapshot's data files into the ack
@@ -542,14 +564,12 @@ object QueueExtractor extends Extractor {
       // limit writes one file, so the ack is normally one rename.
       if (cnt > 0) {
         val ap = new Path(ackPath(spec))
-        val fs = ap.getFileSystem(spark.sparkContext.hadoopConfiguration)
         fs.mkdirs(ap)
-        fs.listStatus(new Path(dir)).map(_.getPath)
-          .filter(_.getName.endsWith(".parquet")).foreach { f =>
-            if (!fs.rename(f, new Path(ap, f.getName)))
-              throw new java.io.IOException(
-                s"queue ack: could not move $f into $ap")
-          }
+        files.map(_.getPath).foreach { f =>
+          if (!fs.rename(f, new Path(ap, f.getName)))
+            throw new java.io.IOException(
+              s"queue ack: could not move $f into $ap")
+        }
       }
       ()
     }

@@ -132,14 +132,6 @@ private[graft] object IndexStores {
     }.sum
   }
 
-  /** EXACT row count of a parquet store from the file footers — a
-    * driver-side metadata read (no Spark job), one footer per data
-    * file. None when the dir is absent.
-    */
-  private[graft] def parquetFooterRows(spark: SparkSession,
-      dir: String): Option[Long] =
-    dirListing(spark, dir).map(footerRows(spark, _))
-
   /** A listing of `dir` (healing a cut swap of it
     * first, the [[readStore]] contract); None when the dir is absent.
     */

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Pins
 import graft.sources.Tables
 
 /** The relational + pipeline-semantics query surface.
@@ -333,9 +332,10 @@ object RelationalQueries {
     * l_linenumber) — an older REPLACE for every line and a newer REMOVE
     * for line 1 — so the query exercises last-write-wins dedup, the
     * comma-joined `pkValue` split into TYPED pk columns (reference
-    * `extractor_queue.go:75-90`), the broadcast lookup join on the
-    * base's real columns, and REMOVE-row synthesis, all in one
-    * SQL-replayable batch.
+    * `extractor_queue.go:75-90`), the key-set lookup of the base's real
+    * columns (base rows sharing a key all match), and REMOVE-row
+    * synthesis, all in one SQL-replayable batch. The changelog is
+    * collected once, as the streaming facade collects a micro-batch.
     */
   def cdcCompositePk(spark: SparkSession, dir: String): DataFrame = {
     import graft.core.{Method, PipelineSpec}
@@ -357,11 +357,7 @@ object RelationalQueries {
     val gen2 = touched.filter(col("l_linenumber") === 1)
       .withColumn("timestampUpdated", lit("2024-02-01 00:00:00").cast("timestamp"))
       .withColumn("method", lit("REMOVE"))
-    // pin the changelog as data, as the real extractor pins its consumed
-    // snapshot — without this the lazy entries subplan re-scans lineitem
-    // in every changeBatch leg
-    val entries = Pins.checkpoint(gen1.unionByName(gen2).drop("l_linenumber"))
-    graft.operators.QueueExtractor.changeBatch(spark, spec, entries)
+    graft.operators.QueueExtractor.changeBatch(spark, spec, gen1.unionByName(gen2))
       .select(col("l_orderkey"), col("l_linenumber"),
         col(Method.Col).as("method"),
         round(col("l_extendedprice"), 2).as("price"))

@@ -18,10 +18,11 @@ import graft.operators.{IndexStores, MethodRoutedLoader, QueueExtractor}
   * and consumed entries never need the batch path's ack-delete.
   *
   * Scale notes: each micro-batch is bounded by
-  * `maxFilesPerTrigger`; the change application itself is the same
-  * broadcast-join plan as the batch queue extractor, so executor-side
-  * cost is identical — this facade only swaps the driver loop for
-  * Spark's trigger scheduler.
+  * `maxFilesPerTrigger`. Its entries are collected to the driver once
+  * and go through the batch queue extractor's change batch (a key-set
+  * lookup of the base, no broadcast or window), so the driver holds one
+  * micro-batch of entries, as the loader then holds its keys — this
+  * facade only swaps the driver loop for Spark's trigger scheduler.
   */
 object StreamingPipeline {
 

@@ -5,7 +5,7 @@ import scala.collection.immutable.TreeSet
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, Predicate, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, Predicate, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.types._
@@ -85,5 +85,23 @@ object KeySet {
     val toCatalyst = CatalystTypeConverters.createToCatalystConverter(dt)
     ColumnBridge.column(KeySet(ColumnBridge.expression(c),
       values.iterator.map(toCatalyst).toSet, dt))
+  }
+
+  /** `lo <= c AND c <= hi` for the least and the greatest non-NULL of
+    * `values` (external values of the atomic type `dt`) in Spark's
+    * ordering: the bound of a key set that a parquet scan can push down
+    * to skip row groups, which the key set itself is not. True when no
+    * value is left or `dt` is not atomic.
+    */
+  def range(c: Column, dt: DataType, values: Iterable[Any]): Column = {
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(dt)
+    val vs = values.iterator.map(toCatalyst).filter(_ != null).toSeq
+    dt match {
+      case _: AtomicType if vs.nonEmpty =>
+        val ord = TypeUtils.getInterpretedOrdering(dt)
+        def bound(v: Any) = ColumnBridge.column(Literal(v, dt))
+        c >= bound(vs.min(ord)) && c <= bound(vs.max(ord))
+      case _ => ColumnBridge.column(Literal.TrueLiteral)
+    }
   }
 }

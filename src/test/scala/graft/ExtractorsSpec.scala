@@ -157,9 +157,7 @@ class ExtractorsSpec extends SparkSpec {
     assert(spark.read.parquet(s"$src/MigratorRecordQueue").count() === 0)
   }
 
-  test("queue batch ABOVE the retired 1M driver cap extracts " +
-      "end-to-end with no driver materialization (VERDICT r10 #5: " +
-      "the snapshot is executor-written parquet, plan-audited)") {
+  test("a 1.05M-entry queue batch extracts through driver-held keys") {
     val src = tmpDir("qbig-src"); val dest = tmpDir("qbig-dest")
     val rows = 1050000L // above the old snapshotLocalCap default
     spark.range(rows).selectExpr("id AS k", "CAST(id AS STRING) AS v")
@@ -176,16 +174,13 @@ class ExtractorsSpec extends SparkSpec {
     val res = QueueExtractor.extract(spark, spec,
       TrackingStatus("a", "t", "k"))
     try {
-      // no driver materialization: the change batch reads the batch
-      // entries from the inflight PARQUET snapshot (a FileScan over
-      // the __inflight dir), never from a driver-parallelized local
-      // collection (the old path's "Scan ExistingRDD")
+      // the batch is the base read through the driver-held key set: one
+      // plan node however many keys, no broadcast, no window
       val plan = res.df.queryExecution.executedPlan.toString
-      assert(plan.contains("__inflight"),
-        s"batch must read the executor-written snapshot:\n$plan")
-      assert(!plan.contains("Scan ExistingRDD"),
-        s"driver-side local relation found in the batch plan:\n$plan")
-      assert(res.df.count() === rows, "every entry joined its base row")
+      assert(plan.contains(s"IN <$rows values>"), s"no key-set lookup in:\n$plan")
+      assert(!plan.contains("Broadcast") && !plan.contains("Window"),
+        s"broadcast or window in the batch plan:\n$plan")
+      assert(res.df.count() === rows, "every entry found its base row")
       assert(res.moreData)
       // commit-after-load: the ack drains the logical queue from the
       // same pinned files
@@ -415,7 +410,8 @@ class ExtractorsSpec extends SparkSpec {
     val writeJobs = jobsDuring(entries
       .orderBy(col("timestampUpdated"), col("pkValue")).limit(2)
       .write.mode("overwrite").parquet(tmpDir("qjobs-w") + "/snap"))._2
-    val batchJobs = jobsDuring(QueueExtractor.changeBatch(spark, spec, entries))._2
+    val local = spark.createDataFrame(entries.collectAsList(), entries.schema)
+    val batchJobs = jobsDuring(QueueExtractor.changeBatch(spark, spec, local))._2
     val (res, extractJobs) = jobsDuring(
       QueueExtractor.extract(spark, spec, TrackingStatus("a", "t", "id")))
     try {

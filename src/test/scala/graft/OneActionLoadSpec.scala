@@ -108,31 +108,37 @@ class OneActionLoadSpec extends SparkSpec {
   }
 
   test("a queue extract and its load run pinned job counts") {
-    val src = tmpDir("queue-jobs-src"); val dest = tmpDir("queue-jobs-dest")
-    (1L to 50L).map(i => (i, s"v$i")).toDF("id", "v").write.parquet(s"$src/t.parquet")
-    (1 to 20).map(i => ("a", "t", "id", (i % 7 + 1).toString,
-        new Timestamp(1717200000000L + i * 1000L), if (i % 5 == 0) "REMOVE" else "UPDATE"))
-      .toDF(QueueExtractor.queueCols: _*)
-      .coalesce(1).write.parquet(s"$src/MigratorRecordQueue")
-    val spec = PipelineSpec("a", "t", "id", "b", "t", src, dest,
-      extractor = "queue", params = Params(batchSize = 5))
-    def drainOne(): (Int, Int) = {
-      val (res, extractJobs) = jobsDuring(
-        QueueExtractor.extract(spark, spec, TrackingStatus("a", "t", "id")))
-      try {
-        val loadJobs = jobsDuring(MethodRoutedLoader.load(spark,
-          TableBatch("b", "t", res.df), dest, Seq("id"), spec.params))._2
-        res.commit()
-        (extractJobs, loadJobs)
-      } finally res.cleanup()
+    // a flat base, and a bucketed base (the touched buckets are a
+    // projection over the driver-held keys)
+    for (buckets <- Seq(0, 4)) {
+      val src = tmpDir("queue-jobs-src"); val dest = tmpDir("queue-jobs-dest")
+      MethodRoutedLoader.load(spark, TableBatch("a", "t", (1L to 50L).map(i => (i, s"v$i"))
+        .toDF("id", "v").withColumn(Method.Col, lit("INSERT"))), src, Seq("id"),
+        Params(partitionBuckets = buckets))
+      (1 to 20).map(i => ("a", "t", "id", (i % 7 + 1).toString,
+          new Timestamp(1717200000000L + i * 1000L), if (i % 5 == 0) "REMOVE" else "UPDATE"))
+        .toDF(QueueExtractor.queueCols: _*)
+        .coalesce(1).write.parquet(s"$src/MigratorRecordQueue")
+      val spec = PipelineSpec("a", "t", "id", "b", "t", src, dest,
+        extractor = "queue", params = Params(batchSize = 5))
+      def drainOne(): (Int, Int) = {
+        val (res, extractJobs) = jobsDuring(
+          QueueExtractor.extract(spark, spec, TrackingStatus("a", "t", "id")))
+        try {
+          val loadJobs = jobsDuring(MethodRoutedLoader.load(spark,
+            TableBatch("b", "t", res.df), dest, Seq("id"), spec.params))._2
+          res.commit()
+          (extractJobs, loadJobs)
+        } finally res.cleanup()
+      }
+      drainOne() // the first creates the ack table and the sink
+      // extract: the ack anti-join's broadcast and the ordered-limit
+      // snapshot write. Load: the one action (it builds the cache) and
+      // the rewrite
+      assert(drainOne() === ((2, 2)), s"buckets $buckets")
+      assert(drainOne() === ((2, 2)), s"buckets $buckets")
+      assert(QueueExtractor.pending(spark, spec).count() === 5L)
     }
-    drainOne() // the first creates the ack table and the sink
-    // extract: the ack anti-join's broadcast and the ordered-limit
-    // snapshot write. Load: the lookup keys' broadcast, the cache build,
-    // the one action over it and the rewrite
-    assert(drainOne() === ((2, 4)))
-    assert(drainOne() === ((2, 4)))
-    assert(QueueExtractor.pending(spark, spec).count() === 5L)
   }
 
   test("an idle queue poll runs the extract's 2 jobs and none in transform or load") {

@@ -50,10 +50,12 @@ class PlanAuditSpec extends SparkSpec {
     assert(shuffles <= 2, s"exact dedup should shuffle once (+1 for ordering), got $shuffles:\n$p")
   }
 
-  test("cdc lookup join: queue side broadcasts, base side does not shuffle") {
+  test("cdc lookup: a key set and a pushed key range, no broadcast") {
     val p = plan("cdc_composite_pk")
-    assert(p.contains("BroadcastHashJoin"),
-      s"queue->base lookup must broadcast the batch side:\n$p")
+    assert(p.contains("values>") && p.contains("GreaterThanOrEqual(l_orderkey"),
+      s"queue->base lookup must be a key set with a pushed range:\n$p")
+    assert(!p.contains("Broadcast") && !p.contains("Window"),
+      s"queue->base lookup must not broadcast or window:\n$p")
   }
 
   test("embed_topk: query set broadcasts against the corpus stream") {
