@@ -470,12 +470,13 @@ object QueueExtractor extends Extractor {
       case _ => base0
     }
     def lookup(keys: Seq[Row]): DataFrame = {
-      val (value, dt, values) =
-        if (pkCols.size == 1) (col(pkCols.head), keySchema.head.dataType, keys.map(_.get(0)))
-        else (struct(pkCols.map(col): _*), keySchema, keys)
+      // a composite key is pruned by its first column's set, cheaper
+      // per row than the ordering-based struct set that verifies it
+      val first = KeySet.column(col(pkCols.head), keySchema.head.dataType, keys.map(_.get(0)))
       base.filter(keySchema.zipWithIndex.map { case (f, i) =>
           col(f.name).isNotNull && KeySet.range(col(f.name), f.dataType, keys.map(_.get(i)))
-        }.reduce(_ && _) && KeySet.column(value, dt, values))
+        }.reduce(_ && _) && (if (pkCols.size == 1) first
+          else first && KeySet.column(struct(pkCols.map(col): _*), keySchema, keys)))
         .select(cols.map(col): _*)
         .withColumn(Method.Col, lit(Method.Replace.name))
     }

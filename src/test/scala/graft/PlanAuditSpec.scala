@@ -54,6 +54,8 @@ class PlanAuditSpec extends SparkSpec {
     val p = plan("cdc_composite_pk")
     assert(p.contains("values>") && p.contains("GreaterThanOrEqual(l_orderkey"),
       s"queue->base lookup must be a key set with a pushed range:\n$p")
+    assert("""l_orderkey#\d+L? IN <\d+ values>""".r.findFirstIn(p).isDefined,
+      s"a composite key must be pruned by its first column's set:\n$p")
     assert(!p.contains("Broadcast") && !p.contains("Window"),
       s"queue->base lookup must not broadcast or window:\n$p")
   }
