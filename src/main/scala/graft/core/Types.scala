@@ -134,12 +134,13 @@ final case class ExtractResult(
       * (`extractor_queue.go:130`, acknowledged in `TODO.md:4-11`). */
     commit: () => Unit = () => (),
     /** always-run resource release (success OR failure): extractors that
-      * `cache()` a plan hand back the unpersist of that EXACT cached
-      * reference. Unpersisting a plan derived from the cached one does
-      * not release the entry (non-cascading sameResult match), and a
-      * stale entry is worse than a leak: an idle poll whose position did
-      * not advance rebuilds an identical plan and Spark's CacheManager
-      * silently substitutes the stale (possibly empty) cached result —
-      * rows appended after the first empty poll would never be extracted
-      * again. */
+      * `cache()` a plan (the timestamp disciplines) hand back the
+      * unpersist of that EXACT cached reference; the sequential batch is
+      * held on the driver and needs none. Unpersisting a plan derived
+      * from the cached one does not release the entry (non-cascading
+      * sameResult match), and a stale entry is worse than a leak: an idle
+      * poll whose position did not advance rebuilds an identical plan and
+      * Spark's CacheManager silently substitutes the stale (possibly
+      * empty) cached result — rows appended after the first empty poll
+      * would never be extracted again. */
     cleanup: () => Unit = () => ())

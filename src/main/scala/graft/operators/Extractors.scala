@@ -8,7 +8,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.{ColumnBridge, DriverRows, FooterSchema, KeySet}
+import org.apache.spark.sql.graftshim.{ColumnBridge, DriverRows, FooterSchema, KeySet, LocalRows}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -27,7 +27,11 @@ import graft.core._
   * `TakeOrderedAndProject` — a per-partition top-k plus a driver merge,
   * no global sort, no full shuffle. Unlike the reference's unordered
   * `LIMIT` (MySQL-arbitrary subset), our batches are deterministic
-  * (SURVEY §7.4 H5, an intentional semantic upgrade).
+  * (SURVEY §7.4 H5, an intentional semantic upgrade). The sequential
+  * batch is that plan's one collect, held on the driver
+  * ([[LocalRows]]) from extract to load as the reference holds its
+  * `[]SQLRow`: the count, the new position, the transform and the load
+  * read the held rows, with no cache and no further extract job.
   *
   * The ordered disciplines (sequential, timestamp) also bound the read
   * from above ([[footerBound]]): the reference's index range scan reads
@@ -78,7 +82,10 @@ trait Extractor {
 /** Keyset pagination on an integer key:
   * `SELECT * FROM t WHERE key > pos ORDER BY key LIMIT batch`
   * (reference `extractor_sequential.go:39`). Rows tag INSERT, or REPLACE
-  * under `SequentialReplace` (`extractor_sequential.go:123-127`).
+  * under `SequentialReplace` (`extractor_sequential.go:123-127`). One
+  * job: the ordered limit's collect, whose ≤ BatchSize rows come back
+  * as a local relation with [[Method.Col]]; the count and the new
+  * position are read from those rows.
   */
 object SequentialExtractor extends Extractor {
   val name = "sequential"
@@ -93,27 +100,21 @@ object SequentialExtractor extends Extractor {
     val key = spec.keyColumns.head
     val n = spec.params.batchSize
     val method = if (spec.params.sequentialReplace) Method.Replace else Method.Insert
-    // cache the FINAL returned plan: caching an intermediate and
-    // returning a derived `withColumn` would leak the entry (the
-    // runner's unpersist wouldn't match it) and, on an idle poll whose
-    // position didn't move, poison the next identical plan with the
-    // stale empty result (see ExtractResult.cleanup).
     val src = source(spark, spec)
     val past = src.filter(col(key) > lit(status.sequentialPosition))
-    val batch = footerBound(spark, src, key, Some(status.sequentialPosition), n)
+    // the ordered limit's one job collects the batch; the driver holds it
+    // from here to the load, so there is no cache to release
+    val batch = LocalRows.collect(footerBound(spark, src, key, Some(status.sequentialPosition), n)
       .fold(past)(past.filter)
       .orderBy(spec.keyColumns.map(col): _*)
       .limit(n)
-      .withColumn(Method.Col, lit(method.name))
-      .cache()
-    val agg = batch.agg(count(lit(1)).as("c"), max(col(key).cast(LongType)).as("m")).head()
-    val cnt = agg.getLong(0)
-    val newPos = if (agg.isNullAt(1)) status.sequentialPosition else agg.getLong(1)
+      .withColumn(Method.Col, lit(method.name)))
+    val keys = LocalRows.rows(batch, Seq(key)).map(_.getAs[Number](0).longValue)
     ExtractResult(
       batch,
-      status.copy(sequentialPosition = newPos, lastRun = Some(now())),
-      moreData = cnt == n,
-      cleanup = () => { batch.unpersist(); () })
+      status.copy(sequentialPosition = keys.foldLeft(status.sequentialPosition)(math.max),
+        lastRun = Some(now())),
+      moreData = keys.size == n)
   }
 }
 

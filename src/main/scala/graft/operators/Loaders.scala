@@ -7,9 +7,8 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.analysis.TypeCoercion
 import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.KeySet
+import org.apache.spark.sql.graftshim.{KeySet, LocalRows}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
@@ -40,6 +39,15 @@ import graft.core._
   * scan ([[untouched]]) and the touched buckets are a projection over a
   * local relation. The reference likewise ships one statement per
   * method inside one transaction (`loader_default.go:9-72`).
+  *
+  * A batch held on the driver (every leaf of its analyzed plan a local
+  * relation, [[LocalRows]]: the sequential extract's batch, through the
+  * dedup transform or not) needs no action at all: it is evaluated once
+  * there, the count and keys are read from its rows ([[touchedIn]]),
+  * and the append or rewrite reads those rows, so an INSERT batch loads
+  * in its one write job and an empty one in none. A batch that reads
+  * files (a queue lookup, a streaming micro-batch) takes the cached
+  * action.
   *
   * Destination layout (SURVEY §7.4 H1): the table decides it, once per
   * load, through [[graft.core.ParquetTable.layout]] and
@@ -100,6 +108,15 @@ object MethodRoutedLoader {
       keyed.schema, pkCols)
   }
 
+  /** [[touchedBy]] for a batch held on the driver: read from its rows,
+    * with no plan and no job.
+    */
+  private def touchedIn(df: DataFrame, pkCols: Seq[String], keyCols: Seq[String]): Touched = {
+    val cols = Method.Col +: keyCols
+    val (ins, rows) = LocalRows.rows(df, cols).partition(_.getString(0) == Method.Insert.name)
+    Touched(ins.size.toLong, rows, StructType(cols.map(df.schema(_))), pkCols)
+  }
+
   /** `target LEFT ANTI JOIN touched ON pkCols` as a row predicate over
     * the target, with the join's NULL semantics: a target row with a
     * NULL PK component is kept, and a touched key with a NULL component
@@ -154,25 +171,28 @@ object MethodRoutedLoader {
         Seq(c)
       case _ => Nil
     }
-    // an empty local batch (an idle queue poll) loads nothing, with no job
-    batch.df.queryExecution.logical match {
-      case l: LocalRelation if l.data.isEmpty => return Touched(0L, Nil, l.schema, pkCols).counts
-      case _ =>
-    }
     // NULL methods route to REPLACE like any other unknown verb
     // (`loader_default.go:20-26`) — without the coalesce they would fall
     // through every null-propagating bucket filter and be dropped while
     // still counted.
-    val df = batch.df
+    val routed = batch.df
       .withColumn(Method.Col, coalesce(col(Method.Col), lit(Method.Replace.name)))
-      .cache()
+    // a batch held on the driver is evaluated there once, and its rows
+    // are read in place: no cache and no action. Any other is cached by
+    // the one action
+    val local = LocalRows.isLocal(batch.df)
+    val df = if (local) LocalRows.collect(routed) else routed.cache()
 
     val methodOf = col(Method.Col)
-    val inserts = df.filter(methodOf === Method.Insert.name).drop(Method.Col)
-    val replaces = df.filter(methodOf =!= Method.Insert.name &&
+    // held rows are written from one partition, as the cached ordered
+    // limit was: one file per batch, not one per core, for later scans
+    val rows = if (local) df.coalesce(1) else df
+    val inserts = rows.filter(methodOf === Method.Insert.name).drop(Method.Col)
+    val replaces = rows.filter(methodOf =!= Method.Insert.name &&
       methodOf =!= Method.Remove.name).drop(Method.Col)
 
-    val t = touchedBy(df, pkCols, pkCols ++ byValue)
+    val t = if (local) touchedIn(df, pkCols, pkCols ++ byValue)
+      else touchedBy(df, pkCols, pkCols ++ byValue)
     val (nIns, nRep) = (t.inserts, t.replaces)
 
     if (graft.sources.JdbcTable.isJdbc(destPath)) {
@@ -198,11 +218,7 @@ object MethodRoutedLoader {
       if (nIns > 0)
         graft.sources.JdbcTable.append(insAligned, destPath, batch.table,
           params.insertBatchSize)
-      df.unpersist()
-      return t.counts
-    }
-
-    ParquetTable.loadLayout(target, found, params, t.rewrites) match {
+    } else ParquetTable.loadLayout(target, found, params, t.rewrites) match {
       case ParquetTable.Partitioned(pcol, buckets) =>
         loadPartitioned(spark, target, pkCols, params, pcol, buckets,
           migrate = found.isInstanceOf[ParquetTable.Flat], inserts, replaces, t)
@@ -219,7 +235,7 @@ object MethodRoutedLoader {
           ParquetTable.append(spark, target, inserts, params.insertBatchSize)
     }
 
-    df.unpersist()
+    if (!local) df.unpersist()
     t.counts
   }
 

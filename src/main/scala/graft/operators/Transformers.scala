@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.Encoders
+import org.apache.spark.sql.{Encoders, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.KeySet
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.graftshim.{KeySet, LocalRows}
+import org.apache.spark.sql.types.{StringType, StructType}
 
 import graft.core._
 
@@ -131,16 +131,20 @@ object QualityFilterTransformer extends Transformer {
   * nothing about its sibling columns. Rows with a NULL dedup value
   * pass through too ("no content" is not one piece of shared content).
   *
-  * Scale shape: the batch is ≤ BatchSize rows, so it is planned as one
-  * partition, where the min-PK survivor window needs no shuffle. Its
-  * distinct fingerprints (≤ BatchSize) are collected to the driver, one
-  * column-pruned scan of the destination collects the ones it already
-  * holds (each scan task returns its distinct hits), and the survivors
-  * are filtered on that driver-held set ([[KeySet]]). Two jobs, both in
-  * this transform, and the plan the loader caches has no shuffle or
-  * broadcast exchange. The destination is never shuffled, but it is
-  * scanned whole per batch: O(destination), which a fingerprint index
-  * kept beside the destination would make O(batch).
+  * Scale shape: the batch is ≤ BatchSize rows, held on the driver
+  * ([[LocalRows]]): a sequential batch already is, and any other batch
+  * is collected, its one job. Each row's fingerprint is computed once,
+  * on the driver; the min-PK survivor of each fingerprint is picked
+  * there in Spark's order of the PK (ascending, NULLs first, the first
+  * row in batch order among rows tied on the whole PK); one
+  * column-pruned scan of the destination, the one job of a local
+  * batch, collects the survivors' fingerprints it already holds (each
+  * scan task returns its distinct hits, filtered on a driver-held set,
+  * [[KeySet]]); and the output is the batch's rows filtered on the
+  * driver, again a local relation, so the loader reads it with no
+  * cache. No window, shuffle or broadcast. The destination is never
+  * shuffled, but it is scanned whole per batch: O(destination), which a
+  * fingerprint index kept beside the destination would make O(batch).
   */
 object DedupTransformer extends Transformer {
   val name = "dedup"
@@ -152,11 +156,10 @@ object DedupTransformer extends Transformer {
 
   override def apply(batch: TableBatch, params: Params,
                      ctx: TransformContext): Seq[TableBatch] = {
-    import org.apache.spark.sql.expressions.Window
     val dedupCol = params.extra.getOrElse("DedupColumn", "text")
     require(batch.df.columns.contains(dedupCol),
       s"dedup transformer: batch for ${batch.table} has no `$dedupCol` column")
-    val hasMethod = batch.df.columns.contains(Method.Col)
+    val rows = LocalRows.collect(batch.df)
     // dedup applies to NEW content only: REMOVE must reach the loader
     // (a delete stands regardless of content), and REPLACE must too —
     // an update whose content column happens to repeat (or didn't
@@ -164,44 +167,35 @@ object DedupTransformer extends Transformer {
     // route to REPLACE in the loader and pass through for the same
     // reason. Rows with a NULL dedup value also pass: "no content" is
     // not one piece of shared content.
-    val passthrough =
-      if (hasMethod) batch.df.filter(
-        coalesce(col(Method.Col), lit(Method.Replace.name)) =!= Method.Insert.name ||
-          col(dedupCol).isNull)
-      else batch.df.filter(col(dedupCol).isNull)
-    val rest =
-      if (hasMethod) batch.df.filter(
-        coalesce(col(Method.Col), lit(Method.Replace.name)) === Method.Insert.name &&
-          col(dedupCol).isNotNull)
-      else batch.df.filter(col(dedupCol).isNotNull)
-
+    val isNew = col(dedupCol).isNotNull && (
+      if (rows.columns.contains(Method.Col))
+        coalesce(col(Method.Col), lit(Method.Replace.name)) === Method.Insert.name
+      else lit(true))
     val fingerprint = md5(lower(col(dedupCol)))
-    // one partition satisfies the window's clustering: no exchange
-    val withFp = rest.coalesce(1).withColumn(FpCol, fingerprint)
+    // each row's fingerprint (NULL: it passes through) and its PK, in
+    // row order, evaluated once on the driver
+    val pk = ctx.pkCols.filter(rows.columns.contains)
+    val cand = LocalRows.rows(
+      LocalRows.collect(rows.select(when(isNew, fingerprint).as(FpCol) +: pk.map(col): _*)),
+      FpCol +: pk)
     // deterministic in-batch survivor: min PK within each fingerprint
-    val order = ctx.pkCols.filter(rest.columns.contains)
-    val inBatch =
-      if (order.nonEmpty)
-        withFp.withColumn("__rn", row_number().over(
-            Window.partitionBy(FpCol).orderBy(order.map(col): _*)))
-          .filter(col("__rn") === 1).drop("__rn")
-      else withFp.dropDuplicates(FpCol)
+    val pkOrder = LocalRows.ordering(StructType(pk.map(rows.schema(_))))
+    val survivors: Map[String, Int] = cand.indices.filterNot(cand(_).isNullAt(0))
+      .groupBy(cand(_).getString(0))
+      .map { case (fp, is) => fp -> is.minBy(i => Row.fromSeq(cand(i).toSeq.tail))(pkOrder) }
 
     val target = s"${ctx.destinationPath}/${batch.table}.parquet"
-    val deduped = graft.core.ParquetTable.read(ctx.spark, target) match {
-      case Some(dest) if dest.columns.contains(dedupCol) =>
-        val fps = withFp.select(FpCol).collect().map(_.getString(0)).toSet
-        val hits =
-          if (fps.isEmpty) Set.empty[String]
-          else dest.select(fingerprint.as(FpCol))
-            .filter(KeySet.column(col(FpCol), StringType, fps))
+    val hits = if (survivors.isEmpty) Set.empty[String]
+      else graft.core.ParquetTable.read(ctx.spark, target) match {
+        case Some(dest) if dest.columns.contains(dedupCol) =>
+          dest.select(fingerprint.as(FpCol))
+            .filter(KeySet.column(col(FpCol), StringType, survivors.keys))
             .as[String](Encoders.STRING)
             .mapPartitions(_.toSet.iterator)(Encoders.STRING)
             .collect().toSet
-        if (hits.isEmpty) inBatch
-        else inBatch.filter(!KeySet.column(col(FpCol), StringType, hits))
-      case _ => inBatch
-    }
-    Seq(batch.copy(df = deduped.drop(FpCol).unionByName(passthrough)))
+        case _ => Set.empty[String]
+      }
+    val kept = survivors.collect { case (fp, i) if !hits(fp) => i }.toSet
+    Seq(batch.copy(df = LocalRows.filter(rows, i => cand(i).isNullAt(0) || kept(i))))
   }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.core._
@@ -47,13 +49,28 @@ class JdbcPipelineSpec extends SparkSpec {
     val (srcUrl, dstUrl) = seed("drain")
 
     // the incremental predicate must reach the database, not Spark —
-    // the reference ships its WHERE clause to MySQL the same way
-    val res = SequentialExtractor.extract(spark, spec(srcUrl, dstUrl),
+    // the reference ships its WHERE clause to MySQL the same way. The
+    // extract collects its batch, so the scan is in the plan of that
+    // collect, not in the driver-held batch it returns
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    d: Long): Unit = plans.add(qe.executedPlan.toString)
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val res = try SequentialExtractor.extract(spark, spec(srcUrl, dstUrl),
       TrackingStatus("srcdb", "SRC", "id", sequentialPosition = 10L))
+    finally {
+      graft.core.Trace.flush(spark.sparkContext)
+      spark.listenerManager.unregister(listener)
+    }
     try {
-      val scan = res.df.queryExecution.executedPlan.toString
-      assert(scan.contains("PushedFilters") && scan.contains("GreaterThan(id,10)"),
-        s"incremental predicate not pushed to JDBC:\n$scan")
+      val scans = plans.asScala.filter(_.contains("JDBCRelation"))
+      assert(scans.size === 1 && scans.head.contains("PushedFilters") &&
+        scans.head.contains("GreaterThan(id,10)"),
+        s"incremental predicate not pushed to JDBC:\n${plans.asScala.mkString("\n")}")
       assert(res.df.count() === 40)
     } finally res.cleanup()
 
