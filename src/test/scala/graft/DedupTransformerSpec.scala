@@ -183,9 +183,11 @@ class DedupTransformerSpec extends SparkSpec {
     }
   }
 
-  test("a sequential batch through dedup runs extract 1, transform 1, load 1 jobs, " +
-      "and 1, 0, 1 into an empty sink, and the loader gets a batch held on the driver") {
-    val src = tmpDir("dt-jobs-src"); val dest = tmpDir("dt-jobs-dest")
+  /** Two sequential batches of 100 rows through a dedup pipeline into a
+   *  fresh sink: the jobs each stage ran per batch, the pipeline, and the
+   *  tracking state after the second batch. */
+  private def dedupBatchJobs(name: String) = {
+    val src = tmpDir(s"$name-src"); val dest = tmpDir(s"$name-dest")
     (1L to 300L).map(i => (i, s"Content ${i % 120}")).toDF("id", "text")
       .write.parquet(s"$src/t.parquet")
     val spec = PipelineSpec("a", "t", "id", "b", "t", src, dest, transformer = "dedup",
@@ -196,21 +198,44 @@ class DedupTransformerSpec extends SparkSpec {
       Seq("extract", "transform", "load")
         .map(s => s -> evs.head.get("stages").get(s).get("jobs").asInt).toMap
     }
-    // the first batch creates the sink: no sink to scan
     val ((_, _, st), first) = batchEvents(p.runBatch(p.init()))
-    assert(jobs(first) === Map("extract" -> 1, "transform" -> 0, "load" -> 1))
-    // the ordered collect, the sink scan, the append
     val ((_, _, next), second) = batchEvents(p.runBatch(st))
-    assert(jobs(second) === Map("extract" -> 1, "transform" -> 1, "load" -> 1))
+    (spec, p, dest, jobs(first), jobs(second), next)
+  }
+
+  private def drainsEachContentOnce(p: Pipeline, dest: String): Unit = {
+    p.drain()
+    val got = spark.read.parquet(s"$dest/t.parquet")
+    assert(got.count() === 120L)
+    assert(got.agg(sum("id")).head.getLong(0) === (1L to 120L).sum)
+  }
+
+  test("a sequential batch through dedup runs at most extract 2, transform 2, load 3 " +
+      "jobs, and the plan the loader caches has no exchange") {
+    val (spec, p, dest, _, jobs, next) = dedupBatchJobs("dt-bound")
+    assert(jobs("extract") <= 2 && jobs("transform") <= 2 && jobs("load") <= 3, jobs)
+
+    val res = operators.SequentialExtractor.extract(spark, spec, next)
+    val out = DedupTransformer(TableBatch("b", "t", res.df), spec.params,
+      TransformContext(spark, dest, Seq("id"))).head.df
+    val plan = out.queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange"), plan)
+    drainsEachContentOnce(p, dest)
+  }
+
+  test("a sequential batch through dedup runs extract 1, transform 1, load 1 jobs, " +
+      "and 1, 0, 1 into an empty sink, and the loader gets a batch held on the driver") {
+    val (spec, p, dest, first, second, next) = dedupBatchJobs("dt-jobs")
+    // the first batch creates the sink: no sink to scan
+    assert(first === Map("extract" -> 1, "transform" -> 0, "load" -> 1))
+    // the ordered collect, the sink scan, the append
+    assert(second === Map("extract" -> 1, "transform" -> 1, "load" -> 1))
 
     val res = operators.SequentialExtractor.extract(spark, spec, next)
     val out = DedupTransformer(TableBatch("b", "t", res.df), spec.params,
       TransformContext(spark, dest, Seq("id"))).head.df
     assert(org.apache.spark.sql.graftshim.LocalRows.isLocal(out), out.queryExecution.analyzed)
-    p.drain()
-    val got = spark.read.parquet(s"$dest/t.parquet")
-    assert(got.count() === 120L)
-    assert(got.agg(sum("id")).head.getLong(0) === (1L to 120L).sum)
+    drainsEachContentOnce(p, dest)
   }
 
   test("streaming near-dedup drops repeated simhash sightings, bounds state") {
